@@ -29,14 +29,16 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
 from geomesa_spark.functions.cell_functions import cell_col
+from geomesa_spark.sources.arrow_io import local_table
 
 M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
+_QUERY_SCHEMA = "qid string, qlon double, qlat double"
 
 
 def cells_covering_radius(qlon: float, qlat: float, res: int, radius_m: float) -> list[int]:
@@ -168,8 +170,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
                             cell_col(F.col(lon_col), F.col(lat_col), res)))
     q_cells = {qid: grid.cell_id(qlon, qlat, res) for qid, qlon, qlat in query_points}
     q_pos = {qid: (qlon, qlat) for qid, qlon, qlat in query_points}
-    qdf = spark.createDataFrame([(qid, x, y) for qid, (x, y) in q_pos.items()],
-                                "qid string, qlon double, qlat double")
+    qdf = local_table(spark, [(qid, x, y) for qid, (x, y) in q_pos.items()], _QUERY_SCHEMA)
     dist = _haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     wq = Window.partitionBy("qid")
@@ -177,7 +178,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     def candidate_topk(cell_rows):
         """Pruned scan restricted to per-qid cell sets → per-qid top-k rows
         (plus ``__cnt``, the pre-rank candidate count per qid)."""
-        cdf = spark.createDataFrame(cell_rows, "qid string, __cell long")
+        cdf = local_table(spark, cell_rows, "qid string, __cell long")
         return (pruned_scan({c for _, c in cell_rows})
                 .join(F.broadcast(cdf), "__cell")
                 .join(F.broadcast(qdf), "qid")
@@ -189,7 +190,8 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
 
     # --- phase 1 (fused): expand disks until every query point has >= k
     # candidates.  ONE driver job per iteration returns the provisional
-    # top-k rows THEMSELVES (<= k rows per pending qid): "count >= k", the
+    # top-k rows THEMSELVES (<= k rows per pending qid, collected as Arrow
+    # so the exact ones go back into the plan unchanged): "count >= k", the
     # provisional k-th distance, and the candidate answers are the same
     # fact, so the reference's separate window-estimate / k-buffer passes
     # collapse into the expansion loop and — when the d_k disk is already
@@ -198,7 +200,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     radius = {qid: 1 for qid in q_cells}
     scanned: dict = {qid: set() for qid in q_cells}
     pending = set(q_cells)
-    best: dict = {}          # qid -> provisional top-k Rows (latest scan)
+    best: dict = {}          # qid -> provisional top-k Arrow rows (latest scan)
     counts = {qid: 0 for qid in q_cells}
     template = None
     for _ in range(max_iterations):
@@ -212,14 +214,14 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
         prov = candidate_topk([(qid, c) for qid in pending for c in scanned[qid]])
         if template is None:
             template = prov.drop("__cnt", "qlon", "qlat")
+        tbl = prov.toArrow()
         got: dict = {}
-        for r in prov.collect():
-            got.setdefault(r["qid"], []).append(r)
+        for i, qid in enumerate(tbl.column("qid").to_pylist()):
+            got.setdefault(qid, []).append(i)
         for qid in list(pending):
-            rs = got.get(qid)
-            if rs:
-                best[qid] = rs
-                counts[qid] = rs[0]["__cnt"]
+            if qid in got:
+                best[qid] = tbl.take(got[qid])
+                counts[qid] = best[qid].column("__cnt")[0].as_py()
             if counts[qid] >= k or len(scanned[qid]) >= n * n:
                 pending.discard(qid)
         if not pending or not grew:
@@ -230,7 +232,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     # the grown set (only those qids rescan; the rest are already exact).
     topup: dict = {}
     for qid, rs in best.items():
-        d = max(r["dist_m"] for r in rs)
+        d = max(rs.column("dist_m").to_pylist())
         qlon, qlat = q_pos[qid]
         needed = set(cells_covering_radius(qlon, qlat, res, d * 1.0000001))
         extra = needed - scanned[qid]
@@ -239,10 +241,9 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
 
     out_cols = template.columns
     parts = []
-    exact_rows = [tuple(r[c] for c in out_cols)
-                  for qid, rs in best.items() if qid not in topup for r in rs]
-    if exact_rows:
-        parts.append(spark.createDataFrame(exact_rows, schema=template.schema))
+    exact = [rs.select(out_cols) for qid, rs in best.items() if qid not in topup]
+    if exact:
+        parts.append(local_table(spark, pa.concat_tables(exact), template.schema))
     if topup:
         final = candidate_topk([(qid, c) for qid, cells in topup.items()
                                 for c in cells]) \
@@ -272,8 +273,7 @@ def _haversine_col(lon1, lat1, lon2, lat2):
 def knn_brute_force(points: DataFrame, query_points: list[tuple], k: int, *,
                     lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Broadcast nested-loop kNN — the oracle/baseline path."""
-    spark = points.sparkSession
-    qdf = spark.createDataFrame(query_points, "qid string, qlon double, qlat double")
+    qdf = local_table(points.sparkSession, list(query_points), _QUERY_SCHEMA)
     dist = _haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     return (points.crossJoin(F.broadcast(qdf))

@@ -12,8 +12,9 @@ sweepline join (GeoMesaJoinRelation.scala:41-91, RelationUtils.grid:30-70):
   are replicated to every salt value, points hash-salted by id, join key =
   (cell, salt) — GeoMesa's shard-prefix skew handling (ShardStrategy.scala:
   75-83) expressed as explicit salt columns,
-* an Arrow-batched numpy refine applies the exact predicate; rectangles skip
-  the refine (exact cover shortcut).
+* the exact predicate is one native expression over each geometry's edge
+  list (plans/refine.py) — no Python worker on the per-point path; cover
+  cells fully inside a polygon skip it (exact cover shortcut).
 """
 
 from __future__ import annotations
@@ -22,32 +23,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
+from geomesa_spark.cells.grid import cell_xy
 from geomesa_spark.functions.cell_functions import salt_col
-from geomesa_spark.geom import algos, model, wkt
+from geomesa_spark.geom import model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
+from geomesa_spark.plans import refine
 from geomesa_spark.plans.cover import geometry_cell_cover, pick_cover_resolution
-from geomesa_spark.plans.query import _is_rectangle
+from geomesa_spark.sources.arrow_io import local_table
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
-
-
-def _convex_ccw(g) -> "np.ndarray | None":
-    """CCW vertex array if ``g`` is a convex simple polygon, else None."""
-    if not isinstance(g, model.Polygon) or g.holes:
-        return None
-    v = np.asarray(g.shell[:-1], dtype=np.float64)
-    if len(v) < 3:
-        return None
-    e1 = np.roll(v, -1, axis=0) - v
-    e2 = np.roll(v, -2, axis=0) - np.roll(v, -1, axis=0)
-    cross = e1[:, 0] * e2[:, 1] - e1[:, 1] * e2[:, 0]
-    if np.all(cross >= 0):
-        return v
-    if np.all(cross <= 0):
-        return v[::-1]
-    return None
 
 
 def _polygons_to_local(polygons) -> list[tuple]:
@@ -60,42 +45,16 @@ def _polygons_to_local(polygons) -> list[tuple]:
     return out
 
 
-def _refine_indexed_udf(geoms: list, predicate: str = "intersects"):
-    """(lon, lat, poly_index) -> bool with the polygon list captured in the
-    UDF closure: only a small int travels per row (the WKB-per-row variant
-    pushed gigabytes of duplicated polygon bytes through Arrow at scale)."""
+def _grid_xy(lon_col: str, lat_col: str, n: int) -> tuple[str, str]:
+    """SQL of a point's clamped (ix, iy) on the n x n lon/lat grid."""
+    return tuple(f"least(greatest(cast(floor(({c} + {o}) / {w} * {n}) as bigint), 0), {n - 1})"
+                 for c, o, w in ((lon_col, "180.0", "360.0"), (lat_col, "90.0", "180.0")))
 
-    def refine(lon: pd.Series, lat: pd.Series, pidx: pd.Series) -> pd.Series:
-        x = lon.to_numpy(np.float64)
-        y = lat.to_numpy(np.float64)
-        # null pidx = contained-cell rows; the filter passes them regardless
-        # but Arrow still evaluates the UDF on them
-        pi = pidx.fillna(-1).to_numpy(np.int64)
-        out = np.zeros(len(x), dtype=bool)
-        # one argsort + contiguous slices beats a full boolean scan per
-        # polygon (O(batch) vs O(batch * n_polys))
-        order = np.argsort(pi, kind="stable")
-        spi = pi[order]
-        ks, starts = np.unique(spi, return_index=True)
-        starts = np.append(starts, len(spi))
-        for j, k in enumerate(ks):
-            if k < 0:
-                continue
-            ii = order[starts[j]:starts[j + 1]]
-            g = geoms[k]
-            if predicate == "intersects":
-                m = algos.points_intersect(x[ii], y[ii], g)
-            elif predicate == "contains":
-                m = np.zeros(len(ii), dtype=bool)
-                for comp in g._components():
-                    if isinstance(comp, model.Polygon):
-                        m |= algos.points_in_polygon(x[ii], y[ii], comp) == algos.IN
-            else:
-                raise ValueError(predicate)
-            out[ii] = m
-        return pd.Series(out)
 
-    return F.pandas_udf(refine, BooleanType())
+def _rowmajor(cid: int, n: int) -> int:
+    """Quad-grid cell id -> row-major iy * n + ix, the `__cell` join key."""
+    _res, ix, iy = cell_xy(cid)
+    return iy * n + ix
 
 
 def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
@@ -107,15 +66,19 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     [(id, wkt-or-Geometry)]. Returns points rows + ``poly_id``.
 
     Plan shape: points -> native cell assignment -> broadcast hash join on
-    cell -> vectorized refine (skipped for rectangles and for cover cells
-    fully inside the polygon). One shuffle-free pass over the fact table;
-    the polygon geometries ride in the refine UDF's closure, so the join
-    only materializes (poly_id, cell, poly_index) rows.
+    cell -> broadcast join of the edge lists on the polygon index -> native
+    refine (skipped for cover cells fully inside the polygon). One
+    shuffle-free pass over the fact table, and every driver-side table is a
+    LocalRelation: no Python worker anywhere in the plan.
+
+    ``predicate`` is ``intersects`` (boundary-inclusive) or ``contains``
+    (the polygon's interior holds the point; lines and points hold none).
     """
+    if predicate not in ("intersects", "contains"):
+        raise ValueError(predicate)
     spark = points.sparkSession
     polys = _polygons_to_local(polygons)
 
-    from geomesa_spark.cells.grid import cell_xy
     from geomesa_spark.plans.cover import (classify_cell_cover_xy,
                                            cover_spans, pick_span_resolution)
 
@@ -137,38 +100,16 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         # compares per probed span).
         if res is None:
             res = pick_span_resolution([g.bounds for _, g, _ in polys])
-        iy_parts, x0_parts, x1_parts, pidx_parts, interior_parts = \
-            [], [], [], [], []
+        parts = {c: [] for c in ("__siy", "__x0", "__x1", "__pidx", "__interior")}
         for k, (_pid, g, _b) in enumerate(polys):
             iy, x0, x1, interior = cover_spans(g, res)
-            if len(iy) == 0:
-                continue
-            iy_parts.append(iy)
-            x0_parts.append(x0)
-            x1_parts.append(x1)
-            pidx_parts.append(np.full(len(iy), k, dtype=np.int32))
-            interior_parts.append(interior)
-        cover_pdf = pd.DataFrame({
-            "__siy": np.concatenate(iy_parts) if iy_parts
-            else np.empty(0, dtype=np.int64),
-            "__x0": np.concatenate(x0_parts) if x0_parts
-            else np.empty(0, dtype=np.int64),
-            "__x1": np.concatenate(x1_parts) if x1_parts
-            else np.empty(0, dtype=np.int64),
-            "__pidx": np.concatenate(pidx_parts) if pidx_parts
-            else np.empty(0, dtype=np.int32),
-            "__interior": np.concatenate(interior_parts) if interior_parts
-            else np.empty(0, dtype=bool),
-        })
-        spans_df = spark.createDataFrame(cover_pdf)
-        n = 1 << res
-        ix_expr = (f"least(greatest(cast(floor(({lon_col} + 180.0) / 360.0 "
-                   f"* {n}) as bigint), 0), {n - 1})")
-        iy_expr = (f"least(greatest(cast(floor(({lat_col} + 90.0) / 180.0 "
-                   f"* {n}) as bigint), 0), {n - 1})")
-        pts = (points
-               .withColumn("__ix", F.expr(ix_expr))
-               .withColumn("__iy", F.expr(iy_expr)))
+            for c, v in zip(parts, (iy, x0, x1, np.full(len(iy), k), interior)):
+                parts[c].append(v)
+        spans_df = local_table(
+            spark, {c: np.concatenate(v or [np.empty(0)]) for c, v in parts.items()},
+            "__siy long, __x0 long, __x1 long, __pidx int, __interior boolean")
+        ix, iy = _grid_xy(lon_col, lat_col, 1 << res)
+        pts = points.withColumn("__ix", F.expr(ix)).withColumn("__iy", F.expr(iy))
         joined = (pts.join(F.broadcast(spans_df),
                            (pts["__iy"] == spans_df["__siy"])
                            & (pts["__ix"] >= spans_df["__x0"])
@@ -181,10 +122,6 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         n = 1 << res
         # mixed geometry types (lines/points in the set): small covers,
         # legacy tuple build
-        def rowmajor(cid: int) -> int:
-            _res, ix, iy = cell_xy(cid)
-            return iy * n + ix
-
         rows = []
         for k, (_pid, g, _b) in enumerate(polys):
             if isinstance(g, (model.Polygon, model.MultiPolygon)):
@@ -194,90 +131,34 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
                 rows.extend((int(xy[1]) * n + int(xy[0]), k, False)
                             for xy in boundary_xy)
             else:
-                rows.extend((rowmajor(cid), k, False)
+                rows.extend((_rowmajor(cid, n), k, False)
                             for cid in geometry_cell_cover(g, res))
-        cover_df = spark.createDataFrame(
-            rows, schema="__cell long, __pidx int, __interior boolean")
-        cell_expr = (
-            f"least(greatest(cast(floor(({lat_col} + 90.0) / 180.0 * {n}) as bigint), 0), {n - 1})"
-            f" * {n} + "
-            f"least(greatest(cast(floor(({lon_col} + 180.0) / 360.0 * {n}) as bigint), 0), {n - 1})")
-        pts = points.withColumn("__cell", F.expr(cell_expr))
+        cover_df = local_table(spark, rows, "__cell long, __pidx int, __interior boolean")
+        ix, iy = _grid_xy(lon_col, lat_col, n)
+        pts = points.withColumn("__cell", F.expr(f"{iy} * {n} + {ix}"))
         joined = (pts.join(F.broadcast(cover_df), "__cell", "inner")
                   .drop("__cell"))
-    geoms = [g for _pid, g, _b in polys]
-
     # Predicate compilation (the analog of GeoMesa compiling filters into
-    # server-side iterators): the exact refine is a ray-cast over the
-    # polygon's edge list, expressed as ONE small aggregate() over an
-    # `__edges` array column attached by a 64-row broadcast join on the
-    # polygon index. All JVM — zero Python traffic; interior rows
-    # short-circuit on `__interior` before the aggregate. Arithmetic replicates
-    # algos.points_in_ring term-for-term (boundary-inclusive even-odd), so
-    # results are bit-identical to the pandas kernel.
-    if predicate == "intersects" and all(
-            isinstance(g, (model.Polygon, model.MultiPolygon)) for g in geoms):
-        edge_rows = []
-        for k, g in enumerate(geoms):
-            ccw = _convex_ccw(g)
-            edges = []
-            if ccw is not None:
-                ring_list = [np.vstack([ccw, ccw[:1]])]
-            else:
-                ring_list = []
-                for comp in g._components():
-                    ring_list.append(np.asarray(comp.shell, dtype=np.float64))
-                    ring_list.extend(np.asarray(h, dtype=np.float64)
-                                     for h in comp.holes)
-            for arr in ring_list:
-                for i in range(len(arr) - 1):
-                    edges.append((float(arr[i][0]), float(arr[i][1]),
-                                  float(arr[i + 1][0]), float(arr[i + 1][1])))
-            edge_rows.append((k, polys[k][0], ccw is not None, edges))
-        edges_df = spark.createDataFrame(
-            edge_rows,
-            f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
-            "__edges array<struct<ax:double,ay:double,bx:double,by:double>>")
-        lon, lat = lon_col, lat_col
-        # convex: boundary-inclusive half-plane conjunction (cheap forall);
-        # general: even-odd ray cast replicating algos.points_in_ring
-        # term-for-term (boundary-inclusive), one aggregate()
-        refine = F.expr(f"""
-            IF(__convex,
-              forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
-                                   - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
-              aggregate(__edges,
-                named_struct('i', false, 'b', false),
-                (acc, e) -> named_struct(
-                  'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
-                          ({lon} < e.ax + ({lat} - e.ay) * (e.bx - e.ax) / (e.by - e.ay))),
-                  'b', acc.b OR ((e.bx - e.ax) * ({lat} - e.ay)
-                                 - (e.by - e.ay) * ({lon} - e.ax) = 0.0
-                          AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
-                          AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
-                acc -> acc.b OR acc.i))""")
-        out = (joined.join(F.broadcast(edges_df), "__pidx")
-               .where(F.col("__interior") | refine))
-        return _attach_geom(spark, out.drop("__pidx", "__interior",
-                                            "__convex", "__edges"),
-                            polys, poly_id_col, id_type, keep_geom)
-
-    # General path (line/point geometries in the mix, or a non-intersects
-    # predicate): split interior rows (already exact) from boundary rows
-    # BEFORE the pandas UDF — `__interior | udf(...)` would ship every
-    # candidate row through the Python worker sockets; the split keeps
-    # Arrow traffic proportional to the boundary fraction (the reference's
-    # exact-ranges shortcut, Z3IndexKeySpace.useFullFilter).
-    interior = joined.where(F.col("__interior"))
-    boundary = joined.where(~F.col("__interior")).where(
-        _refine_indexed_udf(geoms, predicate)(F.col(lon_col), F.col(lat_col),
-                                              F.col("__pidx")))
-    id_df = spark.createDataFrame(
-        [(k, pid) for k, (pid, _g, _b) in enumerate(polys)],
-        f"__pidx int, {poly_id_col} {id_type}")
-    out = (interior.unionByName(boundary)
-           .join(F.broadcast(id_df), "__pidx")
-           .drop("__pidx", "__interior"))
+    # server-side iterators): the exact refine is one native expression
+    # over each geometry's edge list (plans/refine.py), attached by a small
+    # broadcast join on the polygon index. All JVM — zero Python traffic;
+    # interior rows short-circuit on `__interior` before the refine.
+    prepared = [refine.edge_columns(g) for _pid, g, _b in polys]
+    edges_df = local_table(spark, {
+        "__pidx": np.arange(len(polys)),
+        poly_id_col: [pid for pid, _g, _b in polys],
+        "__convex": [p[0] for p in prepared],
+        "__edges": [p[1] for p in prepared],
+        "__segs": [p[2] for p in prepared],
+    }, f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
+       f"__edges {refine.EDGE_TYPE}, __segs {refine.EDGE_TYPE}")
+    cond = refine.refine_sql(
+        lon_col, lat_col, "INTERSECTS" if predicate == "intersects" else "WITHIN",
+        edges="__edges" if any(p[1] for p in prepared) else None,
+        segs="__segs" if any(p[2] for p in prepared) else None)
+    out = (joined.join(F.broadcast(edges_df), "__pidx")
+           .where(F.col("__interior") | F.expr(cond))
+           .drop("__pidx", "__interior", "__convex", "__edges", "__segs"))
     return _attach_geom(spark, out, polys, poly_id_col, id_type, keep_geom)
 
 
@@ -287,16 +168,11 @@ def _attach_geom(spark, out: DataFrame, polys, poly_id_col: str,
     a tiny broadcast join on the polygon id."""
     if not keep_geom:
         return out
-    from geomesa_spark.geom.wkb import wkb_dumps
-    geom_df = spark.createDataFrame(
-        [(pid, bytearray(wkb_dumps(g))) for pid, g, _b in polys],
+    geom_df = local_table(
+        spark, {poly_id_col: [pid for pid, _g, _b in polys],
+                "__geom": [b for _pid, _g, b in polys]},
         f"{poly_id_col} {id_type}, __geom binary")
     return out.join(F.broadcast(geom_df), poly_id_col)
-
-
-def _bbox_covers(outer: tuple, inner: tuple) -> bool:
-    return (outer[0] <= inner[0] and outer[1] <= inner[1]
-            and outer[2] >= inner[2] and outer[3] >= inner[3])
 
 
 def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
@@ -312,21 +188,16 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
     salt values; points are salted by hash. Join key (cell, salt) spreads
     hot cells over ``n_salts`` reducers — explicit skew handling per the
     north rule, on top of AQE skew splitting. The exact refine is the same
-    native ray-cast / half-plane expression as the broadcast path, reading
-    an ``__edges`` array column prepared once per polygon — no Python and
-    no WKB parsing in the per-candidate hot path.
+    native expression as the broadcast path (plans/refine.py), reading
+    ``__edges``/``__segs`` array columns prepared once per polygon — no
+    Python and no WKB parsing in the per-candidate hot path.
     """
-    from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                                   LongType, StructField, StructType)
+    from pyspark.sql.types import (ArrayType, BooleanType, LongType,
+                                   StructField, StructType)
 
-    from geomesa_spark.cells.grid import cell_xy
     from geomesa_spark.plans.cover import classify_cell_cover
 
     n = 1 << res
-
-    def rowmajor(cid: int) -> int:
-        _res, ix, iy = cell_xy(cid)
-        return iy * n + ix
 
     cover_type = ArrayType(StructType([
         StructField("cell", LongType()), StructField("interior", BooleanType())]))
@@ -342,44 +213,22 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
                 contained, boundary = classify_cell_cover(g, res)
             else:
                 contained, boundary = [], geometry_cell_cover(g, res)
-            out.append([(rowmajor(c), True) for c in contained]
-                       + [(rowmajor(c), False) for c in boundary])
+            out.append([(_rowmajor(c, n), True) for c in contained]
+                       + [(_rowmajor(c, n), False) for c in boundary])
         return pd.Series(out)
 
-    prep_type = StructType([
-        StructField("convex", BooleanType()),
-        StructField("edges", ArrayType(StructType(
-            [StructField("ax", DoubleType()), StructField("ay", DoubleType()),
-             StructField("bx", DoubleType()), StructField("by", DoubleType())])))])
+    prep_type = f"convex boolean, edges {refine.EDGE_TYPE}, segs {refine.EDGE_TYPE}"
 
     def prep_udf(wkb_s: pd.Series) -> pd.DataFrame:
-        convex, edges_out = [], []
-        for b in wkb_s:
-            g = wkb_loads(bytes(b))
-            ccw = _convex_ccw(g)
-            if ccw is not None:
-                rings = [np.vstack([ccw, ccw[:1]])]
-            else:
-                rings = []
-                for comp in g._components():
-                    if isinstance(comp, model.Polygon):
-                        rings.append(np.asarray(comp.shell, dtype=np.float64))
-                        rings.extend(np.asarray(h, dtype=np.float64)
-                                     for h in comp.holes)
-            edges = []
-            for arr in rings:
-                for i in range(len(arr) - 1):
-                    edges.append((float(arr[i][0]), float(arr[i][1]),
-                                  float(arr[i + 1][0]), float(arr[i + 1][1])))
-            convex.append(ccw is not None)
-            edges_out.append(edges)
-        return pd.DataFrame({"convex": convex, "edges": edges_out})
+        prepared = [refine.edge_columns(wkb_loads(bytes(b))) for b in wkb_s]
+        return pd.DataFrame(prepared, columns=["convex", "edges", "segs"])
 
     covers = (polygons
               .withColumn("__cov", F.pandas_udf(cover_udf, cover_type)(F.col(poly_wkb_col)))
               .withColumn("__prep", F.pandas_udf(prep_udf, prep_type)(F.col(poly_wkb_col)))
               .withColumn("__convex", F.col("__prep.convex"))
               .withColumn("__edges", F.col("__prep.edges"))
+              .withColumn("__segs", F.col("__prep.segs"))
               .drop("__prep", poly_wkb_col))
     poly_cells = (covers
                   .withColumn("__c", F.explode("__cov"))
@@ -388,31 +237,15 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
                   .withColumn("__salt", F.explode(F.array([F.lit(i) for i in range(n_salts)])))
                   .drop("__cov", "__c"))
 
-    cell_expr = (
-        f"least(greatest(cast(floor(({lat_col} + 90.0) / 180.0 * {n}) as bigint), 0), {n - 1})"
-        f" * {n} + "
-        f"least(greatest(cast(floor(({lon_col} + 180.0) / 360.0 * {n}) as bigint), 0), {n - 1})")
+    ix, iy = _grid_xy(lon_col, lat_col, n)
     pts = (points
-           .withColumn("__cell", F.expr(cell_expr))
+           .withColumn("__cell", F.expr(f"{iy} * {n} + {ix}"))
            .withColumn("__salt", salt_col(F.col(lon_col) + F.col(lat_col), n_salts)))
 
     joined = pts.join(poly_cells.hint("shuffle_merge"), ["__cell", "__salt"], "inner")
-    lon, lat = lon_col, lat_col
-    refine = F.expr(f"""
-        __interior OR IF(__convex,
-          forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
-                               - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
-          aggregate(__edges,
-            named_struct('i', false, 'b', false),
-            (acc, e) -> named_struct(
-              'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
-                      ({lon} < e.ax + ({lat} - e.ay) * (e.bx - e.ax) / (e.by - e.ay))),
-              'b', acc.b OR ((e.bx - e.ax) * ({lat} - e.ay)
-                             - (e.by - e.ay) * ({lon} - e.ax) = 0.0
-                      AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
-                      AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
-            acc -> acc.b OR acc.i))""")
     if predicate != "intersects":
         raise ValueError("pip_join_smj supports the intersects predicate")
-    refined = joined.where(refine)
-    return refined.drop("__cell", "__salt", "__interior", "__convex", "__edges")
+    cond = refine.refine_sql(lon_col, lat_col, segs="__segs")
+    refined = joined.where(F.col("__interior") | F.expr(cond))
+    return refined.drop("__cell", "__salt", "__interior", "__convex", "__edges",
+                        "__segs")

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.geom import model, wkt
 from geomesa_spark.geom.wkb import wkb_dumps
+from geomesa_spark.plans import refine
 
 SPATIAL_OPS = {"INTERSECTS", "DISJOINT", "CONTAINS", "WITHIN", "OVERLAPS",
                "CROSSES", "TOUCHES", "EQUALS", "BBOX", "DWITHIN", "BEYOND"}
@@ -475,7 +476,6 @@ class EcqlParser:
             units = self.expect("word").lower()
             self.expect("rparen")
             deg = _to_degrees(dist, units, geom)
-            from geomesa_spark.plans.query import points_dwithin_udf
             col = self._dwithin(prop, geom, deg)
             return col if op == "DWITHIN" else ~F.coalesce(col, F.lit(False))
         self.expect("rparen")
@@ -505,41 +505,16 @@ class EcqlParser:
     def _spatial_predicate(self, op: str, prop: str, geom: model.Geometry) -> Column:
         ctx = self.ctx
         if ctx.prefer_lonlat:
-            import numpy as np
-            import pandas as pd
-            from pyspark.sql.types import BooleanType
-
-            from geomesa_spark.geom import algos
-
-            def make(fn):
-                # no parameter annotations: under `from __future__ import
-                # annotations` the stringified hints reference the locally
-                # imported pd and pandas_udf cannot resolve them — the
-                # explicit returnType selects the scalar UDF path instead
-                def refine(lon, lat):
-                    return pd.Series(fn(lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
-                return F.pandas_udf(refine, BooleanType())(F.col(ctx.lon_col), F.col(ctx.lat_col))
-
-            if op == "INTERSECTS":
-                return make(lambda x, y: algos.points_intersect(x, y, geom))
-            if op == "DISJOINT":
-                return make(lambda x, y: ~algos.points_intersect(x, y, geom))
-            if op == "WITHIN":
-                if isinstance(geom, model.Polygon):
-                    return make(lambda x, y: algos.points_in_polygon(x, y, geom) == algos.IN)
-                return make(lambda x, y: algos.points_intersect(x, y, geom))
-            if op in ("CONTAINS", "OVERLAPS", "CROSSES", "EQUALS"):
+            # point tables: bbox primary filter + native refine over lon/lat
+            # (plans/refine.py); BBOX arrives here as a rectangle INTERSECTS
+            if op in ("INTERSECTS", "DISJOINT", "WITHIN", "TOUCHES"):
+                return refine.point_predicate(geom, op, ctx.lon_col, ctx.lat_col)
+            if op in ("CONTAINS", "EQUALS") and isinstance(geom, model.Point):
                 # points can only CONTAIN/EQUAL coincident points; never
-                # overlap/cross polygons
-                if op == "EQUALS" and isinstance(geom, model.Point):
-                    return (F.col(ctx.lon_col) == geom.x) & (F.col(ctx.lat_col) == geom.y)
-                if op == "CONTAINS" and isinstance(geom, model.Point):
-                    return (F.col(ctx.lon_col) == geom.x) & (F.col(ctx.lat_col) == geom.y)
+                # overlap/cross anything
+                return (F.col(ctx.lon_col) == geom.x) & (F.col(ctx.lat_col) == geom.y)
+            if op in ("CONTAINS", "OVERLAPS", "CROSSES", "EQUALS"):
                 return F.lit(False)
-            if op == "TOUCHES":
-                return make(lambda x, y: (algos.points_in_polygon(x, y, geom) == algos.BOUNDARY)
-                            if isinstance(geom, model.Polygon)
-                            else algos.points_intersect(x, y, geom))
             raise ValueError(op)
         # WKB geometry column path: dispatch to the ST_* function surface
         fn = {"INTERSECTS": "st_intersects", "DISJOINT": "st_disjoint",

@@ -163,9 +163,12 @@ def apply_sampling(df, percent: float, by: str | None = None,
     of ROWS.  ``by`` threads the sampling per attribute value
     (SAMPLE_BY): hashing (key, row-id) keeps ~1/n of EACH key's rows —
     every key group keeps its share, rather than whole keys being
-    dropped."""
+    dropped.  n truncates 1/percent divided in float32, as the
+    reference's (1 / percent.toFloat).toInt does: 0.28 keeps 1 row in 3,
+    0.1 keeps 1 in 10."""
+    import numpy as np
     from pyspark.sql import functions as F
-    n = max(1, round(1.0 / percent))
+    n = max(1, int(np.float32(1.0) / np.float32(percent)))
     row = F.col(id_col).cast("string")
     key = F.concat_ws("|", F.col(by).cast("string"), row) \
         if by is not None else row

@@ -7,9 +7,9 @@ index primary + residual (planning/FilterSplitter.scala:61-147):
 * bbox and interval -> native range predicates (pushed to parquet/Iceberg
   scans by Catalyst: PushedFilters + partition pruning),
 * optional z2/cell column -> coarse SFC range predicate (file skipping),
-* polygon refine -> ONE Arrow-batched numpy kernel over (lon, lat) — the
-  'residual filter' — skipped entirely when the query geometry is its own
-  bbox (the reference's exact-ranges shortcut,
+* polygon refine -> ONE native Catalyst expression over (lon, lat)
+  (plans/refine.py) — the 'residual filter' — skipped entirely when the
+  query geometry is its own bbox (the reference's exact-ranges shortcut,
   Z3IndexKeySpace.useFullFilter:240-254).
 """
 
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from geomesa_spark.geom import algos, model, wkt
-from geomesa_spark.plans import cover, guards
+from geomesa_spark.plans import cover, guards, refine
 
 
 def _as_geometry(g) -> model.Geometry:
@@ -36,32 +36,12 @@ def _as_geometry(g) -> model.Geometry:
     raise TypeError(f"geometry must be WKT or Geometry, got {type(g)}")
 
 
-def _is_rectangle(g: model.Geometry) -> bool:
-    if not isinstance(g, model.Polygon) or g.holes:
-        return False
-    if len(g.shell) != 5:
-        return False
-    xmin, ymin, xmax, ymax = g.bounds
-    corners = {(xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax)}
-    return {(float(x), float(y)) for x, y in g.shell[:-1]} == corners
-
-
-def points_in_geometry_udf(geom: model.Geometry):
-    """Vectorized residual filter: (lon,lat) series -> bool, no WKB parsing."""
-
-    def refine(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(algos.points_intersect(
-            lon.to_numpy(np.float64), lat.to_numpy(np.float64), geom))
-
-    return F.pandas_udf(refine, BooleanType())
-
-
 def points_dwithin_udf(geom: model.Geometry, distance_deg: float):
-    def refine(lon: pd.Series, lat: pd.Series) -> pd.Series:
+    def within(lon: pd.Series, lat: pd.Series) -> pd.Series:
         return pd.Series(algos.points_dwithin(
             lon.to_numpy(np.float64), lat.to_numpy(np.float64), geom, distance_deg))
 
-    return F.pandas_udf(refine, BooleanType())
+    return F.pandas_udf(within, BooleanType())
 
 
 @dataclass
@@ -114,8 +94,10 @@ class SpatialQuery:
             if self.s2_col is not None and self.s2_col in df.columns:
                 preds.append(cover.s2_range_predicate(F.col(self.s2_col), boxes))
             # residual exact refine, skipped for rectangles (exact ranges)
-            if geom is not None and not _is_rectangle(geom):
-                preds.append(points_in_geometry_udf(geom)(lon, lat))
+            sql = (refine.geometry_sql(geom, "INTERSECTS", self.lon_col, self.lat_col)
+                   if geom is not None else None)
+            if sql is not None:
+                preds.append(F.expr(sql))
 
         if self.dwithin is not None:
             g, d = self.dwithin

@@ -12,20 +12,42 @@ Arrow-native already, so the surface is thin:
   ArrowScan dictionary-field behavior.
 * ``write_arrow_partitions`` — one IPC file per partition via mapInArrow
   (executor-side, no driver collect) — the bulk-export path.
+* ``local_table`` — the reverse direction for small driver-side tables
+  (query points, broadcast covers, edge lists): Arrow into a LocalRelation.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def to_arrow_table(df: DataFrame, sort_by: Optional[list] = None) -> pa.Table:
     if sort_by:
         df = df.orderBy(*sort_by)
     return df.toArrow()
+
+
+def local_table(spark, data, schema=None) -> DataFrame:
+    """A driver-side table — row tuples, a dict of columns or a pandas
+    frame typed by ``schema`` (DDL or StructType), or a pyarrow Table —
+    as a DataFrame over a LocalRelation. It goes through Arrow into the
+    plan as a LocalTableScan: no job and no Python worker when it runs,
+    where ``createDataFrame(list)`` builds a PythonRDD that starts Python
+    workers on every run. A conversion error raises; it never falls back.
+    NaN in a pandas float column arrives as null (pandas' missing value)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        pdf = pd.DataFrame(data, columns=schema.names if isinstance(data, list) else None)
+        data = pa.Table.from_pandas(pdf, schema=to_arrow_schema(schema),
+                                    preserve_index=False)
+    return spark.createDataFrame(data, schema=schema)
 
 
 def dictionary_encode(table: pa.Table, columns: list[str]) -> pa.Table:

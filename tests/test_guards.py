@@ -179,6 +179,18 @@ def test_apply_sampling_keeps_per_key_share(spark):
     assert out.count() == apply_sampling(df, 0.25, by="name").count()
 
 
+@pytest.mark.parametrize("percent,n", [(0.28, 3), (0.25, 4), (0.2, 5), (0.1, 10)])
+def test_apply_sampling_truncates_like_reference(spark, percent, n):
+    """One row in (1 / percent.toFloat).toInt: 0.28 keeps 1 in 3 (rounding
+    would keep 1 in 4), and the float32 division keeps 0.1 at 1 in 10."""
+    from pyspark.sql import functions as F
+    df = spark.range(3000).withColumnRenamed("id", "event_id")
+    got = {r.event_id for r in apply_sampling(df, percent).collect()}
+    want = {r.event_id for r in df.where(
+        F.pmod(F.hash(F.col("event_id").cast("string")), F.lit(n)) == 0).collect()}
+    assert got == want
+
+
 def test_spatial_query_runs_graduated_guard(spark):
     """SpatialQuery(guard=...) intercepts before planning: over-budget
     queries raise, in-budget queries run, and a sampled tier thins the

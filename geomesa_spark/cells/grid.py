@@ -52,6 +52,26 @@ def from_xy(res: int, ix: int, iy: int) -> int:
     return (res << 58) | zn.split2(ix) | (zn.split2(iy) << 1)
 
 
+def rowmajor(cid: int) -> int:
+    """Cell id -> the row-major key :func:`rowmajor_sql` gives its points."""
+    res, ix, iy = cell_xy(cid)
+    return (iy << res) | ix
+
+
+def xy_sql(lon_col: str, lat_col: str, n: int) -> tuple[str, str]:
+    """SQL of a point's clamped (ix, iy) on the n x n lon/lat grid — the
+    native form of :func:`cell_id_np`'s indices (NaN and null land in 0)."""
+    return tuple(f"least(greatest(cast(floor(({c} + {o}) / {w} * {n}) as bigint), 0), {n - 1})"
+                 for c, o, w in ((lon_col, "180.0", "360.0"), (lat_col, "90.0", "180.0")))
+
+
+def rowmajor_sql(lon_col: str, lat_col: str, n: int) -> str:
+    """SQL of a point's row-major cell key ``iy * n + ix``: a few native
+    operations per row, where a Morton id needs a bit-spread tree."""
+    ix, iy = xy_sql(lon_col, lat_col, n)
+    return f"{iy} * {n} + {ix}"
+
+
 def cell_bounds(cid: int) -> tuple[float, float, float, float]:
     res, ix, iy = cell_xy(cid)
     n = 1 << res

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
-from geomesa_spark.functions.cell_functions import cell_col
 from geomesa_spark.sources.arrow_io import local_table
 
 M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
@@ -162,12 +161,11 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
 
     def pruned_scan(cells):
         """Fact-table scan restricted to `cells`: pushed bbox prefilter on
-        the stored lon/lat columns + the derived cell column for the exact
-        broadcast join.  No cache — each phase reads only its slice."""
+        the stored lon/lat columns + the derived row-major cell key for the
+        exact broadcast join.  No cache — each phase reads only its slice."""
         return (points
                 .where(_cells_bbox_pred(cells, res, lon_col, lat_col))
-                .withColumn("__cell",
-                            cell_col(F.col(lon_col), F.col(lat_col), res)))
+                .withColumn("__cell", F.expr(grid.rowmajor_sql(lon_col, lat_col, n))))
     q_cells = {qid: grid.cell_id(qlon, qlat, res) for qid, qlon, qlat in query_points}
     q_pos = {qid: (qlon, qlat) for qid, qlon, qlat in query_points}
     qdf = local_table(spark, [(qid, x, y) for qid, (x, y) in q_pos.items()], _QUERY_SCHEMA)
@@ -178,7 +176,8 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     def candidate_topk(cell_rows):
         """Pruned scan restricted to per-qid cell sets → per-qid top-k rows
         (plus ``__cnt``, the pre-rank candidate count per qid)."""
-        cdf = local_table(spark, cell_rows, "qid string, __cell long")
+        cdf = local_table(spark, [(qid, grid.rowmajor(c)) for qid, c in cell_rows],
+                          "qid string, __cell long")
         return (pruned_scan({c for _, c in cell_rows})
                 .join(F.broadcast(cdf), "__cell")
                 .join(F.broadcast(qdf), "qid")

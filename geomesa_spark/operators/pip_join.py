@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_spark.cells.grid import cell_xy
+from geomesa_spark.cells.grid import rowmajor, rowmajor_sql, xy_sql
 from geomesa_spark.functions.cell_functions import salt_col
 from geomesa_spark.geom import model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
@@ -43,18 +43,6 @@ def _polygons_to_local(polygons) -> list[tuple]:
         geom = wkt.wkt_loads(g) if isinstance(g, str) else g
         out.append((pid, geom, wkb_dumps(geom)))
     return out
-
-
-def _grid_xy(lon_col: str, lat_col: str, n: int) -> tuple[str, str]:
-    """SQL of a point's clamped (ix, iy) on the n x n lon/lat grid."""
-    return tuple(f"least(greatest(cast(floor(({c} + {o}) / {w} * {n}) as bigint), 0), {n - 1})"
-                 for c, o, w in ((lon_col, "180.0", "360.0"), (lat_col, "90.0", "180.0")))
-
-
-def _rowmajor(cid: int, n: int) -> int:
-    """Quad-grid cell id -> row-major iy * n + ix, the `__cell` join key."""
-    _res, ix, iy = cell_xy(cid)
-    return iy * n + ix
 
 
 def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
@@ -108,7 +96,7 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         spans_df = local_table(
             spark, {c: np.concatenate(v or [np.empty(0)]) for c, v in parts.items()},
             "__siy long, __x0 long, __x1 long, __pidx int, __interior boolean")
-        ix, iy = _grid_xy(lon_col, lat_col, 1 << res)
+        ix, iy = xy_sql(lon_col, lat_col, 1 << res)
         pts = points.withColumn("__ix", F.expr(ix)).withColumn("__iy", F.expr(iy))
         joined = (pts.join(F.broadcast(spans_df),
                            (pts["__iy"] == spans_df["__siy"])
@@ -131,11 +119,10 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
                 rows.extend((int(xy[1]) * n + int(xy[0]), k, False)
                             for xy in boundary_xy)
             else:
-                rows.extend((_rowmajor(cid, n), k, False)
+                rows.extend((rowmajor(cid), k, False)
                             for cid in geometry_cell_cover(g, res))
         cover_df = local_table(spark, rows, "__cell long, __pidx int, __interior boolean")
-        ix, iy = _grid_xy(lon_col, lat_col, n)
-        pts = points.withColumn("__cell", F.expr(f"{iy} * {n} + {ix}"))
+        pts = points.withColumn("__cell", F.expr(rowmajor_sql(lon_col, lat_col, n)))
         joined = (pts.join(F.broadcast(cover_df), "__cell", "inner")
                   .drop("__cell"))
     # Predicate compilation (the analog of GeoMesa compiling filters into
@@ -213,8 +200,8 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
                 contained, boundary = classify_cell_cover(g, res)
             else:
                 contained, boundary = [], geometry_cell_cover(g, res)
-            out.append([(_rowmajor(c, n), True) for c in contained]
-                       + [(_rowmajor(c, n), False) for c in boundary])
+            out.append([(rowmajor(c), True) for c in contained]
+                       + [(rowmajor(c), False) for c in boundary])
         return pd.Series(out)
 
     prep_type = f"convex boolean, edges {refine.EDGE_TYPE}, segs {refine.EDGE_TYPE}"
@@ -237,9 +224,8 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
                   .withColumn("__salt", F.explode(F.array([F.lit(i) for i in range(n_salts)])))
                   .drop("__cov", "__c"))
 
-    ix, iy = _grid_xy(lon_col, lat_col, n)
     pts = (points
-           .withColumn("__cell", F.expr(f"{iy} * {n} + {ix}"))
+           .withColumn("__cell", F.expr(rowmajor_sql(lon_col, lat_col, n)))
            .withColumn("__salt", salt_col(F.col(lon_col) + F.col(lat_col), n_salts)))
 
     joined = pts.join(poly_cells.hint("shuffle_merge"), ["__cell", "__salt"], "inner")

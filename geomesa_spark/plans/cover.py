@@ -15,8 +15,6 @@ Budgets follow the reference: <= 2000 ranges/query, BFS recursion 7
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -33,19 +31,17 @@ def z2_ranges(boxes: list[tuple[float, float, float, float]],
     return _Z2.ranges(boxes, max_ranges=max_ranges)
 
 
-def z2_range_predicate(z2_col: Column,
+def z2_range_predicate(z2_col: str,
                        boxes: list[tuple[float, float, float, float]],
                        max_ranges: int = 64) -> Column:
     """OR of BETWEENs on the z2 column covering the boxes. Kept coarse
     (max_ranges default 64) because it exists for file/partition pruning; the
     exact lon/lat predicate re-check runs anyway (the reference's 'loose bbox'
     + Z3Filter re-check split, Z3IndexKeySpace.useFullFilter:240-254)."""
-    ranges = z2_ranges(boxes, max_ranges=max_ranges)
-    preds = [z2_col.between(r.lower, r.upper) for r in ranges]
-    return reduce(lambda a, b: a | b, preds)
+    return _ranges_expr(z2_col, z2_ranges(boxes, max_ranges=max_ranges))
 
 
-def s2_range_predicate(s2_col: Column,
+def s2_range_predicate(s2_col: str,
                        boxes: list[tuple[float, float, float, float]],
                        max_cells: int = 16) -> Column:
     """OR of BETWEENs on an S2 leaf-id column covering the boxes — the
@@ -54,10 +50,14 @@ def s2_range_predicate(s2_col: Column,
     within a face, see cells/s2.py).  Coarse by design: the exact lon/lat
     re-check runs after the pruned scan."""
     from geomesa_spark.cells.s2 import S2SFC
-    sfc = S2SFC(max_cells=max_cells)
-    ranges = sfc.ranges(list(boxes))
-    preds = [s2_col.between(r.lower, r.upper) for r in ranges]
-    return reduce(lambda a, b: a | b, preds)
+    return _ranges_expr(s2_col, S2SFC(max_cells=max_cells).ranges(list(boxes)))
+
+
+def _ranges_expr(col: str, ranges: list[IndexRange]) -> Column:
+    """One SQL expression for the ranges: a Column per range costs a few
+    py4j round trips each, this costs one."""
+    return F.expr(" OR ".join(f"`{col}` BETWEEN {r.lower}L AND {r.upper}L"
+                              for r in ranges))
 
 
 def bbox_cell_cover(xmin: float, ymin: float, xmax: float, ymax: float,

@@ -316,7 +316,7 @@ def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
     pre = None
     if strategy.index in ("z2", "z3") and query.bbox is not None \
             and "z2" in df.columns:
-        pre = _cover.z2_range_predicate(F.col("z2"), [tuple(query.bbox)])
+        pre = _cover.z2_range_predicate("z2", [tuple(query.bbox)])
         if strategy.index == "z3" and query.interval is not None \
                 and "time_bin" in df.columns:
             b0, b1 = (_interval_bins(query.interval, period))
@@ -324,7 +324,7 @@ def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
                 pre = pre & F.col("time_bin").between(b0, b1)
     elif strategy.index == "s2" and query.bbox is not None \
             and "s2" in df.columns:
-        pre = _cover.s2_range_predicate(F.col("s2"), [tuple(query.bbox)])
+        pre = _cover.s2_range_predicate("s2", [tuple(query.bbox)])
     elif strategy.index.startswith("attr:"):
         # the attribute predicate is already part of query.where; the
         # attr-index benefit is its sorted secondary table (attr_index.py)

@@ -87,12 +87,12 @@ class SpatialQuery:
             preds.append(lon.between(xmin, xmax) & lat.between(ymin, ymax))
             boxes.append(bbox)
             if self.z2_col is not None and self.z2_col in df.columns:
-                preds.append(cover.z2_range_predicate(F.col(self.z2_col), boxes))
+                preds.append(cover.z2_range_predicate(self.z2_col, boxes))
             # S3Index analog (index/s3/S3IndexKeySpace.scala): S2 cell-id
             # ranges prune an s2-sorted layout; the exact lon/lat between
             # above stays as the row-level recheck
             if self.s2_col is not None and self.s2_col in df.columns:
-                preds.append(cover.s2_range_predicate(F.col(self.s2_col), boxes))
+                preds.append(cover.s2_range_predicate(self.s2_col, boxes))
             # residual exact refine, skipped for rectangles (exact ranges)
             sql = (refine.geometry_sql(geom, "INTERSECTS", self.lon_col, self.lat_col)
                    if geom is not None else None)

@@ -29,6 +29,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from geomesa_spark.functions.cell_functions import salt_col, time_bin_col, z2_col
 
@@ -74,7 +75,7 @@ def write_indexed(df: DataFrame, path: str, *, period: str = "week",
         key = F.col(id_col) if id_col else F.col(lon_col)
         out = out.withColumn("salt", salt_col(key, n_salts))
 
-    n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = _partitions(spark, target_partitions)
     cell_name = _CELL_COLUMNS[cell]
     range_cols = ["time_bin", cell_name] if ts_col in df.columns else [cell_name]
     out = out.repartitionByRange(n, *[F.col(c) for c in range_cols]) \
@@ -85,8 +86,9 @@ def write_indexed(df: DataFrame, path: str, *, period: str = "week",
         "period": period, "lon_col": lon_col, "lat_col": lat_col,
         "ts_col": ts_col, "n_salts": n_salts, "format": fmt, "cell": cell,
         # record WHICH key salted the rows so appends stay consistent
-        "salt_key": (id_col if id_col else lon_col) if n_salts > 0 else None,
-        "columns": df.columns,
+        "salt_key": _salt_key(id_col, lon_col, n_salts),
+        "target_partitions": n, "columns": df.columns,
+        "schema": _layout_schema(out),
     }
     _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
 
@@ -103,16 +105,18 @@ def ensure_indexed(df: DataFrame, path: str, *, period: str = "week",
     layout at ingest and queries only scan it — rebuilding a deterministic
     layout per query measures the writer, not the query plan.  The manifest
     check covers every parameter that shapes the table (cell curve, period,
-    salts, format, source columns); same-shaped but different DATA at the
-    same path is the caller's contract, exactly as for the IVF index.
+    salts and key, partitions, format, columns); same-shaped but different
+    DATA at the same path is the caller's contract, as for the IVF index.
     """
     spark = df.sparkSession
     try:
         m = read_manifest(spark, path)
         if (m.get("period"), m.get("cell"), m.get("n_salts"),
+                m.get("salt_key"), m.get("target_partitions"),
                 m.get("format"), m.get("columns"), m.get("lon_col"),
                 m.get("lat_col"), m.get("ts_col")) == \
-                (period, cell, n_salts, fmt, df.columns,
+                (period, cell, n_salts, _salt_key(id_col, lon_col, n_salts),
+                 _partitions(spark, target_partitions), fmt, df.columns,
                  lon_col, lat_col, ts_col):
             return read_indexed(spark, path)
     except Exception:
@@ -124,13 +128,13 @@ def ensure_indexed(df: DataFrame, path: str, *, period: str = "week",
 
 
 def read_indexed(spark: SparkSession, path: str) -> DataFrame:
+    """Read with the manifest's schema (no inference job; columns missing
+    from older files read as NULL), else infer it from merged footers."""
     manifest = read_manifest(spark, path)
     reader = spark.read.format(manifest.get("format", "parquet"))
-    if manifest.get("schema_version", 1) > 1:
-        # evolved tables: merge file footers so rows written before a
-        # column existed surface it as NULL (Iceberg add-column semantics)
-        reader = reader.option("mergeSchema", "true")
-    return reader.load(path)
+    if "schema" in manifest:
+        return reader.schema(StructType.fromJson(manifest["schema"])).load(path)
+    return reader.option("mergeSchema", "true").load(path)
 
 
 def append_indexed(df: DataFrame, path: str) -> None:
@@ -140,10 +144,11 @@ def append_indexed(df: DataFrame, path: str) -> None:
     (GeoMesaDataStoreAlterSchemaTest / MetadataBackedStats schema update):
     GeoMesa only permits ADDING attributes, never dropping or retyping —
     enforced here the same way.  The manifest records the superset schema
-    and bumps ``schema_version`` so reads merge footers.
+    (file columns, then the new ones) and bumps ``schema_version``.
     """
     spark = df.sparkSession
     manifest = read_manifest(spark, path)
+    file_cols = [c for c in read_indexed(spark, path).columns if c != "time_bin"]
     old_cols = manifest["columns"]
     missing = [c for c in old_cols if c not in df.columns]
     if missing:
@@ -165,13 +170,15 @@ def append_indexed(df: DataFrame, path: str) -> None:
         key = manifest.get("salt_key") or manifest["lon_col"]
         out = out.withColumn("salt", salt_col(F.col(key),
                                               manifest["n_salts"]))
-    out = out.sortWithinPartitions(_CELL_COLUMNS[manifest.get("cell", "z2")])
+    added = [c for c in df.columns if c not in old_cols]
+    out = out.select(*file_cols, *added, "time_bin") \
+        .sortWithinPartitions(_CELL_COLUMNS[manifest.get("cell", "z2")])
     out.write.mode("append").partitionBy("time_bin") \
         .format(manifest.get("format", "parquet")).save(path)
-    new_cols = old_cols + [c for c in df.columns if c not in old_cols]
-    manifest["columns"] = new_cols
+    manifest["columns"] = old_cols + added
+    manifest["schema"] = _layout_schema(out)
     manifest["schema_version"] = manifest.get("schema_version", 1) + \
-        (1 if new_cols != old_cols else 0)
+        (1 if added else 0)
     _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
 
 
@@ -208,6 +215,23 @@ def write_bucketed(df: DataFrame, name: str, path: str,
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(name)
     return df.sparkSession.table(name)
+
+
+def _partitions(spark: SparkSession, target_partitions: int | None) -> int:
+    return target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _salt_key(id_col: str | None, lon_col: str, n_salts: int) -> str | None:
+    return (id_col or lon_col) if n_salts > 0 else None
+
+
+def _layout_schema(out: DataFrame) -> dict:
+    """The schema a reader infers for ``out`` written partitioned by
+    ``time_bin``: the file columns, all nullable, then an integer time_bin."""
+    schema = json.loads(out.drop("time_bin")._jdf.schema().asNullable().json())
+    schema["fields"].append({"name": "time_bin", "type": "integer",
+                             "nullable": True, "metadata": {}})
+    return schema
 
 
 def _cell_expr(manifest: dict, df: DataFrame):

@@ -497,3 +497,31 @@ class TestBoundingBoxGeoHashes:
     def test_degenerate_point_bbox(self):
         from geomesa_spark.functions.geohash import geohashes_from_bbox
         assert len(geohashes_from_bbox(1, 1, 1, 1, 32)) == 1
+
+
+def test_rowmajor_sql_matches_grid_cells(spark):
+    """The SQL row-major key shared by pip_join and kNN equals iy * n + ix
+    of the grid cell (grid.cell_xy) and the Morton cell_col mapped through
+    grid.rowmajor: points on cell edges, at +-180 / +-90, NaN and null
+    (NaN and null land in index 0, like cell_id_np's NaN)."""
+    from geomesa_spark.cells import grid
+    res = 6
+    n = 1 << res
+    edges = [-180.0 + k * 360.0 / n for k in (0, 1, 17, n - 1, n)]
+    lats = [-90.0 + k * 180.0 / n for k in (0, 1, 33, n - 1, n)]
+    rows = [(x, y) for x in edges for y in lats]
+    rows += [(x + d, y + d) for x, y in rows[::3] for d in (-1e-9, 1e-9)]
+    rows += [(float("nan"), 10.0), (10.0, float("nan")), (None, 10.0),
+             (10.0, None), (None, None), (float("nan"), float("nan"))]
+    df = spark.createDataFrame(rows, "lon double, lat double")
+    got = df.select(
+        "lon", "lat", F.expr(grid.rowmajor_sql("lon", "lat", n)).alias("key"),
+        cell_col(F.col("lon"), F.col("lat"), res).alias("cell")).toPandas()
+    lon = got.lon.astype(float).to_numpy()
+    lat = got.lat.astype(float).to_numpy()
+    with np.errstate(invalid="ignore"):
+        cells = grid.cell_id_np(lon, lat, res)
+    for i, cid in enumerate(cells):
+        _res, ix, iy = grid.cell_xy(int(cid))
+        assert got.key[i] == iy * n + ix == grid.rowmajor(int(got.cell[i])), \
+            (lon[i], lat[i])

@@ -194,7 +194,7 @@ class TestS2Layout:
         from geomesa_spark.plans.cover import s2_range_predicate
         df = read_indexed(spark, s2_path)
         bbox = (40.0, 20.0, 50.0, 30.0)
-        pre = s2_range_predicate(F.col("s2"), [bbox])
+        pre = s2_range_predicate("s2", [bbox])
         exact = (F.col("lon").between(bbox[0], bbox[2])
                  & F.col("lat").between(bbox[1], bbox[3]))
         got = df.where(pre).where(exact).count()
@@ -836,3 +836,144 @@ def test_ensure_indexed_writes_once(spark, tmp_path):
     t3 = max(os.path.getmtime(os.path.join(r, f))
              for r, _, fs in os.walk(path) for f in fs)
     assert t3 > t1
+
+
+def test_ensure_indexed_rewrites_on_salt_key_or_partition_change(spark, tmp_path):
+    """The manifest match covers the salt key and the partition count: a
+    different id_col (salted layout) or target_partitions rewrites the
+    layout instead of reusing one salted or split differently."""
+    from geomesa_spark.functions.cell_functions import salt_col
+    from geomesa_spark.sources.layout import ensure_indexed
+    df = spark.range(0, 200, 1, 2).selectExpr(
+        "id AS fid", "id * 7 % 200 AS alt", "-50e0 + id * 0.5e0 AS lon",
+        "10e0 + id * 0.1e0 AS lat")
+    path = str(tmp_path / "lay")
+
+    def salts_by(key):
+        got = ensure_indexed(df, path, ts_col="none", id_col=key, n_salts=4,
+                             target_partitions=4)
+        want = df.select("fid", salt_col(F.col(key), 4).alias("s"))
+        return got.select("fid", F.col("salt").alias("s")) \
+            .exceptAll(want).count() == 0
+
+    assert salts_by("fid")
+    assert read_manifest(spark, path)["salt_key"] == "fid"
+    assert salts_by("alt")                     # different id_col -> rewrite
+    assert read_manifest(spark, path)["salt_key"] == "alt"
+
+    ensure_indexed(df, path, ts_col="none", id_col="alt", n_salts=4,
+                   target_partitions=3)        # different count -> rewrite
+    assert read_manifest(spark, path)["target_partitions"] == 3
+    assert len(glob.glob(f"{path}/time_bin=0/part-*.parquet")) == 3
+
+
+def _layout_frame(spark, n=400):
+    return spark.range(0, n, 1, 4).selectExpr(
+        "id AS fid", "format_string('n%04d', id) AS name",
+        "-179e0 + (id * 7919 % 400) * 0.895e0 AS lon",
+        "-89e0 + (id * 104729 % 400) * 0.445e0 AS lat",
+        "timestamp_seconds(1600000000 + id * 86400) AS ts")
+
+
+@pytest.mark.parametrize("kw", [{"cell": "z2"}, {"cell": "s2"}, {"cell": "geohash"},
+                                {"cell": "z2", "id_col": "fid", "n_salts": 4}],
+                         ids=["z2", "s2", "geohash", "salted"])
+def test_read_indexed_uses_recorded_schema(spark, tmp_path, count_jobs, kw):
+    """read_indexed reads with the manifest's schema: it runs no Spark job
+    (no schema inference) and yields exactly the schema the reader would
+    infer — names, types, order and nullability.  (File listing stays on
+    the driver while a layout has at most 32 time bins, Spark's
+    parallelPartitionDiscovery threshold.)"""
+    path = str(tmp_path / "lay")
+    write_indexed(_layout_frame(spark), path, period="month", **kw)
+    assert count_jobs(lambda: read_indexed(spark, path)) == 0
+    assert read_indexed(spark, path).schema == spark.read.parquet(path).schema
+    assert read_indexed(spark, path).count() == 400
+
+
+def test_appended_layout_records_superset_schema(spark, tmp_path, count_jobs):
+    """After an append with a new column the recorded schema equals the
+    footer-merged one and still reads without a job; a manifest without a
+    schema (written before the schema was recorded) falls back to
+    inference and still surfaces the new column."""
+    import json
+
+    from geomesa_spark.sources.layout import MANIFEST, _write_text, append_indexed
+    path = str(tmp_path / "lay")
+    df = _layout_frame(spark)
+    write_indexed(df.where("fid < 300"), path, period="month", id_col="fid",
+                  n_salts=2)
+    append_indexed(df.where("fid >= 300").withColumn("quality", F.lit(0.5))
+                   .select("quality", *df.columns), path)
+    merged = spark.read.option("mergeSchema", "true").parquet(path).schema
+    assert count_jobs(lambda: read_indexed(spark, path)) == 0
+    assert read_indexed(spark, path).schema == merged
+    assert merged.names[-2:] == ["quality", "time_bin"]
+
+    m = read_manifest(spark, path)
+    del m["schema"]
+    _write_text(spark, f"{path}/{MANIFEST}", json.dumps(m))
+    legacy = read_indexed(spark, path)
+    assert legacy.schema == merged
+    assert legacy.where("quality IS NULL").count() == 300
+    assert legacy.where("quality = 0.5").count() == 100
+
+
+def test_polygon_query_over_layout_runs_one_job(spark, tmp_path, count_jobs):
+    """From read_indexed to collect(), a polygon SpatialQuery with its z2
+    range predicate runs exactly one Spark job: no schema-inference job."""
+    from geomesa_spark.plans.query import SpatialQuery
+    path = str(tmp_path / "lay")
+    write_indexed(_layout_frame(spark), path, period="month")
+    ring = "POLYGON ((-60 -40, 40 -45, 50 30, -20 60, -60 -40))"
+    rows = []
+    assert count_jobs(lambda: rows.extend(
+        SpatialQuery(geometry=ring, z2_col="z2")
+        .apply(read_indexed(spark, path)).collect())) == 1
+    assert rows
+
+
+def test_range_predicates_match_per_range_columns(spark):
+    """The one-expression z2/s2 range predicates select the same rows as
+    the OR of one Column.between per range: seeded random boxes, the world
+    box and boxes touching the antimeridian and the poles."""
+    import random
+    from functools import reduce
+
+    from geomesa_spark.cells.s2 import S2SFC
+    from geomesa_spark.functions.cell_functions import s2_col, z2_col
+    from geomesa_spark.plans.cover import (s2_range_predicate, z2_range_predicate,
+                                           z2_ranges)
+    r = random.Random(5)
+    boxes = [(-180.0, -90.0, 180.0, 90.0), (170.0, 80.0, 180.0, 90.0),
+             (-180.0, -90.0, -170.0, -80.0), (-180.0, -10.0, 180.0, 10.0),
+             (179.5, -90.0, 180.0, 90.0), (-1.0, 89.0, 1.0, 90.0)]
+    for _ in range(14):
+        x0, x1 = sorted(r.uniform(-180, 180) for _ in range(2))
+        y0, y1 = sorted(r.uniform(-90, 90) for _ in range(2))
+        boxes.append((x0, y0, x1, y1))
+    pts = [(r.uniform(-180, 180), r.uniform(-90, 90)) for _ in range(1500)]
+    pts += [(b[i], b[j]) for b in boxes for i in (0, 2) for j in (1, 3)]
+    df = (spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(pts)],
+                                "id long, lon double, lat double")
+          .withColumn("z2", z2_col(F.col("lon"), F.col("lat")))
+          .withColumn("s2", s2_col(F.col("lon"), F.col("lat"))))
+
+    def per_range(col, ranges):
+        return reduce(lambda a, b: a | b,
+                      [F.col(col).between(q.lower, q.upper) for q in ranges])
+
+    cols = []
+    for i, b in enumerate(boxes):
+        cols += [z2_range_predicate("z2", [b]).alias(f"z{i}"),
+                 per_range("z2", z2_ranges([b], max_ranges=64)).alias(f"zc{i}"),
+                 s2_range_predicate("s2", [b]).alias(f"s{i}"),
+                 per_range("s2", S2SFC(max_cells=16).ranges([b])).alias(f"sc{i}")]
+    got = df.select("lon", "lat", *cols).toPandas()
+    for i, b in enumerate(boxes):
+        for one, per in ((f"z{i}", f"zc{i}"), (f"s{i}", f"sc{i}")):
+            assert (got[one] == got[per]).all(), (b, one)
+        # the cover property: every point in the box passes both
+        inside = got.lon.between(b[0], b[2]) & got.lat.between(b[1], b[3])
+        assert inside.any() and got[f"z{i}"][inside].all() \
+            and got[f"s{i}"][inside].all(), b

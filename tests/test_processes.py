@@ -288,3 +288,67 @@ def test_convex_hull_oracle_sql_edge_cases(spark):
     sql = ("WITH p AS (SELECT DISTINCT grp, x, y FROM pts),\n" + body)
     want = {(r[0], r[1], r[2]) for r in con.execute(sql).fetchall()}
     assert got == want
+
+
+@pytest.fixture(scope="module")
+def knn_layout(spark, tmp_path_factory):
+    """A z2 layout of 6000 distinct points, denser near the antimeridian
+    and the poles."""
+    from geomesa_spark.sources.layout import write_indexed
+    path = str(tmp_path_factory.mktemp("knn_layout") / "pts")
+    rng = np.random.RandomState(17)
+    lon = np.concatenate([rng.uniform(-180, 180, 4000), rng.uniform(178, 180, 500),
+                          rng.uniform(-180, -178, 500), rng.uniform(-180, 180, 1000)])
+    lat = np.concatenate([rng.uniform(-90, 90, 5000),
+                          rng.choice([-1.0, 1.0], 1000) * rng.uniform(87, 90, 1000)])
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "event_id long, lon double, lat double")
+    write_indexed(df, path, ts_col="none")
+    return path
+
+
+def test_knn_runs_at_most_four_jobs_with_a_small_scan_plan(
+        spark, knn_layout, count_jobs, monkeypatch):
+    """From read_indexed to collect(), kNN of one point runs at most 4
+    Spark jobs, and the plan of each candidate scan it collects stays
+    under 10 kB (a row-major cell key, not a Morton bit-spread tree)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from geomesa_spark.operators.knn import knn_join
+    from geomesa_spark.sources.layout import read_indexed
+    sizes = []
+    to_arrow = DataFrame.toArrow
+
+    def recording(self):
+        sizes.append(len(self._jdf.queryExecution().executedPlan().toString()))
+        return to_arrow(self)
+    monkeypatch.setattr(DataFrame, "toArrow", recording)
+    rows = []
+    jobs = count_jobs(lambda: rows.extend(knn_join(
+        read_indexed(spark, knn_layout), [("q", 12.5, 40.0)], 10,
+        n_rows=6000).collect()))
+    assert len(rows) == 10
+    assert jobs <= 4, jobs
+    assert sizes and max(sizes) < 10_000, sizes
+
+
+def test_knn_many_query_points_match_brute_force(spark, knn_layout):
+    """knn_join with 60 query points — antimeridian, poles, duplicated
+    positions — returns exactly the brute-force neighbours and ranks."""
+    from geomesa_spark.operators.knn import knn_brute_force, knn_join
+    from geomesa_spark.sources.layout import read_indexed
+    rng = np.random.RandomState(23)
+    qs = [(f"r{i}", float(x), float(y)) for i, (x, y) in
+          enumerate(zip(rng.uniform(-180, 180, 40), rng.uniform(-85, 85, 40)))]
+    qs += [("am0", 179.99, 0.0), ("am1", -179.99, 0.0), ("am2", 180.0, 45.0),
+           ("am3", -180.0, -45.0), ("np", 0.0, 90.0), ("sp", 0.0, -90.0),
+           ("np1", 120.0, 89.5), ("sp1", -60.0, -89.9), ("c0", 179.0, 88.0),
+           ("c1", -179.5, -88.5)]
+    qs += [(f"d{i}", x, y) for i, (_q, x, y) in enumerate(qs[::5])]
+    assert len(qs) >= 50
+    pts = read_indexed(spark, knn_layout)
+    key = ["qid", "event_id", "knn_rank"]
+    got = {tuple(r) for r in knn_join(pts, qs, 8, n_rows=6000).select(*key).collect()}
+    want = {tuple(r) for r in knn_brute_force(pts, qs, 8).select(*key).collect()}
+    assert got == want and len(got) == 8 * len(qs)

@@ -115,13 +115,11 @@ def q_polygon_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     'native' — bbox prefilter + vectorized exact refine (the z2/z3-style
     plan).  'gh' — a geohash-STRING-keyed layout scanned through the
     GeohashUtils decomposition (geom/gh_decompose.py, the reference's
-    GeohashUtils.scala:241-409 planning path): decompose_geometry covers
-    the polygon with whole-character cells, cover_predicate compiles them
-    to an OR of prefix matches that Catalyst pushes to the parquet scan as
-    StringStartsWith filters (asserted in test_layout), and the same exact
-    refine trims the boundary cells."""
-    from geomesa_spark.geom.gh_decompose import (cover_predicate,
-                                                 decompose_geometry)
+    GeohashUtils.scala:241-409 planning path): layout.geohash_cover covers
+    the polygon with whole-character cells no finer than the layout key and
+    compiles them to an OR of prefix matches that Catalyst pushes to the
+    parquet scan as StringStartsWith filters (asserted in test_layout), and
+    the same exact refine trims the boundary cells."""
     from geomesa_spark.sources import layout as lay
     from geomesa_spark.sources.sigtable import cache_path
 
@@ -131,8 +129,7 @@ def q_polygon_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = cache_path("events_gh", sf_dir, kind="layouts")
     indexed = lay.ensure_indexed(df, path, cell="geohash")
-    cells = decompose_geometry(POLY_DIAMOND, max_size=32)
-    coarse = indexed.where(cover_predicate("gh", cells))
+    coarse = lay.geohash_cover(indexed, POLY_DIAMOND, max_size=32)
     gh = SpatialQuery(geometry=POLY_DIAMOND).apply(coarse).select("event_id")
 
     return (native.select(F.lit("native").alias("path"), "event_id")

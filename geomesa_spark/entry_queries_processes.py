@@ -737,14 +737,15 @@ pix AS (
            + CAST(floor(ay + (by - ay) * i / greatest(n, 1)) AS BIGINT)))) AS pix
   FROM n
 ),
--- 'bres': integer-cell endpoints, then the reference's bresenhamLine walk
+-- 'bres': integer-cell endpoints (GridSnap's floor((v - min) / d),
+-- d = (max - min) / n), then the reference's bresenhamLine walk
 -- replayed with the SAME float64 ops in the SAME order (err + dErr, >= 0.5,
 -- err - 1.0) — bit-identical to the engine's numpy walk and the JVM's.
 cells AS (
-  SELECT CAST(least(floor((x1 - 40.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS ix0,
-         CAST(least(floor((y1 - 20.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS iy0,
-         CAST(least(floor((x2 - 40.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS ix1,
-         CAST(least(floor((y2 - 20.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS iy1,
+  SELECT CAST(least(floor((x1 - 40.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS ix0,
+         CAST(least(floor((y1 - 20.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS iy0,
+         CAST(least(floor((x2 - 40.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS ix1,
+         CAST(least(floor((y2 - 20.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS iy1,
          row_number() OVER () AS seg
   FROM f
 ),

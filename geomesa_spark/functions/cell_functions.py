@@ -72,7 +72,10 @@ def z2_col(lon: Column, lat: Column, precision: int = 31) -> Column:
 _GH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def geohash_col(lon: Column, lat: Column, chars: int = 7) -> Column:
+GEOHASH_CHARS = 7  # key width of a geohash layout (sources/layout.py)
+
+
+def geohash_col(lon: Column, lat: Column, chars: int = GEOHASH_CHARS) -> Column:
     """Geohash string of ``chars`` base-32 characters — native Catalyst,
     bit-identical to functions/geohash.encode (GeoHash binary subdivision
     == floor-normalize with the upper edge clamped).

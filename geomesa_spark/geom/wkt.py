@@ -70,31 +70,37 @@ def _empty(typ: str) -> model.Geometry:
     return model.GeometryCollection([])
 
 
+# the scanners below visit only these characters, not every digit
+_PARENS = re.compile(r"[()]")
+_PARENS_COMMAS = re.compile(r"[(),]")
+
+
 def _strip_parens(s: str) -> str:
     s = s.strip()
     if not s.startswith("("):
         raise ValueError(f"expected '(': {s[:40]!r}")
     depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
+    for m in _PARENS.finditer(s):
+        if m.group() == "(":
             depth += 1
-        elif ch == ")":
+        else:
             depth -= 1
             if depth == 0:
-                return s[1:i]
+                return s[1:m.start()]
     raise ValueError("unbalanced parens")
 
 
 def _split_top(s: str) -> list[str]:
     parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
+    for m in _PARENS_COMMAS.finditer(s):
+        ch = m.group()
         if ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
+        elif depth == 0:
+            parts.append(s[start:m.start()])
+            start = m.end()
     parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
 

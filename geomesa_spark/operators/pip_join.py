@@ -21,18 +21,24 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_spark.cells.grid import rowmajor, rowmajor_sql, xy_sql
+from geomesa_spark.cells.grid import rowmajor_sql, xy_sql
 from geomesa_spark.functions.cell_functions import salt_col
 from geomesa_spark.geom import model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
 from geomesa_spark.plans import refine
-from geomesa_spark.plans.cover import geometry_cell_cover, pick_cover_resolution
+from geomesa_spark.plans.cover import (batch_cover_spans, cell_cover_xy,
+                                       pick_cover_resolution, pick_span_resolution)
 from geomesa_spark.sources.arrow_io import local_table
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
+
+# a geometry's cover as one array column: scanline spans or row-major cells
+SPAN_TYPE = "array<struct<siy:bigint,x0:bigint,x1:bigint,interior:boolean>>"
+CELL_TYPE = "array<struct<cell:bigint,interior:boolean>>"
 
 
 def _polygons_to_local(polygons) -> list[tuple]:
@@ -51,13 +57,20 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
                        predicate: str = "intersects",
                        keep_geom: bool = False) -> DataFrame:
     """Broadcast PIP join: ``polygons`` is a small driver-side collection
-    [(id, wkt-or-Geometry)]. Returns points rows + ``poly_id``.
+    [(id, wkt-or-Geometry)]. Returns points rows + ``poly_id`` (+ the
+    polygon's WKB as ``__geom`` when ``keep_geom``).
 
     Plan shape: points -> native cell assignment -> broadcast hash join on
     cell -> broadcast join of the edge lists on the polygon index -> native
     refine (skipped for cover cells fully inside the polygon). One
-    shuffle-free pass over the fact table, and every driver-side table is a
-    LocalRelation: no Python worker anywhere in the plan.
+    shuffle-free pass over the fact table, and no Python worker anywhere in
+    the plan.
+
+    Both broadcast sides read ONE driver table with one row per polygon:
+    its index, id, edge lists and cover (an array column, ``inline``d into
+    the join's build side). Catalyst walks a LocalRelation's rows in every
+    expression transform of every plan that holds it, so a table of
+    O(polygons) rows keeps planning cheap where O(cover) rows did not.
 
     ``predicate`` is ``intersects`` (boundary-inclusive) or ``contains``
     (the polygon's interior holds the point; lines and points hold none).
@@ -66,17 +79,12 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         raise ValueError(predicate)
     spark = points.sparkSession
     polys = _polygons_to_local(polygons)
+    geoms = [g for _pid, g, _b in polys]
+    prepared = [refine.edge_columns(g) for g in geoms]
 
-    from geomesa_spark.plans.cover import (classify_cell_cover_xy,
-                                           cover_spans, pick_span_resolution)
-
-    id_type = "string" if polys and isinstance(polys[0][0], str) else "long"
-    all_polygonal = all(isinstance(g, (model.Polygon, model.MultiPolygon))
-                        for _pid, g, _b in polys)
-
-    if all_polygonal:
+    if all(isinstance(g, (model.Polygon, model.MultiPolygon)) for g in geoms):
         # SPAN cover: the broadcast side is O(perimeter) scanline spans
-        # (iy, x0, x1, pidx, interior), not O(area) cells — a circle D cells
+        # (iy, x0, x1, interior), not O(area) cells — a circle D cells
         # across broadcasts O(D) rows instead of O(D^2).  That keeps ALL
         # per-query serial work (driver numpy build, Arrow createDataFrame,
         # broadcast exchange collect + hash-relation build) small enough to
@@ -87,79 +95,82 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         # a native join filter (whole-stage codegen; a handful of long
         # compares per probed span).
         if res is None:
-            res = pick_span_resolution([g.bounds for _, g, _ in polys])
-        parts = {c: [] for c in ("__siy", "__x0", "__x1", "__pidx", "__interior")}
-        for k, (_pid, g, _b) in enumerate(polys):
-            iy, x0, x1, interior = cover_spans(g, res)
-            for c, v in zip(parts, (iy, x0, x1, np.full(len(iy), k), interior)):
-                parts[c].append(v)
-        spans_df = local_table(
-            spark, {c: np.concatenate(v or [np.empty(0)]) for c, v in parts.items()},
-            "__siy long, __x0 long, __x1 long, __pidx int, __interior boolean")
-        ix, iy = xy_sql(lon_col, lat_col, 1 << res)
-        pts = points.withColumn("__ix", F.expr(ix)).withColumn("__iy", F.expr(iy))
-        joined = (pts.join(F.broadcast(spans_df),
-                           (pts["__iy"] == spans_df["__siy"])
-                           & (pts["__ix"] >= spans_df["__x0"])
-                           & (pts["__ix"] <= spans_df["__x1"]),
-                           "inner")
-                  .drop("__ix", "__iy", "__siy", "__x0", "__x1"))
+            res = pick_span_resolution([g.bounds for g in geoms])
+        pidx, iy, x0, x1, interior = batch_cover_spans(geoms, res)
+        cover_col = "__spans"
+        table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom,
+                               cover_col, SPAN_TYPE, _struct_lists(
+                                   pidx, len(polys), siy=iy, x0=x0, x1=x1,
+                                   interior=interior))
+        spans = table.selectExpr(
+            "__pidx", "inline(__spans) AS (__siy, __x0, __x1, __interior)")
+        ix_sql, iy_sql = xy_sql(lon_col, lat_col, 1 << res)
+        pts = points.withColumns({"__ix": F.expr(ix_sql), "__iy": F.expr(iy_sql)})
+        joined = pts.join(F.broadcast(spans), F.expr(
+            "__iy = __siy AND __ix >= __x0 AND __ix <= __x1"))
+        helpers = ("__ix", "__iy", "__siy", "__x0", "__x1")
     else:
         if res is None:
-            res = pick_cover_resolution([g.bounds for _, g, _ in polys])
+            res = pick_cover_resolution([g.bounds for g in geoms])
         n = 1 << res
         # mixed geometry types (lines/points in the set): small covers,
-        # legacy tuple build
-        rows = []
-        for k, (_pid, g, _b) in enumerate(polys):
-            if isinstance(g, (model.Polygon, model.MultiPolygon)):
-                contained_xy, boundary_xy = classify_cell_cover_xy(g, res)
-                rows.extend((int(xy[1]) * n + int(xy[0]), k, True)
-                            for xy in contained_xy)
-                rows.extend((int(xy[1]) * n + int(xy[0]), k, False)
-                            for xy in boundary_xy)
-            else:
-                rows.extend((rowmajor(cid), k, False)
-                            for cid in geometry_cell_cover(g, res))
-        cover_df = local_table(spark, rows, "__cell long, __pidx int, __interior boolean")
+        # row-major cell keys
+        covers = [cell_cover_xy(g, res) for g in geoms]
+        xy = np.concatenate([c[0] for c in covers] or [np.empty((0, 2), np.int64)])
+        cover_col = "__cells"
+        table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom,
+                               cover_col, CELL_TYPE, _struct_lists(
+                                   np.repeat(np.arange(len(covers)),
+                                             [len(c[1]) for c in covers]),
+                                   len(polys), cell=xy[:, 1] * n + xy[:, 0],
+                                   interior=np.concatenate(
+                                       [c[1] for c in covers] or [np.empty(0, bool)])))
+        cells = table.selectExpr("__pidx", "inline(__cells) AS (__cell, __interior)")
         pts = points.withColumn("__cell", F.expr(rowmajor_sql(lon_col, lat_col, n)))
-        joined = (pts.join(F.broadcast(cover_df), "__cell", "inner")
-                  .drop("__cell"))
+        joined = pts.join(F.broadcast(cells), "__cell")
+        helpers = ("__cell",)
     # Predicate compilation (the analog of GeoMesa compiling filters into
     # server-side iterators): the exact refine is one native expression
     # over each geometry's edge list (plans/refine.py), attached by a small
     # broadcast join on the polygon index. All JVM — zero Python traffic;
     # interior rows short-circuit on `__interior` before the refine.
-    prepared = [refine.edge_columns(g) for _pid, g, _b in polys]
-    edges_df = local_table(spark, {
-        "__pidx": np.arange(len(polys)),
-        poly_id_col: [pid for pid, _g, _b in polys],
-        "__convex": [p[0] for p in prepared],
-        "__edges": [p[1] for p in prepared],
-        "__segs": [p[2] for p in prepared],
-    }, f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
-       f"__edges {refine.EDGE_TYPE}, __segs {refine.EDGE_TYPE}")
     cond = refine.refine_sql(
         lon_col, lat_col, "INTERSECTS" if predicate == "intersects" else "WITHIN",
         edges="__edges" if any(p[1] for p in prepared) else None,
         segs="__segs" if any(p[2] for p in prepared) else None)
-    out = (joined.join(F.broadcast(edges_df), "__pidx")
-           .where(F.col("__interior") | F.expr(cond))
-           .drop("__pidx", "__interior", "__convex", "__edges", "__segs"))
-    return _attach_geom(spark, out, polys, poly_id_col, id_type, keep_geom)
+    return (joined.join(F.broadcast(table.drop(cover_col)), "__pidx")
+            .where(F.col("__interior") | F.expr(cond))
+            .drop(*helpers, "__pidx", "__interior", "__convex", "__edges", "__segs"))
 
 
-def _attach_geom(spark, out: DataFrame, polys, poly_id_col: str,
-                 id_type: str, keep_geom: bool) -> DataFrame:
-    """Re-attach the matched polygon's WKB (`__geom`) when keep_geom=True —
-    a tiny broadcast join on the polygon id."""
-    if not keep_geom:
-        return out
-    geom_df = local_table(
-        spark, {poly_id_col: [pid for pid, _g, _b in polys],
-                "__geom": [b for _pid, _g, b in polys]},
-        f"{poly_id_col} {id_type}, __geom binary")
-    return out.join(F.broadcast(geom_df), poly_id_col)
+def _struct_lists(owner: np.ndarray, n: int, **fields) -> pa.ListArray:
+    """One list per geometry of the struct rows ``fields``: row ``i`` goes
+    to the list of geometry ``owner[i]`` (``owner`` is sorted)."""
+    offsets = np.r_[0, np.cumsum(np.bincount(owner, minlength=n))].astype(np.int32)
+    values = pa.StructArray.from_arrays([pa.array(v) for v in fields.values()],
+                                        names=list(fields))
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+
+def _polygon_table(spark, polys, prepared, poly_id_col: str, keep_geom: bool,
+                   cover_col: str, cover_type: str, cover: pa.ListArray) -> DataFrame:
+    """The join's driver table, one row per geometry: ``__pidx``, the id,
+    the refine's ``__convex``/``__edges``/``__segs`` (``prepared``), then
+    ``__geom`` (when ``keep_geom``) and the cover column."""
+    id_type = "string" if polys and isinstance(polys[0][0], str) else "long"
+    edge_type = pa.list_(pa.struct([(f, pa.float64()) for f in ("ax", "ay", "bx", "by")]))
+    cols = {"__pidx": pa.array(np.arange(len(polys), dtype=np.int32)),
+            poly_id_col: pa.array([pid for pid, _g, _b in polys]),
+            "__convex": pa.array([p[0] for p in prepared], pa.bool_()),
+            "__edges": pa.array([p[1] for p in prepared], edge_type),
+            "__segs": pa.array([p[2] for p in prepared], edge_type)}
+    ddl = (f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
+           f"__edges {refine.EDGE_TYPE}, __segs {refine.EDGE_TYPE}")
+    if keep_geom:
+        cols["__geom"] = pa.array([b for _pid, _g, b in polys], pa.binary())
+        ddl += ", __geom binary"
+    cols[cover_col] = cover
+    return local_table(spark, pa.table(cols), f"{ddl}, {cover_col} {cover_type}")
 
 
 def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
@@ -179,15 +190,7 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
     ``__edges``/``__segs`` array columns prepared once per polygon — no
     Python and no WKB parsing in the per-candidate hot path.
     """
-    from pyspark.sql.types import (ArrayType, BooleanType, LongType,
-                                   StructField, StructType)
-
-    from geomesa_spark.plans.cover import classify_cell_cover
-
     n = 1 << res
-
-    cover_type = ArrayType(StructType([
-        StructField("cell", LongType()), StructField("interior", BooleanType())]))
 
     def cover_udf(wkb_s: pd.Series) -> pd.Series:
         out = []
@@ -195,13 +198,8 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
             if b is None:
                 out.append([])
                 continue
-            g = wkb_loads(bytes(b))
-            if isinstance(g, (model.Polygon, model.MultiPolygon)):
-                contained, boundary = classify_cell_cover(g, res)
-            else:
-                contained, boundary = [], geometry_cell_cover(g, res)
-            out.append([(rowmajor(c), True) for c in contained]
-                       + [(rowmajor(c), False) for c in boundary])
+            xy, interior = cell_cover_xy(wkb_loads(bytes(b)), res)
+            out.append(list(zip((xy[:, 1] * n + xy[:, 0]).tolist(), interior.tolist())))
         return pd.Series(out)
 
     prep_type = f"convex boolean, edges {refine.EDGE_TYPE}, segs {refine.EDGE_TYPE}"
@@ -211,7 +209,7 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
         return pd.DataFrame(prepared, columns=["convex", "edges", "segs"])
 
     covers = (polygons
-              .withColumn("__cov", F.pandas_udf(cover_udf, cover_type)(F.col(poly_wkb_col)))
+              .withColumn("__cov", F.pandas_udf(cover_udf, CELL_TYPE)(F.col(poly_wkb_col)))
               .withColumn("__prep", F.pandas_udf(prep_udf, prep_type)(F.col(poly_wkb_col)))
               .withColumn("__convex", F.col("__prep.convex"))
               .withColumn("__edges", F.col("__prep.edges"))

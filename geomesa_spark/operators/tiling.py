@@ -329,8 +329,9 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
 
     def cell(col, lo, hi, n_px):
-        # GridSnap.i/j: floor((v - min) / d), upper edge into the last cell
-        frac = F.floor((col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px))
+        # GridSnap.i/j: floor((v - min) / d) with d = (max - min) / n, in
+        # that division order; upper edge into the last cell
+        frac = F.floor((col - F.lit(lo)) / F.lit((hi - lo) / n_px))
         return F.least(frac, F.lit(n_px - 1)).cast("long")
 
     # NO parameter annotations: `from __future__ import annotations`

@@ -15,6 +15,9 @@ Budgets follow the reference: <= 2000 ranges/query, BFS recursion 7
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -67,38 +70,10 @@ def bbox_cell_cover(xmin: float, ymin: float, xmax: float, ymax: float,
 
 def geometry_cell_cover(geom: model.Geometry, res: int) -> list[int]:
     """Cells whose square intersects the geometry (exact test per cell —
-    covers of polygons drop fully-outside cells, unlike a plain bbox cover)."""
-    if isinstance(geom, (model.Polygon, model.MultiPolygon)):
-        contained, boundary = classify_cell_cover(geom, res)
-        return sorted(contained + boundary)
-    xmin, ymin, xmax, ymax = geom.bounds
-    return grid.cover_bbox(xmin, ymin, xmax, ymax, res)
-
-
-def _poly_rings(geom: model.Geometry):
-    import numpy as np
-    for comp in geom._components():
-        if isinstance(comp, model.Polygon):
-            yield np.asarray(comp.shell, dtype=np.float64)
-            for h in comp.holes:
-                yield np.asarray(h, dtype=np.float64)
-
-
-def classify_cell_cover(geom: model.Geometry, res: int
-                        ) -> tuple[list[int], list[int]]:
-    """Vectorized polygon cover, split into (contained, boundary) z cells.
-
-    Thin wrapper over :func:`classify_cell_cover_xy` that converts the
-    (ix, iy) arrays to z-order cell ids (the layout/range-scan key).  The
-    broadcast join path uses the xy variant directly — it keys on row-major
-    indices and must not pay a per-cell Python bit-spread.
-    """
-    contained_xy, boundary_xy = classify_cell_cover_xy(geom, res)
-    contained = [grid.from_xy(res, int(ex), int(ey))
-                 for ex, ey in contained_xy]
-    boundary = [grid.from_xy(res, int(ex), int(ey))
-                for ex, ey in boundary_xy]
-    return contained, boundary
+    covers of polygons drop fully-outside cells, unlike a plain bbox cover),
+    as sorted z-order ids."""
+    xy, _interior = cell_cover_xy(geom, res)
+    return sorted(grid.from_xy(res, int(x), int(y)) for x, y in xy)
 
 
 def classify_cell_cover_xy(geom: model.Geometry, res: int
@@ -121,13 +96,12 @@ def classify_cell_cover_xy(geom: model.Geometry, res: int
     already decided which (fully-inside with no corner inside is impossible
     for a simple ring: the cell boundary would have to cross an edge).
     """
-    import numpy as np
-
     from geomesa_spark.geom import algos
 
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
-    ix0, iy0, nx, ny = _bbox_cells(geom, res)
+    win = _windows([geom], res)
+    ix0, iy0, nx, ny = (int(v[0]) for v in win)
 
     # 1. corner grid: (nx+1) x (ny+1) points, one vectorized PIP call
     cx = -180.0 + (np.arange(ix0, ix0 + nx + 1, dtype=np.float64)) * w
@@ -139,7 +113,9 @@ def classify_cell_cover_xy(geom: model.Geometry, res: int
     corners_in = (inside[:-1, :-1].astype(np.int8) + inside[1:, :-1]
                   + inside[:-1, 1:] + inside[1:, 1:])          # (nx, ny)
 
-    edge = _edge_grid(geom, res, ix0, iy0, nx, ny)
+    edge = np.zeros((nx, ny), dtype=bool)
+    _key, _g, ex, ey = _edge_cells(_rings([geom]), win, res)
+    edge[ex, ey] = True
 
     contained_m = (corners_in == 4) & ~edge
     cxs, cys = np.nonzero(contained_m)
@@ -149,113 +125,251 @@ def classify_cell_cover_xy(geom: model.Geometry, res: int
     return contained_xy, boundary_xy
 
 
-def _bbox_cells(geom: model.Geometry, res: int) -> tuple[int, int, int, int]:
-    """(ix0, iy0, nx, ny) cell window of the geometry's bbox, clamped."""
+def cell_cover_xy(geom: model.Geometry, res: int) -> tuple:
+    """Cell cover of any geometry as ``(xy, interior)``: a (k, 2) int64
+    array of global (ix, iy) indices and whether each cell lies inside.
+    Polygons take :func:`classify_cell_cover_xy` (contained cells first);
+    other geometries cover their bbox window, every cell a boundary cell
+    (the cells of :func:`grid.cover_bbox`)."""
+    if isinstance(geom, (model.Polygon, model.MultiPolygon)):
+        contained_xy, boundary_xy = classify_cell_cover_xy(geom, res)
+        return (np.concatenate([contained_xy, boundary_xy]),
+                np.arange(len(contained_xy) + len(boundary_xy)) < len(contained_xy))
+    ix0, iy0, nx, ny = (int(v[0]) for v in _windows([geom], res))
+    gx, gy = np.meshgrid(np.arange(ix0, ix0 + nx), np.arange(iy0, iy0 + ny),
+                         indexing="ij")
+    return (np.stack([gx.ravel(), gy.ravel()], axis=1).astype(np.int64),
+            np.zeros(nx * ny, dtype=bool))
+
+
+def _windows(geoms: list, res: int) -> tuple:
+    """Each geometry's bbox cell window, clamped to the grid, as four int64
+    arrays ``(ix0, iy0, nx, ny)`` — the window :func:`grid.cover_bbox`
+    enumerates."""
     n = 1 << res
-    xmin, ymin, xmax, ymax = geom.bounds
-    ix0 = max(0, min(int((xmin + 180.0) / 360.0 * n), n - 1))
-    ix1 = max(0, min(int((xmax + 180.0) / 360.0 * n), n - 1))
-    iy0 = max(0, min(int((ymin + 90.0) / 180.0 * n), n - 1))
-    iy1 = max(0, min(int((ymax + 90.0) / 180.0 * n), n - 1))
-    return ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
+    b = np.array([g.bounds for g in geoms], dtype=np.float64).reshape(-1, 4)
+    ix = np.clip(((b[:, 0::2] + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
+    iy = np.clip(((b[:, 1::2] + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+    return ix[:, 0], iy[:, 0], ix[:, 1] - ix[:, 0] + 1, iy[:, 1] - iy[:, 0] + 1
 
 
-def _edge_grid(geom: model.Geometry, res: int, ix0: int, iy0: int,
-               nx: int, ny: int) -> "np.ndarray":
-    """(nx, ny) bool grid marking cells the polygon BOUNDARY passes through.
+def _ragged(cnt: np.ndarray) -> tuple:
+    """``(owner, offset)`` of a ragged expansion: ``i`` repeated ``cnt[i]``
+    times, each with offsets ``0 .. cnt[i] - 1``."""
+    owner = np.repeat(np.arange(len(cnt)), cnt)
+    return owner, np.arange(len(owner)) - (np.cumsum(cnt) - cnt)[owner]
 
-    Exact edge traversal: for each ring segment, the grid cells it passes
-    through are the floor-cells of midpoints between consecutive gridline
-    crossings (crossing parameters computed analytically, not sampled).
-    Every such cell genuinely intersects the geometry (it contains a piece
-    of the boundary), so no per-cell recheck is needed.
-    """
-    import numpy as np
 
+class _Rings(NamedTuple):
+    """Every ring of the polygon parts of a geometry list, flattened: ring
+    ``r`` owns the vertices ``xy[vring == r]``, belongs to geometry
+    ``geom[r]`` and polygon part ``part[r]``, and ``hole[r]`` marks holes.
+    A geometry's rings are contiguous, each part's shell first."""
+    xy: np.ndarray
+    vring: np.ndarray
+    geom: np.ndarray
+    part: np.ndarray
+    hole: np.ndarray
+
+
+def _rings(geoms: list) -> _Rings:
+    rings, geom, part, hole = [], [], [], []
+    parts = 0
+    for k, g in enumerate(geoms):
+        for comp in g._components():
+            if isinstance(comp, model.Polygon):
+                for j, ring in enumerate([comp.shell] + comp.holes):
+                    rings.append(np.asarray(ring, dtype=np.float64).reshape(-1, 2))
+                    geom.append(k)
+                    part.append(parts)
+                    hole.append(j > 0)
+                parts += 1
+    return _Rings(np.concatenate(rings or [np.empty((0, 2))]),
+                  np.repeat(np.arange(len(rings)), [len(r) for r in rings]),
+                  np.asarray(geom, dtype=np.int64), np.asarray(part, dtype=np.int64),
+                  np.asarray(hole, dtype=bool))
+
+
+def _edge_cells(rings: _Rings, win: tuple, res: int) -> tuple:
+    """Cells the polygon BOUNDARY passes through, for every geometry at
+    once: sorted unique ``(key, geom, ex, ey)`` int64 arrays, ``(ex, ey)``
+    window-local and ``key = base[geom] + ey * nx[geom] + ex`` (row-major
+    within each window, windows laid end to end).
+
+    Exact edge traversal over the flat arrays of every ring edge: the cells
+    a segment passes through are the floor-cells of the midpoints between
+    its consecutive gridline crossings (crossing parameters computed
+    analytically, not sampled). Every such cell holds a piece of the
+    boundary, so no per-cell recheck is needed. A segment lying exactly ON
+    a gridline also marks the cells on its other side (closed squares share
+    the line)."""
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
-    edge = np.zeros((nx, ny), dtype=bool)
-    for ring in _poly_rings(geom):
-        fx = (ring[:, 0] + 180.0) / w - ix0     # grid coords
-        fy = (ring[:, 1] + 90.0) / h - iy0
-        for i in range(len(ring) - 1):
-            x0, y0, x1, y1 = fx[i], fy[i], fx[i + 1], fy[i + 1]
-            ts = [np.array([0.0, 1.0])]
-            dx, dy = x1 - x0, y1 - y0
-            if dx != 0.0:
-                lo, hi = (x0, x1) if x0 <= x1 else (x1, x0)
-                ks = np.arange(np.ceil(lo), np.floor(hi) + 1.0)
-                ts.append((ks - x0) / dx)
-            if dy != 0.0:
-                lo, hi = (y0, y1) if y0 <= y1 else (y1, y0)
-                ks = np.arange(np.ceil(lo), np.floor(hi) + 1.0)
-                ts.append((ks - y0) / dy)
-            t = np.unique(np.clip(np.concatenate(ts), 0.0, 1.0))
-            mid = (t[:-1] + t[1:]) / 2.0
-            exs = np.clip((x0 + dx * mid).astype(np.int64), 0, nx - 1)
-            eys = np.clip((y0 + dy * mid).astype(np.int64), 0, ny - 1)
-            edge[exs, eys] = True
-            # degenerate: segment lying exactly ON a gridline touches the
-            # cells on BOTH sides (closed squares share the line)
-            if dy == 0.0 and y0 == np.floor(y0) and 0 <= y0 - 1 < ny:
-                edge[exs, np.full_like(exs, int(y0) - 1)] = True
-            if dx == 0.0 and x0 == np.floor(x0) and 0 <= x0 - 1 < nx:
-                edge[np.full_like(eys, int(x0) - 1), eys] = True
-    return edge
+    ix0, iy0, nx, ny = win
+    vg = rings.geom[rings.vring]
+    fx = (rings.xy[:, 0] + 180.0) / w - ix0[vg]       # window grid coords
+    fy = (rings.xy[:, 1] + 90.0) / h - iy0[vg]
+    s = np.flatnonzero(rings.vring[:-1] == rings.vring[1:])   # segment starts
+    x0, y0, x1, y1 = fx[s], fy[s], fx[s + 1], fy[s + 1]
+    dx, dy = x1 - x0, y1 - y0
+    # crossing parameters per segment: 0, 1 and every gridline crossing
+    seg = [np.arange(len(s))] * 2
+    ts = [np.zeros(len(s)), np.ones(len(s))]
+    for a0, a1, d in ((x0, x1, dx), (y0, y1, dy)):
+        first = np.ceil(np.minimum(a0, a1))
+        cnt = np.where(d != 0.0, np.floor(np.maximum(a0, a1)) + 1.0 - first, 0.0)
+        k, off = _ragged(np.maximum(cnt, 0.0).astype(np.int64))
+        seg.append(k)
+        ts.append((first[k] + off - a0[k]) / d[k])
+    seg, t = np.concatenate(seg), np.clip(np.concatenate(ts), 0.0, 1.0)
+    o = np.lexsort((t, seg))
+    seg, t = seg[o], t[o]
+    new = np.ones(len(t), dtype=bool)
+    new[1:] = (seg[1:] != seg[:-1]) | (t[1:] != t[:-1])
+    seg, t = seg[new], t[new]
+    pair = seg[1:] == seg[:-1]
+    k = seg[:-1][pair]
+    mid = (t[:-1][pair] + t[1:][pair]) / 2.0
+    g = vg[s][k]
+    ex = np.clip((x0[k] + dx[k] * mid).astype(np.int64), 0, nx[g] - 1)
+    ey = np.clip((y0[k] + dy[k] * mid).astype(np.int64), 0, ny[g] - 1)
+    ya, xa = y0[k], x0[k]
+    below = (dy[k] == 0.0) & (ya == np.floor(ya)) & (ya - 1 >= 0) & (ya - 1 < ny[g])
+    left = (dx[k] == 0.0) & (xa == np.floor(xa)) & (xa - 1 >= 0) & (xa - 1 < nx[g])
+    g = np.concatenate([g, g[below], g[left]])
+    ex = np.concatenate([ex, ex[below], xa[left].astype(np.int64) - 1])
+    ey = np.concatenate([ey, ya[below].astype(np.int64) - 1, ey[left]])
+    base = np.cumsum(nx * ny) - nx * ny
+    key = np.unique(base[g] + ey * nx[g] + ex)
+    g = np.searchsorted(base, key, side="right") - 1
+    local = key - base[g]
+    return key, g, local % nx[g], local // nx[g]
 
 
-def cover_spans(geom: model.Geometry, res: int) -> "tuple":
-    """Scanline SPAN cover of a polygon: O(perimeter) rows, not O(area) cells.
+def _gaps_inside(rings: _Rings, win: tuple, res: int, gg: np.ndarray,
+                 gy: np.ndarray, gx0: np.ndarray) -> np.ndarray:
+    """Whether each gap (a run of cells with no boundary point) lies inside
+    its geometry, decided at its first cell's centre.
 
-    Returns four equal-length int64/bool arrays ``(iy, x0, x1, interior)``:
-    for grid row ``iy``, cells ``x0..x1`` (inclusive, global indices) either
-    contain a piece of the boundary (``interior=False`` — candidates needing
-    the exact refine) or lie entirely inside the polygon (``interior=True`` —
-    the exact-cover shortcut).  A circle of D cells diameter covers O(D^2)
-    cells but only O(D) spans, so the broadcast side of a PIP join shrinks by
-    the cell diameter — this is what keeps the driver-side planning + the
-    broadcast exchange OUT of the Amdahl serial term at cluster scale.
-
-    Method: exact supercover edge grid (shared with
-    :func:`classify_cell_cover_xy`), then per grid row the edge-cell runs
-    become boundary spans and each gap between them is classified by ONE
-    point-in-polygon test of its first cell's center — a gap contains no
-    boundary point, so the whole gap is uniformly inside or outside.
-    """
-    import numpy as np
-
-    from geomesa_spark.geom import algos
-
+    ``points_intersect`` over every (gap, ring) pair at once: crossing
+    parity with ``points_in_ring``'s arithmetic, computed from the
+    crossings of each ring with each grid row's centre line, and its
+    per-part rule (in a shell and in no hole of one polygon part). A gap
+    cell holds no boundary point, so the boundary test never fires."""
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
-    ix0, iy0, nx, ny = _bbox_cells(geom, res)
-    edge = _edge_grid(geom, res, ix0, iy0, nx, ny).T     # (ny, nx)
+    ix0, iy0, nx, ny = win
+    rows0 = np.cumsum(ny) - ny                # first global row of each window
+    nrows = int(ny.sum())
+    # edges of rings points_in_ring counts (three edges or more)
+    live = np.bincount(rings.vring, minlength=len(rings.geom)) >= 4
+    s = np.flatnonzero((rings.vring[:-1] == rings.vring[1:]) & live[rings.vring[:-1]])
+    r = rings.vring[s]
+    g = rings.geom[r]
+    ax, ay, bx, by = rings.xy[s, 0], rings.xy[s, 1], rings.xy[s + 1, 0], rings.xy[s + 1, 1]
+    # candidate rows: a margin of one row around the edge's y extent, each
+    # checked below with the exact arithmetic
+    fa = (ay + 90.0) / h - iy0[g]
+    fb = (by + 90.0) / h - iy0[g]
+    lo = np.clip(np.floor(np.minimum(fa, fb) - 0.5) - 1.0, 0, ny[g] - 1).astype(np.int64)
+    hi = np.clip(np.ceil(np.maximum(fa, fb) - 0.5) + 1.0, 0, ny[g] - 1).astype(np.int64)
+    e, j = _ragged(hi - lo + 1)
+    j += lo[e]
+    ax, ay, bx, by, ge = ax[e], ay[e], bx[e], by[e], g[e]
+    y = -90.0 + (iy0[ge] + j + 0.5) * h
+    cond = (ay > y) != (by > y)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = ax + (y - ay) * (bx - ax) / (by - ay)
+    c_grp = (r[e] * nrows + rows0[ge] + j)[cond]
+    xint = xint[cond]
+    # one query per (gap, ring of its geometry)
+    ring0 = np.searchsorted(rings.geom, np.arange(len(nx)))
+    q, qr = _ragged(np.bincount(rings.geom, minlength=len(nx))[gg])
+    qr += ring0[gg][q]
+    cx = -180.0 + (ix0[gg] + gx0 + 0.5) * w
+    q_grp = qr * nrows + rows0[gg][q] + gy[q]
+    # parity of the crossings right of each query: merge queries into the
+    # sorted crossings of their group (after equal crossings: x < xint)
+    grp = np.concatenate([c_grp, q_grp])
+    val = np.concatenate([xint, cx[q]])
+    is_q = np.concatenate([np.zeros(len(c_grp), dtype=bool), np.ones(len(q), dtype=bool)])
+    o = np.lexsort((is_q, val, grp))
+    seen = np.cumsum(~is_q[o])
+    pos = np.empty(len(o), dtype=np.int64)
+    pos[o] = np.arange(len(o))
+    end = np.searchsorted(grp[o], q_grp, side="right") - 1
+    ring_in = ((seen[end] - seen[pos[len(c_grp):]]) % 2 == 1) & live[qr]
+    # per part: in its shell (the part's first ring) and in none of its
+    # holes; per gap: in any part
+    new = np.diff(q * len(rings.part) + rings.part[qr], prepend=-1) != 0
+    shell = np.flatnonzero(new)
+    in_hole = np.bincount(np.cumsum(new) - 1, weights=ring_in & rings.hole[qr],
+                          minlength=len(shell)) > 0
+    part_in = ring_in[shell] & ~in_hole
+    return np.bincount(q[shell], weights=part_in, minlength=len(gg)) > 0
 
-    def _runs(mask: "np.ndarray") -> tuple:
-        """Row-major run extraction: (row, start, end_inclusive) arrays."""
-        pad = np.zeros((mask.shape[0], mask.shape[1] + 2), dtype=np.int8)
-        pad[:, 1:-1] = mask
-        d = np.diff(pad, axis=1)
-        sy, sx = np.nonzero(d == 1)
-        ey, ex = np.nonzero(d == -1)
-        # nonzero is row-major: starts/ends pair up in order within each row
-        return sy, sx, ex - 1
 
-    by, bx0, bx1 = _runs(edge)
-    gy, gx0, gx1 = _runs(~edge)
-    if len(gy):
-        # one batched PIP call classifies every gap by its first cell center
-        cxs = -180.0 + (ix0 + gx0 + 0.5) * w
-        cys = -90.0 + (iy0 + gy + 0.5) * h
-        keep = algos.points_intersect(cxs, cys, geom)
-        gy, gx0, gx1 = gy[keep], gx0[keep], gx1[keep]
+def batch_cover_spans(geoms: list, res: int) -> tuple:
+    """Scanline SPAN cover of every polygon in ``geoms``, in one pass:
+    O(perimeter) rows per polygon, not O(area) cells.
 
-    iy = np.concatenate([by, gy]).astype(np.int64) + iy0
-    x0 = np.concatenate([bx0, gx0]).astype(np.int64) + ix0
-    x1 = np.concatenate([bx1, gx1]).astype(np.int64) + ix0
-    interior = np.concatenate([np.zeros(len(by), dtype=bool),
-                               np.ones(len(gy), dtype=bool)])
-    return iy, x0, x1, interior
+    Returns five equal-length arrays ``(pidx, iy, x0, x1, interior)``: for
+    geometry ``pidx`` and grid row ``iy``, cells ``x0..x1`` (inclusive,
+    global indices) either contain a piece of the boundary
+    (``interior=False`` — candidates needing the exact refine) or lie
+    entirely inside the polygon (``interior=True`` — the exact-cover
+    shortcut). Rows are ordered by polygon, boundary spans before interior
+    ones, then by ``(iy, x0)``. A circle of D cells diameter covers O(D^2)
+    cells but only O(D) spans, so the broadcast side of a PIP join shrinks
+    by the cell diameter.
+
+    Method: the exact edge cells (shared with :func:`classify_cell_cover_xy`);
+    per grid row their runs become boundary spans, and each gap between
+    them is classified by ONE point-in-polygon test of its first cell's
+    centre — a gap contains no boundary point, so the whole gap is
+    uniformly inside or outside. Everything runs over flat arrays of all
+    polygons, edges and rows; no Python loop per polygon or per edge.
+    (The scanline span cover is the interval approximation of Raster
+    Intervals, SIGMOD 2023.)"""
+    win = _windows(geoms, res)
+    ix0, iy0, nx, ny = win
+    rings = _rings(geoms)
+    key, g, ex, ey = _edge_cells(rings, win, res)
+    # boundary spans: runs of consecutive edge cells within one row
+    start = (np.diff(key, prepend=-2) != 1) | (ex == 0)
+    st = np.flatnonzero(start)
+    en = np.flatnonzero(np.roll(start, -1))      # a run ends before the next
+    bg, by, bx0, bx1 = g[st], ey[st], ex[st], ex[en]
+    # gaps: before each run (from the previous run of its row, or the
+    # window's left edge) and after each row's last run (or the whole row)
+    rows0 = np.cumsum(ny) - ny
+    brow = rows0[bg] + by
+    before = np.where(np.diff(brow, prepend=-1) == 0, np.roll(bx1, 1) + 1, 0)
+    rows = np.arange(int(ny.sum()))
+    rg = np.searchsorted(rows0, rows, side="right") - 1
+    last = np.searchsorted(brow, rows, side="right")   # into the padded arrays
+    after = np.where(np.r_[-1, brow][last] == rows, np.r_[-1, bx1][last] + 1, 0)
+    gg = np.concatenate([bg, rg])
+    gy = np.concatenate([by, rows - rows0[rg]])
+    gx0 = np.concatenate([before, after])
+    gx1 = np.concatenate([bx0 - 1, nx[rg] - 1])
+    ok = gx0 <= gx1
+    gg, gy, gx0, gx1 = gg[ok], gy[ok], gx0[ok], gx1[ok]
+    keep = _gaps_inside(rings, win, res, gg, gy, gx0)
+    gg, gy, gx0, gx1 = gg[keep], gy[keep], gx0[keep], gx1[keep]
+
+    pidx = np.concatenate([bg, gg])
+    interior = np.r_[np.zeros(len(bg), dtype=bool), np.ones(len(gg), dtype=bool)]
+    iy = np.concatenate([by, gy]) + iy0[pidx]
+    x0 = np.concatenate([bx0, gx0]) + ix0[pidx]
+    x1 = np.concatenate([bx1, gx1]) + ix0[pidx]
+    o = np.lexsort((x0, iy, interior, pidx))
+    return pidx[o], iy[o], x0[o], x1[o], interior[o]
+
+
+def cover_spans(geom: model.Geometry, res: int) -> tuple:
+    """:func:`batch_cover_spans` of one polygon: ``(iy, x0, x1, interior)``."""
+    return batch_cover_spans([geom], res)[1:]
 
 
 def pick_span_resolution(boxes: list[tuple[float, float, float, float]],

@@ -246,6 +246,21 @@ def _cell_expr(manifest: dict, df: DataFrame):
     return z2_col(lon, lat)
 
 
+def geohash_cover(df: DataFrame, geom, max_size: int = 32) -> DataFrame:
+    """Rows of a geohash layout (``gh`` keys, written by ``cell='geohash'``)
+    whose key falls in ``geom``'s decomposition: an OR of prefix matches
+    that pushes to the scan, a superset of the rows ``geom`` intersects.
+
+    The decomposition stops at the key width: a cell finer than the
+    ``GEOHASH_CHARS``-character key would be a longer prefix, which no key
+    starts with (a Point decomposes to its finest cell)."""
+    from geomesa_spark.functions.cell_functions import GEOHASH_CHARS
+    from geomesa_spark.geom.gh_decompose import cover_predicate, decompose_geometry
+    cells = decompose_geometry(geom, max_size=max_size,
+                               resolutions=(0, 5 * GEOHASH_CHARS, 5))
+    return df.where(cover_predicate("gh", cells))
+
+
 def read_manifest(spark: SparkSession, path: str) -> dict:
     return json.loads(_read_text(spark, f"{path}/{MANIFEST}"))
 

@@ -14,6 +14,8 @@ xmin + dx * (px + 0.5), the same formula as GridSnap.x/y (xOffset + dx*i).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -216,3 +218,20 @@ def test_density_lines_bresenham_operator(spark):
         for px, py in _scalar_bresenham(cell(x1), cell(y1), cell(x2), cell(y2)):
             expect[(px, py)] += wt
     assert got == {k: float(v) for k, v in expect.items()}
+
+
+def test_density_lines_bresenham_snaps_in_gridsnap_division_order(spark):
+    """Endpoints snap as GridSnap.i does, floor((v - min) / dx) with
+    dx = (max - min) / n. At this tie the product form
+    floor((v - min) / (max - min) * n) lands one cell lower."""
+    from geomesa_spark.operators.tiling import density_lines_bresenham
+
+    v = -7.503092783505155
+    assert math.floor((v + 10.0) / 17.3 * 97) == 13
+    df = spark.createDataFrame([(v, 0.5, 7.3, 0.5)],
+                               "x1 double, y1 double, x2 double, y2 double")
+    got = sorted(r.px for r in density_lines_bresenham(
+        df, (-10.0, 0.0, 7.3, 1.0), 97, 1).collect())
+    # cells 14..96, the final cell excluded as in the reference walk
+    assert got == [px for px, _py in _scalar_bresenham(14, 0, 96, 0)]
+    assert got[0] == 14

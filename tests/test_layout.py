@@ -79,6 +79,23 @@ class TestIndexedLayout:
         coarse = set(out.where(pred).select("event_id").toPandas()["event_id"])
         assert exact <= coarse
 
+    def test_geohash_point_query_returns_its_row(self, spark, tmp_path):
+        """A Point decomposes to its finest cell; geohash_cover stops at the
+        layout's key width, so the prefix matches the point's own key (an
+        8-character prefix of a 7-character key matched no row)."""
+        from geomesa_spark.plans.query import SpatialQuery
+        from geomesa_spark.sources.layout import geohash_cover
+        path = str(tmp_path / "gh_points")
+        src = spark.createDataFrame(
+            [("a", 46.123456, 25.654321), ("b", 46.2, 25.7), ("c", -120.5, 33.25)],
+            "event_id string, lon double, lat double")
+        write_indexed(src, path, cell="geohash")
+        out = read_indexed(spark, path)
+        for eid, lon, lat in (("a", 46.123456, 25.654321), ("c", -120.5, 33.25)):
+            point = f"POINT ({lon} {lat})"
+            got = SpatialQuery(geometry=point).apply(geohash_cover(out, point))
+            assert [r.event_id for r in got.collect()] == [eid]
+
     def test_sorted_within_files(self, spark, indexed_path):
         # z2-sorted files -> row-group stats can skip; check monotone z2 per file
         df = read_indexed(spark, indexed_path).withColumn("f", F.input_file_name())

@@ -16,9 +16,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from geomesa_spark.geom import algos, wkt
-from geomesa_spark.plans.cover import (classify_cell_cover_xy, cover_spans,
-                                       pick_span_resolution)
+from hypothesis import HealthCheck, Phase, given, seed, settings
+from hypothesis import strategies as st
+
+from geomesa_spark.geom import algos, model, wkt
+from geomesa_spark.plans.cover import (batch_cover_spans, classify_cell_cover_xy,
+                                       cover_spans, pick_span_resolution)
 
 
 def _circle(cx, cy, r, n=16):
@@ -67,6 +70,161 @@ def test_spans_equal_cell_cover(wkt_str, res):
         cx = -180.0 + (xx + 0.5) * 360.0 / n
         cy = -90.0 + (yy + 0.5) * 180.0 / n
         assert algos.points_intersect(np.array([cx]), np.array([cy]), g)[0]
+
+
+# ---------------------------------------------------------------------------
+# oracle: the per-polygon, per-edge span cover the batch cover replaced
+
+def _oracle_edge_grid(geom, res, ix0, iy0, nx, ny):
+    """(nx, ny) bool grid of the cells the boundary passes through: per
+    ring segment, the floor-cells of the midpoints between consecutive
+    gridline crossings, plus both sides of a segment ON a gridline."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    edge = np.zeros((nx, ny), dtype=bool)
+    rings = [np.asarray(r, dtype=np.float64) for comp in geom._components()
+             if isinstance(comp, model.Polygon) for r in [comp.shell] + comp.holes]
+    for ring in rings:
+        fx = (ring[:, 0] + 180.0) / w - ix0
+        fy = (ring[:, 1] + 90.0) / h - iy0
+        for i in range(len(ring) - 1):
+            x0, y0, x1, y1 = fx[i], fy[i], fx[i + 1], fy[i + 1]
+            ts = [np.array([0.0, 1.0])]
+            dx, dy = x1 - x0, y1 - y0
+            if dx != 0.0:
+                lo, hi = (x0, x1) if x0 <= x1 else (x1, x0)
+                ts.append((np.arange(np.ceil(lo), np.floor(hi) + 1.0) - x0) / dx)
+            if dy != 0.0:
+                lo, hi = (y0, y1) if y0 <= y1 else (y1, y0)
+                ts.append((np.arange(np.ceil(lo), np.floor(hi) + 1.0) - y0) / dy)
+            t = np.unique(np.clip(np.concatenate(ts), 0.0, 1.0))
+            mid = (t[:-1] + t[1:]) / 2.0
+            exs = np.clip((x0 + dx * mid).astype(np.int64), 0, nx - 1)
+            eys = np.clip((y0 + dy * mid).astype(np.int64), 0, ny - 1)
+            edge[exs, eys] = True
+            if dy == 0.0 and y0 == np.floor(y0) and 0 <= y0 - 1 < ny:
+                edge[exs, np.full_like(exs, int(y0) - 1)] = True
+            if dx == 0.0 and x0 == np.floor(x0) and 0 <= x0 - 1 < nx:
+                edge[np.full_like(eys, int(x0) - 1), eys] = True
+    return edge
+
+
+def _oracle_spans(geom, res):
+    """(iy, x0, x1, interior) of one polygon: runs of edge cells per row
+    are boundary spans; each gap between them is kept as an interior span
+    when points_intersect holds at its first cell's centre."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    xmin, ymin, xmax, ymax = geom.bounds
+    ix0 = max(0, min(int((xmin + 180.0) / 360.0 * n), n - 1))
+    ix1 = max(0, min(int((xmax + 180.0) / 360.0 * n), n - 1))
+    iy0 = max(0, min(int((ymin + 90.0) / 180.0 * n), n - 1))
+    iy1 = max(0, min(int((ymax + 90.0) / 180.0 * n), n - 1))
+    nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
+    edge = _oracle_edge_grid(geom, res, ix0, iy0, nx, ny).T
+
+    def runs(mask):
+        pad = np.zeros((mask.shape[0], mask.shape[1] + 2), dtype=np.int8)
+        pad[:, 1:-1] = mask
+        d = np.diff(pad, axis=1)
+        sy, sx = np.nonzero(d == 1)
+        _ey, ex = np.nonzero(d == -1)
+        return sy, sx, ex - 1
+
+    by, bx0, bx1 = runs(edge)
+    gy, gx0, gx1 = runs(~edge)
+    keep = algos.points_intersect(-180.0 + (ix0 + gx0 + 0.5) * w,
+                                  -90.0 + (iy0 + gy + 0.5) * h, geom)
+    gy, gx0, gx1 = gy[keep], gx0[keep], gx1[keep]
+    return (np.concatenate([by, gy]).astype(np.int64) + iy0,
+            np.concatenate([bx0, gx0]).astype(np.int64) + ix0,
+            np.concatenate([bx1, gx1]).astype(np.int64) + ix0,
+            np.r_[np.zeros(len(by), dtype=bool), np.ones(len(gy), dtype=bool)])
+
+
+def _assert_batch_matches_oracle(geoms, res):
+    pidx, *got = batch_cover_spans(geoms, res)
+    for k, g in enumerate(geoms):
+        want = _oracle_spans(g, res)
+        for name, a, b in zip(("iy", "x0", "x1", "interior"), (v[pidx == k] for v in got), want):
+            assert np.array_equal(a, b), (name, res, wkt.wkt_dumps(g)[:300])
+
+
+# ---------------------------------------------------------------------------
+# generated polygons: irregular stars with holes, multipolygons, boxes on
+# gridlines and boxes on the world's edges
+
+@st.composite
+def _star_with_holes(draw):
+    cx = draw(st.floats(-150.0, 150.0))
+    cy = draw(st.floats(-60.0, 60.0))
+    k = draw(st.integers(3, 12))
+    radii = draw(st.lists(st.floats(8.0, 25.0), min_size=2 * k, max_size=2 * k))
+    shell = [(cx + r * math.cos(math.pi * i / k) * (1.0 if i % 2 == 0 else 0.5),
+              cy + r * math.sin(math.pi * i / k) * (1.0 if i % 2 == 0 else 0.5))
+             for i, r in enumerate(radii)]
+    holes = [[(cx + dx + s * math.cos(2 * math.pi * j / m),
+               cy + dy + s * math.sin(2 * math.pi * j / m)) for j in range(m)]
+             for dx, dy, s, m in draw(st.lists(st.tuples(
+                 st.sampled_from([-1.5, 1.5]), st.floats(-1.0, 1.0),
+                 st.floats(0.1, 1.2), st.integers(3, 6)), max_size=2, unique_by=lambda t: t[0]))]
+    return model.Polygon(shell, holes)
+
+
+@st.composite
+def _grid_box(draw):
+    """A box, maybe with a box hole, whose edges lie on gridlines of a res
+    between 2 and 10, clipped to the world (so some touch +-180 / +-90)."""
+    res = draw(st.integers(2, 10))
+    n = 1 << res
+    ix, iy = draw(st.integers(-2, n)), draw(st.integers(-2, n))
+    w, h = draw(st.integers(1, 6)), draw(st.integers(1, 6))
+    x = [max(-180.0, min(180.0, -180.0 + v * 360.0 / n)) for v in (ix, ix + w)]
+    y = [max(-90.0, min(90.0, -90.0 + v * 180.0 / n)) for v in (iy, iy + h)]
+    if x[0] == x[1] or y[0] == y[1]:
+        x, y = [170.0, 180.0], [80.0, 90.0]
+    box = model.box(x[0], y[0], x[1], y[1])
+    if draw(st.booleans()) and w > 2 and h > 2:
+        cw, ch = (x[1] - x[0]) / w, (y[1] - y[0]) / h
+        return model.Polygon(box.shell, [model.box(x[0] + cw, y[0] + ch,
+                                                   x[1] - cw, y[1] - ch).shell[::-1]])
+    return box
+
+
+_polygonal = st.one_of(_star_with_holes(), _grid_box(), st.builds(
+    lambda a, b: model.MultiPolygon([a, b]), _star_with_holes(), _grid_box()))
+
+
+@seed(20261017)
+@settings(max_examples=150, deadline=None, database=None,
+          phases=(Phase.explicit, Phase.generate),
+          suppress_health_check=list(HealthCheck))
+@given(geoms=st.lists(_polygonal, min_size=1, max_size=4),
+       res=st.sampled_from([4, 7, 10]))
+def test_batch_cover_matches_per_polygon_oracle(geoms, res):
+    """One batch over several polygons gives, polygon by polygon, exactly
+    the per-polygon oracle's spans, in its order."""
+    _assert_batch_matches_oracle(geoms, res)
+
+
+@pytest.mark.parametrize("res", [4, 7, 10])
+def test_batch_cover_matches_oracle_on_fixed_cases(res):
+    extra = ["POLYGON ((170 80, 180 80, 180 90, 170 90, 170 80))",
+             "POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))",
+             "POLYGON ((-45 -22.5, 45 -22.5, 45 22.5, -45 22.5, -45 -22.5), "
+             "(0 0, 11.25 0, 11.25 11.25, 0 11.25, 0 0))",
+             "POLYGON ((0 0, 1 0, 0 0))"]
+    _assert_batch_matches_oracle([wkt.wkt_loads(c) for c in CASES + extra], res)
+
+
+@pytest.mark.parametrize("seed_, spans", [(1, 32660), (7919, 32656)])
+def test_benchmark_polygon_span_counts(seed_, spans):
+    """The pipeline benchmark's 64 circles: span count and oracle equality."""
+    from perfbench.inputs import pip_polygons, ring_wkt
+    geoms = [wkt.wkt_loads(ring_wkt(r)) for r in pip_polygons(seed_)]
+    res = pick_span_resolution([g.bounds for g in geoms])
+    assert len(batch_cover_spans(geoms, res)[0]) == spans
+    _assert_batch_matches_oracle(geoms, res)
 
 
 def test_spans_are_disjoint_per_polygon():
@@ -201,3 +359,33 @@ def test_span_join_is_broadcast_hash_join(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _local_relation_rows(df) -> list:
+    """Row count of every LocalRelation in ``df``'s optimized plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.size())]
+    return [n.data().size() for n in nodes
+            if n.getClass().getSimpleName() == "LocalRelation"]
+
+
+def test_pip_join_driver_table_has_one_row_per_polygon(spark):
+    """Plan size: both broadcast sides read one driver table of one row per
+    geometry (spans or cells in an array column, inlined on the build
+    side), for the span path, the mixed-geometry path and keep_geom — no
+    LocalRelation grows with the cover."""
+    from geomesa_spark.geom.wkb import wkb_dumps
+    from geomesa_spark.operators.pip_join import pip_join_broadcast
+    from perfbench.inputs import pip_polygons, ring_wkt
+
+    polys = [(k, ring_wkt(r)) for k, r in enumerate(pip_polygons(1))]
+    mixed = polys[:8] + [(64, "LINESTRING (0 0, 10 10)"), (65, "POINT (3 4)")]
+    pts = spark.range(200).selectExpr("id", "(id % 20) * 9e0 - 90e0 AS lon",
+                                      "(id div 20) * 9e0 - 45e0 AS lat")
+    assert _local_relation_rows(pip_join_broadcast(pts, polys)) == [64, 64]
+    for geoms in (polys, mixed):
+        out = pip_join_broadcast(pts, geoms, keep_geom=True)
+        assert _local_relation_rows(out) == [len(geoms)] * 2
+        wkb = {k: wkb_dumps(wkt.wkt_loads(w)) for k, w in geoms}
+        got = out.select("poly_id", "__geom").collect()
+        assert got and all(bytes(r["__geom"]) == wkb[r["poly_id"]] for r in got)

@@ -19,19 +19,11 @@ import os
 import sys
 import time
 
+from perfbench.measure import cpu_jiffies, steal_pct
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 IMAGES_ROWS = int(os.environ.get("BENCH_IMAGES_ROWS", "2000000"))
-
-
-def _cpu_times() -> tuple[int, int]:
-    """(total_jiffies, steal_jiffies) from the aggregate /proc/stat line."""
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(v) for v in f.readline().split()[1:]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except (OSError, ValueError):
-        return 0, 0
 
 
 class _StealMeter:
@@ -40,12 +32,11 @@ class _StealMeter:
     engine, so such timings earn one extra repetition."""
 
     def __enter__(self):
-        self.t0, self.s0 = _cpu_times()
+        self.t0 = cpu_jiffies()
         return self
 
     def __exit__(self, *exc):
-        t1, s1 = _cpu_times()
-        self.pct = round(100.0 * (s1 - self.s0) / max(t1 - self.t0, 1), 2)
+        self.pct = round(steal_pct(self.t0, cpu_jiffies()), 2)
         return False
 
 

@@ -127,22 +127,6 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> 
                   for ix in range(ix0, ix1 + 1) for iy in range(iy0, iy1 + 1))
 
 
-def pick_resolution(xmin: float, ymin: float, xmax: float, ymax: float,
-                    target_cells: int = 64, max_res: int = MAX_RES) -> int:
-    """Finest resolution whose bbox cover stays under ``target_cells``.
-
-    Mirrors the role of the reference's cover budgets (2000 scan ranges,
-    S2 maxCells=8 — conf/QueryProperties.scala:23,32) scaled for join keys.
-    """
-    for res in range(max_res, -1, -1):
-        n = 1 << res
-        nx = int((xmax + 180.0) / 360.0 * n) - int((xmin + 180.0) / 360.0 * n) + 1
-        ny = int((ymax + 90.0) / 180.0 * n) - int((ymin + 90.0) / 180.0 * n) + 1
-        if nx * ny <= target_cells:
-            return res
-    return 0
-
-
 class GridCells:
     """Bound-resolution facade used by operators."""
 

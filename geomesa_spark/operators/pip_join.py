@@ -5,9 +5,11 @@ sweepline join (GeoMesaJoinRelation.scala:41-91, RelationUtils.grid:30-70):
 
 * both sides get a grid ``cell`` key (points: exactly ONE cell each — no
   boundary duplication on the point side, which eliminates the reference's
-  dedupe TODO at RelationUtils.scala:38; polygons: their cell cover),
+  dedupe TODO at RelationUtils.scala:38; any geometry: its scanline span
+  cover, plans/cover.batch_cover_spans),
 * small polygon sets take the **broadcast** path (cover computed driver-side,
-  broadcast hash join on cell — the north rule's small-side strategy),
+  broadcast hash join on the grid row — the north rule's small-side
+  strategy),
 * large polygon sets take the **salted sort-merge** path: polygon cover rows
   are replicated to every salt value, points hash-salted by id, join key =
   (cell, salt) — GeoMesa's shard-prefix skew handling (ShardStrategy.scala:
@@ -27,18 +29,27 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.cells.grid import rowmajor_sql, xy_sql
 from geomesa_spark.functions.cell_functions import salt_col
-from geomesa_spark.geom import model, wkt
+from geomesa_spark.geom import wkt
 from geomesa_spark.geom.wkb import wkb_loads
 from geomesa_spark.plans import refine
-from geomesa_spark.plans.cover import (batch_cover_spans, cell_cover_xy,
-                                       pick_cover_resolution, pick_span_resolution)
+from geomesa_spark.plans.cover import batch_cover_spans, pick_span_resolution
 from geomesa_spark.sources.arrow_io import local_table
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
 
-# a geometry's cover as one array column: scanline spans or row-major cells
+# a geometry's cover as one array column of scanline spans
 SPAN_TYPE = "array<struct<siy:bigint,x0:bigint,x1:bigint,interior:boolean>>"
-CELL_TYPE = "array<struct<cell:bigint,interior:boolean>>"
+_SPAN_COLS = "inline(__spans) AS (__siy, __x0, __x1, __interior)"
+
+
+def _refine_op(predicate: str) -> str:
+    """The refine op of a join predicate: ``intersects`` (boundary-inclusive)
+    or ``contains`` (the geometry's interior holds the point; lines and
+    points hold none)."""
+    ops = {"intersects": "INTERSECTS", "contains": "WITHIN"}
+    if predicate not in ops:
+        raise ValueError(predicate)
+    return ops[predicate]
 
 
 def _polygons_to_local(polygons) -> list[tuple]:
@@ -61,10 +72,10 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     polygon's WKB as ``__geom`` when ``keep_geom``).
 
     Plan shape: points -> native cell assignment -> broadcast hash join on
-    cell -> broadcast join of the edge lists on the polygon index -> native
-    refine (skipped for cover cells fully inside the polygon). One
-    shuffle-free pass over the fact table, and no Python worker anywhere in
-    the plan.
+    the grid row, the span's x-range as join filter -> broadcast join of
+    the edge lists on the polygon index -> native refine (skipped for cover
+    cells fully inside the polygon). One shuffle-free pass over the fact
+    table, and no Python worker anywhere in the plan.
 
     Both broadcast sides read ONE driver table with one row per polygon:
     its index, id, edge lists and cover (an array column, ``inline``d into
@@ -75,72 +86,44 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     ``predicate`` is ``intersects`` (boundary-inclusive) or ``contains``
     (the polygon's interior holds the point; lines and points hold none).
     """
-    if predicate not in ("intersects", "contains"):
-        raise ValueError(predicate)
+    op = _refine_op(predicate)
     spark = points.sparkSession
     polys = _polygons_to_local(polygons)
     geoms = [g for _pid, g, _b in polys]
     prepared = [refine.edge_columns(g) for g in geoms]
 
-    if all(isinstance(g, (model.Polygon, model.MultiPolygon)) for g in geoms):
-        # SPAN cover: the broadcast side is O(perimeter) scanline spans
-        # (iy, x0, x1, interior), not O(area) cells — a circle D cells
-        # across broadcasts O(D) rows instead of O(D^2).  That keeps ALL
-        # per-query serial work (driver numpy build, Arrow createDataFrame,
-        # broadcast exchange collect + hash-relation build) small enough to
-        # stay out of the Amdahl term at cluster sizes, and lets the cover
-        # resolution go ~8x finer for free, shrinking the boundary fraction
-        # that must pay the exact refine to a few percent.  The join is a
-        # broadcast HASH join on the grid row __iy with the x-range check as
-        # a native join filter (whole-stage codegen; a handful of long
-        # compares per probed span).
-        if res is None:
-            res = pick_span_resolution([g.bounds for g in geoms])
-        pidx, iy, x0, x1, interior = batch_cover_spans(geoms, res)
-        cover_col = "__spans"
-        table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom,
-                               cover_col, SPAN_TYPE, _struct_lists(
-                                   pidx, len(polys), siy=iy, x0=x0, x1=x1,
-                                   interior=interior))
-        spans = table.selectExpr(
-            "__pidx", "inline(__spans) AS (__siy, __x0, __x1, __interior)")
-        ix_sql, iy_sql = xy_sql(lon_col, lat_col, 1 << res)
-        pts = points.withColumns({"__ix": F.expr(ix_sql), "__iy": F.expr(iy_sql)})
-        joined = pts.join(F.broadcast(spans), F.expr(
-            "__iy = __siy AND __ix >= __x0 AND __ix <= __x1"))
-        helpers = ("__ix", "__iy", "__siy", "__x0", "__x1")
-    else:
-        if res is None:
-            res = pick_cover_resolution([g.bounds for g in geoms])
-        n = 1 << res
-        # mixed geometry types (lines/points in the set): small covers,
-        # row-major cell keys
-        covers = [cell_cover_xy(g, res) for g in geoms]
-        xy = np.concatenate([c[0] for c in covers] or [np.empty((0, 2), np.int64)])
-        cover_col = "__cells"
-        table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom,
-                               cover_col, CELL_TYPE, _struct_lists(
-                                   np.repeat(np.arange(len(covers)),
-                                             [len(c[1]) for c in covers]),
-                                   len(polys), cell=xy[:, 1] * n + xy[:, 0],
-                                   interior=np.concatenate(
-                                       [c[1] for c in covers] or [np.empty(0, bool)])))
-        cells = table.selectExpr("__pidx", "inline(__cells) AS (__cell, __interior)")
-        pts = points.withColumn("__cell", F.expr(rowmajor_sql(lon_col, lat_col, n)))
-        joined = pts.join(F.broadcast(cells), "__cell")
-        helpers = ("__cell",)
+    # SPAN cover of every geometry: the broadcast side is O(perimeter)
+    # scanline spans (iy, x0, x1, interior), not O(area) cells — a circle D
+    # cells across broadcasts O(D) rows instead of O(D^2).  That keeps ALL
+    # per-query serial work (driver numpy build, Arrow table, broadcast
+    # exchange collect + hash-relation build) small enough to stay out of
+    # the Amdahl term at cluster sizes, and lets the cover resolution go
+    # ~8x finer for free, shrinking the boundary fraction that must pay the
+    # exact refine to a few percent.  The join is a broadcast HASH join on
+    # the grid row __iy with the x-range check as a native join filter
+    # (whole-stage codegen; a handful of long compares per probed span).
+    if res is None:
+        res = pick_span_resolution([g.bounds for g in geoms])
+    pidx, iy, x0, x1, interior = batch_cover_spans(geoms, res)
+    table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom, _struct_lists(
+        pidx, len(polys), siy=iy, x0=x0, x1=x1, interior=interior))
+    ix_sql, iy_sql = xy_sql(lon_col, lat_col, 1 << res)
+    pts = points.withColumns({"__ix": F.expr(ix_sql), "__iy": F.expr(iy_sql)})
+    joined = pts.join(F.broadcast(table.selectExpr("__pidx", _SPAN_COLS)), F.expr(
+        "__iy = __siy AND __ix >= __x0 AND __ix <= __x1"))
     # Predicate compilation (the analog of GeoMesa compiling filters into
     # server-side iterators): the exact refine is one native expression
     # over each geometry's edge list (plans/refine.py), attached by a small
     # broadcast join on the polygon index. All JVM — zero Python traffic;
     # interior rows short-circuit on `__interior` before the refine.
     cond = refine.refine_sql(
-        lon_col, lat_col, "INTERSECTS" if predicate == "intersects" else "WITHIN",
+        lon_col, lat_col, op,
         edges="__edges" if any(p[1] for p in prepared) else None,
         segs="__segs" if any(p[2] for p in prepared) else None)
-    return (joined.join(F.broadcast(table.drop(cover_col)), "__pidx")
+    return (joined.join(F.broadcast(table.drop("__spans")), "__pidx")
             .where(F.col("__interior") | F.expr(cond))
-            .drop(*helpers, "__pidx", "__interior", "__convex", "__edges", "__segs"))
+            .drop("__ix", "__iy", "__siy", "__x0", "__x1", "__pidx", "__interior",
+                  "__convex", "__edges", "__segs"))
 
 
 def _struct_lists(owner: np.ndarray, n: int, **fields) -> pa.ListArray:
@@ -153,10 +136,10 @@ def _struct_lists(owner: np.ndarray, n: int, **fields) -> pa.ListArray:
 
 
 def _polygon_table(spark, polys, prepared, poly_id_col: str, keep_geom: bool,
-                   cover_col: str, cover_type: str, cover: pa.ListArray) -> DataFrame:
+                   spans: pa.ListArray) -> DataFrame:
     """The join's driver table, one row per geometry: ``__pidx``, the id,
     the refine's ``__convex``/``__edges``/``__segs`` (``prepared``), then
-    ``__geom`` (when ``keep_geom``) and the cover column."""
+    ``__geom`` (when ``keep_geom``) and the cover ``__spans``."""
     id_type = "string" if polys and isinstance(polys[0][0], str) else "long"
     edge_type = pa.list_(pa.struct([(f, pa.float64()) for f in ("ax", "ay", "bx", "by")]))
     cols = {"__pidx": pa.array(np.arange(len(polys), dtype=np.int32)),
@@ -169,8 +152,8 @@ def _polygon_table(spark, polys, prepared, poly_id_col: str, keep_geom: bool,
     if keep_geom:
         cols["__geom"] = pa.array([b for _pid, _g, b in polys], pa.binary())
         ddl += ", __geom binary"
-    cols[cover_col] = cover
-    return local_table(spark, pa.table(cols), f"{ddl}, {cover_col} {cover_type}")
+    cols["__spans"] = spans
+    return local_table(spark, pa.table(cols), f"{ddl}, __spans {SPAN_TYPE}")
 
 
 def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
@@ -180,56 +163,50 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
                  n_salts: int = DEFAULT_SALTS) -> DataFrame:
     """Salted sort-merge PIP join for LARGE polygon sets (DataFrame side).
 
-    ``polygons`` must carry (poly_id_col, poly_wkb_col). Polygon covers are
-    computed executor-side (Arrow-batched), split into interior cells (skip
-    the refine — exact-cover shortcut) and boundary cells, replicated to all
-    salt values; points are salted by hash. Join key (cell, salt) spreads
-    hot cells over ``n_salts`` reducers — explicit skew handling per the
-    north rule, on top of AQE skew splitting. The exact refine is the same
-    native expression as the broadcast path (plans/refine.py), reading
-    ``__edges``/``__segs`` array columns prepared once per polygon — no
-    Python and no WKB parsing in the per-candidate hot path.
+    ``polygons`` must carry (poly_id_col, poly_wkb_col); rows with a null
+    WKB match nothing. One pandas UDF per Arrow batch of polygons parses
+    each WKB once and returns the refine's edge lists and the batch's span
+    cover (:func:`batch_cover_spans`, the broadcast path's cover). Spark
+    expands the spans into row-major cell keys (``inline`` +
+    ``explode(sequence(x0, x1))``), interior cells skipping the refine
+    (exact-cover shortcut), and replicates them to all salt values; points
+    are salted by hash. Join key (cell, salt) spreads hot cells over
+    ``n_salts`` reducers — explicit skew handling per the north rule, on
+    top of AQE skew splitting. The exact refine is the same native
+    expression as the broadcast path (plans/refine.py) — no Python and no
+    WKB parsing in the per-candidate hot path. ``predicate`` is as in
+    :func:`pip_join_broadcast`.
     """
+    op = _refine_op(predicate)
     n = 1 << res
+    prep_type = (f"__convex boolean, __edges {refine.EDGE_TYPE}, "
+                 f"__segs {refine.EDGE_TYPE}, __spans {SPAN_TYPE}")
 
-    def cover_udf(wkb_s: pd.Series) -> pd.Series:
-        out = []
-        for b in wkb_s:
-            if b is None:
-                out.append([])
-                continue
-            xy, interior = cell_cover_xy(wkb_loads(bytes(b)), res)
-            out.append(list(zip((xy[:, 1] * n + xy[:, 0]).tolist(), interior.tolist())))
-        return pd.Series(out)
+    def prep_udf(wkb_s):
+        geoms = [wkb_loads(bytes(b)) for b in wkb_s]
+        pidx, iy, x0, x1, interior = batch_cover_spans(geoms, res)
+        spans = list(zip(iy.tolist(), x0.tolist(), x1.tolist(), interior.tolist()))
+        ends = np.cumsum(np.bincount(pidx, minlength=len(geoms))).tolist()
+        out = pd.DataFrame([refine.edge_columns(g) for g in geoms],
+                           columns=["__convex", "__edges", "__segs"])
+        out["__spans"] = [spans[a:b] for a, b in zip([0] + ends[:-1], ends)]
+        return out
 
-    prep_type = f"convex boolean, edges {refine.EDGE_TYPE}, segs {refine.EDGE_TYPE}"
-
-    def prep_udf(wkb_s: pd.Series) -> pd.DataFrame:
-        prepared = [refine.edge_columns(wkb_loads(bytes(b))) for b in wkb_s]
-        return pd.DataFrame(prepared, columns=["convex", "edges", "segs"])
-
-    covers = (polygons
-              .withColumn("__cov", F.pandas_udf(cover_udf, CELL_TYPE)(F.col(poly_wkb_col)))
-              .withColumn("__prep", F.pandas_udf(prep_udf, prep_type)(F.col(poly_wkb_col)))
-              .withColumn("__convex", F.col("__prep.convex"))
-              .withColumn("__edges", F.col("__prep.edges"))
-              .withColumn("__segs", F.col("__prep.segs"))
-              .drop("__prep", poly_wkb_col))
-    poly_cells = (covers
-                  .withColumn("__c", F.explode("__cov"))
-                  .withColumn("__cell", F.col("__c.cell"))
-                  .withColumn("__interior", F.col("__c.interior"))
-                  .withColumn("__salt", F.explode(F.array([F.lit(i) for i in range(n_salts)])))
-                  .drop("__cov", "__c"))
-
+    # nondeterministic: the generators' inferred non-empty filter would
+    # otherwise be pushed below the UDF's projection and run it twice
+    prep = F.pandas_udf(prep_udf, prep_type).asNondeterministic()
+    cells = (polygons.where(F.col(poly_wkb_col).isNotNull())
+             .withColumn("__prep", prep(F.col(poly_wkb_col)))
+             .select("*", "__prep.*").drop("__prep", poly_wkb_col)
+             .selectExpr("*", _SPAN_COLS).drop("__spans")
+             .selectExpr("*", "explode(sequence(__x0, __x1)) AS __ix")
+             .selectExpr("*", f"explode(sequence(0, {n_salts - 1})) AS __salt")
+             .withColumn("__cell", F.expr(f"__siy * {n} + __ix"))
+             .drop("__siy", "__x0", "__x1", "__ix"))
     pts = (points
            .withColumn("__cell", F.expr(rowmajor_sql(lon_col, lat_col, n)))
            .withColumn("__salt", salt_col(F.col(lon_col) + F.col(lat_col), n_salts)))
-
-    joined = pts.join(poly_cells.hint("shuffle_merge"), ["__cell", "__salt"], "inner")
-    if predicate != "intersects":
-        raise ValueError("pip_join_smj supports the intersects predicate")
-    cond = refine.refine_sql(lon_col, lat_col, segs="__segs")
-    refined = joined.where(F.col("__interior") | F.expr(cond))
-    return refined.drop("__cell", "__salt", "__interior", "__convex", "__edges",
-                        "__segs")
+    cond = refine.refine_sql(lon_col, lat_col, op, segs="__segs")
+    return (pts.join(cells.hint("shuffle_merge"), ["__cell", "__salt"])
+            .where(F.col("__interior") | F.expr(cond))
+            .drop("__cell", "__salt", "__interior", "__convex", "__edges", "__segs"))

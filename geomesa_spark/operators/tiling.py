@@ -47,8 +47,7 @@ def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
 
 def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
                  lon_col: str = "lon", lat_col: str = "lat",
-                 weight: Column | str | None = None,
-                 cache_levels: bool = True) -> DataFrame:
+                 weight: Column | str | None = None) -> DataFrame:
     """(zoom, tx, ty, px, py, weight, cnt) for all zoom levels.
 
     Deterministic tile assignment: plate carrée, ty increases northward,
@@ -70,19 +69,16 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
     The finest level feeds two consumers (its own decode branch and the
     coarser rollup) and Catalyst does NOT reuse the exchange across them
     (verified round 2: zero ReusedExchange across differently-consumed
-    aggregations), so with ``cache_levels`` (default on, len(zooms) > 1)
-    it is persisted MEMORY_AND_DISK — without the persist the union
-    re-executes the ENTIRE upstream lineage per consumer (the whole
-    non-scaling cost of the r3 scaling bench; fixing it measured 1.7x
-    end-to-end at 32M joined rows at both 8 and 32 cores).  The level is
-    already reduced (unique finest pixels), far below the input, and
-    spills gracefully at cluster scale.  It is exposed on the result as
-    ``_persisted_levels`` so a long-lived session can ``unpersist()``
-    after consuming the result; in addition, each tile_pyramid call
-    unpersists the levels pinned by PREVIOUS calls (module-level registry)
-    — unpersist only costs recompute-if-reread, never correctness — so a
-    many-query session holds at most one pyramid's cache instead of
-    leaking one per invocation.
+    aggregations), so when len(zooms) > 1 it is persisted MEMORY_AND_DISK
+    — without the persist the union re-executes the ENTIRE upstream
+    lineage per consumer (the whole non-scaling cost of the r3 scaling
+    bench; fixing it measured 1.7x end-to-end at 32M joined rows at both 8
+    and 32 cores).  The level is already reduced (unique finest pixels),
+    far below the input, and spills gracefully at cluster scale.  Each
+    tile_pyramid call unpersists the levels pinned by PREVIOUS calls
+    (module-level registry) — unpersist only costs recompute-if-reread,
+    never correctness — so a many-query session holds at most one
+    pyramid's cache instead of leaking one per invocation.
     """
     from pyspark import StorageLevel
     lon, lat = F.col(lon_col), F.col(lat_col)
@@ -102,8 +98,7 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
            .select((gx * F.lit(n_px_f) + gy).alias("__k"), w.alias("__w"))
            .groupBy("__k")
            .agg(F.sum("__w").alias("weight"), F.count("*").alias("cnt")))
-    persisted = []
-    if cache_levels and len(zs) > 1:
+    if len(zs) > 1:
         # release caches pinned by earlier pyramids first (presumed consumed
         # by now); a still-live old result just recomputes if re-read
         for old in _PYRAMID_CACHE_REGISTRY:
@@ -113,7 +108,6 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
                 pass
         _PYRAMID_CACHE_REGISTRY.clear()
         lvl = lvl.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(lvl)
         _PYRAMID_CACHE_REGISTRY.append(lvl)
 
     # decode a (zoom, packed-key) pair; `div` = exact integer division
@@ -149,9 +143,7 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
                         F.sum("cnt").alias("cnt")))
         out = out.unionByName(coarser)
 
-    out = out.select(*decode_cols)
-    out._persisted_levels = persisted
-    return out
+    return out.select(*decode_cols)
 
 
 def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,

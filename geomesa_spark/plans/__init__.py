@@ -1,6 +1,6 @@
 """Query planning: filters -> cell-range predicates -> Catalyst expressions."""
 
-from geomesa_spark.plans.cover import bbox_cell_cover, geometry_cell_cover, z2_range_predicate  # noqa: F401
+from geomesa_spark.plans.cover import z2_range_predicate  # noqa: F401
 from geomesa_spark.plans.query import SpatialQuery  # noqa: F401
 from geomesa_spark.plans.guards import (GraduatedQueryGuard,  # noqa: F401
                                         QueryGuardError, SizeAndLimits,

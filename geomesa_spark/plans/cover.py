@@ -6,8 +6,8 @@ instead of byte ranges scanned by tablet servers, we emit
 
 * Catalyst range predicates on the ``z2``/``cell`` columns (Iceberg/parquet
   min-max file skipping + partition pruning do the pruning), and
-* exact cell-id lists for join keys (each point belongs to exactly ONE cell,
-  so cell-cover joins need no boundary dedupe on the point side).
+* scanline span covers of join geometries (each point belongs to exactly
+  ONE cell, so span joins need no boundary dedupe on the point side).
 
 Budgets follow the reference: <= 2000 ranges/query, BFS recursion 7
 (conf/QueryProperties.scala:23, ZN.scala:293).
@@ -63,85 +63,6 @@ def _ranges_expr(col: str, ranges: list[IndexRange]) -> Column:
                               for r in ranges))
 
 
-def bbox_cell_cover(xmin: float, ymin: float, xmax: float, ymax: float,
-                    res: int) -> list[int]:
-    return grid.cover_bbox(xmin, ymin, xmax, ymax, res)
-
-
-def geometry_cell_cover(geom: model.Geometry, res: int) -> list[int]:
-    """Cells whose square intersects the geometry (exact test per cell —
-    covers of polygons drop fully-outside cells, unlike a plain bbox cover),
-    as sorted z-order ids."""
-    xy, _interior = cell_cover_xy(geom, res)
-    return sorted(grid.from_xy(res, int(x), int(y)) for x, y in xy)
-
-
-def classify_cell_cover_xy(geom: model.Geometry, res: int
-                           ) -> "tuple":
-    """Vectorized polygon cover, split into (contained, boundary) cells,
-    returned as two (k, 2) int64 arrays of global (ix, iy) grid indices.
-
-    The split drives the exact-cover shortcut: contained cells skip the
-    residual refine entirely (Z3IndexKeySpace.useFullFilter:240-254 analog).
-
-    Method (exact, no sampling):
-    1. one vectorized point-in-polygon call for the full corner grid of the
-       polygon's bbox cells;
-    2. supercover rasterization of every ring edge marks cells the boundary
-       passes through;
-    3. contained  = all 4 corners inside AND no boundary edge in the cell;
-       boundary   = edge-marked OR (some corner inside but not all).
-    A cell with no corners inside and no edge through it is either fully
-    outside or fully inside; the corner test on its lower-left corner
-    already decided which (fully-inside with no corner inside is impossible
-    for a simple ring: the cell boundary would have to cross an edge).
-    """
-    from geomesa_spark.geom import algos
-
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    win = _windows([geom], res)
-    ix0, iy0, nx, ny = (int(v[0]) for v in win)
-
-    # 1. corner grid: (nx+1) x (ny+1) points, one vectorized PIP call
-    cx = -180.0 + (np.arange(ix0, ix0 + nx + 1, dtype=np.float64)) * w
-    cy = -90.0 + (np.arange(iy0, iy0 + ny + 1, dtype=np.float64)) * h
-    gx, gy = np.meshgrid(cx, cy, indexing="ij")
-    inside = algos.points_intersect(gx.ravel(), gy.ravel(), geom) \
-        .reshape(nx + 1, ny + 1)
-
-    corners_in = (inside[:-1, :-1].astype(np.int8) + inside[1:, :-1]
-                  + inside[:-1, 1:] + inside[1:, 1:])          # (nx, ny)
-
-    edge = np.zeros((nx, ny), dtype=bool)
-    _key, _g, ex, ey = _edge_cells(_rings([geom]), win, res)
-    edge[ex, ey] = True
-
-    contained_m = (corners_in == 4) & ~edge
-    cxs, cys = np.nonzero(contained_m)
-    bxs, bys = np.nonzero(edge)
-    contained_xy = np.stack([cxs + ix0, cys + iy0], axis=1).astype(np.int64)
-    boundary_xy = np.stack([bxs + ix0, bys + iy0], axis=1).astype(np.int64)
-    return contained_xy, boundary_xy
-
-
-def cell_cover_xy(geom: model.Geometry, res: int) -> tuple:
-    """Cell cover of any geometry as ``(xy, interior)``: a (k, 2) int64
-    array of global (ix, iy) indices and whether each cell lies inside.
-    Polygons take :func:`classify_cell_cover_xy` (contained cells first);
-    other geometries cover their bbox window, every cell a boundary cell
-    (the cells of :func:`grid.cover_bbox`)."""
-    if isinstance(geom, (model.Polygon, model.MultiPolygon)):
-        contained_xy, boundary_xy = classify_cell_cover_xy(geom, res)
-        return (np.concatenate([contained_xy, boundary_xy]),
-                np.arange(len(contained_xy) + len(boundary_xy)) < len(contained_xy))
-    ix0, iy0, nx, ny = (int(v[0]) for v in _windows([geom], res))
-    gx, gy = np.meshgrid(np.arange(ix0, ix0 + nx), np.arange(iy0, iy0 + ny),
-                         indexing="ij")
-    return (np.stack([gx.ravel(), gy.ravel()], axis=1).astype(np.int64),
-            np.zeros(nx * ny, dtype=bool))
-
-
 def _windows(geoms: list, res: int) -> tuple:
     """Each geometry's bbox cell window, clamped to the grid, as four int64
     arrays ``(ix0, iy0, nx, ny)`` — the window :func:`grid.cover_bbox`
@@ -160,56 +81,73 @@ def _ragged(cnt: np.ndarray) -> tuple:
     return owner, np.arange(len(owner)) - (np.cumsum(cnt) - cnt)[owner]
 
 
-class _Rings(NamedTuple):
-    """Every ring of the polygon parts of a geometry list, flattened: ring
-    ``r`` owns the vertices ``xy[vring == r]``, belongs to geometry
-    ``geom[r]`` and polygon part ``part[r]``, and ``hole[r]`` marks holes.
-    A geometry's rings are contiguous, each part's shell first."""
+class _Paths(NamedTuple):
+    """Every vertex path of a geometry list, flattened: polygon rings,
+    line strings and points (one vertex each). Path ``r`` owns the
+    vertices ``xy[vring == r]``, belongs to geometry ``geom[r]`` and part
+    ``part[r]`` (a polygon, line or point); ``ring[r]`` marks polygon
+    rings and ``hole[r]`` holes. A geometry's paths are contiguous, each
+    polygon's shell first."""
     xy: np.ndarray
     vring: np.ndarray
     geom: np.ndarray
     part: np.ndarray
+    ring: np.ndarray
     hole: np.ndarray
 
 
-def _rings(geoms: list) -> _Rings:
-    rings, geom, part, hole = [], [], [], []
+def _paths(geoms: list) -> _Paths:
+    paths, geom, part, ring, hole = [], [], [], [], []
     parts = 0
     for k, g in enumerate(geoms):
         for comp in g._components():
-            if isinstance(comp, model.Polygon):
-                for j, ring in enumerate([comp.shell] + comp.holes):
-                    rings.append(np.asarray(ring, dtype=np.float64).reshape(-1, 2))
-                    geom.append(k)
-                    part.append(parts)
-                    hole.append(j > 0)
-                parts += 1
-    return _Rings(np.concatenate(rings or [np.empty((0, 2))]),
-                  np.repeat(np.arange(len(rings)), [len(r) for r in rings]),
+            poly = isinstance(comp, model.Polygon)
+            # _all_coords: a line's vertices, a point's one (none if empty)
+            for j, xy in enumerate([comp.shell] + comp.holes if poly
+                                   else [comp._all_coords()]):
+                paths.append(np.asarray(xy, dtype=np.float64).reshape(-1, 2))
+                geom.append(k)
+                part.append(parts)
+                ring.append(poly)
+                hole.append(j > 0)
+            parts += 1
+    return _Paths(np.concatenate(paths or [np.empty((0, 2))]),
+                  np.repeat(np.arange(len(paths)), [len(p) for p in paths]),
                   np.asarray(geom, dtype=np.int64), np.asarray(part, dtype=np.int64),
-                  np.asarray(hole, dtype=bool))
+                  np.asarray(ring, dtype=bool), np.asarray(hole, dtype=bool))
 
 
-def _edge_cells(rings: _Rings, win: tuple, res: int) -> tuple:
-    """Cells the polygon BOUNDARY passes through, for every geometry at
-    once: sorted unique ``(key, geom, ex, ey)`` int64 arrays, ``(ex, ey)``
-    window-local and ``key = base[geom] + ey * nx[geom] + ex`` (row-major
-    within each window, windows laid end to end).
+# rounding margin, in grid units, of the boundary points' cells: wider
+# than the float error of an interpolated crossing (a few ulps of a window
+# coordinate), far narrower than a cell
+_EPS = 1e-9
 
-    Exact edge traversal over the flat arrays of every ring edge: the cells
-    a segment passes through are the floor-cells of the midpoints between
-    its consecutive gridline crossings (crossing parameters computed
-    analytically, not sampled). Every such cell holds a piece of the
-    boundary, so no per-cell recheck is needed. A segment lying exactly ON
-    a gridline also marks the cells on its other side (closed squares share
-    the line)."""
+
+def _edge_cells(paths: _Paths, win: tuple, res: int) -> tuple:
+    """Cells holding a point of a geometry's boundary (its polygon rings,
+    lines and points), for every geometry at once: sorted unique ``(key,
+    geom, ex, ey)`` int64 arrays, ``(ex, ey)`` window-local and ``key =
+    base[geom] + ey * nx[geom] + ex`` (row-major within each window,
+    windows laid end to end).
+
+    Exact edge traversal over the flat arrays of every path segment: the
+    cells a segment passes through are the floor-cells of the midpoints
+    between its consecutive gridline crossings (crossing parameters
+    computed analytically, not sampled). A segment lying exactly ON a
+    gridline also marks the cells on its other side (closed squares share
+    the line). A segment only touches some cells, at a vertex or where it
+    crosses a gridline; a data point there lies in the floor cell of its
+    coordinates, so every vertex and crossing point marks that cell too,
+    with a margin of ``_EPS`` for rounding (up to four cells at a grid
+    corner). Every marked cell holds a piece of the boundary, so no
+    per-cell recheck is needed."""
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
     ix0, iy0, nx, ny = win
-    vg = rings.geom[rings.vring]
-    fx = (rings.xy[:, 0] + 180.0) / w - ix0[vg]       # window grid coords
-    fy = (rings.xy[:, 1] + 90.0) / h - iy0[vg]
-    s = np.flatnonzero(rings.vring[:-1] == rings.vring[1:])   # segment starts
+    vg = paths.geom[paths.vring]
+    fx = (paths.xy[:, 0] + 180.0) / w - ix0[vg]       # window grid coords
+    fy = (paths.xy[:, 1] + 90.0) / h - iy0[vg]
+    s = np.flatnonzero(paths.vring[:-1] == paths.vring[1:])   # segment starts
     x0, y0, x1, y1 = fx[s], fy[s], fx[s + 1], fy[s + 1]
     dx, dy = x1 - x0, y1 - y0
     # crossing parameters per segment: 0, 1 and every gridline crossing
@@ -222,6 +160,10 @@ def _edge_cells(rings: _Rings, win: tuple, res: int) -> tuple:
         seg.append(k)
         ts.append((first[k] + off - a0[k]) / d[k])
     seg, t = np.concatenate(seg), np.clip(np.concatenate(ts), 0.0, 1.0)
+    # boundary points: every vertex, then every crossing point
+    px = np.concatenate([fx, x0[seg] + dx[seg] * t])
+    py = np.concatenate([fy, y0[seg] + dy[seg] * t])
+    pg = np.concatenate([vg, vg[s][seg]])
     o = np.lexsort((t, seg))
     seg, t = seg[o], t[o]
     new = np.ones(len(t), dtype=bool)
@@ -236,9 +178,19 @@ def _edge_cells(rings: _Rings, win: tuple, res: int) -> tuple:
     ya, xa = y0[k], x0[k]
     below = (dy[k] == 0.0) & (ya == np.floor(ya)) & (ya - 1 >= 0) & (ya - 1 < ny[g])
     left = (dx[k] == 0.0) & (xa == np.floor(xa)) & (xa - 1 >= 0) & (xa - 1 < nx[g])
-    g = np.concatenate([g, g[below], g[left]])
-    ex = np.concatenate([ex, ex[below], xa[left].astype(np.int64) - 1])
-    ey = np.concatenate([ey, ya[below].astype(np.int64) - 1, ey[left]])
+    gs = [g, g[below], g[left]]
+    exs = [ex, ex[below], xa[left].astype(np.int64) - 1]
+    eys = [ey, ya[below].astype(np.int64) - 1, ey[left]]
+    # the boundary points' cells: every vertex, and every crossing point at
+    # a grid corner (one elsewhere lies between two cells that midpoints
+    # mark already), each coordinate -+ _EPS
+    lx, hx, ly, hy = (np.floor(v + e) for v in (px, py) for e in (-_EPS, _EPS))
+    m = (np.arange(len(px)) < len(fx)) | ((lx != hx) & (ly != hy))
+    for cx, cy in ((lx, ly), (lx, hy), (hx, ly), (hx, hy)):
+        gs.append(pg[m])
+        exs.append(np.clip(cx[m], 0, nx[pg[m]] - 1).astype(np.int64))
+        eys.append(np.clip(cy[m], 0, ny[pg[m]] - 1).astype(np.int64))
+    g, ex, ey = np.concatenate(gs), np.concatenate(exs), np.concatenate(eys)
     base = np.cumsum(nx * ny) - nx * ny
     key = np.unique(base[g] + ey * nx[g] + ex)
     g = np.searchsorted(base, key, side="right") - 1
@@ -246,27 +198,28 @@ def _edge_cells(rings: _Rings, win: tuple, res: int) -> tuple:
     return key, g, local % nx[g], local // nx[g]
 
 
-def _gaps_inside(rings: _Rings, win: tuple, res: int, gg: np.ndarray,
+def _gaps_inside(paths: _Paths, win: tuple, res: int, gg: np.ndarray,
                  gy: np.ndarray, gx0: np.ndarray) -> np.ndarray:
     """Whether each gap (a run of cells with no boundary point) lies inside
     its geometry, decided at its first cell's centre.
 
-    ``points_intersect`` over every (gap, ring) pair at once: crossing
+    ``points_intersect`` over every (gap, path) pair at once: crossing
     parity with ``points_in_ring``'s arithmetic, computed from the
-    crossings of each ring with each grid row's centre line, and its
-    per-part rule (in a shell and in no hole of one polygon part). A gap
-    cell holds no boundary point, so the boundary test never fires."""
+    crossings of each polygon ring with each grid row's centre line, and
+    its per-part rule (in a shell and in no hole of one polygon part).
+    Lines and points have no inside. A gap cell holds no boundary point,
+    so the boundary test never fires."""
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
     ix0, iy0, nx, ny = win
     rows0 = np.cumsum(ny) - ny                # first global row of each window
     nrows = int(ny.sum())
     # edges of rings points_in_ring counts (three edges or more)
-    live = np.bincount(rings.vring, minlength=len(rings.geom)) >= 4
-    s = np.flatnonzero((rings.vring[:-1] == rings.vring[1:]) & live[rings.vring[:-1]])
-    r = rings.vring[s]
-    g = rings.geom[r]
-    ax, ay, bx, by = rings.xy[s, 0], rings.xy[s, 1], rings.xy[s + 1, 0], rings.xy[s + 1, 1]
+    live = (np.bincount(paths.vring, minlength=len(paths.geom)) >= 4) & paths.ring
+    s = np.flatnonzero((paths.vring[:-1] == paths.vring[1:]) & live[paths.vring[:-1]])
+    r = paths.vring[s]
+    g = paths.geom[r]
+    ax, ay, bx, by = paths.xy[s, 0], paths.xy[s, 1], paths.xy[s + 1, 0], paths.xy[s + 1, 1]
     # candidate rows: a margin of one row around the edge's y extent, each
     # checked below with the exact arithmetic
     fa = (ay + 90.0) / h - iy0[g]
@@ -282,9 +235,9 @@ def _gaps_inside(rings: _Rings, win: tuple, res: int, gg: np.ndarray,
         xint = ax + (y - ay) * (bx - ax) / (by - ay)
     c_grp = (r[e] * nrows + rows0[ge] + j)[cond]
     xint = xint[cond]
-    # one query per (gap, ring of its geometry)
-    ring0 = np.searchsorted(rings.geom, np.arange(len(nx)))
-    q, qr = _ragged(np.bincount(rings.geom, minlength=len(nx))[gg])
+    # one query per (gap, path of its geometry)
+    ring0 = np.searchsorted(paths.geom, np.arange(len(nx)))
+    q, qr = _ragged(np.bincount(paths.geom, minlength=len(nx))[gg])
     qr += ring0[gg][q]
     cx = -180.0 + (ix0[gg] + gx0 + 0.5) * w
     q_grp = qr * nrows + rows0[gg][q] + gy[q]
@@ -301,30 +254,32 @@ def _gaps_inside(rings: _Rings, win: tuple, res: int, gg: np.ndarray,
     ring_in = ((seen[end] - seen[pos[len(c_grp):]]) % 2 == 1) & live[qr]
     # per part: in its shell (the part's first ring) and in none of its
     # holes; per gap: in any part
-    new = np.diff(q * len(rings.part) + rings.part[qr], prepend=-1) != 0
+    new = np.diff(q * len(paths.part) + paths.part[qr], prepend=-1) != 0
     shell = np.flatnonzero(new)
-    in_hole = np.bincount(np.cumsum(new) - 1, weights=ring_in & rings.hole[qr],
+    in_hole = np.bincount(np.cumsum(new) - 1, weights=ring_in & paths.hole[qr],
                           minlength=len(shell)) > 0
     part_in = ring_in[shell] & ~in_hole
     return np.bincount(q[shell], weights=part_in, minlength=len(gg)) > 0
 
 
 def batch_cover_spans(geoms: list, res: int) -> tuple:
-    """Scanline SPAN cover of every polygon in ``geoms``, in one pass:
-    O(perimeter) rows per polygon, not O(area) cells.
+    """Scanline SPAN cover of every geometry in ``geoms`` (polygons,
+    lines, points and their multi forms), in one pass: O(perimeter) rows
+    per polygon, not O(area) cells.
 
     Returns five equal-length arrays ``(pidx, iy, x0, x1, interior)``: for
     geometry ``pidx`` and grid row ``iy``, cells ``x0..x1`` (inclusive,
     global indices) either contain a piece of the boundary
     (``interior=False`` — candidates needing the exact refine) or lie
     entirely inside the polygon (``interior=True`` — the exact-cover
-    shortcut). Rows are ordered by polygon, boundary spans before interior
+    shortcut; lines and points have none). Rows are ordered by geometry,
+    boundary spans before interior
     ones, then by ``(iy, x0)``. A circle of D cells diameter covers O(D^2)
     cells but only O(D) spans, so the broadcast side of a PIP join shrinks
     by the cell diameter.
 
-    Method: the exact edge cells (shared with :func:`classify_cell_cover_xy`);
-    per grid row their runs become boundary spans, and each gap between
+    Method: the exact boundary cells (:func:`_edge_cells`); per grid row
+    their runs become boundary spans, and each gap between
     them is classified by ONE point-in-polygon test of its first cell's
     centre — a gap contains no boundary point, so the whole gap is
     uniformly inside or outside. Everything runs over flat arrays of all
@@ -333,8 +288,8 @@ def batch_cover_spans(geoms: list, res: int) -> tuple:
     Intervals, SIGMOD 2023.)"""
     win = _windows(geoms, res)
     ix0, iy0, nx, ny = win
-    rings = _rings(geoms)
-    key, g, ex, ey = _edge_cells(rings, win, res)
+    paths = _paths(geoms)
+    key, g, ex, ey = _edge_cells(paths, win, res)
     # boundary spans: runs of consecutive edge cells within one row
     start = (np.diff(key, prepend=-2) != 1) | (ex == 0)
     st = np.flatnonzero(start)
@@ -355,7 +310,7 @@ def batch_cover_spans(geoms: list, res: int) -> tuple:
     gx1 = np.concatenate([bx0 - 1, nx[rg] - 1])
     ok = gx0 <= gx1
     gg, gy, gx0, gx1 = gg[ok], gy[ok], gx0[ok], gx1[ok]
-    keep = _gaps_inside(rings, win, res, gg, gy, gx0)
+    keep = _gaps_inside(paths, win, res, gg, gy, gx0)
     gg, gy, gx0, gx1 = gg[keep], gy[keep], gx0[keep], gx1[keep]
 
     pidx = np.concatenate([bg, gg])
@@ -368,29 +323,18 @@ def batch_cover_spans(geoms: list, res: int) -> tuple:
 
 
 def cover_spans(geom: model.Geometry, res: int) -> tuple:
-    """:func:`batch_cover_spans` of one polygon: ``(iy, x0, x1, interior)``."""
+    """:func:`batch_cover_spans` of one geometry: ``(iy, x0, x1, interior)``."""
     return batch_cover_spans([geom], res)[1:]
 
 
 def pick_span_resolution(boxes: list[tuple[float, float, float, float]],
                          target_rows: int = 512) -> int:
-    """Finest shared resolution keeping every polygon's bbox under
-    ``target_rows`` grid rows — the span-cover analog of
-    :func:`pick_cover_resolution` (spans scale with the row count, cells
-    with its square)."""
+    """Finest shared resolution keeping every geometry's bbox within
+    ``target_rows`` grid rows and as many grid columns: the spans grow
+    with the rows, the edge cells with the rows and the columns."""
     res = grid.MAX_RES
-    for (_xmin, ymin, _xmax, ymax) in boxes:
-        height = max(ymax - ymin, 1e-12)
-        while res > 0 and height / (180.0 / (1 << res)) > target_rows:
+    for (xmin, ymin, xmax, ymax) in boxes:
+        height, width = max(ymax - ymin, 1e-12), max(xmax - xmin, 1e-12)
+        while res > 0 and max(height / 180.0, width / 360.0) * (1 << res) > target_rows:
             res -= 1
-    return res
-
-
-def pick_cover_resolution(boxes: list[tuple[float, float, float, float]],
-                          target_cells: int = 256) -> int:
-    """One shared resolution for a polygon batch: finest resolution keeping
-    every polygon's cover under the budget."""
-    res = grid.MAX_RES
-    for b in boxes:
-        res = min(res, grid.pick_resolution(*b, target_cells=target_cells))
     return res

@@ -268,10 +268,10 @@ def main() -> None:
             pass
     for rep in range(start, args.reps):
         # retry a pair ONCE if hypervisor steal during either phase
-        # exceeded 3% (same pre-declared gate as wait_quiet and
-        # profile_stages' phase retry): in-phase steal slows whichever
-        # level it hits and is invisible to the calibration ratio, so a
-        # stolen pair measures the neighbor, not the engine.  Both
+        # exceeded 3% (same pre-declared gate as wait_quiet): in-phase
+        # steal slows whichever level it hits and is invisible to the
+        # calibration ratio, so a stolen pair measures the neighbor, not
+        # the engine.  Both
         # attempts' steal figures are recorded.
         retried = False
         for attempt in range(2):
@@ -488,7 +488,7 @@ Generated by `python scripts/bench_scaling.py --rows {args.rows} --n {args.n} --
 
 
 def _stage_profile_section() -> str:
-    """Markdown table from BENCH/stage_profile.json (profile_stages.py),
+    """Markdown table from the recorded BENCH/stage_profile.json,
     localizing WHICH stage loses efficiency at 4N — empty if absent."""
     try:
         with open("BENCH/stage_profile.json") as f:
@@ -505,7 +505,8 @@ def _stage_profile_section() -> str:
 ## Per-stage profile (which stage loses efficiency at 4N)
 
 Same job timed as cumulative stage prefixes at {sp['rows']:,} rows
-(`python scripts/profile_stages.py`); incremental per-stage seconds below
+(recorded profile; the traced pipeline benchmark splits join from tiling
+today); incremental per-stage seconds below
 (stage minus previous prefix).  Host ceiling during this profile:
 {sp['cpu_scaling_ceiling']} (calib {sp['calib_sec']['n']}s/{sp['calib_sec']['4n']}s,
 steal {sp['steal_pct']['n']}%/{sp['steal_pct']['4n']}%).

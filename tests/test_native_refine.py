@@ -275,9 +275,9 @@ def test_ecql_and_spatial_query_match_numpy_kernels(spark, g, box):
 @SLOW
 @given(first=polygonal(), second=geometries)
 def test_pip_joins_match_numpy_kernels(spark, first, second):
-    """Both broadcast paths — span cover (all polygonal) and cell cover (a
-    line or point in the set) — for intersects and contains, and the
-    salted sort-merge path for intersects."""
+    """Both joins — broadcast and salted sort-merge, each with the span
+    cover of every geometry, polygons, lines and points alike — for
+    intersects and contains."""
     x1, y1 = probe_points(first)
     x2, y2 = probe_points(second)
     x, y = np.concatenate([x1, x2]), np.concatenate([y1, y2])
@@ -299,14 +299,13 @@ def test_pip_joins_match_numpy_kernels(spark, first, second):
             want |= {(k, int(i)) for i in np.nonzero(hit)[0]}
         assert got == want, (predicate, wkt.wkt_dumps(first), wkt.wkt_dumps(second),
                              sorted(got ^ want)[:5])
-        if predicate == "intersects":
-            polys = local_table(spark, {"poly_id": [0, 1],
-                                        "geom": [wkb_dumps(g) for g in geoms]},
-                                "poly_id long, geom binary")
-            smj = {(r.poly_id, r.id) for r in pip_join_smj(pts, polys, res=8)
-                   .select("poly_id", "id").collect()}
-            assert smj == want, ("smj", wkt.wkt_dumps(first), wkt.wkt_dumps(second),
-                                 sorted(smj ^ want)[:5])
+        polys = local_table(spark, {"poly_id": [0, 1],
+                                    "geom": [wkb_dumps(g) for g in geoms]},
+                            "poly_id long, geom binary")
+        smj = {(r.poly_id, r.id) for r in pip_join_smj(pts, polys, res=8, predicate=predicate)
+               .select("poly_id", "id").collect()}
+        assert smj == want, ("smj", predicate, wkt.wkt_dumps(first), wkt.wkt_dumps(second),
+                             sorted(smj ^ want)[:5])
 
 
 def test_null_and_nan_coordinates_keep_numpy_answers(spark):

@@ -1,11 +1,14 @@
 """Span-cover planning + rollup tile pyramid (round-3 scale fixes).
 
-The broadcast PIP join's cover is O(perimeter) scanline spans
-(plans/cover.cover_spans) instead of O(area) cells, and tile_pyramid rolls
-coarser zooms up from the finest level instead of exploding every input row
-per zoom. Both must be exactly equivalent to the cell/explode semantics —
-these tests pin that equivalence (reference semantics: RelationUtils.grid
-join candidates; DensityScan/GridSnap pixel math).
+Both PIP joins cover every geometry (polygons, lines, points) with
+O(perimeter) scanline spans (plans/cover.batch_cover_spans) instead of
+O(area) cells, and tile_pyramid rolls coarser zooms up from the finest level
+instead of exploding every input row per zoom. Both must be exactly
+equivalent to the cell/explode semantics — these tests pin that equivalence
+against the corner-grid cell cover and per-polygon span cover they replaced,
+kept here as oracles, and pin that every boundary point's cell is covered
+(reference semantics: RelationUtils.grid join candidates; DensityScan/GridSnap
+pixel math).
 """
 
 from __future__ import annotations
@@ -20,8 +23,7 @@ from hypothesis import HealthCheck, Phase, given, seed, settings
 from hypothesis import strategies as st
 
 from geomesa_spark.geom import algos, model, wkt
-from geomesa_spark.plans.cover import (batch_cover_spans, classify_cell_cover_xy,
-                                       cover_spans, pick_span_resolution)
+from geomesa_spark.plans.cover import batch_cover_spans, cover_spans, pick_span_resolution
 
 
 def _circle(cx, cy, r, n=16):
@@ -45,12 +47,10 @@ CASES = [
 @pytest.mark.parametrize("wkt_str", CASES)
 @pytest.mark.parametrize("res", [6, 8])
 def test_spans_equal_cell_cover(wkt_str, res):
-    """Span cover expands to exactly the classify_cell_cover_xy cell sets,
-    with the same interior/boundary split."""
+    """Span cover expands to exactly the corner-grid cell cover's cell
+    sets, with the same interior/boundary split."""
     g = wkt.wkt_loads(wkt_str)
-    contained_xy, boundary_xy = classify_cell_cover_xy(g, res)
-    want_int = {(int(x), int(y)) for x, y in contained_xy}
-    want_bnd = {(int(x), int(y)) for x, y in boundary_xy}
+    want_int, want_bnd = _corner_cell_cover(g, res)
 
     iy, x0, x1, interior = cover_spans(g, res)
     got_int, got_bnd = set(), set()
@@ -73,20 +73,43 @@ def test_spans_equal_cell_cover(wkt_str, res):
 
 
 # ---------------------------------------------------------------------------
-# oracle: the per-polygon, per-edge span cover the batch cover replaced
+# oracles: the per-polygon, per-edge span cover the batch cover replaced,
+# and the corner-grid cell cover the span cover replaced
+
+EPS = 1e-9    # plans/cover._EPS
+
+
+def _mark(edge, px, py, keep):
+    """Mark the floor cells of the points ``keep`` selects, each coordinate
+    -+ EPS, clipped to the window."""
+    nx, ny = edge.shape
+    for ox in (-EPS, EPS):
+        for oy in (-EPS, EPS):
+            edge[np.clip(np.floor(px[keep] + ox), 0, nx - 1).astype(np.int64),
+                 np.clip(np.floor(py[keep] + oy), 0, ny - 1).astype(np.int64)] = True
+
 
 def _oracle_edge_grid(geom, res, ix0, iy0, nx, ny):
-    """(nx, ny) bool grid of the cells the boundary passes through: per
-    ring segment, the floor-cells of the midpoints between consecutive
-    gridline crossings, plus both sides of a segment ON a gridline."""
+    """(nx, ny) bool grid of the cells holding a boundary point: per
+    segment of a ring or line, the floor-cells of the midpoints between
+    consecutive gridline crossings, both sides of a segment ON a gridline
+    and the floor cells (-+ EPS) of the crossing points at grid corners;
+    the floor cells (-+ EPS) of every vertex, points included."""
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
     edge = np.zeros((nx, ny), dtype=bool)
-    rings = [np.asarray(r, dtype=np.float64) for comp in geom._components()
-             if isinstance(comp, model.Polygon) for r in [comp.shell] + comp.holes]
-    for ring in rings:
+    paths = []
+    for comp in geom._components():
+        if isinstance(comp, model.Polygon):
+            paths += [comp.shell] + comp.holes
+        elif isinstance(comp, model.LineString):
+            paths.append(comp.coords)
+        elif not comp.is_empty:
+            paths.append([(comp.x, comp.y)])
+    for ring in (np.asarray(p, dtype=np.float64).reshape(-1, 2) for p in paths):
         fx = (ring[:, 0] + 180.0) / w - ix0
         fy = (ring[:, 1] + 90.0) / h - iy0
+        _mark(edge, fx, fy, np.ones(len(fx), dtype=bool))
         for i in range(len(ring) - 1):
             x0, y0, x1, y1 = fx[i], fy[i], fx[i + 1], fy[i + 1]
             ts = [np.array([0.0, 1.0])]
@@ -98,6 +121,9 @@ def _oracle_edge_grid(geom, res, ix0, iy0, nx, ny):
                 lo, hi = (y0, y1) if y0 <= y1 else (y1, y0)
                 ts.append((np.arange(np.ceil(lo), np.floor(hi) + 1.0) - y0) / dy)
             t = np.unique(np.clip(np.concatenate(ts), 0.0, 1.0))
+            px, py = x0 + dx * t, y0 + dy * t
+            _mark(edge, px, py, (np.floor(px - EPS) != np.floor(px + EPS))
+                  & (np.floor(py - EPS) != np.floor(py + EPS)))
             mid = (t[:-1] + t[1:]) / 2.0
             exs = np.clip((x0 + dx * mid).astype(np.int64), 0, nx - 1)
             eys = np.clip((y0 + dy * mid).astype(np.int64), 0, ny - 1)
@@ -109,18 +135,45 @@ def _oracle_edge_grid(geom, res, ix0, iy0, nx, ny):
     return edge
 
 
-def _oracle_spans(geom, res):
-    """(iy, x0, x1, interior) of one polygon: runs of edge cells per row
-    are boundary spans; each gap between them is kept as an interior span
-    when points_intersect holds at its first cell's centre."""
+def _window(geom, res):
+    """``(ix0, iy0, nx, ny)``: the geometry's bbox cell window."""
     n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
     xmin, ymin, xmax, ymax = geom.bounds
     ix0 = max(0, min(int((xmin + 180.0) / 360.0 * n), n - 1))
     ix1 = max(0, min(int((xmax + 180.0) / 360.0 * n), n - 1))
     iy0 = max(0, min(int((ymin + 90.0) / 180.0 * n), n - 1))
     iy1 = max(0, min(int((ymax + 90.0) / 180.0 * n), n - 1))
-    nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
+    return ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
+
+
+def _corner_cell_cover(geom, res):
+    """The corner-grid cell cover of a polygon as ``(contained, boundary)``
+    sets of global ``(ix, iy)``: boundary = the edge cells, contained =
+    the cells with all four corners inside (one points_intersect call over
+    the corner grid of the window) and no edge through them."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    ix0, iy0, nx, ny = _window(geom, res)
+    cx = -180.0 + np.arange(ix0, ix0 + nx + 1, dtype=np.float64) * w
+    cy = -90.0 + np.arange(iy0, iy0 + ny + 1, dtype=np.float64) * h
+    gx, gy = np.meshgrid(cx, cy, indexing="ij")
+    inside = algos.points_intersect(gx.ravel(), gy.ravel(), geom).reshape(nx + 1, ny + 1)
+    corners_in = (inside[:-1, :-1].astype(np.int8) + inside[1:, :-1]
+                  + inside[:-1, 1:] + inside[1:, 1:])
+    edge = _oracle_edge_grid(geom, res, ix0, iy0, nx, ny)
+
+    def cells(mask):
+        return {(int(x) + ix0, int(y) + iy0) for x, y in zip(*np.nonzero(mask))}
+    return cells((corners_in == 4) & ~edge), cells(edge)
+
+
+def _oracle_spans(geom, res):
+    """(iy, x0, x1, interior) of one geometry: runs of edge cells per row
+    are boundary spans; each gap between them is kept as an interior span
+    when points_intersect holds at its first cell's centre."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    ix0, iy0, nx, ny = _window(geom, res)
     edge = _oracle_edge_grid(geom, res, ix0, iy0, nx, ny).T
 
     def runs(mask):
@@ -195,15 +248,34 @@ _polygonal = st.one_of(_star_with_holes(), _grid_box(), st.builds(
     lambda a, b: model.MultiPolygon([a, b]), _star_with_holes(), _grid_box()))
 
 
+@st.composite
+def _lineal_or_puntal(draw):
+    """A line, multiline, point or multipoint within 20 degrees of a
+    centre."""
+    cx, cy = draw(st.floats(-150.0, 150.0)), draw(st.floats(-60.0, 60.0))
+    coord = st.tuples(st.floats(-20.0, 20.0), st.floats(-20.0, 20.0)).map(
+        lambda p: (cx + p[0], cy + p[1]))
+    kind = draw(st.sampled_from(["line", "multiline", "point", "multipoint"]))
+    if kind == "point":
+        return model.Point(*draw(coord))
+    if kind == "multipoint":
+        return model.MultiPoint([model.Point(*p) for p in
+                                 draw(st.lists(coord, min_size=2, max_size=4))])
+    lines = [model.LineString(draw(st.lists(coord, min_size=2, max_size=6)))
+             for _ in range(1 if kind == "line" else 2)]
+    return lines[0] if kind == "line" else model.MultiLineString(lines)
+
+
 @seed(20261017)
 @settings(max_examples=150, deadline=None, database=None,
           phases=(Phase.explicit, Phase.generate),
           suppress_health_check=list(HealthCheck))
-@given(geoms=st.lists(_polygonal, min_size=1, max_size=4),
+@given(geoms=st.lists(st.one_of(_polygonal, _lineal_or_puntal()), min_size=1, max_size=4),
        res=st.sampled_from([4, 7, 10]))
 def test_batch_cover_matches_per_polygon_oracle(geoms, res):
-    """One batch over several polygons gives, polygon by polygon, exactly
-    the per-polygon oracle's spans, in its order."""
+    """One batch over several geometries (polygons, lines, points) gives,
+    geometry by geometry, exactly the per-geometry oracle's spans, in its
+    order."""
     _assert_batch_matches_oracle(geoms, res)
 
 
@@ -213,7 +285,8 @@ def test_batch_cover_matches_oracle_on_fixed_cases(res):
              "POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))",
              "POLYGON ((-45 -22.5, 45 -22.5, 45 22.5, -45 22.5, -45 -22.5), "
              "(0 0, 11.25 0, 11.25 11.25, 0 11.25, 0 0))",
-             "POLYGON ((0 0, 1 0, 0 0))"]
+             "POLYGON ((0 0, 1 0, 0 0))", "LINESTRING (-45 0, 0 22.5, 45 22.5)",
+             "MULTIPOINT ((0 0), (180 90), (-180 -90))"]
     _assert_batch_matches_oracle([wkt.wkt_loads(c) for c in CASES + extra], res)
 
 
@@ -242,7 +315,7 @@ def test_span_count_is_perimeter_scaled():
     g = wkt.wkt_loads(_circle(0, 0, 20, n=64))
     n8 = len(cover_spans(g, 8)[0])
     n10 = len(cover_spans(g, 10)[0])
-    cells10 = sum(len(a) for a in classify_cell_cover_xy(g, 10))
+    cells10 = sum(len(a) for a in _corner_cell_cover(g, 10))
     assert n10 < 6 * n8          # linear-ish growth, not 16x
     assert n10 < cells10 / 4     # far fewer spans than cells
 
@@ -252,6 +325,116 @@ def test_pick_span_resolution_row_budget():
     rows = 20.0 / (180.0 / (1 << res))
     assert rows <= 512
     assert 20.0 / (180.0 / (1 << (res + 1))) > 512
+
+
+@pytest.mark.parametrize("wkt_str", ["POLYGON ((-170 0, 170 0, 170 0.001, -170 0.001, -170 0))",
+                                     "LINESTRING (0 0, 20 0)"])
+def test_pick_span_resolution_caps_columns(wkt_str):
+    """A flat, wide polygon and a horizontal line: the column count binds,
+    and the cover stays within the column budget (one or two grid rows of
+    boundary spans)."""
+    g = wkt.wkt_loads(wkt_str)
+    xmin, _ymin, xmax, _ymax = g.bounds
+    res = pick_span_resolution([g.bounds])
+    assert (xmax - xmin) / (360.0 / (1 << res)) <= 512
+    assert (xmax - xmin) / (360.0 / (1 << (res + 1))) > 512
+    iy, x0, x1, interior = cover_spans(g, res)
+    assert x1.max() - x0.min() + 1 <= 513
+    assert len(set(iy.tolist())) <= 2 and not interior.any()
+
+
+# ---------------------------------------------------------------------------
+# every boundary point's cell is covered
+
+def _grid_coord():
+    """Grid coordinates (in cells) of a vertex: mostly on gridlines,
+    sometimes halfway between."""
+    return st.one_of(st.integers(0, 8).map(float), st.integers(0, 16).map(lambda a: a / 2))
+
+
+@st.composite
+def _snapped(draw):
+    """``(geometry, res)``: a triangle, quadrilateral, box with a triangle
+    hole, line, point or multi form of one of them, with vertices on (or
+    halfway between) the gridlines of ``res`` inside an 8 x 8 cell block."""
+    res = draw(st.sampled_from([4, 8, 12]))
+    n = 1 << res
+    bx, by = draw(st.integers(0, n - 8)), draw(st.integers(0, n - 8))
+    vertex = st.tuples(_grid_coord(), _grid_coord()).map(
+        lambda p: (-180.0 + (bx + p[0]) * 360.0 / n, -90.0 + (by + p[1]) * 180.0 / n))
+
+    def one(kind):
+        if kind in ("triangle", "quad"):
+            return model.Polygon(draw(st.lists(vertex, min_size=3 if kind == "triangle" else 4,
+                                               max_size=3 if kind == "triangle" else 4)))
+        if kind == "holed_box":
+            x0, y0 = -180.0 + bx * 360.0 / n, -90.0 + by * 180.0 / n
+            x1, y1 = x0 + 8 * 360.0 / n, y0 + 8 * 180.0 / n
+            hole = [(x0 + (x1 - x0) * a, y0 + (y1 - y0) * b)
+                    for a, b in ((0.25, 0.25), (0.75, 0.25), (0.5, 0.75))]
+            return model.Polygon(model.box(x0, y0, x1, y1).shell, [hole])
+        if kind == "line":
+            return model.LineString(draw(st.lists(vertex, min_size=2, max_size=5)))
+        return model.Point(*draw(vertex))
+
+    kind = draw(st.sampled_from(["triangle", "quad", "holed_box", "line", "point"]))
+    if not draw(st.booleans()):
+        return one(kind), res
+    parts = [one(kind), one(kind)]
+    if kind in ("triangle", "quad", "holed_box"):
+        return model.MultiPolygon(parts), res
+    return (model.MultiLineString(parts) if kind == "line" else model.MultiPoint(parts)), res
+
+
+def _boundary_probes(g, res):
+    """Every vertex and grid corner near ``g``, and along every segment its
+    gridline crossings, midpoint and quarter points."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    ix0, iy0, nx, ny = _window(g, res)
+    gx, gy = np.meshgrid(-180.0 + np.arange(ix0 - 1, ix0 + nx + 2) * w,
+                         -90.0 + np.arange(iy0 - 1, iy0 + ny + 2) * h)
+    pts = list(zip(gx.ravel(), gy.ravel()))
+    for c in g._components():
+        if isinstance(c, model.Point):
+            pts.append((c.x, c.y))
+            continue
+        for path in ([c.coords] if isinstance(c, model.LineString) else [c.shell] + c.holes):
+            pts += list(map(tuple, path))
+            for (ax, ay), (bx, by) in zip(path[:-1], path[1:]):
+                pts += [(ax + t * (bx - ax), ay + t * (by - ay)) for t in (0.25, 0.5, 0.75)]
+                if bx != ax:
+                    for x in -180.0 + np.arange(ix0, ix0 + nx + 1) * w:
+                        if min(ax, bx) <= x <= max(ax, bx):
+                            pts.append((x, ay + (x - ax) * (by - ay) / (bx - ax)))
+                if by != ay:
+                    for y in -90.0 + np.arange(iy0, iy0 + ny + 1) * h:
+                        if min(ay, by) <= y <= max(ay, by):
+                            pts.append((ax + (y - ay) * (bx - ax) / (by - ay), y))
+    a = np.array(pts, dtype=np.float64)
+    return a[:, 0], a[:, 1]
+
+
+@seed(20261018)
+@settings(max_examples=300, deadline=None, database=None,
+          phases=(Phase.explicit, Phase.generate),
+          suppress_health_check=list(HealthCheck))
+@given(case=_snapped())
+def test_cover_holds_every_point_the_geometry_intersects(case):
+    """Every probe point that points_intersect accepts lies in a span of
+    its geometry: the cell a point is given (floor, clamped to the grid)
+    is covered, for points on vertices, on gridline crossings and at grid
+    corners included."""
+    g, res = case
+    n = 1 << res
+    x, y = _boundary_probes(g, res)
+    hit = algos.points_intersect(x, y, g)
+    ix = np.clip(np.floor((x[hit] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    iy = np.clip(np.floor((y[hit] + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
+    siy, x0, x1, _interior = cover_spans(g, res)
+    covered = ((iy[:, None] == siy) & (ix[:, None] >= x0) & (ix[:, None] <= x1)).any(axis=1)
+    assert covered.all(), (res, wkt.wkt_dumps(g),
+                           list(zip(x[hit][~covered], y[hit][~covered]))[:5])
 
 
 def test_pip_join_broadcast_spans_match_bruteforce(spark):
@@ -273,6 +456,39 @@ def test_pip_join_broadcast_spans_match_bruteforce(spark):
         m = algos.points_intersect(lons, lats, wkt.wkt_loads(w))
         want.update((i, pid) for i in np.nonzero(m)[0])
     assert got_set == want
+
+
+BOUNDARY_CASES = {
+    # a vertex on a vertical gridline
+    "vertex_on_gridline": ("POLYGON ((-10 -1, 0 0.5, -10 1, -10 -1))", 0.0, 0.5),
+    # the hypotenuse crosses a grid corner, the inside to its lower left
+    "edge_through_corner": ("POLYGON ((-10 -10, -10 10, 10 -10, -10 -10))", 0.0, 0.0),
+    # the top-right corner of a gridline-aligned box
+    "box_corner": ("POLYGON ((-45 -22.5, 0 -22.5, 0 0, -45 0, -45 -22.5))", 0.0, 0.0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BOUNDARY_CASES))
+def test_boundary_points_on_gridlines_join(spark, case):
+    """A point on the boundary, lying exactly on a gridline, matches
+    through both joins (as SpatialQuery finds it): its cell is one the
+    boundary only touches, at a vertex or a crossing."""
+    from geomesa_spark.geom.wkb import wkb_dumps
+    from geomesa_spark.operators.pip_join import pip_join_broadcast, pip_join_smj
+    from geomesa_spark.plans.query import SpatialQuery
+    from geomesa_spark.sources.arrow_io import local_table
+
+    text, lon, lat = BOUNDARY_CASES[case]
+    pts = local_table(spark, {"id": [7], "lon": [lon], "lat": [lat]},
+                      "id int, lon double, lat double")
+    polys = local_table(spark, {"poly_id": [1], "geom": [wkb_dumps(wkt.wkt_loads(text))]},
+                        "poly_id long, geom binary")
+    assert SpatialQuery(geometry=text).apply(pts).count() == 1
+    for name, out in (("broadcast", pip_join_broadcast(pts, [(1, text)])),
+                      ("broadcast res 8", pip_join_broadcast(pts, [(1, text)], res=8)),
+                      ("smj res 8", pip_join_smj(pts, polys, res=8)),
+                      ("smj res 12", pip_join_smj(pts, polys, res=12))):
+        assert [(r.poly_id, r.id) for r in out.select("poly_id", "id").collect()] == [(1, 7)], name
 
 
 def test_tile_pyramid_rollup_matches_naive(spark):
@@ -349,16 +565,27 @@ def test_render_tile_images_roundtrip(spark):
 
 
 def test_span_join_is_broadcast_hash_join(spark):
-    """Plan shape: the span cover joins as a BroadcastHashJoin on the grid
-    row (equi-key) with the x-range check as a join filter — NOT a
-    BroadcastNestedLoopJoin, which would probe every span per point."""
+    """Plan shape, the same for all polygons and for a set with lines and
+    points: the span cover joins as a BroadcastHashJoin on the grid row
+    (equi-key) with the x-range check as a join filter — NOT a
+    BroadcastNestedLoopJoin, which would probe every span per point — and
+    no Python node."""
+    import re
+
     from geomesa_spark.operators.pip_join import pip_join_broadcast
-    pdf = pd.DataFrame({"lon": [10.0, 20.0], "lat": [5.0, -5.0]})
-    out = pip_join_broadcast(spark.createDataFrame(pdf),
-                             [("c", _circle(10, 5, 8))])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    pdf = pd.DataFrame({"lon": [10.0, 20.0, 3.0], "lat": [5.0, -5.0, 4.0]})
+    polys = [("c", _circle(10, 5, 8))]
+    mixed = polys + [("l", "LINESTRING (0 0, 10 10, 20 0)"), ("p", "POINT (3 4)"),
+                     ("mp", "MULTIPOINT ((1 1), (40 40))")]
+    span_join = re.compile(r"BroadcastHashJoin \[__iy#\d+L\], \[__siy#\d+L\], Inner, "
+                           r"BuildRight, \(\(__ix#\d+L >= __x0#\d+L\) AND "
+                           r"\(__ix#\d+L <= __x1#\d+L\)\)")
+    for geoms in (polys, mixed):
+        out = pip_join_broadcast(spark.createDataFrame(pdf), geoms)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert span_join.search(plan), plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert not [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan], plan
 
 
 def _local_relation_rows(df) -> list:
@@ -371,8 +598,8 @@ def _local_relation_rows(df) -> list:
 
 def test_pip_join_driver_table_has_one_row_per_polygon(spark):
     """Plan size: both broadcast sides read one driver table of one row per
-    geometry (spans or cells in an array column, inlined on the build
-    side), for the span path, the mixed-geometry path and keep_geom — no
+    geometry (spans in an array column, inlined on the build side), for
+    polygons, a set with a line and a point, and keep_geom — no
     LocalRelation grows with the cover."""
     from geomesa_spark.geom.wkb import wkb_dumps
     from geomesa_spark.operators.pip_join import pip_join_broadcast
@@ -389,3 +616,4 @@ def test_pip_join_driver_table_has_one_row_per_polygon(spark):
         wkb = {k: wkb_dumps(wkt.wkt_loads(w)) for k, w in geoms}
         got = out.select("poly_id", "__geom").collect()
         assert got and all(bytes(r["__geom"]) == wkb[r["poly_id"]] for r in got)
+

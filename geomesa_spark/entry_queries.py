@@ -16,14 +16,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.geom import model
-from geomesa_spark.operators.knn import _haversine_col, knn_join
+from geomesa_spark.geom.algos import EARTH_RADIUS_M
+from geomesa_spark.operators.knn import knn_join
 from geomesa_spark.operators.pip_join import pip_join_broadcast
+from geomesa_spark.operators.processes import haversine_col
 from geomesa_spark.operators.tiling import density, tile_pyramid
 from geomesa_spark.plans.query import SpatialQuery
 from geomesa_spark.sources.testdata import (CLUST_LAT_EXPR, CLUST_LON_EXPR,
                                             geo_events, geo_events_sql)
 
-EARTH_RADIUS_M = 6371008.8
 
 # ---------------------------------------------------------------------------
 # shared fixtures: polygons, query points (small, driver-side)
@@ -367,7 +368,7 @@ def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = geo_events(spark, sf_dir)
     pred = None
     for alon, alat in DWITHIN_ANCHORS:
-        d = _haversine_col(F.col("lon"), F.col("lat"), F.lit(alon), F.lit(alat))
+        d = haversine_col(F.col("lon"), F.col("lat"), F.lit(alon), F.lit(alat))
         p = d <= DWITHIN_RADIUS_M
         pred = p if pred is None else (pred | p)
     return df.where(pred).select("event_id")
@@ -406,8 +407,8 @@ def q_point2point(spark: SparkSession, sf_dir: str) -> DataFrame:
     great-circle length)."""
     df = geo_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = _haversine_col(F.lag("lon").over(w), F.lag("lat").over(w),
-                         F.col("lon"), F.col("lat"))
+    seg = haversine_col(F.lag("lon").over(w), F.lag("lat").over(w),
+                        F.col("lon"), F.col("lat"))
     return (df.withColumn("seg_m", seg)
             .groupBy("user_id")
             .agg(F.count("seg_m").alias("n_segments"),

@@ -109,10 +109,6 @@ def _atanh(x: Column) -> Column:
     return 0.5 * F.log((1.0 + x) / (1.0 - x))
 
 
-def utm_zone_of(lon: float) -> int:
-    return int((lon + 180.0) // 6.0) % 60 + 1
-
-
 def utm_exprs(lon: Column, lat: Column, zone: int,
               south: bool = False) -> tuple[Column, Column]:
     """(easting, northing) on WGS84 UTM ``zone`` as native columns."""

@@ -84,10 +84,6 @@ def _binary_predicate(scalar_fn, points_fn=None):
     return fn
 
 
-def _swap(fn):
-    return lambda a, b: fn(b, a)
-
-
 # ---------------------------------------------------------------------------
 # function bodies (plain pandas functions; registered as pandas UDFs below)
 # ---------------------------------------------------------------------------
@@ -652,15 +648,6 @@ def _aggregate_distance_spheroid(arr: pd.Series) -> pd.Series:
 # ---------------------------------------------------------------------------
 
 _B, _S, _D, _I, _BOOL = BinaryType(), StringType(), DoubleType(), IntegerType(), BooleanType()
-
-
-def _line_from_coords(fn_check):
-    def fn(s: pd.Series) -> pd.Series:
-        out = []
-        for g in _parse_series(s):
-            out.append(wkb_dumps(g) if g is not None and fn_check(g) else None)
-        return pd.Series(out)
-    return fn
 
 
 def _make_line(points: pd.Series) -> pd.Series:

@@ -127,15 +127,6 @@ def jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                     F.floor(F.col("jac") * 1e6).cast("long").alias("jac_ppm")))
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Per-doc MinHash signature columns m0..m{K-1} (K=16)."""
-    sh = shingle_set(df, id_col, text_col)
-    aggs = [F.expr(pt.minhash_min("sh", j)).alias(f"m{j}")
-            for j in range(pt.MINHASH_K)]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.4,
                       id_col: str = "doc_id", text_col: str = "text",
                       bands: int = 4,

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
+from geomesa_spark.operators.processes import haversine_col
 from geomesa_spark.sources.arrow_io import local_table
 
 M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
@@ -169,7 +170,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     q_cells = {qid: grid.cell_id(qlon, qlat, res) for qid, qlon, qlat in query_points}
     q_pos = {qid: (qlon, qlat) for qid, qlon, qlat in query_points}
     qdf = local_table(spark, [(qid, x, y) for qid, (x, y) in q_pos.items()], _QUERY_SCHEMA)
-    dist = _haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
+    dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     wq = Window.partitionBy("qid")
 
@@ -256,24 +257,11 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     return out
 
 
-def _haversine_col(lon1, lat1, lon2, lat2):
-    """Native haversine (meters) — pure Catalyst, matches algos.haversine_m."""
-    r1lon, r1lat = F.radians(lon1), F.radians(lat1)
-    r2lon, r2lat = F.radians(lon2), F.radians(lat2)
-    a = (F.pow(F.sin((r2lat - r1lat) / 2), 2)
-         + F.cos(r1lat) * F.cos(r2lat) * F.pow(F.sin((r2lon - r1lon) / 2), 2))
-    from geomesa_spark.geom.algos import EARTH_RADIUS_M
-    # clamp without F.least: least() ignores nulls and would turn a null
-    # distance (null input coords) into asin(1)
-    clamped = F.when(a > 1.0, F.lit(1.0)).otherwise(a)
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(clamped))
-
-
 def knn_brute_force(points: DataFrame, query_points: list[tuple], k: int, *,
                     lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Broadcast nested-loop kNN — the oracle/baseline path."""
     qdf = local_table(points.sparkSession, list(query_points), _QUERY_SCHEMA)
-    dist = _haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
+    dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     return (points.crossJoin(F.broadcast(qdf))
             .withColumn("dist_m", dist)

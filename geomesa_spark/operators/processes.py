@@ -33,15 +33,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-EARTH_RADIUS_M = 6371008.8
+from geomesa_spark.geom.algos import EARTH_RADIUS_M
 
 
 def haversine_col(lon1, lat1, lon2, lat2):
-    dlat = (F.radians(lat2) - F.radians(lat1)) / 2
-    dlon = (F.radians(lon2) - F.radians(lon1)) / 2
-    a = (F.sin(dlat) ** 2
-         + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon) ** 2)
-    return 2.0 * EARTH_RADIUS_M * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
+    """Native haversine (meters) — pure Catalyst, matches algos.haversine_m;
+    null when a coordinate is null."""
+    r1lon, r1lat = F.radians(lon1), F.radians(lat1)
+    r2lon, r2lat = F.radians(lon2), F.radians(lat2)
+    a = (F.pow(F.sin((r2lat - r1lat) / 2), 2)
+         + F.cos(r1lat) * F.cos(r2lat) * F.pow(F.sin((r2lon - r1lon) / 2), 2))
+    # clamp without F.least: least() ignores nulls and would turn a null
+    # distance (null input coords) into asin(1)
+    clamped = F.when(a > 1.0, F.lit(1.0)).otherwise(a)
+    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(clamped))
 
 
 def bearing_col(lon1, lat1, lon2, lat2):

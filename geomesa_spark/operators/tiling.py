@@ -8,8 +8,8 @@ width x height grid over an envelope and their weights summed per pixel.
 A tile pyramid is the same computation per (zoom, tile): global pixel index
 gx = floor((lon+180)/360 * 2^zoom * tile_px), tile = gx div tile_px, pixel =
 gx mod tile_px. Everything is native Catalyst (one shuffle per aggregation,
-map-side partial aggregation for free); multiple zoom levels are produced in
-ONE pass via posexplode of the per-zoom keys.
+map-side partial aggregation for free); every zoom level comes out of ONE
+explode + aggregation over the finest level.
 """
 
 from __future__ import annotations
@@ -17,9 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# finest-level caches pinned by prior tile_pyramid calls; the next call
-# releases them so a long-lived many-query session never accumulates
-_PYRAMID_CACHE_REGISTRY: list[DataFrame] = []
+
+def _weight(weight: Column | str | None) -> Column:
+    """A row's weight: 1.0 by default, else the named column or the Column."""
+    if weight is None:
+        return F.lit(1.0)
+    return F.col(weight) if isinstance(weight, str) else weight
 
 
 def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
@@ -33,7 +36,6 @@ def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
     """
     xmin, ymin, xmax, ymax = envelope
     lon, lat = F.col(lon_col), F.col(lat_col)
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
     px = F.least(F.floor((lon - F.lit(xmin)) / F.lit(xmax - xmin) * F.lit(width)),
                  F.lit(width - 1)).cast("int")
     py = F.least(F.floor((lat - F.lit(ymin)) / F.lit(ymax - ymin) * F.lit(height)),
@@ -42,7 +44,7 @@ def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
             .where(lon.between(xmin, xmax) & lat.between(ymin, ymax))
             .withColumn("px", px).withColumn("py", py)
             .groupBy("px", "py")
-            .agg(F.sum(w).alias("weight")))
+            .agg(F.sum(_weight(weight)).alias("weight")))
 
 
 def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
@@ -54,36 +56,22 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
     floor snap with the +90/+180 edges clamped into the last tile — matching
     the engine's GridSnap-parity pixel math (tests port F7 semantics).
 
-    ROLLUP execution: only the FINEST zoom aggregates the raw rows (one
-    shuffle of the input, packed single-long pixel key); every coarser zoom
-    is rolled up from that already-reduced level, since a coarser pixel id
-    is exactly the finer id div 2^dz (floor(floor(x)/m) = floor(x/m), and
-    the clamped top edge maps consistently).  All coarser levels come out
-    of ONE explode + groupBy over the finest level: shuffled rows drop
-    from len(zooms) x input (the naive explode-by-zoom over raw rows) to
-    input + (len(zooms)-1) x finest-level pixels, with map-side combine
-    reducing the second term toward sum(level sizes) — at 10^12 input rows
-    the difference is the whole job.  Weight sums re-associate (floating
-    point) but are exact as rollups of the finest level.
-
-    The finest level feeds two consumers (its own decode branch and the
-    coarser rollup) and Catalyst does NOT reuse the exchange across them
-    (verified round 2: zero ReusedExchange across differently-consumed
-    aggregations), so when len(zooms) > 1 it is persisted MEMORY_AND_DISK
-    — without the persist the union re-executes the ENTIRE upstream
-    lineage per consumer (the whole non-scaling cost of the r3 scaling
-    bench; fixing it measured 1.7x end-to-end at 32M joined rows at both 8
-    and 32 cores).  The level is already reduced (unique finest pixels),
-    far below the input, and spills gracefully at cluster scale.  Each
-    tile_pyramid call unpersists the levels pinned by PREVIOUS calls
-    (module-level registry) — unpersist only costs recompute-if-reread,
-    never correctness — so a many-query session holds at most one
-    pyramid's cache instead of leaking one per invocation.
+    ROLLUP execution, two aggregations in one lineage: only the FINEST
+    zoom aggregates the raw rows (one shuffle of the input, packed
+    single-long pixel key); every zoom, the finest included, is then
+    rolled up from that already-reduced level, since a coarser pixel id is
+    exactly the finer id div 2^dz (floor(floor(x)/m) = floor(x/m), and the
+    clamped top edge maps consistently).  Each finest pixel explodes to
+    its key at every zoom (dz = 0 for the finest) and ONE groupBy sums
+    them: shuffled rows drop from len(zooms) x input (the naive
+    explode-by-zoom over raw rows) to input + len(zooms) x finest-level
+    pixels, with map-side combine reducing the second term toward
+    sum(level sizes) — at 10^12 input rows the difference is the whole
+    job.  Every stage has one consumer, so nothing is read twice and
+    nothing is cached.  Weight sums re-associate (floating point) but are
+    exact as rollups of the finest level.
     """
-    from pyspark import StorageLevel
     lon, lat = F.col(lon_col), F.col(lat_col)
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
-
     zs = sorted(set(zooms), reverse=True)
     finest = zs[0]
     n_px_f = (1 << finest) * tile_px
@@ -95,55 +83,31 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
     # one shuffle of the raw rows: 8-byte packed key + (weight, cnt)
     lvl = (df
            .where(lon.between(-180.0, 180.0) & lat.between(-90.0, 90.0))
-           .select((gx * F.lit(n_px_f) + gy).alias("__k"), w.alias("__w"))
+           .select((gx * F.lit(n_px_f) + gy).alias("__k"), _weight(weight).alias("__w"))
            .groupBy("__k")
            .agg(F.sum("__w").alias("weight"), F.count("*").alias("cnt")))
-    if len(zs) > 1:
-        # release caches pinned by earlier pyramids first (presumed consumed
-        # by now); a still-live old result just recomputes if re-read
-        for old in _PYRAMID_CACHE_REGISTRY:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _PYRAMID_CACHE_REGISTRY.clear()
-        lvl = lvl.persist(StorageLevel.MEMORY_AND_DISK)
-        _PYRAMID_CACHE_REGISTRY.append(lvl)
 
-    # decode a (zoom, packed-key) pair; `div` = exact integer division
-    # (double `/` rounds past 2^53); npx is a per-row expression of zoom
+    # each finest pixel to its (zoom, key) at every zoom, coarsened by
+    # 2^shift per axis; `div` = exact integer division (double `/` rounds
+    # past 2^53)
+    keys = [F.struct(F.lit(z).alias("zoom"), F.expr(
+        f"(__k div {n_px_f}) div {1 << (finest - z)} * {(1 << z) * tile_px}"
+        f" + (__k % {n_px_f}) div {1 << (finest - z)}").alias("__k"))
+        for z in zs]
+    # decode a (zoom, packed-key) pair; npx is a per-row expression of zoom
     npx = f"(shiftleft(cast(1 as bigint), zoom) * {tile_px})"
-    decode_cols = [
-        F.col("zoom"),
-        F.expr(f"cast((__k div {npx}) div {tile_px} as int)").alias("tx"),
-        F.expr(f"cast((__k % {npx}) div {tile_px} as int)").alias("ty"),
-        F.expr(f"cast((__k div {npx}) % {tile_px} as int)").alias("px"),
-        F.expr(f"cast((__k % {npx}) % {tile_px} as int)").alias("py"),
-        "weight", "cnt"]
-
-    out = lvl.select(F.lit(finest).alias("zoom"), "__k", "weight", "cnt")
-    if len(zs) > 1:
-        # every coarser level in ONE pass over the finest level: explode
-        # each finest pixel to its (zoom, coarser-key) pairs, aggregate
-        # once — single lineage, no per-level consumer fan-out
-        pairs = []
-        for z in zs[1:]:
-            shift = finest - z                  # coarsen by 2^shift per axis
-            npx_z = (1 << z) * tile_px
-            pairs.append(F.struct(
-                F.lit(z).alias("zoom"),
-                (F.expr(f"(__k div {n_px_f}) div {1 << shift}") * npx_z
-                 + F.expr(f"(__k % {n_px_f}) div {1 << shift}")).alias("__k")))
-        coarser = (lvl
-                   .select(F.explode(F.array(*pairs)).alias("zk"),
-                           "weight", "cnt")
-                   .select("zk.zoom", "zk.__k", "weight", "cnt")
-                   .groupBy("zoom", "__k")
-                   .agg(F.sum("weight").alias("weight"),
-                        F.sum("cnt").alias("cnt")))
-        out = out.unionByName(coarser)
-
-    return out.select(*decode_cols)
+    return (lvl
+            .select(F.explode(F.array(*keys)).alias("zk"), "weight", "cnt")
+            .select("zk.zoom", "zk.__k", "weight", "cnt")
+            .groupBy("zoom", "__k")
+            .agg(F.sum("weight").alias("weight"), F.sum("cnt").alias("cnt"))
+            .select(
+                "zoom",
+                F.expr(f"cast((__k div {npx}) div {tile_px} as int)").alias("tx"),
+                F.expr(f"cast((__k % {npx}) div {tile_px} as int)").alias("ty"),
+                F.expr(f"cast((__k div {npx}) % {tile_px} as int)").alias("px"),
+                F.expr(f"cast((__k % {npx}) % {tile_px} as int)").alias("py"),
+                "weight", "cnt"))
 
 
 def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
@@ -160,7 +124,6 @@ def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
     the envelope clip to it, fully-disjoint rows drop.
     """
     exmin, eymin, exmax, eymax = envelope
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
 
     def snap(col, lo, hi, n_px):
         frac = (col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px)
@@ -173,7 +136,7 @@ def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
             .withColumn("__px1", snap(F.col(xmax_col), exmin, exmax, width))
             .withColumn("__py0", snap(F.col(ymin_col), eymin, eymax, height))
             .withColumn("__py1", snap(F.col(ymax_col), eymin, eymax, height))
-            .withColumn("__w", w)
+            .withColumn("__w", _weight(weight))
             .select(F.explode(F.expr("sequence(__px0, __px1)")).alias("px"),
                     F.col("__py0"), F.col("__py1"), F.col("__w"))
             .select("px", F.explode(F.expr("sequence(__py0, __py1)")).alias("py"),
@@ -199,7 +162,6 @@ def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
     with st_intersection against the envelope box).
     """
     exmin, eymin, exmax, eymax = envelope
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
 
     def fpix(col, lo, hi, n_px):
         # continuous pixel coordinate, clamped inside the grid
@@ -217,7 +179,7 @@ def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
                F.abs(F.floor("__bx") - F.floor("__ax")),
                F.abs(F.floor("__by") - F.floor("__ay")),
                F.lit(0)).cast("int"))
-           .withColumn("__w", w)
+           .withColumn("__w", _weight(weight))
            .withColumn("__pix", F.expr(f"""
                array_distinct(transform(sequence(0, __n), i ->
                  cast(floor(__ax + (__bx - __ax) * i / greatest(__n, 1)) AS bigint) * {height}
@@ -318,7 +280,6 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     from pyspark.sql.functions import pandas_udf
 
     exmin, eymin, exmax, eymax = envelope
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
 
     def cell(col, lo, hi, n_px):
         # GridSnap.i/j: floor((v - min) / d) with d = (max - min) / n, in
@@ -348,7 +309,7 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     inside = (F.col(x1_col).between(exmin, exmax) & F.col(x2_col).between(exmin, exmax)
               & F.col(y1_col).between(eymin, eymax) & F.col(y2_col).between(eymin, eymax))
     return (df.where(inside)
-            .withColumn("__w", w)
+            .withColumn("__w", _weight(weight))
             .withColumn("__pix", walk(
                 cell(F.col(x1_col), exmin, exmax, width),
                 cell(F.col(y1_col), eymin, eymax, height),
@@ -436,7 +397,9 @@ def render_tile_images(tiles: DataFrame, *, tile_px: int = 256,
     out_schema = ("zoom int, tx int, ty int, n_px int, vmax double, "
                   "pix_check long, bytes binary")
 
-    def render(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # NO annotations: `from __future__ import annotations` stringifies
+    # them, and applyInPandas then warns that it cannot infer the eval type
+    def render(key, pdf):
         zoom, tx, ty = (int(k) for k in key)
         arr = np.zeros((tile_px, tile_px), dtype=np.float64)
         arr[tile_px - 1 - pdf["py"].to_numpy(),

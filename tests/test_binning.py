@@ -171,14 +171,13 @@ if _HYP:
            length=st.integers(1, 1000), data=st.data())
     def test_whole_binning_index_bounds_roundtrip(lo, span, length, data):
         """For any in-bounds value: 0 <= indexOf(v) < length and
-        bounds(indexOf(v)) contains v — EXCEPT the reference's own double
-        quirk, reproduced faithfully: when binSize*length floors just
-        under the span, the max value clamps into the last bin while
-        bounds(length-1) tops out at floor(binSize*length) < max (found
-        by hypothesis at lo=-474644 span=1000000 length=47; the
-        reference's BinnedArrayTest only asserts bound ORDERING, and its
-        bounds() upper clamp fires only when hiLong >= max).
-        Out-of-bounds values map to -1."""
+        bounds(indexOf(v)) contains v. The reference's double edges can
+        miss such a value (max clamped into the last bin while
+        floor(binSize*length) < max at lo=-474644 span=1000000 length=47;
+        ceil(binSize*183) one past v=108404 at lo=54202 span=108404
+        length=366, both found by hypothesis); bounds() widens its edges
+        over them, and the max-value clause keeps the reference's upper
+        edge acceptable. Out-of-bounds values map to -1."""
         hi = lo + span
         a = WholeNumberBinning(length, (lo, hi))
         v = data.draw(st.integers(lo, hi))

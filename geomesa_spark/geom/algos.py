@@ -38,8 +38,10 @@ def points_in_ring(x: np.ndarray, y: np.ndarray, ring: np.ndarray) -> np.ndarray
     x1, y1 = ring[1:, 0], ring[1:, 1]
     for i in range(n):
         ax, ay, bx, by = x0[i], y0[i], x1[i], y1[i]
-        # boundary: collinear + within segment bbox
-        cross = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
+        # boundary: collinear + within segment bbox (an infinite coordinate
+        # on an axis-parallel edge gives 0 * inf = NaN, which never equals 0)
+        with np.errstate(invalid="ignore"):
+            cross = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
         on = (cross == 0.0) & (x >= min(ax, bx)) & (x <= max(ax, bx)) \
             & (y >= min(ay, by)) & (y <= max(ay, by))
         boundary |= on
@@ -82,7 +84,8 @@ def points_on_polyline(x: np.ndarray, y: np.ndarray, coords: np.ndarray) -> np.n
     for i in range(len(coords) - 1):
         ax, ay = coords[i]
         bx, by = coords[i + 1]
-        cross = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
+        with np.errstate(invalid="ignore"):  # 0 * inf = NaN: not collinear
+            cross = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
         result |= (cross == 0.0) & (x >= min(ax, bx)) & (x <= max(ax, bx)) \
             & (y >= min(ay, by)) & (y <= max(ay, by))
     return result

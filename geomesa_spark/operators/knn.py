@@ -1,28 +1,32 @@
-"""kNN via cell-ring expansion + exact great-circle refine.
+"""kNN via expanding query windows + exact great-circle refine.
 
 Spark reimplementation of the reference's expanding-window kNN search
 (KNearestNeighborSearchProcess.scala:92-212: initial window estimate, ring
 expansion with hole exclusion :225-303, exact geodesic refine into a fixed-k
 buffer :315-396):
 
-1. every data point carries a grid cell (native expression, one per point);
-2. per query point, candidate cells = disk(query cell, r); r starts from a
-   density-based estimate and doubles until every query point has >= k
-   candidates (driver-side counts on a tiny aggregate — the reference's
-   iterative window expansion);
-3. guarantee pass: after the provisional k-th distance d_k is known, the
-   disk is expanded to fully contain the d_k radius (in cells), and only the
-   NEW cells are scanned (hole exclusion);
-4. exact haversine refine + per-query top-k window
-   (row_number over dist — the reference's replace-farthest k-buffer).
+1. every data point carries its cell (ix, iy) on the 2^res x 2^res lon/lat
+   grid (native expression; res from a density estimate);
+2. per query point, the scanned cells form one window — a cyclic column arc
+   times a row range (`_window`).  It starts as the disk of grid radius 1
+   around the query cell and the radius doubles until the point's top-k
+   holds k rows (the reference's iterative window expansion);
+3. top-up (hole exclusion): a point whose provisional d_k disk leaves its
+   window gets one exact re-rank over the window that also covers that
+   disk (only those points rescan);
+4. exact haversine refine + per-query top-k (row_number over dist — the
+   reference's replace-farthest k-buffer).
 
-Query points are broadcast (they are small); every scan of the fact table
-carries a driver-built coarse bbox predicate on the RAW lon/lat columns
-derived from the candidate cell set (`_cells_bbox_pred`), so the filter
+Each round is one scan whose query-side inputs are literals.  A round with
+one query point filters to its window and attaches ``lit(qid)``,
+``lit(qlon)`` and ``lit(qlat)``: with a literal partition key Catalyst plans
+the top-k as TakeOrderedAndProject (one job, no exchange).  A round with
+several attaches them with ``inline(filter(<literal array of query structs>,
+q -> the row's cell lies in q's window))`` and ranks them in a window
+partitioned by qid.  Every scan carries a driver-built bbox predicate on the
+RAW lon/lat columns covering all its windows (`_bbox_sql`), so the filter
 reaches the parquet reader (PushedFilters -> row-group / file skipping on a
-sorted layout) and nothing is cached — each phase re-scans only the pruned
-slice, mirroring the reference's iterator-level range scans.  The exact
-cell membership is then enforced by the broadcast join on `__cell`.
+sorted layout) and nothing is cached.
 """
 
 from __future__ import annotations
@@ -41,85 +45,82 @@ M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
 _QUERY_SCHEMA = "qid string, qlon double, qlat double"
 
 
-def cells_covering_radius(qlon: float, qlat: float, res: int, radius_m: float) -> list[int]:
-    """All cells intersecting the metric disk around (qlon, qlat).
+def _window(ixs, iys, n: int) -> tuple[int, int, int, int]:
+    """``(x0, nx, y0, y1)``: the smallest cyclic arc of ``nx`` grid columns
+    from ``x0`` that covers the column indices ``ixs``, times the rows
+    ``min(iys)..max(iys)``.  Every column set gives one canonical window, so
+    equal windows compare equal."""
+    srt = sorted(set(ixs))
+    # largest cyclic gap between used columns; its complement is the arc
+    gaps = [(srt[(i + 1) % len(srt)] - srt[i]) % n or n for i in range(len(srt))]
+    gi = max(range(len(srt)), key=gaps.__getitem__)
+    return srt[(gi + 1) % len(srt)], n + 1 - gaps[gi], min(iys), max(iys)
 
-    Handles pole overflow (include full polar rows) and antimeridian wrap
-    (reference envelope wrap: KNearestNeighborSearchProcess.scala:527-547).
-    """
+
+def _cols(w, n: int) -> set:
+    """The grid column indices of window ``w``."""
+    x0, nx = w[:2]
+    return {(x0 + i) % n for i in range(nx)}
+
+
+def _disk_window(qix: int, qiy: int, r: int, n: int):
+    """Window of the cells at grid (Chebyshev) distance <= r from the query
+    cell: x wraps at the antimeridian, y clamps at the poles."""
+    cols = range(n) if 2 * r + 1 >= n else [(qix + d) % n for d in range(-r, r + 1)]
+    return _window(cols, (max(0, qiy - r), min(n - 1, qiy + r)), n)
+
+
+def _radius_window(qlon: float, qlat: float, res: int, radius_m: float):
+    """Window of all cells intersecting the metric disk around (qlon, qlat).
+
+    A disk that reaches a pole takes every longitude (reference envelope
+    wrap: KNearestNeighborSearchProcess.scala:527-547)."""
     n = 1 << res
     cell_h_deg = 180.0 / n
     rad_deg_lat = radius_m / M_PER_DEG_LAT
-    lat_lo, lat_hi = qlat - rad_deg_lat, qlat + rad_deg_lat
-    iy0 = max(0, int((max(lat_lo, -90.0) + 90.0) / cell_h_deg))
-    iy1 = min(n - 1, int((min(lat_hi, 89.999999) + 90.0) / cell_h_deg))
-    out = set()
+    iy0 = max(0, int((max(qlat - rad_deg_lat, -90.0) + 90.0) / cell_h_deg))
+    iy1 = min(n - 1, int((min(qlat + rad_deg_lat, 89.999999) + 90.0) / cell_h_deg))
     _, qix, _ = grid.cell_xy(grid.cell_id(qlon, qlat, res))
     # Max longitude half-extent of a spherical disk: asin(sin r / cos phi_q)
     # — the tangent-meridian bound (standard circle-bounding-box formula on
     # the sphere).  Row-independent: every row's intersection arc is
     # centered on qlon and no wider than this, so it is a strict superset
-    # bound per row while staying tight near the poles (the previous
-    # widest-row-edge heuristic degenerated to all-longitudes for any disk
-    # touching a polar row).
+    # bound per row while staying tight near the poles.
     if abs(qlat) + rad_deg_lat >= 90.0:
         rad_deg_lon = 180.0  # disk reaches a pole: all longitudes
     else:
         rad_deg_lon = math.degrees(math.asin(min(1.0, (
             math.sin(math.radians(rad_deg_lat))
             / math.cos(math.radians(qlat))))))
-    span_cells = int(rad_deg_lon / (360.0 / n)) + 1
-    for iy in range(iy0, iy1 + 1):
-        if span_cells * 2 + 1 >= n:
-            for ix in range(n):
-                out.add(grid.from_xy(res, ix, iy))
-        else:
-            for dx in range(-span_cells, span_cells + 1):
-                out.add(grid.from_xy(res, (qix + dx) % n, iy))
-    if lat_lo < -90.0 or lat_hi > 90.0:
-        # disk crosses a pole: the whole polar row set within reach
-        rows = range(0, iy0 + 1) if lat_lo < -90.0 else range(iy1, n)
-        for iy in rows:
-            for ix in range(n):
-                out.add(grid.from_xy(res, ix, iy))
-    return sorted(out)
+    span = int(rad_deg_lon / (360.0 / n)) + 1
+    cols = range(n) if 2 * span + 1 >= n else [(qix + d) % n for d in range(-span, span + 1)]
+    return _window(cols, (iy0, iy1), n)
 
 
-def _cells_bbox_pred(cells, res: int, lon_col: str, lat_col: str):
-    """Coarse lon/lat bbox predicate covering a candidate cell set.
+def _bbox_sql(ixs, iys, n: int, lon_col: str, lat_col: str) -> str:
+    """SQL of a coarse lon/lat bbox predicate covering the grid columns
+    ``ixs`` and the rows ``iys``.
 
     Built driver-side so it pushes down to the parquet scan (lon/lat are
-    stored columns; `__cell` is derived and would not prune files).  The
-    lat range is the cell rows' extent; the lon range is the smallest
-    cyclic arc covering the cell columns (antimeridian wrap becomes an OR
-    of two ranges; >half-circle coverage degenerates to no lon filter).
-    Always a superset of the cells — the broadcast cell join stays exact.
+    stored columns; the cell is derived and would not prune files).  The
+    lat range is the rows' extent; the lon range is `_window`'s arc
+    (antimeridian wrap becomes an OR of two ranges; more than half the
+    columns degenerates to no lon filter).  Always a superset of the cells —
+    the window filter stays exact.
     """
-    n = 1 << res
-    ixs, iys = set(), set()
-    for c in cells:
-        _, ix, iy = grid.cell_xy(c)
-        ixs.add(ix)
-        iys.add(iy)
-    if not iys:
-        return F.lit(False)
-    lat_lo = -90.0 + min(iys) * 180.0 / n
-    lat_hi = -90.0 + (max(iys) + 1) * 180.0 / n
-    pred = F.col(lat_col).between(lat_lo, lat_hi)
-    if len(ixs) <= n // 2:
-        srt = sorted(ixs)
-        # largest cyclic gap between used columns; its complement is the arc
-        gaps = [(srt[(i + 1) % len(srt)] - srt[i]) % n or n
-                for i in range(len(srt))]
-        gi = max(range(len(srt)), key=gaps.__getitem__)
-        start, end = srt[(gi + 1) % len(srt)], srt[gi]
-        lon_lo = -180.0 + start * 360.0 / n
-        lon_hi = -180.0 + (end + 1) * 360.0 / n
-        if start <= end:
-            pred = pred & F.col(lon_col).between(lon_lo, lon_hi)
-        else:  # wraps the antimeridian
-            pred = pred & ((F.col(lon_col) >= lon_lo) | (F.col(lon_col) <= lon_hi))
-    return pred
+    x0, nx, y0, y1 = _window(ixs, iys, n)
+    sql = (f"{lat_col} BETWEEN {-90.0 + y0 * 180.0 / n!r}D"
+           f" AND {-90.0 + (y1 + 1) * 180.0 / n!r}D")
+    if len(set(ixs)) <= n // 2:
+        lo, hi = -180.0 + x0 * 360.0 / n, -180.0 + ((x0 + nx - 1) % n + 1) * 360.0 / n
+        op = "AND" if x0 + nx <= n else "OR"  # OR: the arc wraps the antimeridian
+        sql += f" AND ({lon_col} >= {lo!r}D {op} {lon_col} <= {hi!r}D)"
+    return sql
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _pick_res(total_rows: int, k: int) -> int:
@@ -138,8 +139,8 @@ def knn_join(points: DataFrame, query_points: list[tuple], k: int, *,
              max_iterations: int = 6, n_rows: int | None = None) -> DataFrame:
     """Exact k nearest data points per query point.
 
-    ``query_points``: [(qid, lon, lat)]. Returns one row per (qid, neighbor)
-    with ``dist_m`` and ``knn_rank``.
+    ``query_points``: [(qid, lon, lat)]; qids come back as strings. Returns
+    one row per (qid, neighbor) with ``dist_m`` and ``knn_rank``.
 
     ``n_rows``: total row count used for the density-based initial window;
     pass it when known (parquet footer / layout manifest) to avoid a
@@ -147,9 +148,12 @@ def knn_join(points: DataFrame, query_points: list[tuple], k: int, *,
     """
     spark = points.sparkSession
     if max_iterations < 1:
-        # the fused expansion loop materializes its result template inside
-        # the first iteration — zero iterations has no meaningful answer
+        # the expansion loop builds its result schema inside the first
+        # iteration — zero iterations has no meaningful answer
         raise ValueError("knn_join requires max_iterations >= 1")
+    if not query_points:
+        return knn_brute_force(points, [], k).select(
+            "qid", *points.columns, "dist_m", "knn_rank")
     if res is None:
         res = _pick_res(n_rows if n_rows is not None else points.count(), k)
     return _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
@@ -159,102 +163,84 @@ def knn_join(points: DataFrame, query_points: list[tuple], k: int, *,
 def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
                max_iterations):
     n = 1 << res
+    q_pos = {str(qid): (float(x), float(y)) for qid, x, y in query_points}
+    q_xy = {qid: grid.cell_xy(grid.cell_id(x, y, res))[1:] for qid, (x, y) in q_pos.items()}
+    ix, iy = grid.xy_sql(lon_col, lat_col, n)
 
-    def pruned_scan(cells):
-        """Fact-table scan restricted to `cells`: pushed bbox prefilter on
-        the stored lon/lat columns + the derived row-major cell key for the
-        exact broadcast join.  No cache — each phase reads only its slice."""
-        return (points
-                .where(_cells_bbox_pred(cells, res, lon_col, lat_col))
-                .withColumn("__cell", F.expr(grid.rowmajor_sql(lon_col, lat_col, n))))
-    q_cells = {qid: grid.cell_id(qlon, qlat, res) for qid, qlon, qlat in query_points}
-    q_pos = {qid: (qlon, qlat) for qid, qlon, qlat in query_points}
-    qdf = local_table(spark, [(qid, x, y) for qid, (x, y) in q_pos.items()], _QUERY_SCHEMA)
-    dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
-    w = Window.partitionBy("qid").orderBy("dist_m")
-    wq = Window.partitionBy("qid")
+    def inside(cx, cy, x0, nx, y0, y1):
+        return f"pmod({cx} - {x0}, {n}) < {nx} AND {cy} BETWEEN {y0} AND {y1}"
 
-    def candidate_topk(cell_rows):
-        """Pruned scan restricted to per-qid cell sets → per-qid top-k rows
-        (plus ``__cnt``, the pre-rank candidate count per qid)."""
-        cdf = local_table(spark, [(qid, grid.rowmajor(c)) for qid, c in cell_rows],
-                          "qid string, __cell long")
-        return (pruned_scan({c for _, c in cell_rows})
-                .join(F.broadcast(cdf), "__cell")
-                .join(F.broadcast(qdf), "qid")
-                .withColumn("dist_m", dist)
-                .withColumn("__cnt", F.count("*").over(wq))
-                .withColumn("knn_rank", F.row_number().over(w))
-                .where(F.col("knn_rank") <= k)
-                .drop("__cell"))
+    def topk(wins: dict) -> DataFrame:
+        """One pruned scan -> the top-k rows of every query point in
+        ``wins`` ({qid: window}) among the rows inside its window."""
+        bbox = _bbox_sql(set().union(*(_cols(w, n) for w in wins.values())),
+                         [y for w in wins.values() for y in w[2:]], n, lon_col, lat_col)
+        if len(wins) == 1:
+            (qid, w), = wins.items()
+            scan = points.where(f"{bbox} AND {inside(ix, iy, *w)}")
+            q, qlon, qlat = F.lit(qid), F.lit(q_pos[qid][0]), F.lit(q_pos[qid][1])
+        else:
+            qs = ", ".join(
+                f"named_struct('qid', {_sql_str(qid)}, 'qlon', {q_pos[qid][0]!r}D,"
+                f" 'qlat', {q_pos[qid][1]!r}D, '__x0', {x0}, '__nx', {nx},"
+                f" '__y0', {y0}, '__y1', {y1})" for qid, (x0, nx, y0, y1) in wins.items())
+            in_q = inside("__ix", "__iy", "q.__x0", "q.__nx", "q.__y0", "q.__y1")
+            scan = (points.where(bbox)
+                    .select("*", F.expr(ix).alias("__ix"), F.expr(iy).alias("__iy"))
+                    .select("*", F.expr(f"inline(filter(array({qs}), q -> {in_q}))")))
+            q, qlon, qlat = F.col("qid"), F.col("qlon"), F.col("qlat")
+        dist = haversine_col(F.col(lon_col), F.col(lat_col), qlon, qlat)
+        rank = F.row_number().over(Window.partitionBy(q).orderBy(dist))
+        return (scan.select(q.alias("qid"), *points.columns, dist.alias("dist_m"),
+                            rank.alias("knn_rank"))
+                .where(f"knn_rank <= {k}"))
 
-    # --- phase 1 (fused): expand disks until every query point has >= k
-    # candidates.  ONE driver job per iteration returns the provisional
-    # top-k rows THEMSELVES (<= k rows per pending qid, collected as Arrow
-    # so the exact ones go back into the plan unchanged): "count >= k", the
-    # provisional k-th distance, and the candidate answers are the same
+    # --- expansion: ONE job per round returns the provisional top-k rows
+    # THEMSELVES (<= k rows per pending point, collected as Arrow so the
+    # exact ones go back into the plan unchanged): "k candidates", the
+    # provisional k-th distance and the candidate answers are the same
     # fact, so the reference's separate window-estimate / k-buffer passes
     # collapse into the expansion loop and — when the d_k disk is already
-    # inside the scanned cells, the common case — no second distributed
-    # job runs at all.
-    radius = {qid: 1 for qid in q_cells}
-    scanned: dict = {qid: set() for qid in q_cells}
-    pending = set(q_cells)
+    # inside the window, the common case — no second job runs at all.
+    radius = dict.fromkeys(q_pos, 1)
+    win: dict = {}
     best: dict = {}          # qid -> provisional top-k Arrow rows (latest scan)
-    counts = {qid: 0 for qid in q_cells}
-    template = None
+    pending = list(q_pos)
     for _ in range(max_iterations):
-        grew = False
         for qid in pending:
-            new_cells = set(grid.disk(q_cells[qid], radius[qid])) - scanned[qid]
-            if new_cells:
-                grew = True
-            scanned[qid].update(new_cells)
+            win[qid] = _disk_window(*q_xy[qid], radius[qid], n)
             radius[qid] *= 2
-        prov = candidate_topk([(qid, c) for qid in pending for c in scanned[qid]])
-        if template is None:
-            template = prov.drop("__cnt", "qlon", "qlat")
-        tbl = prov.toArrow()
+        df = topk({qid: win[qid] for qid in pending})
+        tbl = df.toArrow()
         got: dict = {}
         for i, qid in enumerate(tbl.column("qid").to_pylist()):
             got.setdefault(qid, []).append(i)
-        for qid in list(pending):
-            if qid in got:
-                best[qid] = tbl.take(got[qid])
-                counts[qid] = best[qid].column("__cnt")[0].as_py()
-            if counts[qid] >= k or len(scanned[qid]) >= n * n:
-                pending.discard(qid)
-        if not pending or not grew:
+        for qid, idx in got.items():
+            best[qid] = tbl.take(idx)
+        pending = [q for q in pending
+                   if len(got.get(q, ())) < k and win[q][1:] != (n, 0, n - 1)]
+        if not pending:
             break
 
-    # --- phase 2: hole exclusion — a qid whose provisional d_k disk is NOT
-    # fully contained in its scanned cells gets one exact top-k re-rank over
-    # the grown set (only those qids rescan; the rest are already exact).
+    # --- top-up: hole exclusion — a point whose provisional d_k disk is NOT
+    # inside its window gets one exact top-k re-rank over the window that
+    # covers both (only those points rescan; the rest are already exact).
     topup: dict = {}
     for qid, rs in best.items():
         d = max(rs.column("dist_m").to_pylist())
-        qlon, qlat = q_pos[qid]
-        needed = set(cells_covering_radius(qlon, qlat, res, d * 1.0000001))
-        extra = needed - scanned[qid]
-        if extra:
-            topup[qid] = scanned[qid] | extra
+        need = _radius_window(*q_pos[qid], res, d * 1.0000001)
+        grown = _window(_cols(win[qid], n) | _cols(need, n),
+                        (*win[qid][2:], *need[2:]), n)
+        if grown != win[qid]:
+            topup[qid] = grown
 
-    out_cols = template.columns
-    parts = []
-    exact = [rs.select(out_cols) for qid, rs in best.items() if qid not in topup]
-    if exact:
-        parts.append(local_table(spark, pa.concat_tables(exact), template.schema))
+    exact = [rs for qid, rs in best.items() if qid not in topup]
+    parts = [local_table(spark, pa.concat_tables(exact), df.schema)] if exact else []
     if topup:
-        final = candidate_topk([(qid, c) for qid, cells in topup.items()
-                                for c in cells]) \
-            .drop("__cnt", "qlon", "qlat")
-        parts.append(final.select(*out_cols))
+        parts.append(topk(topup))
     if not parts:
-        return template.limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return df.limit(0)
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def knn_brute_force(points: DataFrame, query_points: list[tuple], k: int, *,

@@ -3,6 +3,9 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # smaller local session for tests
+# the engine pre-touches its whole driver heap (8g by default); the tests
+# need far less, and the benchmark runs the engine at 1g
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 

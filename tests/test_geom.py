@@ -138,6 +138,23 @@ class TestPredicates:
         assert loc[4] == algos.IN
 
 
+    def test_point_kernels_on_non_finite_points(self):
+        """An infinite or NaN coordinate lies in no ring and on no line, and
+        the kernels say so without a numpy warning (0 * inf on an
+        axis-parallel edge)."""
+        import warnings
+        inf, nan = np.inf, np.nan
+        x = np.array([inf, -inf, 0.5, 0.5, nan, 0.5, inf, nan])
+        y = np.array([0.5, 0.5, inf, -inf, 0.5, nan, inf, nan])
+        ring = np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]])
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            loc = algos.points_in_ring(x, y, ring)
+            on = algos.points_on_polyline(x, y, ring)
+        assert (loc == algos.OUT).all(), loc
+        assert not on.any(), on
+
+
 class TestMeasures:
     def test_area(self):
         sq = box(0, 0, 2, 2)

@@ -132,20 +132,22 @@ def test_knn_scan_is_pruned_and_exact(spark, sf_dir, tmp_path):
     on the stored lon/lat columns — no full-table cache) and the result
     matches the brute-force oracle."""
     from geomesa_spark.cells import grid
-    from geomesa_spark.operators.knn import (_cells_bbox_pred,
+    from geomesa_spark.operators.knn import (_bbox_sql, _cols, _disk_window,
                                              knn_brute_force, knn_join)
     path = str(tmp_path / "geo_events")
     geo_events(spark, sf_dir).write.parquet(path)
     ev = spark.read.parquet(path)
     qs = [("q0", 46.0, 25.0), ("q1", 45.5, 24.5)]
-    # the candidate scan (phase 1 runs it eagerly and — when the d_k disk
-    # stays inside the scanned cells — returns its rows directly, so the
+    # the candidate scan (the expansion runs it eagerly and — when the d_k
+    # disk stays inside the window — returns its rows directly, so the
     # pushdown is asserted on the scan building-block)
-    cells = grid.disk(grid.cell_id(46.0, 25.0, 6), 1)
-    scan = ev.where(_cells_bbox_pred(set(cells), 6, "lon", "lat"))
+    n = 1 << 6
+    _, qix, qiy = grid.cell_xy(grid.cell_id(46.0, 25.0, 6))
+    w = _disk_window(qix, qiy, 1, n)
+    scan = ev.where(_bbox_sql(_cols(w, n), w[2:], n, "lon", "lat"))
     plan = scan._jdf.queryExecution().executedPlan().toString()
     pushed = [seg[:300] for seg in plan.split("PushedFilters: [")[1:]]
-    assert pushed and any("lat" in seg for seg in pushed)
+    assert pushed and any("lat" in seg and "lon" in seg for seg in pushed)
     got = knn_join(ev, qs, k=7)
     g = {(r.qid, r.event_id) for r in got.collect()}
     w = {(r.qid, r.event_id) for r in knn_brute_force(ev, qs, k=7).collect()}
@@ -319,29 +321,91 @@ def knn_layout(spark, tmp_path_factory):
     return path
 
 
-def test_knn_runs_at_most_four_jobs_with_a_small_scan_plan(
+def test_knn_of_one_point_runs_one_job_without_exchange(
         spark, knn_layout, count_jobs, monkeypatch):
-    """From read_indexed to collect(), kNN of one point runs at most 4
-    Spark jobs, and the plan of each candidate scan it collects stays
-    under 10 kB (a row-major cell key, not a Morton bit-spread tree)."""
+    """From read_indexed to collect(), kNN of one point runs exactly 1
+    Spark job. The executed plan of the candidate scan it collects ranks
+    with a TakeOrderedAndProject and has no Exchange or BroadcastExchange
+    (the query point and its window are literals), and stays under 10 kB
+    (a row-major cell key, not a Morton bit-spread tree)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from geomesa_spark.operators.knn import knn_join
     from geomesa_spark.sources.layout import read_indexed
-    sizes = []
+    plans = []
     to_arrow = DataFrame.toArrow
 
     def recording(self):
-        sizes.append(len(self._jdf.queryExecution().executedPlan().toString()))
-        return to_arrow(self)
+        out = to_arrow(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
     monkeypatch.setattr(DataFrame, "toArrow", recording)
     rows = []
     jobs = count_jobs(lambda: rows.extend(knn_join(
         read_indexed(spark, knn_layout), [("q", 12.5, 40.0)], 10,
         n_rows=6000).collect()))
     assert len(rows) == 10
-    assert jobs <= 4, jobs
-    assert sizes and max(sizes) < 10_000, sizes
+    assert jobs == 1, jobs
+    assert len(plans) == 1, plans
+    assert "TakeOrderedAndProject" in plans[0], plans[0]
+    assert "Exchange" not in plans[0], plans[0]
+    assert len(plans[0]) < 10_000, len(plans[0])
+
+
+@pytest.mark.parametrize("lon, lat, k, res, path", [
+    (179.99, 0.0, 8, None, ""),
+    (-179.99, 10.0, 8, None, ""),
+    (180.0, 45.0, 8, None, ""),
+    (-180.0, -45.0, 8, None, ""),
+    (179.99, 0.0, 8, 7, "topup"),     # the d_k disk crosses the antimeridian
+    (0.0, 90.0, 8, None, "topup"),
+    (0.0, -90.0, 8, None, "topup"),
+    (120.0, 89.5, 8, None, ""),
+    (-60.0, -89.9, 8, 7, "topup"),
+    (-100.0, -30.0, 20, 6, "expand"),  # 3 rounds, then exact in the window
+    (10.0, 20.0, 8, 7, "expand topup"),
+], ids=["am_e", "am_w", "am_180", "am_-180", "am_topup", "np", "sp",
+        "near_np", "near_sp", "expand", "expand_topup"])
+def test_knn_one_point_matches_brute_force(spark, knn_layout, monkeypatch,
+                                           lon, lat, k, res, path):
+    """knn_join of one query point (the literal, exchange-free path) returns
+    exactly the brute-force neighbours and ranks: at the antimeridian, at
+    and near both poles, when the first window holds fewer than k points
+    (expansion rounds run) and when the d_k disk leaves the window (the
+    top-up runs)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from geomesa_spark.operators.knn import knn_brute_force, knn_join
+    from geomesa_spark.sources.layout import read_indexed
+    rounds = []
+    to_arrow = DataFrame.toArrow
+
+    def recording(self):
+        rounds.append(1)
+        return to_arrow(self)
+    monkeypatch.setattr(DataFrame, "toArrow", recording)
+    pts = read_indexed(spark, knn_layout)
+    out = knn_join(pts, [("q", lon, lat)], k, res=res, n_rows=6000)
+    # the top-up is the one lazy scan the result keeps; exact rows are local
+    topup = "parquet" in out._jdf.queryExecution().optimizedPlan().toString().lower()
+    key = ["qid", "event_id", "knn_rank"]
+    got = sorted(tuple(r) for r in out.select(*key).collect())
+    monkeypatch.undo()
+    want = sorted(tuple(r) for r in knn_brute_force(pts, [("q", lon, lat)], k)
+                  .select(*key).collect())
+    assert got == want and len(got) == k
+    assert (len(rounds) > 1) == ("expand" in path), rounds
+    assert topup == ("topup" in path)
+
+
+def test_knn_without_query_points_is_empty(spark, knn_layout):
+    """No query points: an empty result with the usual columns."""
+    from geomesa_spark.operators.knn import knn_join
+    from geomesa_spark.sources.layout import read_indexed
+    pts = read_indexed(spark, knn_layout)
+    out = knn_join(pts, [], 5, n_rows=6000)
+    assert out.columns == ["qid", *pts.columns, "dist_m", "knn_rank"]
+    assert out.count() == 0
 
 
 def test_knn_many_query_points_match_brute_force(spark, knn_layout):

@@ -16,6 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS, BinnedTime
+from geomesa_spark.geom.gh_decompose import _BASE32 as _GH_BASE32
 
 # --- Morton spreading with magic masks (identical constants to cells/zn.py) --
 
@@ -67,9 +68,6 @@ def z2_col(lon: Column, lat: Column, precision: int = 31) -> Column:
     nx = _normalize_col(lon, -180.0, 180.0, precision)
     ny = _normalize_col(lat, -90.0, 90.0, precision)
     return split2_col(nx).bitwiseOR(F.shiftleft(split2_col(ny), 1))
-
-
-_GH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
 GEOHASH_CHARS = 7  # key width of a geohash layout (sources/layout.py)

@@ -1,20 +1,29 @@
 """CRS reprojection as native Catalyst expressions.
 
 Reference parity: QueryPlanner applies an optional result reprojection
-(planning/QueryPlanner.scala:94-98, GeoTools CRS transform); the dominant
-production pair is EPSG:4326 (lon/lat) <-> EPSG:3857 (spherical web
-mercator) — exactly the transform the tile pyramid consumers use.
+(planning/QueryPlanner.scala:94-98 and 297-301, GeoTools CRS transform).
+Every supported CRS is one projection object with ``forward`` (lon/lat
+degrees -> x/y) and ``inverse``, plus an optional ``datum`` shift to
+WGS84: EPSG:4326 (identity), EPSG:3857 (spherical web mercator, the
+pair the tile pyramid consumers use), EPSG:326zz / 327zz (WGS84 UTM, a
+:class:`TransverseMercator`) and the parameterized families of
+``CRS_REGISTRY``.  :func:`_projection` is the one lookup.
 
-Pure arithmetic -> whole-stage codegen, no UDFs; formulas follow the EPSG
-spherical-mercator definition with R = 6378137 (WGS84 semi-major).
+Every formula is written once over the module-global ``F``: on the
+Column path (:func:`reproject`) it builds pure Catalyst arithmetic
+(whole-stage codegen, no UDFs); under :func:`_numpy_funcs` the same code
+runs on numpy arrays (:func:`transform_points_np`, st_transform's
+per-vertex engine), so the two paths cannot drift.
 """
 
 from __future__ import annotations
 
+import contextlib as _contextlib
+import math as _math
+import threading as _threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as _spark_funcs
-
-import threading as _threading
 
 
 class _FuncsProxy:
@@ -30,6 +39,12 @@ class _FuncsProxy:
     def __getattr__(self, name):
         impl = getattr(self._local, "impl", None)
         return getattr(impl if impl is not None else _spark_funcs, name)
+
+    @staticmethod
+    def int_cast(v):
+        """``v.cast("int")`` on a Column; the numpy shim's ``floor``
+        already yields int64, as Catalyst's floor of a double is BIGINT."""
+        return v.cast("int") if isinstance(v, Column) else v
 
 
 F = _FuncsProxy()
@@ -81,156 +96,16 @@ def mercator_sql(lon: str, lat: str) -> tuple[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# Ellipsoidal transverse mercator (UTM zones), Karney/Krüger series —
-# the arbitrary-CRS piece of QueryPlanner.scala:297-301's reprojection.
-# Pure Catalyst arithmetic (sinh/cosh/atan2/ln), whole-stage codegen.
-# ---------------------------------------------------------------------------
-
-WGS84_A = 6378137.0
-WGS84_F = 1.0 / 298.257223563
-UTM_K0 = 0.9996
-_N = WGS84_F / (2.0 - WGS84_F)
-_E = (WGS84_F * (2.0 - WGS84_F)) ** 0.5
-# rectifying radius + Krüger alpha/beta/delta series (3rd order in n —
-# sub-millimeter within UTM zone widths)
-_A_BAR = WGS84_A / (1 + _N) * (1 + _N ** 2 / 4 + _N ** 4 / 64)
-_ALPHA = (_N / 2 - 2 * _N ** 2 / 3 + 5 * _N ** 3 / 16,
-          13 * _N ** 2 / 48 - 3 * _N ** 3 / 5,
-          61 * _N ** 3 / 240)
-_BETA = (_N / 2 - 2 * _N ** 2 / 3 + 37 * _N ** 3 / 96,
-         _N ** 2 / 48 + _N ** 3 / 15,
-         17 * _N ** 3 / 480)
-_DELTA = (2 * _N - 2 * _N ** 2 / 3 - 2 * _N ** 3,
-          7 * _N ** 2 / 3 - 8 * _N ** 3 / 5,
-          56 * _N ** 3 / 15)
-
-
-def _atanh(x: Column) -> Column:
-    return 0.5 * F.log((1.0 + x) / (1.0 - x))
-
-
-def utm_exprs(lon: Column, lat: Column, zone: int,
-              south: bool = False) -> tuple[Column, Column]:
-    """(easting, northing) on WGS84 UTM ``zone`` as native columns."""
-    lam0 = math_radians(zone * 6.0 - 183.0)
-    phi = F.radians(lat)
-    dlam = F.radians(lon) - lam0
-    sphi = F.sin(phi)
-    t = F.sinh(_atanh(sphi) - _E * _atanh(F.lit(_E) * sphi))
-    xi_p = F.atan2(t, F.cos(dlam))
-    eta_p = _atanh(F.sin(dlam) / F.sqrt(1.0 + t * t))
-    xi, eta = xi_p, eta_p
-    for j, a in enumerate(_ALPHA, start=1):
-        xi = xi + F.lit(a) * F.sin(2.0 * j * xi_p) * F.cosh(2.0 * j * eta_p)
-        eta = eta + F.lit(a) * F.cos(2.0 * j * xi_p) * F.sinh(2.0 * j * eta_p)
-    east = F.lit(500_000.0) + F.lit(UTM_K0 * _A_BAR) * eta
-    north = F.lit(10_000_000.0 if south else 0.0) + F.lit(UTM_K0 * _A_BAR) * xi
-    return east, north
-
-
-def utm_inverse_exprs(east: Column, north: Column, zone: int,
-                      south: bool = False) -> tuple[Column, Column]:
-    """(lon, lat) degrees from WGS84 UTM ``zone`` coordinates."""
-    lam0 = math_radians(zone * 6.0 - 183.0)
-    xi = (north - F.lit(10_000_000.0 if south else 0.0)) / F.lit(UTM_K0 * _A_BAR)
-    eta = (east - F.lit(500_000.0)) / F.lit(UTM_K0 * _A_BAR)
-    xi_p, eta_p = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xi_p = xi_p - F.lit(b) * F.sin(2.0 * j * xi) * F.cosh(2.0 * j * eta)
-        eta_p = eta_p - F.lit(b) * F.cos(2.0 * j * xi) * F.sinh(2.0 * j * eta)
-    chi = F.asin(F.sin(xi_p) / F.cosh(eta_p))
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = phi + F.lit(d) * F.sin(2.0 * j * chi)
-    lam = F.atan2(F.sinh(eta_p), F.cos(xi_p))
-    return F.degrees(lam + F.lit(lam0)), F.degrees(phi)
-
-
-def math_radians(deg: float) -> float:
-    import math
-    return math.radians(deg)
-
-
-def _parse_epsg(crs: str | int) -> int:
-    if isinstance(crs, int):
-        return crs
-    s = str(crs).upper().replace("EPSG:", "").strip()
-    return int(s)
-
-
-def reproject(df: DataFrame, src: str | int, dst: str | int,
-              x_col: str = "x", y_col: str = "y",
-              out_x: str = "x2", out_y: str = "y2") -> DataFrame:
-    """General reprojection between supported CRSs: EPSG:4326,
-    EPSG:3857 (spherical mercator), and EPSG:326zz / 327zz (WGS84 UTM
-    north/south).  Unknown codes raise ValueError — the reference
-    delegates others to GeoTools (QueryPlanner.scala:297-301)."""
-    s, d = _parse_epsg(src), _parse_epsg(dst)
-    clash = [c for c in df.columns if c.startswith(("__rp_", "__hd_", "__gs_"))]
-    if clash:
-        raise ValueError(
-            f"reproject: reserved temp columns present: {clash}")
-    tmp_created: set[str] = set()
-    # normalize source to lon/lat
-    if s == 4326:
-        lon, lat = F.col(x_col), F.col(y_col)
-    elif s == 3857:
-        lon, lat = from_mercator_lon(F.col(x_col)), from_mercator_lat(F.col(y_col))
-    elif 32601 <= s <= 32660 or 32701 <= s <= 32760:
-        lon, lat = utm_inverse_exprs(F.col(x_col), F.col(y_col),
-                                     s % 100, south=s >= 32701)
-    elif s in CRS_REGISTRY:
-        proj = CRS_REGISTRY[s]
-        lon, lat = proj.inverse(F.col(x_col), F.col(y_col))
-        src_datum = getattr(proj, "datum", None)
-        if src_datum is not None:
-            # stage the projected->geodetic trees as named columns, then
-            # run the datum shift as further staged projections: datum
-            # math references its inputs many times, and inlining the
-            # inverse-projection tree into each reference would square
-            # the plan (see HelmertDatum docstring)
-            df = (df.withColumn("__rp_lon", lon)
-                    .withColumn("__rp_lat", lat))
-            df = src_datum.apply(df, "__rp_lon", "__rp_lat",
-                                 "__rp_lon", "__rp_lat", to_wgs84=True)
-            lon, lat = F.col("__rp_lon"), F.col("__rp_lat")
-            tmp_created.update(("__rp_lon", "__rp_lat"))
-    else:
-        raise ValueError(f"unsupported source CRS: {src}")
-    # lon/lat to target
-    if d == 4326:
-        ox, oy = lon, lat
-    elif d == 3857:
-        ox, oy = to_mercator_x(lon), to_mercator_y(lat)
-    elif 32601 <= d <= 32660 or 32701 <= d <= 32760:
-        ox, oy = utm_exprs(lon, lat, d % 100, south=d >= 32701)
-    elif d in CRS_REGISTRY:
-        proj = CRS_REGISTRY[d]
-        dst_datum = getattr(proj, "datum", None)
-        if dst_datum is not None:   # WGS84 hub -> target datum, staged
-            df = (df.withColumn("__rp_lon", lon)
-                    .withColumn("__rp_lat", lat))
-            df = dst_datum.apply(df, "__rp_lon", "__rp_lat",
-                                 "__rp_lon", "__rp_lat", to_wgs84=False)
-            lon, lat = F.col("__rp_lon"), F.col("__rp_lat")
-            tmp_created.update(("__rp_lon", "__rp_lat"))
-        ox, oy = proj.forward(lon, lat)
-    else:
-        raise ValueError(f"unsupported target CRS: {dst}")
-    return (df.withColumn(out_x, ox).withColumn(out_y, oy)
-            .drop(*tmp_created))
-
-
-# ---------------------------------------------------------------------------
-# Conic + polar projection families (EPSG methods 9802 / 9822 / 9829) —
-# the remaining arbitrary-CRS surface of QueryPlanner.scala:297-301's
+# Ellipsoidal projection families (EPSG methods 9802 / 9822 / 9829 /
+# 9820 / 9807) — the arbitrary-CRS surface of QueryPlanner.scala:297-301's
 # result reprojection.  All formulas are the published EPSG Guidance Note
 # 7-2 / Snyder forms; constants are computed driver-side in python floats,
 # the per-row math is native Catalyst arithmetic (whole-stage codegen).
 # ---------------------------------------------------------------------------
 
-import math as _math
-
+WGS84_A = 6378137.0
+WGS84_F = 1.0 / 298.257223563
+UTM_K0 = 0.9996
 GRS80_A = 6378137.0
 GRS80_F = 1.0 / 298.257222101
 
@@ -253,6 +128,10 @@ def _q_const(phi: float, e: float) -> float:
     s = _math.sin(phi)
     return (1 - e * e) * (s / (1 - e * e * s * s)
                           - (1 / (2 * e)) * _math.log((1 - e * s) / (1 + e * s)))
+
+
+def _atanh(x: Column) -> Column:
+    return 0.5 * F.log((1.0 + x) / (1.0 - x))
 
 
 def _t_col(phi: Column, e: float) -> Column:
@@ -478,8 +357,9 @@ class LambertAzimuthalEqualArea:
 
 
 def _krueger(a: float, f: float) -> tuple[float, float, tuple, tuple, tuple]:
-    """(e, A_bar, alpha, beta, delta) Krüger series constants for an
-    arbitrary ellipsoid — the WGS84 module constants generalized."""
+    """(e, A_bar, alpha, beta, delta): rectifying radius and Krüger
+    alpha/beta/delta series, 3rd order in n (sub-millimeter within UTM
+    zone widths)."""
     n = f / (2.0 - f)
     e = _math.sqrt(f * (2.0 - f))
     abar = a / (1 + n) * (1 + n ** 2 / 4 + n ** 4 / 64)
@@ -498,9 +378,9 @@ def _krueger(a: float, f: float) -> tuple[float, float, tuple, tuple, tuple]:
 class TransverseMercator:
     """EPSG method 9807 (Transverse Mercator) for ARBITRARY parameters —
     ellipsoid, natural-origin latitude/longitude, scale, false offsets —
-    via the same Krüger series as the UTM fast path (state-plane TM
-    zones, British National Grid, NZTM2000...).  ``utm_exprs`` is the
-    special case (lat0=0, k0=0.9996, zone meridian, WGS84)."""
+    via the Karney/Krüger series (UTM zones, state-plane TM zones,
+    British National Grid, NZTM2000...).  WGS84 UTM is the special case
+    lat0=0, k0=0.9996 on the zone meridian (see ``_projection``)."""
 
     def __init__(self, a: float, f: float, phi0: float, lam0: float,
                  k0: float, fe: float, fn: float, datum=None):
@@ -551,7 +431,71 @@ class TransverseMercator:
         return F.degrees(lam + F.lit(self.lam0)), F.degrees(phi)
 
 
-class HelmertDatum:
+class _Staged:
+    """The Column path's staging callback: ``stage(name, expr)`` adds
+    ``expr`` to ``self.df`` as column ``name`` and returns ``F.col(name)``.
+
+    Datum math references its intermediates several times each; a
+    composed Column tree would square per refinement step (a chained
+    reprojection then hangs the optimizer).  Named intermediate columns
+    keep the tree linear — CollapseProject does not duplicate
+    non-trivial expressions consumed more than once."""
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+
+    def __call__(self, name: str, expr: Column) -> Column:
+        self.df = self.df.withColumn(name, expr)
+        return F.col(name)
+
+
+def _unstaged(name: str, value):
+    """The numpy path's staging callback: arrays are already values."""
+    return value
+
+
+class _Datum:
+    """A datum shift between THIS datum and WGS84, written once as
+    ``_shift(lon, lat, h, stage, to_wgs84) -> (lon, lat, h)`` over ``F``
+    and a staging callback: :meth:`apply` runs it as staged Catalyst
+    projections (temp columns prefixed ``_tmp``), :meth:`shift_np` on
+    numpy arrays."""
+
+    _tmp = ""
+
+    def apply(self, df: DataFrame, lon_col: str, lat_col: str,
+              out_lon: str, out_lat: str, *, to_wgs84: bool) -> DataFrame:
+        """Shift ``(lon_col, lat_col)`` degrees between this datum and
+        WGS84 (direction per ``to_wgs84``), writing ``out_lon/out_lat``.
+        Temporary columns are dropped before returning."""
+        return self._apply(df, lon_col, lat_col, out_lon, out_lat, to_wgs84)
+
+    def _apply(self, df, lon_col, lat_col, out_lon, out_lat, to_wgs84,
+               h_col=None, out_h=None) -> DataFrame:
+        clash = [c for c in df.columns if c.startswith(self._tmp)]
+        if clash:
+            raise ValueError(f"{type(self).__name__}.apply: reserved temp "
+                             f"columns present: {clash}")
+        stage = _Staged(df)
+        h = F.col(h_col) if h_col is not None else F.lit(0.0)
+        lon, lat, h = self._shift(F.col(lon_col), F.col(lat_col), h, stage,
+                                  to_wgs84)
+        out = stage.df.withColumn(out_lon, lon).withColumn(out_lat, lat)
+        if out_h is not None:
+            out = out.withColumn(out_h, h)
+        return out.drop(*[c for c in out.columns if c.startswith(self._tmp)])
+
+    def shift_np(self, lon, lat, *, to_wgs84: bool):
+        """:meth:`apply`'s formula on numpy arrays (h=0, 2D convention)."""
+        import numpy as np
+        with _numpy_funcs():
+            lon, lat, _ = self._shift(np.asarray(lon, np.float64),
+                                      np.asarray(lat, np.float64), 0.0,
+                                      _unstaged, to_wgs84)
+        return lon, lat
+
+
+class HelmertDatum(_Datum):
     """7-parameter Helmert transformation (EPSG method 9606,
     position-vector sign convention) between THIS datum and WGS84, plus
     the datum's own ellipsoid — the missing piece for CRSs whose datum is
@@ -562,15 +506,11 @@ class HelmertDatum:
     geodetic -> geocentric XYZ -> small-angle Helmert -> geodetic on the
     other ellipsoid (Bowring seed + two fixed-point refinements, sub-mm
     for the |h| < 1 km pseudo-heights an ellipsoid change creates).
-
-    Applied as STAGED DataFrame projections (:meth:`apply`), not one
-    composed Column tree: the refinement references its intermediates
-    several times each, and pure Column composition would square the
-    Catalyst tree per step (a chained reprojection then hangs the
-    optimizer).  Named intermediate columns keep the tree linear —
-    CollapseProject does not duplicate non-trivial expressions consumed
-    more than once.  All per-row math is native Catalyst arithmetic.
+    On the Column path every intermediate is a staged column (see
+    :class:`_Staged`); all per-row math is native Catalyst arithmetic.
     """
+
+    _tmp = "__hd_"
 
     def __init__(self, a: float, f: float, tx: float, ty: float, tz: float,
                  rx_as: float, ry_as: float, rz_as: float, s_ppm: float):
@@ -594,10 +534,10 @@ class HelmertDatum:
         source ellipsoid, so a 2D round trip closes only to ~|h| * e^2
         lateral error (a few cm where the ellipsoids differ by ~1 km);
         with heights carried the round trip closes to ~1e-9 deg."""
-        clash = [c for c in df.columns if c.startswith("__hd_")]
-        if clash:
-            raise ValueError(
-                f"HelmertDatum.apply: reserved temp columns present: {clash}")
+        return self._apply(df, lon_col, lat_col, out_lon, out_lat, to_wgs84,
+                           h_col, out_h)
+
+    def _shift(self, lon, lat, h, stage, to_wgs84: bool):
         if to_wgs84:
             (a1, f1), (a2, f2) = (self.a, self.f), (WGS84_A, WGS84_F)
         else:
@@ -607,17 +547,13 @@ class HelmertDatum:
         b2, ep2 = a2 * (1.0 - f2), e2d / (1.0 - e2d)
         rx, ry, rz = self.r
 
-        lam, phi = F.radians(F.col(lon_col)), F.radians(F.col(lat_col))
+        lam, phi = F.radians(lon), F.radians(lat)
         sphi = F.sin(phi)
         nu = F.lit(a1) / F.sqrt(1.0 - F.lit(e2s) * sphi * sphi)
-        h0 = F.col(h_col) if h_col is not None else F.lit(0.0)
         # geodetic -> geocentric on the source ellipsoid
-        df = (df
-              .withColumn("__hd_gx", (nu + h0) * F.cos(phi) * F.cos(lam))
-              .withColumn("__hd_gy", (nu + h0) * F.cos(phi) * F.sin(lam))
-              .withColumn("__hd_gz",
-                          (nu * F.lit(1.0 - e2s) + h0) * sphi))
-        gx, gy, gz = F.col("__hd_gx"), F.col("__hd_gy"), F.col("__hd_gz")
+        gx = stage("__hd_gx", (nu + h) * F.cos(phi) * F.cos(lam))
+        gy = stage("__hd_gy", (nu + h) * F.cos(phi) * F.sin(lam))
+        gz = stage("__hd_gz", (nu * F.lit(1.0 - e2s) + h) * sphi)
         # small-angle Helmert, position-vector convention.  The inverse
         # direction is the EXACT algebraic inverse X = (I-R)(X'-t)/m (to
         # O(r^2) ~ 1e-11 rad on the rotation only) — NOT the
@@ -626,57 +562,42 @@ class HelmertDatum:
         tx, ty, tz = self.t
         m = 1.0 + self.s
         if to_wgs84:
-            df = (df
-                  .withColumn("__hd_x",
-                              F.lit(m) * (gx - F.lit(rz) * gy + F.lit(ry) * gz)
-                              + F.lit(tx))
-                  .withColumn("__hd_y",
-                              F.lit(m) * (F.lit(rz) * gx + gy - F.lit(rx) * gz)
-                              + F.lit(ty))
-                  .withColumn("__hd_z",
-                              F.lit(m) * (-F.lit(ry) * gx + F.lit(rx) * gy + gz)
-                              + F.lit(tz)))
+            x = stage("__hd_x",
+                      F.lit(m) * (gx - F.lit(rz) * gy + F.lit(ry) * gz)
+                      + F.lit(tx))
+            y = stage("__hd_y",
+                      F.lit(m) * (F.lit(rz) * gx + gy - F.lit(rx) * gz)
+                      + F.lit(ty))
+            z = stage("__hd_z",
+                      F.lit(m) * (-F.lit(ry) * gx + F.lit(rx) * gy + gz)
+                      + F.lit(tz))
         else:
-            df = (df
-                  .withColumn("__hd_ux", (gx - F.lit(tx)) / F.lit(m))
-                  .withColumn("__hd_uy", (gy - F.lit(ty)) / F.lit(m))
-                  .withColumn("__hd_uz", (gz - F.lit(tz)) / F.lit(m)))
-            ux, uy, uz = F.col("__hd_ux"), F.col("__hd_uy"), F.col("__hd_uz")
-            df = (df
-                  .withColumn("__hd_x", ux + F.lit(rz) * uy - F.lit(ry) * uz)
-                  .withColumn("__hd_y", -F.lit(rz) * ux + uy + F.lit(rx) * uz)
-                  .withColumn("__hd_z", F.lit(ry) * ux - F.lit(rx) * uy + uz))
-        x, y, z = F.col("__hd_x"), F.col("__hd_y"), F.col("__hd_z")
+            ux = stage("__hd_ux", (gx - F.lit(tx)) / F.lit(m))
+            uy = stage("__hd_uy", (gy - F.lit(ty)) / F.lit(m))
+            uz = stage("__hd_uz", (gz - F.lit(tz)) / F.lit(m))
+            x = stage("__hd_x", ux + F.lit(rz) * uy - F.lit(ry) * uz)
+            y = stage("__hd_y", -F.lit(rz) * ux + uy + F.lit(rx) * uz)
+            z = stage("__hd_z", F.lit(ry) * ux - F.lit(rx) * uy + uz)
         # geocentric -> geodetic on the target ellipsoid: Bowring seed...
-        df = df.withColumn("__hd_p", F.sqrt(x * x + y * y))
-        p = F.col("__hd_p")
+        p = stage("__hd_p", F.sqrt(x * x + y * y))
         th = F.atan2(z * F.lit(a2), p * F.lit(b2))
         s3 = F.pow(F.sin(th), F.lit(3.0))
         c3 = F.pow(F.cos(th), F.lit(3.0))
-        df = df.withColumn("__hd_phi", F.atan2(
-            z + F.lit(ep2 * b2) * s3, p - F.lit(e2d * a2) * c3))
+        phi = stage("__hd_phi", F.atan2(z + F.lit(ep2 * b2) * s3,
+                                        p - F.lit(e2d * a2) * c3))
         # ...+ two fixed-point refinements (each contracts the seed error
         # by ~e^2; the seed alone is only good to ~1e-7 rad at the
         # several-hundred-meter pseudo-heights an ellipsoid change makes)
         for _ in range(2):
-            s = F.sin(F.col("__hd_phi"))
-            df = df.withColumn(
-                "__hd_nu", F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s))
-            nu2 = F.col("__hd_nu")
-            h = p / F.cos(F.col("__hd_phi")) - nu2
-            df = df.withColumn("__hd_phi", F.atan2(
-                z, p * (1.0 - F.lit(e2d) * nu2 / (nu2 + h))))
-        out = (df
-               .withColumn(out_lon, F.degrees(F.atan2(y, x)))
-               .withColumn(out_lat, F.degrees(F.col("__hd_phi"))))
-        if out_h is not None:
-            s = F.sin(F.col("__hd_phi"))
-            nu_f = F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s)
-            out = out.withColumn(
-                out_h, p / F.cos(F.col("__hd_phi")) - nu_f)
-        return out.drop("__hd_gx", "__hd_gy", "__hd_gz", "__hd_ux",
-                        "__hd_uy", "__hd_uz", "__hd_x", "__hd_y",
-                        "__hd_z", "__hd_p", "__hd_phi", "__hd_nu")
+            s = F.sin(phi)
+            nu2 = stage("__hd_nu",
+                        F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s))
+            h2 = p / F.cos(phi) - nu2
+            phi = stage("__hd_phi", F.atan2(
+                z, p * (1.0 - F.lit(e2d) * nu2 / (nu2 + h2))))
+        s = F.sin(phi)
+        h_out = p / F.cos(phi) - F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s)
+        return F.degrees(F.atan2(y, x)), F.degrees(phi), h_out
 
 
 AIRY1830_A = 6377563.396
@@ -696,7 +617,7 @@ OSGB36_DATUM = HelmertDatum(AIRY1830_A, AIRY1830_F,
                             0.1502, 0.2470, 0.8421, -20.4894)
 
 
-class GridShiftDatum:
+class GridShiftDatum(_Datum):
     """NTv2-style grid-shift datum transform (the reference reaches these
     through GeoTools' NTv2 grid handlers when a gridded transform is
     registered for a CRS pair; the grid layout follows the published NTv2
@@ -725,6 +646,8 @@ class GridShiftDatum:
     reordering the file's SE-corner-first scan into row-major-from-south.
     """
 
+    _tmp = "__gs_"
+
     def __init__(self, lat0: float, lon0: float, dlat: float, dlon: float,
                  nlat: int, nlon: int,
                  lat_shift_sec, lon_shift_sec_west):
@@ -737,102 +660,45 @@ class GridShiftDatum:
         self.lat_sec = [float(v) for v in lat_shift_sec]
         self.lon_sec_west = [float(v) for v in lon_shift_sec_west]
 
-    # -- Catalyst path ----------------------------------------------------
-
-    def _stage_shift(self, df: DataFrame, lon_c: str, lat_c: str,
-                     tag: str) -> DataFrame:
-        """Stage __gs_{tag}_dlon/__gs_{tag}_dlat (DEGREES, positive east/
-        north) = bilinear node blend at (lon_c, lat_c).  Staged columns
-        keep the tree linear, same reasoning as HelmertDatum.apply."""
+    def _blend(self, lon, lat, stage, tag: str):
+        """(dlon, dlat) DEGREES, positive east/north: the bilinear blend
+        of the four nodes around (lon, lat), zero outside the grid."""
         nlat, nlon = self.nlat, self.nlon
-        df = (df
-              .withColumn(f"__gs_{tag}_gx",
-                          (F.col(lon_c) - F.lit(self.lon0)) / F.lit(self.dlon))
-              .withColumn(f"__gs_{tag}_gy",
-                          (F.col(lat_c) - F.lit(self.lat0)) / F.lit(self.dlat)))
-        gx, gy = F.col(f"__gs_{tag}_gx"), F.col(f"__gs_{tag}_gy")
-        df = (df
-              .withColumn(f"__gs_{tag}_ix",
-                          F.least(F.greatest(F.floor(gx), F.lit(0)),
-                                  F.lit(nlon - 2)).cast("int"))
-              .withColumn(f"__gs_{tag}_iy",
-                          F.least(F.greatest(F.floor(gy), F.lit(0)),
-                                  F.lit(nlat - 2)).cast("int")))
-        ix, iy = F.col(f"__gs_{tag}_ix"), F.col(f"__gs_{tag}_iy")
+        gx = stage(f"__gs_{tag}_gx",
+                   (lon - F.lit(self.lon0)) / F.lit(self.dlon))
+        gy = stage(f"__gs_{tag}_gy",
+                   (lat - F.lit(self.lat0)) / F.lit(self.dlat))
+        ix = stage(f"__gs_{tag}_ix", F.int_cast(
+            F.least(F.greatest(F.floor(gx), F.lit(0)), F.lit(nlon - 2))))
+        iy = stage(f"__gs_{tag}_iy", F.int_cast(
+            F.least(F.greatest(F.floor(gy), F.lit(0)), F.lit(nlat - 2))))
         fx, fy = gx - ix, gy - iy
         inside = ((gx >= 0) & (gx <= F.lit(float(nlon - 1)))
                   & (gy >= 0) & (gy <= F.lit(float(nlat - 1))))
         base = iy * F.lit(nlon) + ix + F.lit(1)   # element_at is 1-based
 
-        def blend(arr: Column, sign: float) -> Column:
+        def blend(arr, sign: float):
             v = (F.element_at(arr, base) * (1 - fx) * (1 - fy)
                  + F.element_at(arr, base + 1) * fx * (1 - fy)
                  + F.element_at(arr, base + nlon) * (1 - fx) * fy
                  + F.element_at(arr, base + nlon + 1) * fx * fy)
             return F.when(inside, v * F.lit(sign / 3600.0)).otherwise(0.0)
 
-        return (df
-                .withColumn(f"__gs_{tag}_dlat", blend(F.lit(self.lat_sec), 1.0))
-                .withColumn(f"__gs_{tag}_dlon",
-                            blend(F.lit(self.lon_sec_west), -1.0)))
+        dlat = stage(f"__gs_{tag}_dlat", blend(F.lit(self.lat_sec), 1.0))
+        dlon = stage(f"__gs_{tag}_dlon",
+                     blend(F.lit(self.lon_sec_west), -1.0))
+        return dlon, dlat
 
-    def apply(self, df: DataFrame, lon_col: str, lat_col: str,
-              out_lon: str, out_lat: str, *, to_wgs84: bool) -> DataFrame:
-        clash = [c for c in df.columns if c.startswith("__gs_")]
-        if clash:
-            raise ValueError(
-                f"GridShiftDatum.apply: reserved temp columns present: {clash}")
+    def _shift(self, lon, lat, h, stage, to_wgs84: bool):
         if to_wgs84:
-            df = self._stage_shift(df, lon_col, lat_col, "f")
-            out = (df.withColumn(out_lon, F.col(lon_col) + F.col("__gs_f_dlon"))
-                     .withColumn(out_lat, F.col(lat_col) + F.col("__gs_f_dlat")))
-        else:
-            # fixed point: est_{k+1} = wgs84 - shift(est_k), est_0 = wgs84
-            df = self._stage_shift(df, lon_col, lat_col, "i0")
-            df = (df.withColumn("__gs_e_lon",
-                                F.col(lon_col) - F.col("__gs_i0_dlon"))
-                    .withColumn("__gs_e_lat",
-                                F.col(lat_col) - F.col("__gs_i0_dlat")))
-            df = self._stage_shift(df, "__gs_e_lon", "__gs_e_lat", "i1")
-            out = (df.withColumn(out_lon, F.col(lon_col) - F.col("__gs_i1_dlon"))
-                     .withColumn(out_lat, F.col(lat_col) - F.col("__gs_i1_dlat")))
-        return out.drop(*[c for c in out.columns if c.startswith("__gs_")])
-
-    # -- numpy twin (st_transform / transform_points_np path) -------------
-
-    def shift_np(self, lon, lat, *, to_wgs84: bool):
-        import numpy as np
-        lon = np.asarray(lon, dtype=np.float64)
-        lat = np.asarray(lat, dtype=np.float64)
-        glat = np.asarray(self.lat_sec).reshape(self.nlat, self.nlon)
-        glon = np.asarray(self.lon_sec_west).reshape(self.nlat, self.nlon)
-
-        def interp(lo, la):
-            gx = (lo - self.lon0) / self.dlon
-            gy = (la - self.lat0) / self.dlat
-            ix = np.clip(np.floor(gx).astype(np.int64), 0, self.nlon - 2)
-            iy = np.clip(np.floor(gy).astype(np.int64), 0, self.nlat - 2)
-            fx, fy = gx - ix, gy - iy
-            inside = ((gx >= 0) & (gx <= self.nlon - 1)
-                      & (gy >= 0) & (gy <= self.nlat - 1))
-
-            def b(g, sign):
-                v = (g[iy, ix] * (1 - fx) * (1 - fy)
-                     + g[iy, ix + 1] * fx * (1 - fy)
-                     + g[iy + 1, ix] * (1 - fx) * fy
-                     + g[iy + 1, ix + 1] * fx * fy)
-                return np.where(inside, v * (sign / 3600.0), 0.0)
-
-            return b(glat, 1.0), b(glon, -1.0)
-
-        if to_wgs84:
-            dla, dlo = interp(lon, lat)
-            return lon + dlo, lat + dla
-        est_lon, est_lat = lon, lat
-        for _ in range(2):
-            dla, dlo = interp(est_lon, est_lat)
-            est_lon, est_lat = lon - dlo, lat - dla
-        return est_lon, est_lat
+            dlon, dlat = self._blend(lon, lat, stage, "f")
+            return lon + dlon, lat + dlat, h
+        # fixed point: est_{k+1} = wgs84 - shift(est_k), est_0 = wgs84
+        dlon, dlat = self._blend(lon, lat, stage, "i0")
+        e_lon = stage("__gs_e_lon", lon - dlon)
+        e_lat = stage("__gs_e_lat", lat - dlat)
+        dlon, dlat = self._blend(e_lon, e_lat, stage, "i1")
+        return lon - dlon, lat - dlat, h
 
 
 # parameterized CRS registry (published EPSG definitions); extensible via
@@ -870,15 +736,111 @@ def register_crs(epsg: int, projection) -> None:
     CRS_REGISTRY[int(epsg)] = projection
 
 
+class _LonLat:
+    """EPSG:4326: lon/lat degrees are the coordinates."""
+
+    def forward(self, lon, lat):
+        return lon, lat
+
+    inverse = forward
+
+
+class _WebMercator:
+    """EPSG:3857: spherical mercator on the WGS84 semi-major axis."""
+
+    def forward(self, lon, lat):
+        return to_mercator_x(lon), to_mercator_y(lat)
+
+    def inverse(self, x, y):
+        return from_mercator_lon(x), from_mercator_lat(y)
+
+
+def _parse_epsg(crs: str | int) -> int:
+    if isinstance(crs, int):
+        return crs
+    s = str(crs).upper().replace("EPSG:", "").strip()
+    return int(s)
+
+
+def _projection(crs: str | int):
+    """The projection object of a supported CRS: EPSG:4326, EPSG:3857,
+    EPSG:326zz / 327zz (WGS84 UTM north / south) or a ``CRS_REGISTRY``
+    code.  Unknown codes raise ValueError — the reference delegates
+    others to GeoTools (QueryPlanner.scala:297-301)."""
+    code = _parse_epsg(crs)
+    if code == 4326:
+        return _LonLat()
+    if code == 3857:
+        return _WebMercator()
+    if 32601 <= code <= 32660 or 32701 <= code <= 32760:
+        return TransverseMercator(WGS84_A, WGS84_F, 0.0,
+                                  (code % 100) * 6.0 - 183.0, UTM_K0,
+                                  500_000.0,
+                                  10_000_000.0 if code >= 32701 else 0.0)
+    if code in CRS_REGISTRY:
+        return CRS_REGISTRY[code]
+    raise ValueError(f"unsupported CRS: {crs}")
+
+
+def _transform(src, dst, x, y, shift):
+    """``src`` -> ``dst`` through lon/lat on WGS84: ``src.inverse``, each
+    side's datum shift (``shift(datum, lon, lat, to_wgs84)``), then
+    ``dst.forward``."""
+    lon, lat = src.inverse(x, y)
+    for proj, to_wgs84 in ((src, True), (dst, False)):
+        datum = getattr(proj, "datum", None)
+        if datum is not None:
+            lon, lat = shift(datum, lon, lat, to_wgs84)
+    return dst.forward(lon, lat)
+
+
+def reproject(df: DataFrame, src: str | int, dst: str | int,
+              x_col: str = "x", y_col: str = "y",
+              out_x: str = "x2", out_y: str = "y2") -> DataFrame:
+    """Reproject ``(x_col, y_col)`` from ``src`` to ``dst`` (any two
+    CRSs :func:`_projection` supports) into ``(out_x, out_y)``."""
+    s, d = _projection(src), _projection(dst)
+    clash = [c for c in df.columns if c.startswith(("__rp_", "__hd_", "__gs_"))]
+    if clash:
+        raise ValueError(
+            f"reproject: reserved temp columns present: {clash}")
+
+    def shift(datum, lon, lat, to_wgs84):
+        # stage the geodetic trees as named columns before the (staged)
+        # datum shift: inlining the inverse-projection tree into each of
+        # the datum math's references would square the plan (_Staged)
+        nonlocal df
+        df = df.withColumn("__rp_lon", lon).withColumn("__rp_lat", lat)
+        df = datum.apply(df, "__rp_lon", "__rp_lat", "__rp_lon", "__rp_lat",
+                         to_wgs84=to_wgs84)
+        return F.col("__rp_lon"), F.col("__rp_lat")
+
+    ox, oy = _transform(s, d, F.col(x_col), F.col(y_col), shift)
+    return (df.withColumn(out_x, ox).withColumn(out_y, oy)
+            .drop("__rp_lon", "__rp_lat"))
+
+
+def transform_points_np(x, y, src: str | int, dst: str | int):
+    """:func:`reproject` on numpy arrays (no SparkSession) — the
+    per-vertex engine behind st_transform: same lookup, same formulas."""
+    import numpy as np
+    s, d = _projection(src), _projection(dst)
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    # numpy evaluates BOTH branches of a when() eagerly (Catalyst doesn't):
+    # guarded divides (e.g. LAEA's rho=0 origin) emit spurious warnings
+    # before np.where masks them
+    with _numpy_funcs(), np.errstate(divide="ignore", invalid="ignore"):
+        ox, oy = _transform(s, d, x, y, lambda datum, lon, lat, to_wgs84:
+                            datum.shift_np(lon, lat, to_wgs84=to_wgs84))
+    return np.asarray(ox, np.float64), np.asarray(oy, np.float64)
+
+
 # ---------------------------------------------------------------------------
-# numpy twin of the dispatch — st_transform's per-vertex engine
+# numpy shim: every formula above references the module-global ``F`` only
+# through names this shim also provides, so the same code runs on numpy
+# arrays (parity is pinned by tests comparing both paths).
 # ---------------------------------------------------------------------------
-# Every projection above references the module-global ``F`` only through
-# functions numpy also provides (plus lit/when); swapping F for this shim
-# evaluates the SAME formula code on numpy arrays — zero formula
-# duplication between the Column path (reproject) and the per-vertex path
-# (st_transform), so the two cannot drift.  Parity is additionally pinned
-# by tests comparing both paths on the same points.
 
 class _NpWhen:
     """np.where chain mimicking F.when(...).when(...).otherwise(...):
@@ -915,13 +877,13 @@ def _np_math() -> "_NpMath":
     m.atan2 = np.arctan2
     m.atan = np.arctan
     m.asin = np.arcsin
+    m.least, m.greatest = np.minimum, np.maximum
+    m.floor = lambda v: np.floor(v).astype(np.int64)   # Catalyst: BIGINT
+    m.element_at = lambda arr, i: np.asarray(arr)[i - 1]   # 1-based
     for fn in ("sin", "cos", "tan", "sqrt", "log", "exp", "sinh", "cosh",
                "radians", "degrees"):
         setattr(m, fn, getattr(np, fn))
     return m
-
-
-import contextlib as _contextlib
 
 
 @_contextlib.contextmanager
@@ -933,93 +895,3 @@ def _numpy_funcs():
         yield
     finally:
         _FuncsProxy._local.impl = prev
-
-
-def _helmert_np(dt: HelmertDatum, lon, lat, *, to_wgs84: bool):
-    """HelmertDatum.apply's math on numpy arrays (h=0, 2D convention —
-    same formulas, same algebraic inverse; see apply's docstring)."""
-    import numpy as np
-    if to_wgs84:
-        (a1, f1), (a2, f2) = (dt.a, dt.f), (WGS84_A, WGS84_F)
-    else:
-        (a1, f1), (a2, f2) = (WGS84_A, WGS84_F), (dt.a, dt.f)
-    e2s, e2d = f1 * (2.0 - f1), f2 * (2.0 - f2)
-    b2, ep2 = a2 * (1.0 - f2), (f2 * (2.0 - f2)) / (1.0 - f2) ** 2
-    rx, ry, rz = dt.r
-    tx, ty, tz = dt.t
-    m = 1.0 + dt.s
-    lam, phi = np.radians(np.asarray(lon, np.float64)), \
-        np.radians(np.asarray(lat, np.float64))
-    sphi = np.sin(phi)
-    nu = a1 / np.sqrt(1.0 - e2s * sphi * sphi)
-    gx = nu * np.cos(phi) * np.cos(lam)
-    gy = nu * np.cos(phi) * np.sin(lam)
-    gz = nu * (1.0 - e2s) * sphi
-    if to_wgs84:
-        x = m * (gx - rz * gy + ry * gz) + tx
-        y = m * (rz * gx + gy - rx * gz) + ty
-        z = m * (-ry * gx + rx * gy + gz) + tz
-    else:
-        ux, uy, uz = (gx - tx) / m, (gy - ty) / m, (gz - tz) / m
-        x = ux + rz * uy - ry * uz
-        y = -rz * ux + uy + rx * uz
-        z = ry * ux - rx * uy + uz
-    p = np.sqrt(x * x + y * y)
-    th = np.arctan2(z * a2, p * b2)
-    phi2 = np.arctan2(z + ep2 * b2 * np.sin(th) ** 3,
-                      p - e2d * a2 * np.cos(th) ** 3)
-    for _ in range(2):
-        s = np.sin(phi2)
-        nu2 = a2 / np.sqrt(1.0 - e2d * s * s)
-        h = p / np.cos(phi2) - nu2
-        phi2 = np.arctan2(z, p * (1.0 - e2d * nu2 / (nu2 + h)))
-    return np.degrees(np.arctan2(y, x)), np.degrees(phi2)
-
-
-def _datum_np(datum, lon, lat, *, to_wgs84: bool):
-    """Numpy-side datum dispatch: grid-shift datums carry their own numpy
-    twin; Helmert datums share _helmert_np."""
-    if hasattr(datum, "shift_np"):
-        return datum.shift_np(lon, lat, to_wgs84=to_wgs84)
-    return _helmert_np(datum, lon, lat, to_wgs84=to_wgs84)
-
-
-def transform_points_np(x, y, src: str | int, dst: str | int):
-    """reproject()'s CRS dispatch evaluated on numpy arrays (no
-    SparkSession) — the per-vertex engine behind st_transform.  Same
-    supported-CRS surface; unknown codes raise ValueError."""
-    import numpy as np
-    s, d = _parse_epsg(src), _parse_epsg(dst)
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    # numpy evaluates BOTH branches of a when() eagerly (Catalyst doesn't):
-    # guarded divides (e.g. LAEA's rho=0 origin) emit spurious warnings
-    # before np.where masks them
-    with _numpy_funcs(), np.errstate(divide="ignore", invalid="ignore"):
-        if s == 4326:
-            lon, lat = x, y
-        elif s == 3857:
-            lon, lat = from_mercator_lon(x), from_mercator_lat(y)
-        elif 32601 <= s <= 32660 or 32701 <= s <= 32760:
-            lon, lat = utm_inverse_exprs(x, y, s % 100, south=s >= 32701)
-        elif s in CRS_REGISTRY:
-            proj = CRS_REGISTRY[s]
-            lon, lat = proj.inverse(x, y)
-            if getattr(proj, "datum", None) is not None:
-                lon, lat = _datum_np(proj.datum, lon, lat, to_wgs84=True)
-        else:
-            raise ValueError(f"unsupported source CRS: {src}")
-        if d == 4326:
-            ox, oy = lon, lat
-        elif d == 3857:
-            ox, oy = to_mercator_x(lon), to_mercator_y(lat)
-        elif 32601 <= d <= 32660 or 32701 <= d <= 32760:
-            ox, oy = utm_exprs(lon, lat, d % 100, south=d >= 32701)
-        elif d in CRS_REGISTRY:
-            proj = CRS_REGISTRY[d]
-            if getattr(proj, "datum", None) is not None:
-                lon, lat = _datum_np(proj.datum, lon, lat, to_wgs84=False)
-            ox, oy = proj.forward(lon, lat)
-        else:
-            raise ValueError(f"unsupported target CRS: {dst}")
-    return np.asarray(ox, np.float64), np.asarray(oy, np.float64)

@@ -7,42 +7,15 @@ Precision is in bits, matching the reference's API.
 
 from __future__ import annotations
 
-_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+from geomesa_spark.geom.gh_decompose import (_BASE32, cell_bounds, cell_hash,
+                                             encode_cell)
+
 _DECODE = {c: i for i, c in enumerate(_BASE32)}
 
 
 def encode(lon: float, lat: float, precision_bits: int) -> str:
     """Geohash string of ceil(precision/5) chars covering `precision_bits` bits."""
-    lo_x, hi_x, lo_y, hi_y = -180.0, 180.0, -90.0, 90.0
-    bits = []
-    even = True  # lon first
-    while len(bits) < precision_bits:
-        if even:
-            mid = (lo_x + hi_x) / 2
-            if lon >= mid:
-                bits.append(1)
-                lo_x = mid
-            else:
-                bits.append(0)
-                hi_x = mid
-        else:
-            mid = (lo_y + hi_y) / 2
-            if lat >= mid:
-                bits.append(1)
-                lo_y = mid
-            else:
-                bits.append(0)
-                hi_y = mid
-        even = not even
-    while len(bits) % 5:
-        bits.append(0)
-    out = []
-    for i in range(0, len(bits), 5):
-        v = 0
-        for b in bits[i:i + 5]:
-            v = (v << 1) | b
-        out.append(_BASE32[v])
-    return "".join(out)
+    return cell_hash(*encode_cell(lon, lat, precision_bits))
 
 
 def decode_bounds(gh: str,
@@ -55,27 +28,13 @@ def decode_bounds(gh: str,
     not the 30-bit one): only the first `precision_bits` bits of the
     string are used; bits past the string (absent in the BitSet) read as
     0, matching the reference's BitSet semantics."""
-    lo_x, hi_x, lo_y, hi_y = -180.0, 180.0, -90.0, 90.0
     n = 5 * len(gh) if precision_bits is None else precision_bits
-    even = True
-    g = gh.lower()
-    for i in range(n):
-        c = g[i // 5] if i // 5 < len(g) else "0"
-        bit = (_DECODE[c] >> (4 - i % 5)) & 1
-        if even:
-            mid = (lo_x + hi_x) / 2
-            if bit:
-                lo_x = mid
-            else:
-                hi_x = mid
-        else:
-            mid = (lo_y + hi_y) / 2
-            if bit:
-                lo_y = mid
-            else:
-                hi_y = mid
-        even = not even
-    return lo_x, lo_y, hi_x, hi_y
+    chars = gh.lower()[:(n + 4) // 5]
+    bits = 0
+    for c in chars:
+        bits = (bits << 5) | _DECODE[c]
+    shift = 5 * len(chars) - n
+    return cell_bounds(bits >> shift if shift >= 0 else bits << -shift, n)
 
 
 def decode(gh: str, precision_bits: int | None = None) -> tuple[float, float]:

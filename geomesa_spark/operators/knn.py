@@ -135,8 +135,8 @@ def _pick_res(total_rows: int, k: int) -> int:
 
 def knn_join(points: DataFrame, query_points: list[tuple], k: int, *,
              lon_col: str = "lon", lat_col: str = "lat",
-             res: int | None = None, id_cols: list[str] | None = None,
-             max_iterations: int = 6, n_rows: int | None = None) -> DataFrame:
+             res: int | None = None, max_iterations: int = 6,
+             n_rows: int | None = None) -> DataFrame:
     """Exact k nearest data points per query point.
 
     ``query_points``: [(qid, lon, lat)]; qids come back as strings. Returns

@@ -71,13 +71,21 @@ class SpatialQuery:
     allow_full_scan: bool = False
     guard: Optional[object] = None             # plans.guards.GraduatedQueryGuard
 
+    def _shape(self) -> tuple[Optional[model.Geometry], Optional[tuple]]:
+        """(geometry, bbox): the parsed INTERSECTS geometry, and the bbox
+        the query bounds itself by — ``bbox`` when given, else the
+        geometry's bounds; None for what the query does not set."""
+        geom = _as_geometry(self.geometry) if self.geometry is not None else None
+        if self.bbox is not None:
+            return geom, tuple(self.bbox)
+        return geom, (geom.bounds if geom is not None else None)
+
     def predicate(self, df: DataFrame) -> Optional[Column]:
         lon, lat = F.col(self.lon_col), F.col(self.lat_col)
         preds: list[Column] = []
         boxes: list[tuple] = []
 
-        geom = _as_geometry(self.geometry) if self.geometry is not None else None
-        bbox = tuple(self.bbox) if self.bbox is not None else (geom.bounds if geom is not None else None)
+        geom, bbox = self._shape()
 
         guards.check_guards(bbox=bbox, interval=self.interval,
                             allow_full_scan=self.allow_full_scan or self.where is not None)
@@ -148,10 +156,9 @@ class SpatialQuery:
         """(bboxes, intervals) for the graduated guard: whole world when
         spatially unbounded; interval endpoints parsed to datetimes."""
         import datetime as dt
-        geom = _as_geometry(self.geometry) if self.geometry is not None else None
-        bbox = (tuple(self.bbox) if self.bbox is not None
-                else (geom.bounds if geom is not None else (-180.0, -90.0,
-                                                            180.0, 90.0)))
+        bbox = self._shape()[1]
+        if bbox is None:
+            bbox = (-180.0, -90.0, 180.0, 90.0)
         intervals = []
         if self.interval is not None:
             lo, hi = self.interval
@@ -171,9 +178,7 @@ class SpatialQuery:
         written as simple `col = value` / `col IN (...)` conjuncts."""
         from geomesa_spark.plans import decider
 
-        geom = _as_geometry(self.geometry) if self.geometry is not None else None
-        bbox = (tuple(self.bbox) if self.bbox is not None
-                else (geom.bounds if geom is not None else None))
+        bbox = self._shape()[1]
         attrs = []
         if self.where is not None:
             import re

@@ -31,12 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from geomesa_spark.functions.cell_functions import salt_col, time_bin_col, z2_col
+from geomesa_spark.functions.cell_functions import (geohash_col, s2_col,
+                                                    salt_col, time_bin_col,
+                                                    z2_col)
 
 MANIFEST = "_manifest.json"
 
-# cell-curve kind -> the key column it writes
-_CELL_COLUMNS = {"z2": "z2", "s2": "s2", "geohash": "gh"}
+# cell-curve kind -> (the key column it writes, its expression)
+_CELL_KEYS = {"z2": ("z2", z2_col), "s2": ("s2", s2_col),
+              "geohash": ("gh", geohash_col)}
 
 
 def write_indexed(df: DataFrame, path: str, *, period: str = "week",
@@ -46,50 +49,29 @@ def write_indexed(df: DataFrame, path: str, *, period: str = "week",
                   fmt: str = "parquet", cell: str = "z2") -> None:
     """Write a spatio-temporally indexed table.
 
-    Adds the cell-curve column (``z2`` native Morton, or ``s2`` leaf ids
-    via the Arrow-batched Hilbert kernel — the S2IndexKeySpace layout),
-    plus ``salt`` when requested; partitions directories by ``time_bin``
-    and range-partitions/sorts files by the cell key — cell-id range
-    partitioning with salted skew handling per the north rule.
+    Adds the index columns (:func:`_index_columns`: the cell-curve key,
+    ``time_bin``, ``salt`` when requested); partitions directories by
+    ``time_bin`` and range-partitions/sorts files by the cell key —
+    cell-id range partitioning with salted skew handling per the north
+    rule.
     """
     spark = df.sparkSession
-    if cell == "z2":
-        out = df.withColumn("z2", z2_col(F.col(lon_col), F.col(lat_col)))
-    elif cell == "s2":
-        from geomesa_spark.functions.cell_functions import s2_col
-        out = df.withColumn("s2", s2_col(F.col(lon_col), F.col(lat_col)))
-    elif cell == "geohash":
-        # geohash-STRING key: prefix predicates (StartsWith) push to the
-        # parquet scan and the lexicographic sort equals spatial locality —
-        # the reference's %offset,length#gh index-schema layout
-        from geomesa_spark.functions.cell_functions import geohash_col
-        out = df.withColumn("gh", geohash_col(F.col(lon_col), F.col(lat_col)))
-    else:
-        raise ValueError(
-            f"unknown cell curve: {cell!r} (use 'z2', 's2' or 'geohash')")
-    if ts_col in df.columns:
-        out = out.withColumn("time_bin", time_bin_col(F.col(ts_col), period))
-    else:
-        out = out.withColumn("time_bin", F.lit(0))
-    if n_salts > 0:
-        key = F.col(id_col) if id_col else F.col(lon_col)
-        out = out.withColumn("salt", salt_col(key, n_salts))
-
     n = _partitions(spark, target_partitions)
-    cell_name = _CELL_COLUMNS[cell]
-    range_cols = ["time_bin", cell_name] if ts_col in df.columns else [cell_name]
-    out = out.repartitionByRange(n, *[F.col(c) for c in range_cols]) \
-             .sortWithinPartitions(*range_cols)
-    out.write.mode("overwrite").partitionBy("time_bin").format(fmt).save(path)
-
     manifest = {
         "period": period, "lon_col": lon_col, "lat_col": lat_col,
         "ts_col": ts_col, "n_salts": n_salts, "format": fmt, "cell": cell,
         # record WHICH key salted the rows so appends stay consistent
         "salt_key": _salt_key(id_col, lon_col, n_salts),
         "target_partitions": n, "columns": df.columns,
-        "schema": _layout_schema(out),
     }
+    out = _index_columns(df, manifest)
+    cell_name = _CELL_KEYS[cell][0]
+    range_cols = ["time_bin", cell_name] if ts_col in df.columns else [cell_name]
+    out = out.repartitionByRange(n, *[F.col(c) for c in range_cols]) \
+             .sortWithinPartitions(*range_cols)
+    out.write.mode("overwrite").partitionBy("time_bin").format(fmt).save(path)
+
+    manifest["schema"] = _layout_schema(out)
     _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
 
 
@@ -155,24 +137,10 @@ def append_indexed(df: DataFrame, path: str) -> None:
         raise ValueError(
             f"schema evolution is add-only: existing columns {missing} "
             "are absent from the appended frame")
-    out = df.withColumn(_CELL_COLUMNS[manifest.get("cell", "z2")],
-                        _cell_expr(manifest, df))
-    if manifest["ts_col"] in df.columns:
-        out = out.withColumn(
-            "time_bin", time_bin_col(F.col(manifest["ts_col"]),
-                                     manifest["period"]))
-    else:
-        out = out.withColumn("time_bin", F.lit(0))
-    if manifest.get("n_salts", 0) > 0:
-        # salt by the SAME key the original write used (id_col when one
-        # was configured) — older manifests without salt_key fall back to
-        # the historical lon_col behavior
-        key = manifest.get("salt_key") or manifest["lon_col"]
-        out = out.withColumn("salt", salt_col(F.col(key),
-                                              manifest["n_salts"]))
+    out = _index_columns(df, manifest)
     added = [c for c in df.columns if c not in old_cols]
     out = out.select(*file_cols, *added, "time_bin") \
-        .sortWithinPartitions(_CELL_COLUMNS[manifest.get("cell", "z2")])
+        .sortWithinPartitions(_CELL_KEYS[manifest.get("cell", "z2")][0])
     out.write.mode("append").partitionBy("time_bin") \
         .format(manifest.get("format", "parquet")).save(path)
     manifest["columns"] = old_cols + added
@@ -234,16 +202,31 @@ def _layout_schema(out: DataFrame) -> dict:
     return schema
 
 
-def _cell_expr(manifest: dict, df: DataFrame):
-    lon, lat = F.col(manifest["lon_col"]), F.col(manifest["lat_col"])
-    kind = manifest.get("cell", "z2")
-    if kind == "s2":
-        from geomesa_spark.functions.cell_functions import s2_col
-        return s2_col(lon, lat)
-    if kind == "geohash":
-        from geomesa_spark.functions.cell_functions import geohash_col
-        return geohash_col(lon, lat)
-    return z2_col(lon, lat)
+def _index_columns(df: DataFrame, manifest: dict) -> DataFrame:
+    """``df`` plus the layout's index columns, per the manifest fields:
+    the cell-curve key (``z2`` native Morton, ``s2`` leaf ids via the
+    Arrow-batched Hilbert kernel — the S2IndexKeySpace layout — or a
+    ``gh`` geohash string, whose prefix predicates push to the scan and
+    whose lexicographic sort is spatial locality, the reference's
+    %offset,length#gh index schema), ``time_bin``, and ``salt`` when
+    salted (by ``salt_key``; older manifests without it salt by
+    ``lon_col``)."""
+    cell = manifest.get("cell", "z2")
+    if cell not in _CELL_KEYS:
+        raise ValueError(
+            f"unknown cell curve: {cell!r} (use 'z2', 's2' or 'geohash')")
+    name, key = _CELL_KEYS[cell]
+    out = df.withColumn(name, key(F.col(manifest["lon_col"]),
+                                  F.col(manifest["lat_col"])))
+    ts_col = manifest["ts_col"]
+    out = out.withColumn("time_bin",
+                         time_bin_col(F.col(ts_col), manifest["period"])
+                         if ts_col in df.columns else F.lit(0))
+    if manifest.get("n_salts", 0) > 0:
+        salt_key = manifest.get("salt_key") or manifest["lon_col"]
+        out = out.withColumn("salt", salt_col(F.col(salt_key),
+                                              manifest["n_salts"]))
+    return out
 
 
 def geohash_cover(df: DataFrame, geom, max_size: int = 32) -> DataFrame:

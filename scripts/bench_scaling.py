@@ -30,7 +30,7 @@ import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from perfbench.measure import cpu_jiffies, steal_pct  # noqa: E402
+from bench import _StealMeter as StealMeter  # noqa: E402
 
 WORKER = r"""
 import json, sys, time, math
@@ -141,21 +141,6 @@ def run(cores: int, rows: int, reps: int) -> dict:
 
 
 _CALIB_CODE = "x=0\nfor i in range(60_000_000): x+=i"
-
-
-class StealMeter:
-    """Hypervisor steal-time fraction over a measured interval — direct
-    evidence of host interference during a phase (the pure-CPU
-    calibration only models the all-core clock drop; steal hits both
-    core counts and is invisible to the calibration RATIO)."""
-
-    def __enter__(self):
-        self.t0 = cpu_jiffies()
-        return self
-
-    def __exit__(self, *exc):
-        self.pct = round(steal_pct(self.t0, cpu_jiffies()), 2)
-        return False
 
 
 def wait_quiet(thresh_pct: float = 3.0, window_sec: float = 12.0,

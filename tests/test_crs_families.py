@@ -212,20 +212,49 @@ class TestLAEA:
 class TestTransverseMercator:
     """EPSG method 9807 with arbitrary parameters + Helmert datum."""
 
-    def test_utm_special_case_matches_fast_path(self, spark):
-        """TM(lat0=0, k0=0.9996, zone meridian, WGS84) must equal the
-        dedicated utm_exprs to sub-mm — same series, same constants."""
-        from pyspark.sql import functions as F
-        tm = crs.TransverseMercator(crs.WGS84_A, crs.WGS84_F, 0.0, -87.0,
-                                    0.9996, 500_000.0, 0.0)
-        pts = [(lon, lat) for lon in (-89.9, -87.0, -84.1)
-               for lat in (-60.0, -10.0, 0.0, 33.3, 71.5)]
-        df = spark.createDataFrame(pts, "lon double, lat double")
-        ex, ny = crs.utm_exprs(df.lon, df.lat, 16)
-        tx, ty = tm.forward(df.lon, df.lat)
-        rows = df.select((tx - ex).alias("dx"), (ty - ny).alias("dy")).collect()
-        for r in rows:
-            assert abs(r.dx) < 1e-6 and abs(r.dy) < 1e-6
+    # (lon, lat, easting, northing) on WGS84 UTM zone 16N and zone 60S,
+    # recorded from the dedicated Krüger-series UTM expressions that
+    # preceded the TransverseMercator special case
+    UTM_GOLDENS = {
+        32616: [
+            (-89.9, -60.0, 338279.2490995865, -6654956.719936298),
+            (-89.9, -10.0, 182044.57230534358, -1106810.6571221915),
+            (-89.9, 0.0, 177163.80595640402, 0.0),
+            (-89.9, 33.3, 229968.46787855146, 3688299.605087026),
+            (-89.9, 71.5, 397332.01524130476, 7935627.766889792),
+            (-87.0, -60.0, 500000.0, -6651411.190355416),
+            (-87.0, -10.0, 500000.0, -1105412.4913014728),
+            (-87.0, 0.0, 500000.0, 0.0),
+            (-87.0, 33.3, 500000.0, 3684545.774099676),
+            (-87.0, 71.5, 500000.0, 7933163.155605031),
+            (-84.1, -60.0, 661720.7509004127, -6654956.719936298),
+            (-84.1, -10.0, 817955.427694655, -1106810.6571221915),
+            (-84.1, 0.0, 822836.1940435944, 0.0),
+            (-84.1, 33.3, 770031.5321214474, 3688299.6050870256),
+            (-84.1, 71.5, 602667.9847586945, 7935627.766889792),
+        ],
+        32760: [
+            (174.0, -41.0, 247679.15210910758, 5456907.045611669),
+            (177.9, -47.5, 567781.8477695208, 4738877.756417878),
+            (171.0, -0.5, -168856.2014827506, 9944428.494518721),
+        ],
+    }
+
+    @pytest.mark.parametrize("code", [32616, 32760])
+    def test_utm_matches_recorded_goldens(self, spark, code):
+        """UTM is TransverseMercator(WGS84, lat0=0, k0=0.9996, zone
+        meridian): the Column path reproduces the recorded UTM outputs to
+        1e-9 m, the numpy path to 1e-8 m (numpy's libm and the JVM's
+        differ by an ulp or two, and an ulp of a 1e7 m northing is
+        1.9e-9 m)."""
+        rows = self.UTM_GOLDENS[code]
+        df = spark.createDataFrame([r[:2] for r in rows], "x double, y double")
+        got = crs.reproject(df, 4326, code).collect()
+        ex, ny = crs.transform_points_np([r[0] for r in rows],
+                                         [r[1] for r in rows], 4326, code)
+        for (lon, lat, e, n), g, xe, yn in zip(rows, got, ex, ny):
+            assert abs(g.x2 - e) < 1e-9 and abs(g.y2 - n) < 1e-9, (lon, lat)
+            assert abs(xe - e) < 1e-8 and abs(yn - n) < 1e-8, (lon, lat)
 
     def test_bng_projection_os_worked_example(self, spark):
         """OS/EPSG worked example for the 27700 PROJECTION (datumless):
@@ -304,8 +333,8 @@ class TestTransverseMercator:
         (the WGS84 meridian passes ~102 m EAST of the OSGB36 one);
         (b) GeoTools' EPSG:4326 -> 27700 golden point from the reference
         test suite, matched to < 5 cm."""
-        lon, lat = crs._helmert_np(crs.OSGB36_DATUM, [-0.001475],
-                                   [51.477811], to_wgs84=False)
+        lon, lat = crs.OSGB36_DATUM.shift_np([-0.001475], [51.477811],
+                                             to_wgs84=False)
         assert abs(lon[0]) < 5e-4  # ~35 m bound; reversed sign gives -3e-3
         x, y = crs.transform_points_np([-0.871722], [52.023636],
                                        4326, 27700)

@@ -152,6 +152,9 @@ class TestSTFunctions:
                for _ in range(200)]
         pts += [(-180.0, -90.0), (180.0, 90.0), (0.0, 0.0),
                 (179.9999999, 89.9999999), (-179.9999999, -89.9999999)]
+        # every combination of the domain edges and signed zeros
+        pts += [(x, y) for x in (-180.0, -0.0, 0.0, 180.0)
+                for y in (-90.0, -0.0, 0.0, 90.0)]
         df = spark.createDataFrame(pts, "lon double, lat double")
         for chars in (1, 4, 7, 12):
             rows = df.select(
@@ -161,6 +164,8 @@ class TestSTFunctions:
             for r in rows:
                 assert r.gh == ghmod.encode(r.lon, r.lat, 5 * chars), \
                     (chars, r.lon, r.lat)
+                xmin, ymin, xmax, ymax = ghmod.decode_bounds(r.gh)
+                assert xmin <= r.lon <= xmax and ymin <= r.lat <= ymax
 
     def test_buffer_point(self, spark):
         row = spark.sql("""

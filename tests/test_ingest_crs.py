@@ -104,8 +104,7 @@ def test_utm_forward_known_points(spark):
     import pandas as pd
     df = spark.createDataFrame(pd.DataFrame(
         {"lon": [3.0, 3.0, 3.0], "lat": [0.0, 45.0, -0.0]}))
-    e, n = crs.utm_exprs(F.col("lon"), F.col("lat"), 31)
-    rows = df.select(e.alias("e"), n.alias("n")).collect()
+    rows = crs.reproject(df, 4326, 32631, "lon", "lat", "e", "n").collect()
     assert abs(rows[0].e - 500_000.0) < 1e-6
     assert abs(rows[0].n - 0.0) < 1e-6
     # meridian arc 0->45deg on WGS84 is 4984944.378 m

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from geomesa_spark.functions.crs import CRS_REGISTRY, reproject
 from geomesa_spark.geom import wkb_loads, wkt_loads
 from geomesa_spark.geom.algos import (convex_hull_points, distance_spheroid,
                                       length_spheroid_m, vincenty_m)
@@ -118,24 +119,25 @@ class TestSparkSurface(object):
         assert len(got.shell) == 5  # 4 corners + closing repeat
         assert wkt_loads(rows["b"]).geom_type == "Point"
 
-    def test_st_transform_matches_native_reproject(self, spark):
+    @pytest.mark.parametrize("code", ["EPSG:3857", "EPSG:32631", "EPSG:32731"]
+                             + [f"EPSG:{c}" for c in CRS_REGISTRY])
+    def test_st_transform_matches_native_reproject(self, spark, code):
         """The Column path (reproject) and the numpy path (st_transform)
-        evaluate the same formula code — assert they agree per vertex."""
-        from geomesa_spark.functions.crs import reproject
+        evaluate the same formula code — assert they agree per vertex,
+        for every supported code."""
         rng = np.random.RandomState(3)
         pdf = pd.DataFrame({"lon": rng.uniform(-5, 5, 50),
                             "lat": rng.uniform(45, 55, 50)})
         df = spark.createDataFrame(pdf)
-        for code in ("EPSG:3857", "EPSG:32631", "EPSG:27700", "EPSG:3035"):
-            native = reproject(df, 4326, code.split(":")[1],
-                               x_col="lon", y_col="lat").toPandas()
-            viaudf = df.select(
-                F.expr("st_transform(st_point(lon, lat), 'EPSG:4326',"
-                       f" '{code}')").alias("g")).collect()
-            got = np.array([[wkb_loads(bytes(r.g)).x,
-                             wkb_loads(bytes(r.g)).y] for r in viaudf])
-            np.testing.assert_allclose(got[:, 0], native["x2"], rtol=1e-12)
-            np.testing.assert_allclose(got[:, 1], native["y2"], rtol=1e-12)
+        native = reproject(df, 4326, code.split(":")[1],
+                           x_col="lon", y_col="lat").toPandas()
+        viaudf = df.select(
+            F.expr("st_transform(st_point(lon, lat), 'EPSG:4326',"
+                   f" '{code}')").alias("g")).collect()
+        got = np.array([[wkb_loads(bytes(r.g)).x,
+                         wkb_loads(bytes(r.g)).y] for r in viaudf])
+        np.testing.assert_allclose(got[:, 0], native["x2"], rtol=1e-12)
+        np.testing.assert_allclose(got[:, 1], native["y2"], rtol=1e-12)
 
     def test_make_valid_sql(self, spark):
         row = spark.sql(

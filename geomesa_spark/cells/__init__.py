@@ -10,8 +10,10 @@ index keys, range covers, and golden tests match row-for-row:
 * ``z3``   — 3-D space-time curve, 21 bits/dim, with binned time
              (reference: zorder/sfcurve/Z3.scala, curve/Z3SFC.scala,
              curve/BinnedTime.scala).
-* ``xz2``  — XZ-ordering for extents/bboxes (reference: curve/XZ2SFC.scala,
-             Boehm/Klump/Kriegel XZ-Ordering paper).
+* ``xz``   — XZ-ordering for extents in any dimension: ``XZ2SFC`` for
+             bboxes, ``XZ3SFC`` for bbox + time-offset extents (reference:
+             curve/XZ2SFC.scala, curve/XZ3SFC.scala, Boehm/Klump/Kriegel
+             XZ-Ordering paper).
 * ``grid`` — hierarchical quad cells (H3/S2-style role): the shuffle keys for
              spatial joins, kNN ring expansion, and tile pyramids.
 
@@ -24,5 +26,5 @@ UDFs — but note the hot paths use *native Catalyst* bit expressions from
 from geomesa_spark.cells.zn import zdivide, zranges, IndexRange  # noqa: F401
 from geomesa_spark.cells.z2 import Z2, Z2SFC  # noqa: F401
 from geomesa_spark.cells.z3 import Z3, Z3SFC, BinnedTime  # noqa: F401
-from geomesa_spark.cells.xz2 import XZ2SFC  # noqa: F401
+from geomesa_spark.cells.xz import XZ2SFC, XZ3SFC  # noqa: F401
 from geomesa_spark.cells.grid import GridCells  # noqa: F401

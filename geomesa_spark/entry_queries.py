@@ -16,14 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.geom import model
-from geomesa_spark.geom.algos import EARTH_RADIUS_M
 from geomesa_spark.operators.knn import knn_join
 from geomesa_spark.operators.pip_join import pip_join_broadcast
 from geomesa_spark.operators.processes import haversine_col
 from geomesa_spark.operators.tiling import density, tile_pyramid
 from geomesa_spark.plans.query import SpatialQuery
 from geomesa_spark.sources.testdata import (CLUST_LAT_EXPR, CLUST_LON_EXPR,
-                                            geo_events, geo_events_sql)
+                                            geo_events, geo_events_sql,
+                                            oracle_haversine_sql)
 
 
 # ---------------------------------------------------------------------------
@@ -51,13 +51,6 @@ DWITHIN_RADIUS_M = 300_000.0
 
 BBOX = (40.0, 20.0, 50.0, 30.0)
 INTERVAL = ("2024-01-05 00:00:00", "2024-01-20 00:00:00")  # events span 2024-01
-
-
-def _haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    return (f"2.0 * {EARTH_RADIUS_M} * asin(sqrt(least("
-            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2), 1.0)))")
 
 
 def _z2_norm_sql(x: str, lo: float, hi: float, bits: int) -> str:
@@ -201,9 +194,9 @@ Q_KNN_SQL = f"""
     ('q_mid', -60.0, -30.0)) AS t(qid, qlon, qlat)
 ), ranked AS (
   SELECT q.qid, geo.event_id,
-         {_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')} AS d,
+         {oracle_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')} AS d,
          row_number() OVER (PARTITION BY q.qid ORDER BY
-             {_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')}) AS rnk
+             {oracle_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')}) AS rnk
   FROM geo CROSS JOIN q
 )
 SELECT qid, event_id, cast(rnk as int) AS knn_rank FROM ranked WHERE rnk <= 5
@@ -368,7 +361,7 @@ def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = geo_events(spark, sf_dir)
     pred = None
     for alon, alat in DWITHIN_ANCHORS:
-        d = haversine_col(F.col("lon"), F.col("lat"), F.lit(alon), F.lit(alat))
+        d = haversine_col("lon", "lat", alon, alat)
         p = d <= DWITHIN_RADIUS_M
         pred = p if pred is None else (pred | p)
     return df.where(pred).select("event_id")
@@ -377,9 +370,9 @@ def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_DWITHIN_SQL = f"""
 {GEO}
 SELECT event_id FROM geo
-WHERE {_haversine_sql('lon', 'lat', '46.0', '25.0')} <= 300000.0
-   OR {_haversine_sql('lon', 'lat', '-120.0', '40.0')} <= 300000.0
-   OR {_haversine_sql('lon', 'lat', '10.0', '-60.0')} <= 300000.0
+WHERE {oracle_haversine_sql('lon', 'lat', '46.0', '25.0')} <= 300000.0
+   OR {oracle_haversine_sql('lon', 'lat', '-120.0', '40.0')} <= 300000.0
+   OR {oracle_haversine_sql('lon', 'lat', '10.0', '-60.0')} <= 300000.0
 """
 
 
@@ -407,9 +400,9 @@ def q_point2point(spark: SparkSession, sf_dir: str) -> DataFrame:
     great-circle length)."""
     df = geo_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = haversine_col(F.lag("lon").over(w), F.lag("lat").over(w),
-                        F.col("lon"), F.col("lat"))
-    return (df.withColumn("seg_m", seg)
+    return (df.withColumn("_plon", F.lag("lon").over(w))
+            .withColumn("_plat", F.lag("lat").over(w))
+            .withColumn("seg_m", haversine_col("_plon", "_plat", "lon", "lat"))
             .groupBy("user_id")
             .agg(F.count("seg_m").alias("n_segments"),
                  F.round(F.sum("seg_m") / 1000.0, 1).alias("track_km")))
@@ -423,7 +416,7 @@ Q_POINT2POINT_SQL = f"""
 )
 SELECT user_id, count(*) FILTER (WHERE plon IS NOT NULL) AS n_segments,
        round(sum(CASE WHEN plon IS NULL THEN NULL
-                 ELSE {_haversine_sql('plon', 'plat', 'lon', 'lat')} END) / 1000.0, 1) AS track_km
+                 ELSE {oracle_haversine_sql('plon', 'plat', 'lon', 'lat')} END) / 1000.0, 1) AS track_km
 FROM s GROUP BY user_id
 """
 

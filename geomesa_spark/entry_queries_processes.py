@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators import processes as proc
-from geomesa_spark.sources.testdata import geo_events, geo_events_sql
+from geomesa_spark.sources.testdata import (geo_events, geo_events_sql,
+                                            oracle_haversine_sql)
 
 GEO = f"WITH geo AS ({geo_events_sql()})"
 
@@ -34,16 +35,6 @@ ROUTE = [("r0", 45.0, 24.0, 45.0), ("r1", 46.0, 25.0, 45.0),
          ("r2", 47.0, 26.0, 45.0), ("r3", 48.0, 27.0, 45.0)]
 ROUTE_RADIUS_M = 400_000.0
 ROUTE_TOL_DEG = 60.0
-
-_EARTH = proc.EARTH_RADIUS_M
-
-
-def _hav(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    return (f"2.0 * {_EARTH!r} * asin(sqrt(least("
-            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2), 1.0)))")
-
 
 def _bearing(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     return (f"(degrees(atan2("
@@ -69,7 +60,7 @@ def _prox_sql() -> str:
 {GEO}, a AS (SELECT * FROM (VALUES {anchors}) t(qid, alon, alat))
 SELECT a.qid, geo.event_id
 FROM geo CROSS JOIN a
-WHERE {_hav('geo.lon', 'geo.lat', 'a.alon', 'a.alat')} <= {PROX_RADIUS_M!r}
+WHERE {oracle_haversine_sql('geo.lon', 'geo.lat', 'a.alon', 'a.alat')} <= {PROX_RADIUS_M!r}
 """
 
 
@@ -92,7 +83,7 @@ SELECT geo.event_id, count(*) AS n_waypoints
 FROM geo JOIN w
   ON abs(CAST(floor(epoch(geo.ts)) AS BIGINT)
          - CAST(floor(epoch(w.wts)) AS BIGINT)) <= {TUBE_DT_S}
- AND {_hav('geo.lon', 'geo.lat', 'w.wlon', 'w.wlat')} <= {TUBE_RADIUS_M!r}
+ AND {oracle_haversine_sql('geo.lon', 'geo.lat', 'w.wlon', 'w.wlat')} <= {TUBE_RADIUS_M!r}
 GROUP BY geo.event_id
 """
 
@@ -123,7 +114,7 @@ h AS (
 r AS (SELECT * FROM (VALUES {rt}) t(rid, rlon, rlat, rbearing))
 SELECT DISTINCT h.event_id, r.rid
 FROM h CROSS JOIN r
-WHERE {_hav('h.lon', 'h.lat', 'r.rlon', 'r.rlat')} <= {ROUTE_RADIUS_M!r}
+WHERE {oracle_haversine_sql('h.lon', 'h.lat', 'r.rlon', 'r.rlat')} <= {ROUTE_RADIUS_M!r}
   AND least(abs(h.heading - r.rbearing),
             360.0e0 - abs(h.heading - r.rbearing)) <= {ROUTE_TOL_DEG!r}
 """

@@ -782,11 +782,11 @@ def _projection(crs: str | int):
     raise ValueError(f"unsupported CRS: {crs}")
 
 
-def _transform(src, dst, x, y, shift):
-    """``src`` -> ``dst`` through lon/lat on WGS84: ``src.inverse``, each
-    side's datum shift (``shift(datum, lon, lat, to_wgs84)``), then
-    ``dst.forward``."""
-    lon, lat = src.inverse(x, y)
+def _transform(src, dst, x, y, stage, shift):
+    """``src`` -> ``dst`` through lon/lat on WGS84: ``src.inverse`` (its
+    result passed through ``stage(lon, lat)``), each side's datum shift
+    (``shift(datum, lon, lat, to_wgs84)``), then ``dst.forward``."""
+    lon, lat = stage(*src.inverse(x, y))
     for proj, to_wgs84 in ((src, True), (dst, False)):
         datum = getattr(proj, "datum", None)
         if datum is not None:
@@ -805,17 +805,22 @@ def reproject(df: DataFrame, src: str | int, dst: str | int,
         raise ValueError(
             f"reproject: reserved temp columns present: {clash}")
 
-    def shift(datum, lon, lat, to_wgs84):
-        # stage the geodetic trees as named columns before the (staged)
-        # datum shift: inlining the inverse-projection tree into each of
-        # the datum math's references would square the plan (_Staged)
+    def stage(lon, lat):
+        # name the inverse's lon/lat before the datum shift and the
+        # forward: an iterative inverse (Lambert, Albers, LAEA) inlined
+        # into each of their many references grows the plan
+        # exponentially (_Staged)
         nonlocal df
         df = df.withColumn("__rp_lon", lon).withColumn("__rp_lat", lat)
-        df = datum.apply(df, "__rp_lon", "__rp_lat", "__rp_lon", "__rp_lat",
-                         to_wgs84=to_wgs84)
         return F.col("__rp_lon"), F.col("__rp_lat")
 
-    ox, oy = _transform(s, d, F.col(x_col), F.col(y_col), shift)
+    def shift(datum, lon, lat, to_wgs84):
+        nonlocal df
+        df = datum.apply(df, "__rp_lon", "__rp_lat", "__rp_lon", "__rp_lat",
+                         to_wgs84=to_wgs84)
+        return lon, lat
+
+    ox, oy = _transform(s, d, F.col(x_col), F.col(y_col), stage, shift)
     return (df.withColumn(out_x, ox).withColumn(out_y, oy)
             .drop("__rp_lon", "__rp_lat"))
 
@@ -831,7 +836,8 @@ def transform_points_np(x, y, src: str | int, dst: str | int):
     # guarded divides (e.g. LAEA's rho=0 origin) emit spurious warnings
     # before np.where masks them
     with _numpy_funcs(), np.errstate(divide="ignore", invalid="ignore"):
-        ox, oy = _transform(s, d, x, y, lambda datum, lon, lat, to_wgs84:
+        ox, oy = _transform(s, d, x, y, lambda lon, lat: (lon, lat),
+                            lambda datum, lon, lat, to_wgs84:
                             datum.shift_np(lon, lat, to_wgs84=to_wgs84))
     return np.asarray(ox, np.float64), np.asarray(oy, np.float64)
 

@@ -20,10 +20,28 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from geomesa_spark.cells.xz3 import XZ3SFC
-from geomesa_spark.cells.z3 import WEEK_MS
+from geomesa_spark.cells.xz import XZ2SFC, XZ3SFC, XZSFC
+from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS
+from geomesa_spark.plans.cover import _ranges_expr
 
 DEFAULT_G = 12
+
+
+def _xz_code(sfc: XZSFC, *extent: Column) -> Column:
+    """The sequence code of an extent (its mins, then its maxes) as one
+    Arrow-batched numpy kernel, ``XZSFC.index_np``."""
+    def idx(*series):
+        return pd.Series(sfc.index_np(*(v.to_numpy(np.float64) for v in series)))
+
+    return F.pandas_udf(idx, LongType())(*extent)
+
+
+def _overlaps(bbox: tuple, xmin_col: str, ymin_col: str, xmax_col: str,
+              ymax_col: str) -> Column:
+    """The exact bbox-overlap recheck behind both XZ prefilters."""
+    qxmin, qymin, qxmax, qymax = bbox
+    return ((F.col(xmax_col) >= qxmin) & (F.col(xmin_col) <= qxmax)
+            & (F.col(ymax_col) >= qymin) & (F.col(ymin_col) <= qymax))
 
 
 def with_xz3(df: DataFrame, xmin_col: str, ymin_col: str, xmax_col: str,
@@ -36,27 +54,18 @@ def with_xz3(df: DataFrame, xmin_col: str, ymin_col: str, xmax_col: str,
     partition key for footprint tables, mirroring
     `[shard][2B time-bin][8B xz(bbox)]` row keys.
     """
-    sfc = XZ3SFC(g, period=period)
     period_ms, off_div = _fixed_period(period)
-
-    def idx(xmin: pd.Series, ymin: pd.Series, zsec: pd.Series,
-            xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        z = zsec.to_numpy(np.float64)
-        return pd.Series(sfc.index_np(
-            xmin.to_numpy(np.float64), ymin.to_numpy(np.float64), z,
-            xmax.to_numpy(np.float64), ymax.to_numpy(np.float64), z))
-
-    udf = F.pandas_udf(idx, LongType())
     # floor/pmod (not cast-truncate / %) so pre-epoch timestamps (negative
     # millis) still land in the right bin with a non-negative offset; the
     # reference's BinnedTime rejects pre-epoch dates outright
     # (z3/BinnedTime.scala), we support them instead.
     millis = (F.unix_timestamp(ts_col) * 1000)
-    offset_sec = (F.pmod(millis, F.lit(period_ms)) / off_div).cast("double")
+    offset = (F.pmod(millis, F.lit(period_ms)) / off_div).cast("double")
+    x0, y0, x1, y1 = (F.col(c) for c in (xmin_col, ymin_col, xmax_col, ymax_col))
     return (df
             .withColumn("xz3_bin", F.floor(millis / period_ms))
-            .withColumn("xz3", udf(F.col(xmin_col), F.col(ymin_col),
-                                   offset_sec, F.col(xmax_col), F.col(ymax_col))))
+            .withColumn("xz3", _xz_code(XZ3SFC(g, period=period),
+                                        x0, y0, offset, x1, y1, offset)))
 
 
 def _fixed_period(period: str) -> tuple[int, int]:
@@ -68,7 +77,6 @@ def _fixed_period(period: str) -> tuple[int, int]:
     offset against a day-milli axis would silently break losslessness,
     so calendar periods (month/year: variable bin width) are rejected
     rather than approximated."""
-    from geomesa_spark.cells.z3 import DAY_MS
     if period == "week":
         return WEEK_MS, 1000
     if period == "day":
@@ -84,29 +92,15 @@ def with_xz2(df: DataFrame, xmin_col: str, ymin_col: str, xmax_col: str,
     WITHOUT a time dimension (index/z2/XZ2IndexKeySpace.scala) — one
     Arrow-batched numpy kernel, the write-time sort key for purely
     spatial footprint tables."""
-    from geomesa_spark.cells.xz2 import XZ2SFC
-    sfc = XZ2SFC(g)
-
-    def idx(xmin: pd.Series, ymin: pd.Series,
-            xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        return pd.Series(sfc.index_np(
-            xmin.to_numpy(np.float64), ymin.to_numpy(np.float64),
-            xmax.to_numpy(np.float64), ymax.to_numpy(np.float64)))
-
-    udf = F.pandas_udf(idx, LongType())
-    return df.withColumn("xz2", udf(F.col(xmin_col), F.col(ymin_col),
-                                    F.col(xmax_col), F.col(ymax_col)))
+    return df.withColumn("xz2", _xz_code(XZ2SFC(g), *(F.col(c) for c in (
+        xmin_col, ymin_col, xmax_col, ymax_col))))
 
 
 def xz2_query_predicate(bbox: tuple, g: int = DEFAULT_G,
                         max_ranges: int = 24) -> Column:
     """Coarse XZ2 range predicate for a bbox query
     (XZ2IndexKeySpace.getRanges analog)."""
-    from geomesa_spark.cells.xz2 import XZ2SFC
-    sfc = XZ2SFC(g)
-    ranges = sfc.ranges([bbox], max_ranges=max_ranges)
-    return reduce(lambda a, c: a | c,
-                  [F.col("xz2").between(r.lower, r.upper) for r in ranges])
+    return _ranges_expr("xz2", XZ2SFC(g).ranges([bbox], max_ranges=max_ranges))
 
 
 def xz2_bbox(df: DataFrame, bbox: tuple, xmin_col: str = "xmin",
@@ -115,9 +109,7 @@ def xz2_bbox(df: DataFrame, bbox: tuple, xmin_col: str = "xmin",
     """Footprints intersecting ``bbox``: XZ2 prefilter + exact overlap
     recheck (cover property golden-tested in test_cells.TestXZ2)."""
     indexed = with_xz2(df, xmin_col, ymin_col, xmax_col, ymax_col, g=g)
-    qxmin, qymin, qxmax, qymax = bbox
-    exact = ((F.col(xmax_col) >= qxmin) & (F.col(xmin_col) <= qxmax)
-             & (F.col(ymax_col) >= qymin) & (F.col(ymin_col) <= qymax))
+    exact = _overlaps(bbox, xmin_col, ymin_col, xmax_col, ymax_col)
     return indexed.where(xz2_query_predicate(bbox, g=g)).where(exact).drop("xz2")
 
 
@@ -140,9 +132,7 @@ def xz3_query_predicate(bbox: tuple, interval_ms: tuple[int, int],
         zhi = min(hi_ms - b * period_ms, period_ms) / off_div
         ranges = sfc.ranges([(xmin, ymin, zlo, xmax, ymax, zhi)],
                             max_ranges=max_ranges)
-        rng_pred = reduce(lambda a, c: a | c,
-                          [F.col("xz3").between(r.lower, r.upper) for r in ranges])
-        preds.append((F.col("xz3_bin") == b) & rng_pred)
+        preds.append((F.col("xz3_bin") == b) & _ranges_expr("xz3", ranges))
     return reduce(lambda a, c: a | c, preds)
 
 
@@ -164,8 +154,6 @@ def xz3_bbox_during(df: DataFrame, bbox: tuple, interval: tuple[str, str],
                            .replace(tzinfo=dt.timezone.utc).timestamp() * 1000))
     pre = xz3_query_predicate(bbox, (to_ms(interval[0]), to_ms(interval[1])),
                               g=g, period=period)
-    qxmin, qymin, qxmax, qymax = bbox
-    exact = ((F.col(xmax_col) >= qxmin) & (F.col(xmin_col) <= qxmax)
-             & (F.col(ymax_col) >= qymin) & (F.col(ymin_col) <= qymax)
+    exact = (_overlaps(bbox, xmin_col, ymin_col, xmax_col, ymax_col)
              & F.col(ts_col).between(F.lit(interval[0]), F.lit(interval[1])))
     return indexed.where(pre).where(exact).drop("xz3_bin", "xz3")

@@ -178,7 +178,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
         if len(wins) == 1:
             (qid, w), = wins.items()
             scan = points.where(f"{bbox} AND {inside(ix, iy, *w)}")
-            q, qlon, qlat = F.lit(qid), F.lit(q_pos[qid][0]), F.lit(q_pos[qid][1])
+            q, (qlon, qlat) = F.lit(qid), q_pos[qid]
         else:
             qs = ", ".join(
                 f"named_struct('qid', {_sql_str(qid)}, 'qlon', {q_pos[qid][0]!r}D,"
@@ -188,8 +188,8 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
             scan = (points.where(bbox)
                     .select("*", F.expr(ix).alias("__ix"), F.expr(iy).alias("__iy"))
                     .select("*", F.expr(f"inline(filter(array({qs}), q -> {in_q}))")))
-            q, qlon, qlat = F.col("qid"), F.col("qlon"), F.col("qlat")
-        dist = haversine_col(F.col(lon_col), F.col(lat_col), qlon, qlat)
+            q, qlon, qlat = F.col("qid"), "qlon", "qlat"
+        dist = haversine_col(lon_col, lat_col, qlon, qlat)
         rank = F.row_number().over(Window.partitionBy(q).orderBy(dist))
         return (scan.select(q.alias("qid"), *points.columns, dist.alias("dist_m"),
                             rank.alias("knn_rank"))
@@ -247,7 +247,7 @@ def knn_brute_force(points: DataFrame, query_points: list[tuple], k: int, *,
                     lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Broadcast nested-loop kNN — the oracle/baseline path."""
     qdf = local_table(points.sparkSession, list(query_points), _QUERY_SCHEMA)
-    dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
+    dist = haversine_col(lon_col, lat_col, "qlon", "qlat")
     w = Window.partitionBy("qid").orderBy("dist_m")
     return (points.crossJoin(F.broadcast(qdf))
             .withColumn("dist_m", dist)

@@ -30,32 +30,45 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from geomesa_spark.geom.algos import EARTH_RADIUS_M
+from geomesa_spark.geom.algos import (EARTH_RADIUS_M, IN, convex_hull_points,
+                                      points_in_ring)
 
 
-def haversine_col(lon1, lat1, lon2, lat2):
-    """Native haversine (meters) — pure Catalyst, matches algos.haversine_m;
-    null when a coordinate is null."""
-    r1lon, r1lat = F.radians(lon1), F.radians(lat1)
-    r2lon, r2lat = F.radians(lon2), F.radians(lat2)
-    a = (F.pow(F.sin((r2lat - r1lat) / 2), 2)
-         + F.cos(r1lat) * F.cos(r2lat) * F.pow(F.sin((r2lon - r1lon) / 2), 2))
-    # clamp without F.least: least() ignores nulls and would turn a null
-    # distance (null input coords) into asin(1)
-    clamped = F.when(a > 1.0, F.lit(1.0)).otherwise(a)
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(clamped))
+def _sql(v) -> str:
+    """An operand as SQL: a column name, or a Python number as a double
+    literal."""
+    return f"`{v}`" if isinstance(v, str) else f"({float(v)!r}D)"
 
 
-def bearing_col(lon1, lat1, lon2, lat2):
-    """Initial great-circle bearing (degrees in [0, 360))."""
-    dlon = F.radians(lon2) - F.radians(lon1)
-    y = F.sin(dlon) * F.cos(F.radians(lat2))
-    x = (F.cos(F.radians(lat1)) * F.sin(F.radians(lat2))
-         - F.sin(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.cos(dlon))
-    return (F.degrees(F.atan2(y, x)) + 360.0) % 360.0
+def haversine_sql(lon1, lat1, lon2, lat2) -> str:
+    """Haversine distance (meters) as SQL text over column names or
+    numbers; matches algos.haversine_m and is null when a coordinate is
+    null: the clamp is a CASE, since least() skips nulls and would turn
+    a null distance into asin(1)."""
+    r1lon, r1lat, r2lon, r2lat = (f"radians({_sql(v)})" for v in (lon1, lat1, lon2, lat2))
+    a = (f"(pow(sin(({r2lat} - {r1lat}) / 2), 2)"
+         f" + cos({r1lat}) * cos({r2lat}) * pow(sin(({r2lon} - {r1lon}) / 2), 2))")
+    return (f"({2.0 * EARTH_RADIUS_M!r}D"
+            f" * asin(sqrt(CASE WHEN {a} > 1.0D THEN 1.0D ELSE {a} END)))")
+
+
+def haversine_col(lon1, lat1, lon2, lat2) -> Column:
+    """:func:`haversine_sql` as one native expression: a Column tree would
+    cost a py4j round trip per operator."""
+    return F.expr(haversine_sql(lon1, lat1, lon2, lat2))
+
+
+def bearing_col(lon1, lat1, lon2, lat2) -> Column:
+    """Initial great-circle bearing (degrees in [0, 360)) over column names
+    or numbers, as one native expression."""
+    r1lon, r1lat, r2lon, r2lat = (f"radians({_sql(v)})" for v in (lon1, lat1, lon2, lat2))
+    dlon = f"({r2lon} - {r1lon})"
+    y = f"sin({dlon}) * cos({r2lat})"
+    x = f"cos({r1lat}) * sin({r2lat}) - sin({r1lat}) * cos({r2lat}) * cos({dlon})"
+    return F.expr(f"((degrees(atan2({y}, {x})) + 360.0D) % 360.0D)")
 
 
 def _deg_margin(radius_m: float) -> float:
@@ -96,8 +109,7 @@ def proximity_join(points: DataFrame, anchors: list[tuple],
     a = spark.createDataFrame(anchors, "qid string, alon double, alat double")
     cond = _prefilter_cond(F.col(lon_col), F.col(lat_col),
                            F.col("alon"), F.col("alat"), radius_m)
-    d = haversine_col(F.col(lon_col), F.col(lat_col),
-                      F.col("alon"), F.col("alat"))
+    d = haversine_col(lon_col, lat_col, "alon", "alat")
     return (points.join(F.broadcast(a), cond)
             .where(d <= radius_m)
             .drop("alon", "alat"))
@@ -121,8 +133,7 @@ def tube_select(points: DataFrame, waypoints: list[tuple],
                <= dt_seconds)
     bbox_ok = _prefilter_cond(F.col(lon_col), F.col(lat_col),
                               F.col("wlon"), F.col("wlat"), radius_m)
-    d = haversine_col(F.col(lon_col), F.col(lat_col),
-                      F.col("wlon"), F.col("wlat"))
+    d = haversine_col(lon_col, lat_col, "wlon", "wlat")
     key_cols = [c for c in points.columns]
     return (points.join(F.broadcast(w), time_ok & bbox_ok)
             .where(d <= radius_m)
@@ -151,12 +162,10 @@ def route_search(points: DataFrame, route: list[tuple], radius_m: float,
            .withColumn("_plon", F.lag(lon_col).over(trk))
            .withColumn("_plat", F.lag(lat_col).over(trk))
            .where(F.col("_plon").isNotNull())
-           .withColumn("heading", bearing_col(F.col("_plon"), F.col("_plat"),
-                                              F.col(lon_col), F.col(lat_col))))
+           .withColumn("heading", bearing_col("_plon", "_plat", lon_col, lat_col)))
     bbox_ok = _prefilter_cond(F.col(lon_col), F.col(lat_col),
                               F.col("rlon"), F.col("rlat"), radius_m)
-    d = haversine_col(F.col(lon_col), F.col(lat_col),
-                      F.col("rlon"), F.col("rlat"))
+    d = haversine_col(lon_col, lat_col, "rlon", "rlat")
     diff = F.abs(F.col("heading") - F.col("rbearing"))
     ang = F.least(diff, 360.0 - diff)
     return (pts.join(F.broadcast(r), bbox_ok)
@@ -185,7 +194,8 @@ def merged_view(stores: list[DataFrame], fid_col: str = "event_id",
 
 def convex_hull_agg(points: DataFrame, group_col: str,
                     lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Per-group planar convex hull (monotone chain) via applyInPandas.
+    """Per-group planar convex hull (``algos.convex_hull_points``, after an
+    Akl-Toussaint prefilter) via applyInPandas.
 
     Returns (group, n_hull_points, hull_area_e6 = floor(area_deg2 * 1e6),
     hull_wkt).  The per-group pandas kernel sees only that group's points;
@@ -207,24 +217,9 @@ def convex_hull_agg(points: DataFrame, group_col: str,
             ang = np.arctan2(oct_pts[:, 1] - c[1], oct_pts[:, 0] - c[0])
             ring = oct_pts[np.argsort(ang)]
             ring = np.vstack([ring, ring[:1]])
-            from geomesa_spark.geom.algos import IN, points_in_ring
             keep = points_in_ring(x, y, ring) != IN
             pts = pts[keep]
-        if len(pts) <= 2:
-            hull_pts = pts
-        else:
-            # Andrew's monotone chain
-            def half(points_sorted):
-                out = []
-                for p in points_sorted:
-                    while len(out) >= 2 and np.cross(
-                            out[-1] - out[-2], p - out[-2]) <= 0:
-                        out.pop()
-                    out.append(p)
-                return out
-            srt = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-            lower, upper = half(srt), half(srt[::-1])
-            hull_pts = np.array(lower[:-1] + upper[:-1])
+        hull_pts = convex_hull_points(pts)
         if len(hull_pts) >= 3:
             x, y = hull_pts[:, 0], hull_pts[:, 1]
             area = 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))

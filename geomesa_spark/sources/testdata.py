@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geomesa_spark.geom.algos import EARTH_RADIUS_M
+
 # lon in [-180,180), lat in [-90,90), deterministic from event_id
 LON_EXPR = "CAST((event_id * 2654435761) % 4294967296 AS DOUBLE) / 4294967296e0 * 360e0 - 180e0"
 LAT_EXPR = "CAST((event_id * 2246822519) % 4294967296 AS DOUBLE) / 4294967296e0 * 180e0 - 90e0"
@@ -25,6 +27,16 @@ LAT_EXPR = "CAST((event_id * 2246822519) % 4294967296 AS DOUBLE) / 4294967296e0 
 # points into [40,50]x[20,30]
 CLUST_LON_EXPR = f"CASE WHEN event_id % 5 = 0 THEN 40e0 + (({LON_EXPR}) + 180e0) / 36e0 ELSE ({LON_EXPR}) END"
 CLUST_LAT_EXPR = f"CASE WHEN event_id % 5 = 0 THEN 20e0 + (({LAT_EXPR}) + 90e0) / 18e0 ELSE ({LAT_EXPR}) END"
+
+
+def oracle_haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+    """Haversine distance (meters) in the DuckDB oracle SQL. Written apart
+    from the engine's ``processes.haversine_sql`` so the oracle checks the
+    engine rather than repeating it."""
+    return (f"2.0 * {EARTH_RADIUS_M!r} * asin(sqrt(least("
+            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
+            f"cos(radians({lat1})) * cos(radians({lat2})) * "
+            f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2), 1.0)))")
 
 
 def geo_events_sql(table: str = "events") -> str:

@@ -47,6 +47,7 @@ spark = get_spark("scaling-bench", master=f"local[{cores}]",
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F
 from geomesa_spark.operators.pip_join import pip_join_broadcast
+from geomesa_spark.operators.processes import haversine_sql
 from geomesa_spark.operators.tiling import tile_pyramid
 from geomesa_spark.sources.images import synthetic_images_geo
 
@@ -89,10 +90,7 @@ _cy = F.create_map(*chain.from_iterable(
     (F.lit(p), F.lit(y)) for p, _, y in CENTERS))
 
 def weighted(j):
-    hav = ("2.0 * 6371008.8 * asin(sqrt(least("
-           "pow(sin((radians(lat) - radians(cy)) / 2), 2) + "
-           "cos(radians(cy)) * cos(radians(lat)) * "
-           "pow(sin((radians(lon) - radians(cx)) / 2), 2), 1.0)))")
+    hav = haversine_sql("cx", "cy", "lon", "lat")
     return (j.withColumn("cx", _cx[F.col("poly_id")])
              .withColumn("cy", _cy[F.col("poly_id")])
              .withColumn("w", F.expr(f"exp(-pow(({hav}) / 400000.0, 2))")))

@@ -15,7 +15,7 @@ import pytest
 from geomesa_spark.cells import zn
 from geomesa_spark.cells.grid import (cell_bounds, cell_id, cell_xy, cover_bbox,
                                       disk, from_xy, ring)
-from geomesa_spark.cells.xz2 import XZ2SFC
+from geomesa_spark.cells.xz import XZ2SFC
 from geomesa_spark.cells.z2 import Z2, Z2SFC, NormalizedLat, NormalizedLon
 from geomesa_spark.cells.z3 import Z3, Z3SFC, BinnedTime
 
@@ -244,6 +244,14 @@ class TestXZ2:
             with pytest.raises(ValueError):
                 self.sfc.index(*bbox)
 
+    def test_extent_takes_two_mins_and_two_maxes(self):
+        # lenient is keyword-only: a fifth value is an error, not a flag
+        for call in (lambda: self.sfc.index(10, 10, 12, 12, True),
+                     lambda: self.sfc.ranges([(10, 10, 12)]),
+                     lambda: self.sfc.index_np(*np.zeros((3, 4)))):
+            with pytest.raises(TypeError):
+                call()
+
     def test_numpy_matches_scalar(self):
         rng = np.random.RandomState(3)
         xmin = rng.uniform(-179, 178, 300)
@@ -294,7 +302,7 @@ class TestXZ3:
     (geomesa-z3/src/test/scala/.../curve/XZ3SFCTest.scala:20-126)."""
 
     def _sfc(self):
-        from geomesa_spark.cells.xz3 import XZ3SFC
+        from geomesa_spark.cells.xz import XZ3SFC
         return XZ3SFC(12, period="week")
 
     CONTAINING = [(9.0, 9.0, 900.0, 13.0, 13.0, 1100.0),
@@ -455,6 +463,141 @@ def test_xz2_geoms_list_corpus():
         assert any(r.lower <= idx <= r.upper for r in ranges), \
             (xmin, ymin, xmax, ymax)
 
+
+class TestXZGoldens:
+    """The generic XZ curve against literal outputs of the separate XZ2/XZ3
+    implementations it replaced (tests/data/xz_goldens.json): XZ2 codes of
+    the 135 geoms.list fixtures, XZ3 codes of 50 seeded extents per period
+    (zero-width and out-of-bounds ones included) and the full range covers
+    of the XZ2SFCTest/XZ3SFCTest query windows."""
+
+    @pytest.fixture(scope="class")
+    def gold(self):
+        import json
+        import pathlib
+        path = pathlib.Path(__file__).parent / "data" / "xz_goldens.json"
+        return json.loads(path.read_text())
+
+    @staticmethod
+    def _ranges(rs):
+        return [[r.lower, r.upper, int(r.contained)] for r in rs]
+
+    def test_xz2_index_of_fixtures(self, gold):
+        from tests.data.xz2_geoms_list import GEOMS
+        sfc = XZ2SFC(12)
+        assert [sfc.index(*g) for g in GEOMS] == gold["xz2_geoms_index"]
+        assert sfc.index_np(*np.array(GEOMS).T).tolist() == gold["xz2_index_np"]
+
+    def test_xz2_ranges(self, gold):
+        sfc = XZ2SFC(12)
+        windows = [tuple(w) for w in gold["xz2_windows"]]
+        assert [self._ranges(sfc.ranges([w], max_ranges=24))
+                for w in windows] == gold["xz2_ranges_24"]
+        # the default cover of the geoms.list window (45, 23, 48, 27)
+        assert self._ranges(sfc.ranges([windows[-1]])) == gold["xz2_ranges_default"]
+        assert len(gold["xz2_ranges_default"]) == 124
+
+    @pytest.mark.parametrize("period", ["week", "day"])
+    def test_xz3_index(self, gold, period):
+        from geomesa_spark.cells.xz import XZ3SFC
+        sfc = XZ3SFC(12, period=period)
+        g = gold["xz3"][period]
+        ext = np.array(g["extents"])
+        assert [sfc.index(*map(float, e), lenient=True) for e in ext] == g["index"]
+        assert sfc.index_np(*ext.T).tolist() == g["index_np"]
+        assert any(g["lenient"])
+        for e, lenient in zip(ext, g["lenient"]):
+            if lenient:
+                with pytest.raises(ValueError):
+                    sfc.index(*map(float, e))
+
+    @pytest.mark.parametrize("period", ["week", "day"])
+    def test_xz3_ranges(self, gold, period):
+        from geomesa_spark.cells.xz import XZ3SFC
+        sfc = XZ3SFC(12, period=period)
+        g = gold["xz3"][period]
+        windows = [tuple(w) for w in gold["xz3_windows"]]
+        assert [self._ranges(sfc.ranges([w], max_ranges=24))
+                for w in windows] == g["ranges_24"]
+        # the default cover of the window (9, 9, 900, 13, 13, 1100)
+        assert self._ranges(sfc.ranges([windows[0]])) == g["ranges_default"]
+        assert len(g["ranges_default"]) == {"week": 329, "day": 386}[period]
+
+
+def _xz_ranges_loop(sfc, windows, range_stop):
+    """The element-at-a-time XZ cover the numpy cover replaced: a FIFO of
+    elements, each checked against the windows and coded from the root."""
+    from collections import deque
+
+    from geomesa_spark.cells.zn import IndexRange
+    d, ranges = sfc.d, []
+    remaining = deque([((0.0,) * d, (1.0,) * d, 1.0)])
+
+    def push_children(mins, maxs, ext):
+        for q in range(1 << d):
+            c = [(a + b) / 2.0 for a, b in zip(mins, maxs)]
+            remaining.append((
+                tuple(c[k] if q >> k & 1 else mins[k] for k in range(d)),
+                tuple(maxs[k] if q >> k & 1 else c[k] for k in range(d)), ext / 2.0))
+
+    def whole(mins, level):
+        lo = sfc._sequence_code(mins, level)
+        return lo, lo + (((1 << d) ** (sfc.g - level + 1) - 1) // ((1 << d) - 1))
+
+    push_children(*remaining.popleft())
+    remaining.append(None)
+    level = 1
+    while level < sfc.g and remaining and len(ranges) < range_stop:
+        el = remaining.popleft()
+        if el is None:
+            if remaining:
+                level += 1
+                remaining.append(None)
+            continue
+        mins, maxs, ext = el
+        if any(all(w[k] <= mins[k] and w[d + k] >= maxs[k] + ext for k in range(d))
+               for w in windows):
+            ranges.append(IndexRange(*whole(mins, level), True))
+        elif any(all(w[d + k] >= mins[k] and w[k] <= maxs[k] + ext for k in range(d))
+                 for w in windows):
+            code = sfc._sequence_code(mins, level)
+            ranges.append(IndexRange(code, code, False))
+            push_children(mins, maxs, ext)
+    for el in remaining:
+        if el is None:
+            level += 1
+        else:
+            ranges.append(IndexRange(*whole(el[0], level), False))
+    ranges.sort(key=lambda r: (r.lower, r.upper))
+    merged = [ranges[0]]
+    for r in ranges[1:]:
+        if r.lower <= merged[-1].upper + 1:
+            m = merged[-1]
+            merged[-1] = IndexRange(m.lower, max(m.upper, r.upper),
+                                    m.contained and r.contained)
+        else:
+            merged.append(r)
+    return merged
+
+
+@pytest.mark.parametrize("g", [1, 2, 5, 12])
+def test_xz_ranges_match_loop_reference(g):
+    """The level-at-a-time numpy cover equals the element-at-a-time loop on
+    random 1-3 window queries, for every range budget the cut-off can hit."""
+    from geomesa_spark.cells.xz import XZ3SFC
+    rng = np.random.default_rng(g)
+    for sfc in (XZ2SFC(g), XZ3SFC(g)):
+        lo, hi = np.array(sfc.lo), np.array(sfc.hi)
+        for t in range(12):
+            windows = []
+            for _ in range(1 + t % 3):
+                a = rng.uniform(lo, hi)
+                b = np.minimum(a + (hi - lo) * rng.uniform(0, 0.3, sfc.d), hi)
+                windows.append(tuple(np.concatenate([a, b]).tolist()))
+            normalized = [sfc._normalize(w) for w in windows]
+            for stop in (5, 24, 100, 2000):
+                assert sfc.ranges(windows, max_ranges=stop) == \
+                    _xz_ranges_loop(sfc, normalized, stop), (g, windows, stop)
 
 class TestZ3Range:
     """Z3RangeTest.scala:16-63 port: range cut/length/overlaps/contains

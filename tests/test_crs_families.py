@@ -517,3 +517,29 @@ class TestGridShiftDatum:
                 assert abs(r.n - yy) < 1e-6
         finally:
             crs.CRS_REGISTRY.pop(90001, None)
+
+
+@pytest.mark.parametrize("src,dst", [(2154, 32631), (5070, 32631),
+                                     (3035, 32631), (3035, 3035)])
+def test_iterative_inverse_into_forward_plans_quickly(spark, src, dst):
+    """An iterative inverse (Lambert, Albers, LAEA) feeding a Krüger-series
+    or LAEA forward: reproject names the inverse's lon/lat as columns, so
+    the plan stays linear (inlined, it grew exponentially and ran a 2g
+    driver out of heap). Each pair finishes quickly and matches the numpy
+    path."""
+    import time
+
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    lon, lat = rng.uniform(-2.0, 8.0, 20), rng.uniform(43.0, 51.0, 20)
+    x, y = crs.transform_points_np(lon, lat, 4326, src)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(x, y))],
+        "id int, x double, y double")
+    start = time.perf_counter()
+    rows = sorted(crs.reproject(df, src, dst).select("id", "x2", "y2").collect())
+    assert time.perf_counter() - start < 30.0
+    ex, ey = crs.transform_points_np(x, y, src, dst)
+    np.testing.assert_allclose([r.x2 for r in rows], ex, rtol=1e-12, atol=1e-8)
+    np.testing.assert_allclose([r.y2 for r in rows], ey, rtol=1e-12, atol=1e-8)

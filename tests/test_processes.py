@@ -50,8 +50,7 @@ def test_proximity_join_is_symmetric_prefilter_safe(geo):
     """The bbox prefilter must not drop any true match vs pure refine."""
     anchors = [("a0", 46.0, 25.0)]
     got = proc.proximity_join(geo, anchors, 500_000.0).count()
-    d = proc.haversine_col(F.col("lon"), F.col("lat"),
-                           F.lit(46.0), F.lit(25.0))
+    d = proc.haversine_col("lon", "lat", 46.0, 25.0)
     want = geo.where(d <= 500_000.0).count()
     assert got == want
 
@@ -61,7 +60,7 @@ def test_haversine_col_null_coordinate_is_null(spark):
     nulls, so a least() clamp would read about 20,015 km)."""
     pts = spark.createDataFrame([(1, None, 10.0), (2, 0.0, None), (3, 0.0, 0.0)],
                                 "id int, lon double, lat double")
-    d = proc.haversine_col(F.col("lon"), F.col("lat"), F.lit(0.0), F.lit(1.0))
+    d = proc.haversine_col("lon", "lat", 0.0, 1.0)
     got = {r.id: r.d for r in pts.select("id", d.alias("d")).collect()}
     assert got[1] is None and got[2] is None
     assert abs(got[3] - 111_195.08) < 0.01      # one degree of latitude
@@ -120,8 +119,7 @@ def test_proximity_prefilter_polar_and_antimeridian(spark):
     radius = 50_000.0
     got = {r.event_id for r in proc.proximity_join(pts, anchors, radius).collect()}
     # exact refine over all rows (no prefilter) is the truth
-    d = proc.haversine_col(F.col("lon"), F.col("lat"),
-                           F.lit(-179.98), F.lit(80.0))
+    d = proc.haversine_col("lon", "lat", -179.98, 80.0)
     want = {r.event_id for r in pts.where(d <= radius).collect()}
     assert got == want
     assert 1 in got  # the antimeridian-crossing pair specifically

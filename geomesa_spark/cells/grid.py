@@ -28,7 +28,7 @@ def cell_id(lon: float, lat: float, res: int) -> int:
     n = 1 << res
     ix = min(int((lon + 180.0) / 360.0 * n), n - 1)
     iy = min(int((lat + 90.0) / 180.0 * n), n - 1)
-    return (res << 58) | zn.split2(ix) | (zn.split2(iy) << 1)
+    return from_xy(res, ix, iy)
 
 
 def cell_id_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
@@ -37,7 +37,7 @@ def cell_id_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     iy = np.minimum(((lat + 90.0) / 180.0 * n).astype(np.int64), n - 1)
     ix = np.maximum(ix, 0)
     iy = np.maximum(iy, 0)
-    z = zn.split2_np(ix.astype(np.uint64)) | (zn.split2_np(iy.astype(np.uint64)) << np.uint64(1))
+    z = zn.interleave((ix, iy))
     return (np.int64(res) << np.int64(58)) | z.astype(np.int64)
 
 
@@ -45,11 +45,11 @@ def cell_xy(cid: int) -> tuple[int, int, int]:
     """Unpack to (res, ix, iy)."""
     res = cid >> 58
     z = cid & ((1 << 58) - 1)
-    return res, zn.combine2(z), zn.combine2(z >> 1)
+    return (res, *zn.deinterleave(z, 2))
 
 
 def from_xy(res: int, ix: int, iy: int) -> int:
-    return (res << 58) | zn.split2(ix) | (zn.split2(iy) << 1)
+    return (res << 58) | zn.interleave((ix, iy))
 
 
 def rowmajor(cid: int) -> int:

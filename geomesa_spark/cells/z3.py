@@ -1,22 +1,16 @@
-"""Z3 space-time curve (lon/lat/time, 21 bits per dimension) + binned time.
+"""Binned time: the time dimension of the Z3 and XZ3 curves.
 
-Semantics match the reference (zorder/sfcurve/Z3.scala, curve/Z3SFC.scala,
-curve/BinnedTime.scala): timestamps are split into a short epoch-period bin
-(days/weeks/months/years since 1970-01-01Z) plus an offset into the bin
-(millis/seconds/seconds/minutes respectively); the offset is normalized to 21
-bits and interleaved with lon/lat. A query spanning multiple bins plans one
-z-range set per bin.
+Semantics match the reference (curve/BinnedTime.scala): timestamps are split
+into a short epoch-period bin (days/weeks/months/years since 1970-01-01Z)
+plus an offset into the bin (millis/seconds/seconds/minutes respectively).
+``zn.Z3SFC`` normalizes the offset to 21 bits and interleaves it with
+lon/lat; a query spanning multiple bins plans one z-range set per bin.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
-
-import numpy as np
-
-from geomesa_spark.cells import zn
-from geomesa_spark.cells.z2 import NormalizedDimension, NormalizedLat, NormalizedLon
 
 EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 DAY_MS = 86_400_000
@@ -80,82 +74,3 @@ class BinnedTime:
             start = datetime(1970 + bt.bin, 1, 1, tzinfo=timezone.utc)
             return int(start.timestamp()) * 1000 + bt.offset * 60_000
         raise ValueError(period)
-
-    @staticmethod
-    def to_bin_np(millis: np.ndarray, period: str) -> np.ndarray:
-        """Vectorized bin (day/week only — the fixed-width periods; month/year
-        bins are computed natively in Spark SQL, see cell_functions)."""
-        if period == "day":
-            return millis // DAY_MS
-        if period == "week":
-            return millis // WEEK_MS
-        raise ValueError(f"vectorized binning supports day/week, got {period}")
-
-
-class Z3:
-    """Raw 3-D interleave: bits ...z1y1x1z0y0x0."""
-
-    @staticmethod
-    def encode(x: int, y: int, t: int) -> int:
-        return zn.split3(x) | (zn.split3(y) << 1) | (zn.split3(t) << 2)
-
-    @staticmethod
-    def decode(z: int) -> tuple[int, int, int]:
-        return zn.combine3(z), zn.combine3(z >> 1), zn.combine3(z >> 2)
-
-    @staticmethod
-    def encode_np(x: np.ndarray, y: np.ndarray, t: np.ndarray) -> np.ndarray:
-        return (zn.split3_np(x) | (zn.split3_np(y) << np.uint64(1))
-                | (zn.split3_np(t) << np.uint64(2)))
-
-    @staticmethod
-    def decode_np(z: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        return (zn.combine3_np(z), zn.combine3_np(z >> np.uint64(1)),
-                zn.combine3_np(z >> np.uint64(2)))
-
-
-class Z3SFC:
-    """Space-time curve for one time period (bin handled by the caller)."""
-
-    def __init__(self, period: str = "week", precision: int = 21):
-        if not (0 < precision < 22):
-            raise ValueError("precision must be in [1,21]")
-        self.period = period
-        self.precision = precision
-        self.lon = NormalizedLon(precision)
-        self.lat = NormalizedLat(precision)
-        self.time = NormalizedDimension(0.0, float(BinnedTime.max_offset(period)), precision)
-
-    def index(self, x: float, y: float, t: int, lenient: bool = False) -> int:
-        ok = (self.lon.min <= x <= self.lon.max and self.lat.min <= y <= self.lat.max
-              and self.time.min <= t <= self.time.max)
-        if not ok:
-            if not lenient:
-                raise ValueError(f"value(s) out of bounds: {x}, {y}, {t}")
-            x = min(max(x, self.lon.min), self.lon.max)
-            y = min(max(y, self.lat.min), self.lat.max)
-            t = int(min(max(t, self.time.min), self.time.max))
-        return Z3.encode(self.lon.normalize(x), self.lat.normalize(y), self.time.normalize(t))
-
-    def index_np(self, x: np.ndarray, y: np.ndarray, t: np.ndarray) -> np.ndarray:
-        xc = np.clip(x, self.lon.min, self.lon.max)
-        yc = np.clip(y, self.lat.min, self.lat.max)
-        tc = np.clip(t.astype(np.float64), self.time.min, self.time.max)
-        return Z3.encode_np(self.lon.normalize_np(xc), self.lat.normalize_np(yc),
-                            self.time.normalize_np(tc))
-
-    def invert(self, z: int) -> tuple[float, float, int]:
-        x, y, t = Z3.decode(z)
-        return self.lon.denormalize(x), self.lat.denormalize(y), int(self.time.denormalize(t))
-
-    def ranges(self, xy: list[tuple[float, float, float, float]],
-               times: list[tuple[int, int]], precision: int = 64,
-               max_ranges: int | None = None) -> list[zn.IndexRange]:
-        """Cover OR'd lon/lat boxes x offset-in-bin intervals with z ranges."""
-        zbounds = [(self.index(xmin, ymin, tmin), self.index(xmax, ymax, tmax))
-                   for (xmin, ymin, xmax, ymax) in xy for (tmin, tmax) in times]
-        return zn.zranges(zbounds, precision, max_ranges, dims=3)
-
-    @property
-    def whole_period(self) -> list[tuple[int, int]]:
-        return [(int(self.time.min), int(self.time.max))]

@@ -1,12 +1,18 @@
-"""Generic N-dimensional Morton (z-order) machinery.
+"""The Z-order (Morton) curve, written once for 2 and 3 dimensions.
 
 Semantics match the reference row-for-row (golden tests in
-``tests/test_cells.py``):
+``tests/test_cells.py``, ``tests/data/z_goldens.json``):
 
-* ``split2/combine2`` — interleave with 1 zero bit (2-D), 31 usable bits
-  (reference: zorder/sfcurve/Z2.scala:58-78).
-* ``split3/combine3`` — interleave with 2 zero bits (3-D), 21 usable bits
-  (reference: zorder/sfcurve/Z3.scala:75-97).
+* ``SPREAD`` — per dimension d, the bits per dimension and the
+  (shift, mask) steps that spread a value's bits d apart: 31 bits for
+  d = 2, 21 for d = 3 (reference: zorder/sfcurve/Z2.scala:58-78,
+  Z3.scala:75-97).  ``split``/``combine`` run the steps forwards and
+  backwards on Python ints or uint64 arrays; ``interleave``/``deinterleave``
+  lay d spread values side by side (``Z2``/``Z3`` are the raw encoders).
+* ``ZSFC`` — the curve over d ``NormalizedDimension``s: ``index``,
+  ``index_np``, ``invert``, ``ranges``.  ``Z2SFC`` (lon/lat) and ``Z3SFC``
+  (lon/lat/offset in a time bin) are constructors over it (reference:
+  curve/Z2SFC.scala, curve/Z3SFC.scala, curve/NormalizedDimension.scala).
 * ``zdivide`` — Tropf/Herzog LITMAX/BIGMIN ("Multidimensional Range Search in
   Dynamically Balanced Trees", H. Tropf & H. Herzog, 1981)
   (reference: zorder/sfcurve/ZN.scala:309-361).
@@ -15,9 +21,9 @@ Semantics match the reference row-for-row (golden tests in
   (reference: zorder/sfcurve/ZN.scala:110-242; defaults
   geomesa.scan.ranges.target=2000, recurse=7).
 
-Driver-side planning code: pure Python (arbitrary-precision ints, masked to
-64 bits). Executor-side encoding is numpy (``*_np`` variants) or native
-Catalyst expressions in ``functions/cell_functions.py``.
+Driver-side planning code is pure Python (arbitrary-precision ints, masked
+to 64 bits); the same table drives the numpy paths here and the Catalyst
+expressions in ``functions/cell_functions.py``.
 """
 
 from __future__ import annotations
@@ -27,99 +33,201 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from geomesa_spark.cells.z3 import BinnedTime
+
 M64 = (1 << 64) - 1
 
-# --- 2-D split/combine (magic-number bit spreading) -------------------------
+# --- the Morton spread --------------------------------------------------------
 
-_MASK2 = 0x7FFFFFFF  # 31 bits per dimension
+# d -> (bits per dimension, the (shift, mask) steps of the spread)
+SPREAD = {
+    2: (31, ((32, 0x00000000FFFFFFFF), (16, 0x0000FFFF0000FFFF),
+             (8, 0x00FF00FF00FF00FF), (4, 0x0F0F0F0F0F0F0F0F),
+             (2, 0x3333333333333333), (1, 0x5555555555555555))),
+    3: (21, ((32, 0x1F00000000FFFF), (16, 0x1F0000FF0000FF),
+             (8, 0x100F00F00F00F00F), (4, 0x10C30C30C30C30C3),
+             (2, 0x1249249249249249))),
+}
 
 
-def split2(value: int) -> int:
-    x = value & _MASK2
-    x = (x ^ (x << 32)) & 0x00000000FFFFFFFF
-    x = (x ^ (x << 16)) & 0x0000FFFF0000FFFF
-    x = (x ^ (x << 8)) & 0x00FF00FF00FF00FF
-    x = (x ^ (x << 4)) & 0x0F0F0F0F0F0F0F0F
-    x = (x ^ (x << 2)) & 0x3333333333333333
-    x = (x ^ (x << 1)) & 0x5555555555555555
+def _typed_table(bits, steps, k):
+    """(value mask, spread steps, gather steps), every constant made by ``k``.
+    Gathering undoes the spread steps in reverse order: undoing step i
+    shifts back by its shift and keeps the mask of step i - 1 (the value
+    mask for the first step)."""
+    value_mask = (1 << bits) - 1
+    shifts, masks = [s for s, _ in steps], [m for _, m in steps]
+    gather = zip(shifts[::-1], masks[-2::-1] + [value_mask])
+    return (k(value_mask), [(k(s), k(m)) for s, m in steps],
+            [(k(s), k(m)) for s, m in gather])
+
+
+# numpy 1.26 promotes uint64 mixed with a Python int to float64 in some
+# operations: the array paths use uint64 constants only
+_TABLES = {(d, np_): _typed_table(bits, steps, np.uint64 if np_ else int)
+           for d, (bits, steps) in SPREAD.items() for np_ in (False, True)}
+
+
+def split(v, d: int):
+    """Spread the low bits of ``v`` (an int or an integer array) d - 1 zero
+    bits apart."""
+    arr = isinstance(v, np.ndarray)
+    value_mask, steps, _ = _TABLES[d, arr]
+    x = (v.astype(np.uint64) if arr else v) & value_mask
+    for shift, mask in steps:
+        x = (x | (x << shift)) & mask
     return x
 
 
-def combine2(z: int) -> int:
-    x = z & 0x5555555555555555
-    x = (x ^ (x >> 1)) & 0x3333333333333333
-    x = (x ^ (x >> 2)) & 0x0F0F0F0F0F0F0F0F
-    x = (x ^ (x >> 4)) & 0x00FF00FF00FF00FF
-    x = (x ^ (x >> 8)) & 0x0000FFFF0000FFFF
-    x = (x ^ (x >> 16)) & 0x00000000FFFFFFFF
+def combine(z, d: int):
+    """Gather every d-th bit of ``z`` from bit 0: the inverse of ``split``."""
+    arr = isinstance(z, np.ndarray)
+    _, steps, gather = _TABLES[d, arr]
+    x = (z.astype(np.uint64) if arr else z) & steps[-1][1]
+    for shift, mask in gather:
+        x = (x ^ (x >> shift)) & mask
     return x
 
 
-# --- 3-D split/combine -------------------------------------------------------
-
-_MASK3 = 0x1FFFFF  # 21 bits per dimension
-
-
-def split3(value: int) -> int:
-    x = value & _MASK3
-    x = (x | x << 32) & 0x1F00000000FFFF
-    x = (x | x << 16) & 0x1F0000FF0000FF
-    x = (x | x << 8) & 0x100F00F00F00F00F
-    x = (x | x << 4) & 0x10C30C30C30C30C3
-    return (x | x << 2) & 0x1249249249249249
+def interleave(values):
+    """z of d = ``len(values)`` values: bit i of value k is bit i*d + k."""
+    d = len(values)
+    z = split(values[0], d)
+    for k in range(1, d):
+        v = split(values[k], d)
+        z = z | (v << (np.uint64(k) if isinstance(v, np.ndarray) else k))
+    return z
 
 
-def combine3(z: int) -> int:
-    x = z & 0x1249249249249249
-    x = (x ^ (x >> 2)) & 0x10C30C30C30C30C3
-    x = (x ^ (x >> 4)) & 0x100F00F00F00F00F
-    x = (x ^ (x >> 8)) & 0x1F0000FF0000FF
-    x = (x ^ (x >> 16)) & 0x1F00000000FFFF
-    x = (x ^ (x >> 32)) & _MASK3
-    return x
+def deinterleave(z, d: int) -> tuple:
+    """The d values interleaved in ``z``."""
+    if isinstance(z, np.ndarray):
+        return tuple(combine(z >> np.uint64(k), d) for k in range(d))
+    return tuple([combine(z >> k, d) for k in range(d)])
 
 
-# --- numpy vectorized variants (uint64 arrays) --------------------------------
+class ZN:
+    """The raw d-dimensional interleave: ``encode(*values)``/``decode(z)``;
+    the ``_np`` names are the same functions, for uint64 arrays."""
+
+    def __init__(self, d: int):
+        self.d = d
+
+    def encode(self, *values):
+        return interleave(values)
+
+    def decode(self, z):
+        return deinterleave(z, self.d)
+
+    encode_np, decode_np = encode, decode
 
 
-def split2_np(v: np.ndarray) -> np.ndarray:
-    x = v.astype(np.uint64) & np.uint64(_MASK2)
-    x = (x ^ (x << np.uint64(32))) & np.uint64(0x00000000FFFFFFFF)
-    x = (x ^ (x << np.uint64(16))) & np.uint64(0x0000FFFF0000FFFF)
-    x = (x ^ (x << np.uint64(8))) & np.uint64(0x00FF00FF00FF00FF)
-    x = (x ^ (x << np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    x = (x ^ (x << np.uint64(2))) & np.uint64(0x3333333333333333)
-    x = (x ^ (x << np.uint64(1))) & np.uint64(0x5555555555555555)
-    return x
+Z2, Z3 = ZN(2), ZN(3)
+
+# --- the curve ----------------------------------------------------------------
 
 
-def combine2_np(z: np.ndarray) -> np.ndarray:
-    x = z.astype(np.uint64) & np.uint64(0x5555555555555555)
-    x = (x ^ (x >> np.uint64(1))) & np.uint64(0x3333333333333333)
-    x = (x ^ (x >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    x = (x ^ (x >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-    x = (x ^ (x >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-    x = (x ^ (x >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-    return x
+class NormalizedDimension:
+    """Maps a double in [min,max] to an int in [0, 2^precision): the
+    reference's BitNormalizedDimension, with the floor clamped to the last
+    bin as the Catalyst side clamps it."""
+
+    def __init__(self, lo: float, hi: float, precision: int):
+        if not (0 < precision < 32):
+            raise ValueError("precision must be in [1,31]")
+        self.min, self.max, self.precision = lo, hi, precision
+        self.bins = 1 << precision
+        self.normalizer = self.bins / (hi - lo)
+        self.denormalizer = (hi - lo) / self.bins
+        self.max_index = self.bins - 1
+
+    def normalize(self, x: float) -> int:
+        if x >= self.max:
+            return self.max_index
+        return min(int(np.floor((x - self.min) * self.normalizer)), self.max_index)
+
+    def denormalize(self, x: int) -> float:
+        return self.min + (min(x, self.max_index) + 0.5) * self.denormalizer
+
+    def normalize_np(self, x: np.ndarray) -> np.ndarray:
+        out = np.minimum(np.floor((x - self.min) * self.normalizer), self.max_index)
+        return np.where(x >= self.max, self.max_index, out.astype(np.int64)).astype(np.uint64)
 
 
-def split3_np(v: np.ndarray) -> np.ndarray:
-    x = v.astype(np.uint64) & np.uint64(_MASK3)
-    x = (x | x << np.uint64(32)) & np.uint64(0x1F00000000FFFF)
-    x = (x | x << np.uint64(16)) & np.uint64(0x1F0000FF0000FF)
-    x = (x | x << np.uint64(8)) & np.uint64(0x100F00F00F00F00F)
-    x = (x | x << np.uint64(4)) & np.uint64(0x10C30C30C30C30C3)
-    return (x | x << np.uint64(2)) & np.uint64(0x1249249249249249)
+LON, LAT = (-180.0, 180.0), (-90.0, 90.0)
 
 
-def combine3_np(z: np.ndarray) -> np.ndarray:
-    x = z.astype(np.uint64) & np.uint64(0x1249249249249249)
-    x = (x ^ (x >> np.uint64(2))) & np.uint64(0x10C30C30C30C30C3)
-    x = (x ^ (x >> np.uint64(4))) & np.uint64(0x100F00F00F00F00F)
-    x = (x ^ (x >> np.uint64(8))) & np.uint64(0x1F0000FF0000FF)
-    x = (x ^ (x >> np.uint64(16))) & np.uint64(0x1F00000000FFFF)
-    x = (x ^ (x >> np.uint64(32))) & np.uint64(_MASK3)
-    return x
+def NormalizedLon(precision: int) -> NormalizedDimension:
+    return NormalizedDimension(*LON, precision)
+
+
+def NormalizedLat(precision: int) -> NormalizedDimension:
+    return NormalizedDimension(*LAT, precision)
+
+
+class ZSFC:
+    """Z-order curve over d = ``len(bounds)`` dimensions, ``precision`` bits
+    each: values are normalized per dimension, then interleaved."""
+
+    def __init__(self, bounds: tuple[tuple[float, float], ...], precision: int):
+        self.d = len(bounds)
+        bits = SPREAD[self.d][0]
+        if not (0 < precision <= bits):
+            raise ValueError(f"precision must be in [1,{bits}]")
+        self.precision = precision
+        self.dims = [NormalizedDimension(lo, hi, precision) for lo, hi in bounds]
+
+    def index(self, *values: float, lenient: bool = False) -> int:
+        if not all(n.min <= v <= n.max for n, v in zip(self.dims, values)):
+            if not lenient:
+                raise ValueError("value(s) out of bounds: " + ", ".join(map(str, values)))
+            values = [min(max(v, n.min), n.max) for n, v in zip(self.dims, values)]
+        return interleave([n.normalize(v) for n, v in zip(self.dims, values)])
+
+    def index_np(self, *values: np.ndarray) -> np.ndarray:
+        """Vectorized lenient index (values clamped to the bounds)."""
+        return interleave([n.normalize_np(np.clip(np.asarray(v, np.float64), n.min, n.max))
+                           for n, v in zip(self.dims, values)])
+
+    def invert(self, z: int) -> tuple[float, ...]:
+        return tuple(n.denormalize(v) for n, v in zip(self.dims, deinterleave(z, self.d)))
+
+    def ranges(self, boxes: list[tuple[float, ...]], precision: int = 64,
+               max_ranges: int | None = None) -> list[IndexRange]:
+        """Cover the OR'd boxes (d mins, then d maxes) with z ranges."""
+        d = self.d
+        zbounds = [(self.index(*b[:d]), self.index(*b[d:])) for b in boxes]
+        return zranges(zbounds, precision, max_ranges, dims=d)
+
+
+class Z2SFC(ZSFC):
+    """Lon/lat curve at a given precision (default 31 bits/dim, 62-bit z);
+    ``ranges`` takes (xmin, ymin, xmax, ymax) boxes."""
+
+    def __init__(self, precision: int = 31):
+        super().__init__((LON, LAT), precision)
+        self.lon, self.lat = self.dims
+
+
+class Z3SFC(ZSFC):
+    """Space-time curve for one time period (bin handled by the caller):
+    lon, lat and the offset into the bin, 21 bits/dim by default."""
+
+    def __init__(self, period: str = "week", precision: int = 21):
+        super().__init__((LON, LAT, (0.0, float(BinnedTime.max_offset(period)))), precision)
+        self.period = period
+        self.lon, self.lat, self.time = self.dims
+
+    def invert(self, z: int) -> tuple[float, float, int]:
+        x, y, t = super().invert(z)
+        return x, y, int(t)
+
+    def ranges(self, xy: list[tuple[float, float, float, float]],
+               times: list[tuple[int, int]], precision: int = 64,
+               max_ranges: int | None = None) -> list[IndexRange]:
+        """Cover OR'd lon/lat boxes x offset-in-bin intervals with z ranges."""
+        return super().ranges([(x0, y0, t0, x1, y1, t1) for (x0, y0, x1, y1) in xy
+                               for (t0, t1) in times], precision, max_ranges)
 
 
 # --- ranges -------------------------------------------------------------------
@@ -140,35 +248,31 @@ class _Dim:
 
     def __init__(self, dims: int):
         self.dims = dims
-        if dims == 2:
-            self.split, self.combine = split2, combine2
-            self.bits_per_dim, self.total_bits, self.max_mask = 31, 62, _MASK2
-        elif dims == 3:
-            self.split, self.combine = split3, combine3
-            self.bits_per_dim, self.total_bits, self.max_mask = 21, 63, _MASK3
-        else:
-            raise ValueError(f"unsupported dims {dims}")
+        self.bits_per_dim = SPREAD[dims][0]
+        self.total_bits = dims * self.bits_per_dim
+        self.max_mask = (1 << self.bits_per_dim) - 1
 
-    def decode(self, z: int) -> tuple[int, ...]:
-        return tuple(self.combine(z >> d) for d in range(self.dims))
-
-    def contains(self, rng: tuple[int, int], value_rng: tuple[int, int]) -> bool:
-        rmin, rmax = self.decode(rng[0]), self.decode(rng[1])
-        vmin, vmax = self.decode(value_rng[0]), self.decode(value_rng[1])
-        return all(vmin[d] >= rmin[d] and vmax[d] <= rmax[d] for d in range(self.dims))
-
-    def overlaps(self, rng: tuple[int, int], value_rng: tuple[int, int]) -> bool:
-        rmin, rmax = self.decode(rng[0]), self.decode(rng[1])
-        vmin, vmax = self.decode(value_rng[0]), self.decode(value_rng[1])
-        return all(max(rmin[d], vmin[d]) <= min(rmax[d], vmax[d]) for d in range(self.dims))
+    def box(self, rng: tuple[int, int]) -> tuple[tuple[int, ...], tuple[int, ...]]:
+        """The user-space (mins, maxes) of a z range's endpoints."""
+        return deinterleave(rng[0], self.dims), deinterleave(rng[1], self.dims)
 
     def load(self, target: int, p: int, bits: int, dim: int) -> int:
         """Overwrite ``bits`` high bits of dimension ``dim`` in ``target`` with ``p``."""
-        mask = ~(self.split(self.max_mask >> (self.bits_per_dim - bits)) << dim) & M64
-        return (target & mask) | (self.split(p) << dim)
+        mask = ~(split(self.max_mask >> (self.bits_per_dim - bits), self.dims) << dim) & M64
+        return (target & mask) | (split(p, self.dims) << dim)
 
 
-_DIMS = {2: _Dim(2), 3: _Dim(3)}
+def _contains(box, value_box) -> bool:
+    """ZN.contains on decoded boxes: ``value_box`` inside ``box``."""
+    return all(r0 <= v0 and v1 <= r1 for r0, r1, v0, v1 in zip(*box, *value_box))
+
+
+def _overlaps(box, value_box) -> bool:
+    """ZN.overlaps on decoded boxes: the two boxes intersect."""
+    return all(max(r0, v0) <= min(r1, v1) for r0, r1, v0, v1 in zip(*box, *value_box))
+
+
+_DIMS = {d: _Dim(d) for d in SPREAD}
 
 DEFAULT_RECURSE = 7
 DEFAULT_MAX_RANGES = 2000  # geomesa.scan.ranges.target
@@ -226,13 +330,15 @@ def zcut(rng: tuple[int, int], xd: int, in_range: bool,
 def zrange_contains(rng: tuple[int, int], value_rng: tuple[int, int],
                     dims: int = 2) -> bool:
     """ZN.contains: value range's user-space box inside rng's box."""
-    return _DIMS[dims].contains(rng, value_rng)
+    d = _DIMS[dims]
+    return _contains(d.box(rng), d.box(value_rng))
 
 
 def zrange_overlaps(rng: tuple[int, int], value_rng: tuple[int, int],
                     dims: int = 2) -> bool:
     """ZN.overlaps: user-space boxes of the two z ranges intersect."""
-    return _DIMS[dims].overlaps(rng, value_rng)
+    d = _DIMS[dims]
+    return _overlaps(d.box(rng), d.box(value_rng))
 
 
 def _longest_common_prefix(dims: _Dim, *values: int) -> tuple[int, int]:
@@ -259,20 +365,16 @@ def zranges(zbounds: list[tuple[int, int]], precision: int = 64,
     common_prefix, common_bits = _longest_common_prefix(d, *flat)
     offset = 64 - common_bits
 
-    def is_contained(rng: tuple[int, int]) -> bool:
-        return any(d.contains(b, rng) for b in zbounds)
-
-    def is_overlapped(rng: tuple[int, int]) -> bool:
-        return any(d.overlaps(b, rng) for b in zbounds)
+    boxes = [d.box(b) for b in zbounds]
 
     def check_value(prefix: int, quadrant: int) -> None:
         lo = (prefix | (quadrant << offset)) & M64
         hi = (lo | ((1 << offset) - 1)) & M64
-        rng = (lo, hi)
-        if is_contained(rng) or offset < 64 - precision:
+        cell = d.box((lo, hi))
+        if any(_contains(b, cell) for b in boxes) or offset < 64 - precision:
             ranges.append(IndexRange(lo, hi, True))
-        elif is_overlapped(rng):
-            remaining.append(rng)
+        elif any(_overlaps(b, cell) for b in boxes):
+            remaining.append((lo, hi))
 
     def bottom_out() -> None:
         while remaining:

@@ -55,7 +55,7 @@ def q_strategy_z3(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = SpatialQuery(bbox=S_BBOX, interval=S_INTERVAL,
                      where="event_type = 'click'")
     indexed = lay.read_indexed(spark, path)
-    return (scan_with_strategy(indexed, q, strategy, period="week")
+    return (scan_with_strategy(indexed, q, strategy)
             .select("event_id", "user_id"))
 
 

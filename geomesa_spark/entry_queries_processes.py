@@ -610,29 +610,10 @@ def q_s2_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve/S2SFC.scala:37-64).  Oracle is the plain bbox filter: the
     covering can only over-select (golden-tested cover property), the
     refine makes it exact."""
-    from functools import reduce
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType
-
-    from geomesa_spark.cells.s2 import S2SFC
-    sfc = S2SFC(0, 30, 1, 8)
-
-    def leaf(lon, lat):
-        return pd.Series(sfc.index_np(lon.to_numpy(np.float64),
-                                      lat.to_numpy(np.float64)))
-
-    # explicit annotations: `from __future__ import annotations` stringifies
-    # inline hints, which pandas_udf cannot resolve
-    leaf.__annotations__ = {"lon": pd.Series, "lat": pd.Series,
-                            "return": pd.Series}
-    udf = F.pandas_udf(leaf, LongType())
-    df = geo_events(spark, sf_dir).withColumn("s2", udf("lon", "lat"))
-    ranges = sfc.ranges([(40.0, 20.0, 50.0, 30.0)])
-    pre = reduce(lambda a, c: a | c,
-                 [F.col("s2").between(r.lower, r.upper) for r in ranges])
-    return (df.where(pre)
+    from geomesa_spark.functions.cell_functions import s2_col
+    from geomesa_spark.plans.cover import s2_range_predicate
+    df = geo_events(spark, sf_dir).withColumn("s2", s2_col(F.col("lon"), F.col("lat")))
+    return (df.where(s2_range_predicate("s2", [(40.0, 20.0, 50.0, 30.0)], max_cells=8))
             .where("lon BETWEEN 40.0 AND 50.0 AND lat BETWEEN 20.0 AND 30.0")
             .select("event_id"))
 

@@ -40,6 +40,10 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from geomesa_spark.cells.zn import Z2SFC
+
+_Z2 = Z2SFC()
+
 
 def _scala_round(x: float) -> int:
     """Scala/Java ``math.round(double)``: floor(x + 0.5) as a long."""
@@ -237,13 +241,12 @@ class GeometryBinning(WholeNumberBinning):
 
     @staticmethod
     def _z(geom) -> int:
-        from geomesa_spark.cells.z2 import Z2SFC
         from geomesa_spark.geom.wkt import wkt_loads
         if isinstance(geom, str):
             geom = wkt_loads(geom)
         c = geom if getattr(geom, "geom_type", "") == "Point" \
             else geom.centroid()
-        return Z2SFC().index(c.x, c.y, lenient=True)
+        return _Z2.index(c.x, c.y, lenient=True)
 
     def index_of(self, geom) -> int:                   # noqa: D102
         return super().index_of(self._z(geom))

@@ -15,59 +15,46 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS, BinnedTime
+from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS
+from geomesa_spark.cells.zn import (SPREAD, NormalizedDimension, NormalizedLat,
+                                    NormalizedLon, Z2SFC, Z3SFC, ZSFC)
 from geomesa_spark.geom.gh_decompose import _BASE32 as _GH_BASE32
 
-# --- Morton spreading with magic masks (identical constants to cells/zn.py) --
 
-_M2 = [
-    (32, 0x00000000FFFFFFFF),
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
-
-_M3 = [
-    (32, 0x1F00000000FFFF),
-    (16, 0x1F0000FF0000FF),
-    (8, 0x100F00F00F00F00F),
-    (4, 0x10C30C30C30C30C3),
-    (2, 0x1249249249249249),
-]
-
-
-def split2_col(v: Column) -> Column:
-    x = v.bitwiseAND(F.lit(0x7FFFFFFF))
-    for shift, mask in _M2:
-        x = x.bitwiseXOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
-    return x
-
-
-def split3_col(v: Column) -> Column:
-    x = v.bitwiseAND(F.lit(0x1FFFFF))
-    for shift, mask in _M3:
+def split_col(v: Column, d: int) -> Column:
+    """``zn.split`` as Catalyst bit arithmetic, from the same table."""
+    bits, steps = SPREAD[d]
+    x = v.bitwiseAND(F.lit((1 << bits) - 1))
+    for shift, mask in steps:
         x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
     return x
 
 
-def _normalize_col(x: Column, lo: float, hi: float, precision: int) -> Column:
-    """floor((x-lo) * 2^p/(hi-lo)) with the upper bound clamped to 2^p - 1;
-    inputs outside [lo,hi] are clamped (lenient mode) — matches
-    NormalizedDimension.BitNormalizedDimension semantics."""
-    bins = 1 << precision
-    normalizer = bins / (hi - lo)
-    clamped = F.least(F.greatest(x, F.lit(float(lo))), F.lit(float(hi)))
-    n = F.floor((clamped - F.lit(float(lo))) * F.lit(normalizer)).cast("long")
-    return F.least(n, F.lit(bins - 1))
+def interleave_col(values: list[Column]) -> Column:
+    """``zn.interleave``: bit i of value k is bit i*d + k."""
+    d = len(values)
+    z = split_col(values[0], d)
+    for k in range(1, d):
+        z = z.bitwiseOR(F.shiftleft(split_col(values[k], d), k))
+    return z
+
+
+def _normalize_col(x: Column, dim: NormalizedDimension) -> Column:
+    """``dim.normalize`` with inputs outside [min,max] clamped (lenient
+    mode): floor((x-min) * 2^p/(max-min)), at most 2^p - 1."""
+    clamped = F.least(F.greatest(x, F.lit(float(dim.min))), F.lit(float(dim.max)))
+    n = F.floor((clamped - F.lit(float(dim.min))) * F.lit(dim.normalizer)).cast("long")
+    return F.least(n, F.lit(dim.max_index))
+
+
+def _index_col(sfc: ZSFC, *values: Column) -> Column:
+    """``sfc.index(*values, lenient=True)`` as a native expression."""
+    return interleave_col([_normalize_col(v, n) for v, n in zip(values, sfc.dims)])
 
 
 def z2_col(lon: Column, lat: Column, precision: int = 31) -> Column:
     """62-bit Z2 index of a point — bit-identical to Z2SFC(precision).index."""
-    nx = _normalize_col(lon, -180.0, 180.0, precision)
-    ny = _normalize_col(lat, -90.0, 90.0, precision)
-    return split2_col(nx).bitwiseOR(F.shiftleft(split2_col(ny), 1))
+    return _index_col(Z2SFC(precision), lon, lat)
 
 
 GEOHASH_CHARS = 7  # key width of a geohash layout (sources/layout.py)
@@ -88,12 +75,9 @@ def geohash_col(lon: Column, lat: Column, chars: int = GEOHASH_CHARS) -> Column:
     total = 5 * chars
     lon_bits = (total + 1) // 2
     lat_bits = total // 2
-    nx = _normalize_col(lon, -180.0, 180.0, lon_bits)
-    ny = _normalize_col(lat, -90.0, 90.0, lat_bits)
-    if total % 2:
-        gh = split2_col(nx).bitwiseOR(F.shiftleft(split2_col(ny), 1))
-    else:
-        gh = F.shiftleft(split2_col(nx), 1).bitwiseOR(split2_col(ny))
+    nx = _normalize_col(lon, NormalizedLon(lon_bits))
+    ny = _normalize_col(lat, NormalizedLat(lat_bits))
+    gh = interleave_col([nx, ny] if total % 2 else [ny, nx])
     alphabet = F.array(*[F.lit(c) for c in _GH_BASE32])
     return F.concat(*[
         F.element_at(alphabet,
@@ -137,36 +121,27 @@ def time_offset_col(ts: Column, period: str = "week") -> Column:
 def z3_col(lon: Column, lat: Column, ts: Column, period: str = "week",
            precision: int = 21) -> Column:
     """63-bit Z3 index (within-bin) — combine with time_bin_col for the full key."""
-    nx = _normalize_col(lon, -180.0, 180.0, precision)
-    ny = _normalize_col(lat, -90.0, 90.0, precision)
-    max_off = float(BinnedTime.max_offset(period))
-    nt = _normalize_col(time_offset_col(ts, period).cast("double"), 0.0, max_off, precision)
-    return (split3_col(nx)
-            .bitwiseOR(F.shiftleft(split3_col(ny), 1))
-            .bitwiseOR(F.shiftleft(split3_col(nt), 2)))
+    return _index_col(Z3SFC(period, precision), lon, lat,
+                      time_offset_col(ts, period).cast("double"))
+
+
+def _grid_xy(lon: Column, lat: Column, n: int, kind: str = "long") -> tuple[Column, Column]:
+    """A point's clamped (ix, iy) on the n x n lon/lat grid (``grid.xy_sql``)."""
+    return tuple(F.least(F.greatest(F.floor((c + F.lit(o)) / F.lit(w) * F.lit(n)).cast(kind),
+                                    F.lit(0)), F.lit(n - 1))
+                 for c, o, w in ((lon, 180.0, 360.0), (lat, 90.0, 180.0)))
 
 
 def cell_col(lon: Column, lat: Column, res: int) -> Column:
     """Hierarchical grid cell id ((res<<58) | morton) — cells/grid.py parity."""
-    n = 1 << res
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long"),
-                            F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n)).cast("long"),
-                            F.lit(0)), F.lit(n - 1))
-    z = split2_col(ix).bitwiseOR(F.shiftleft(split2_col(iy), 1))
-    return F.lit(res << 58).bitwiseOR(z)
+    return F.lit(res << 58).bitwiseOR(interleave_col(_grid_xy(lon, lat, 1 << res)))
 
 
 def tile_cols(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
     """(tx, ty) tile coordinates at a zoom level (2^zoom x 2^zoom plate carrée
     grid; ty increases northward). Floor semantics match GridSnap
     (reference: utils/geotools/GridSnap.scala:23)."""
-    n = 1 << zoom
-    tx = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("int"),
-                            F.lit(0)), F.lit(n - 1))
-    ty = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n)).cast("int"),
-                            F.lit(0)), F.lit(n - 1))
-    return tx, ty
+    return _grid_xy(lon, lat, 1 << zoom, "int")
 
 
 def pixel_cols(lon: Column, lat: Column, xmin: float, ymin: float, xmax: float,
@@ -214,12 +189,8 @@ def cell_disk_col(lon: Column, lat: Column, res: int, k: int = 1) -> Column:
     pure Catalyst (longitude wraps, latitude clamps, duplicates removed).
     This is the write-side companion of the kNN ring expansion."""
     n = 1 << res
-    ix = F.least(F.greatest(
-        F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long"),
-        F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(
-        F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n)).cast("long"),
-        F.lit(0)), F.lit(n - 1))
+    ix, iy = _grid_xy(lon, lat, n)
+
     def shift(d, col, wrap):
         v = col + F.lit(d)
         if wrap:

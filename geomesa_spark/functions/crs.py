@@ -131,7 +131,12 @@ def _q_const(phi: float, e: float) -> float:
 
 
 def _atanh(x: Column) -> Column:
-    return 0.5 * F.log((1.0 + x) / (1.0 - x))
+    """atanh, null (NaN on numpy) at and beyond its poles +-1: a
+    transverse-mercator point 90 degrees from the central meridian, or at
+    a geographic pole, has no image, and under ANSI mode the division
+    would fail the whole job."""
+    return F.when((x > -1.0) & (x < 1.0), 0.5 * F.log((1.0 + x) / (1.0 - x))) \
+        .otherwise(F.lit(None))
 
 
 def _t_col(phi: Column, e: float) -> Column:
@@ -877,7 +882,7 @@ class _NpMath:
 def _np_math() -> "_NpMath":
     import numpy as np
     m = _NpMath()
-    m.lit = lambda v: v
+    m.lit = lambda v: np.nan if v is None else v
     m.when = _NpWhen
     m.pow = np.power
     m.atan2 = np.arctan2

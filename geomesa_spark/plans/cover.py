@@ -22,11 +22,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
-from geomesa_spark.cells.z2 import Z2SFC
-from geomesa_spark.cells.zn import DEFAULT_MAX_RANGES, IndexRange
+from geomesa_spark.cells.zn import DEFAULT_MAX_RANGES, IndexRange, Z2SFC
 from geomesa_spark.geom import model
 
-_Z2 = Z2SFC(31)
+_Z2 = Z2SFC()
 
 
 def z2_ranges(boxes: list[tuple[float, float, float, float]],

@@ -29,7 +29,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_COUNT_GUESS = 100  # StrategyDecider.scala:157 getCount fallback
@@ -296,8 +296,7 @@ def select_strategy(spec: QuerySpec, indices: list[str],
 # strategy execution (the QueryRunner half: chosen index -> pruned scan)
 # ---------------------------------------------------------------------------
 
-def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
-                       period: str = "week") -> DataFrame:
+def scan_with_strategy(df: DataFrame, query, strategy: Strategy) -> DataFrame:
     """Execute a SpatialQuery over an indexed layout using the CHOSEN
     strategy's primary predicate as the scan prefilter, then the query's
     full exact predicate (the residual) — the QueryRunner/IndexAdapter
@@ -305,13 +304,14 @@ def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
 
     The prefilter targets STORED index columns (z2/s2/time_bin written by
     sources/layout.write_indexed) so it prunes partitions/files; the
+    time_bin prefilter counts bins in the period the layout recorded in
+    the time column's metadata, and is skipped when none is recorded.  The
     exact predicate guarantees the result is identical to running the
     query without the index (cover property), asserted in tests.
     Unknown/`full` strategies run the plain query.
     """
-    import datetime as _dt
-
     from geomesa_spark.plans import cover as _cover
+    from geomesa_spark.sources.layout import TIME_BIN_PERIOD
 
     pre = None
     if strategy.index in ("z2", "z3") and query.bbox is not None \
@@ -319,9 +319,10 @@ def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
         pre = _cover.z2_range_predicate("z2", [tuple(query.bbox)])
         if strategy.index == "z3" and query.interval is not None \
                 and "time_bin" in df.columns:
-            b0, b1 = (_interval_bins(query.interval, period))
-            if b0 is not None:
-                pre = pre & F.col("time_bin").between(b0, b1)
+            period = df.schema[query.ts_col].metadata.get(TIME_BIN_PERIOD) \
+                if query.ts_col in df.columns else None
+            if period is not None:
+                pre = pre & _interval_bins(query.interval, period)
     elif strategy.index == "s2" and query.bbox is not None \
             and "s2" in df.columns:
         pre = _cover.s2_range_predicate("s2", [tuple(query.bbox)])
@@ -333,25 +334,21 @@ def scan_with_strategy(df: DataFrame, query, strategy: Strategy,
     return query.apply(scanned)
 
 
-def _interval_bins(interval, period: str):
-    import datetime as dt
+def _interval_bins(interval, period: str) -> Column:
+    """``time_bin`` within the bins of the interval's given ends, each bin
+    computed by the layout's own ``time_bin_col`` on the literal end
+    (numbers are epoch seconds; strings are cast as the query's predicate
+    casts them)."""
+    from geomesa_spark.functions.cell_functions import time_bin_col
 
-    from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS
-    per_ms = {"day": DAY_MS, "week": WEEK_MS}.get(period)
-    if per_ms is None:
-        return None, None
+    def bin_of(v):
+        ts = F.timestamp_seconds(F.lit(v)) if isinstance(v, (int, float)) else F.lit(v)
+        return time_bin_col(ts, period)
 
-    def to_ms(v):
-        if v is None:
-            return None
-        if isinstance(v, (int, float)):
-            return int(v * 1000)
-        return int(dt.datetime.fromisoformat(str(v))
-                   .replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-
-    lo, hi = to_ms(interval[0]), to_ms(interval[1])
-    if lo is None and hi is None:
-        return None, None
-    b0 = lo // per_ms if lo is not None else 0
-    b1 = hi // per_ms if hi is not None else (1 << 31)
-    return b0, b1
+    lo, hi = interval
+    pred = F.lit(True)
+    if lo is not None:
+        pred = pred & (F.col("time_bin") >= bin_of(lo))
+    if hi is not None:
+        pred = pred & (F.col("time_bin") <= bin_of(hi))
+    return pred

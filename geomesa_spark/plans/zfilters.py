@@ -34,8 +34,8 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass
 
-from geomesa_spark.cells.z2 import Z2, Z2SFC
-from geomesa_spark.cells.z3 import Z3, Z3SFC, BinnedTime
+from geomesa_spark.cells.z3 import BinnedTime
+from geomesa_spark.cells.zn import Z2SFC, Z3SFC, deinterleave
 
 _RANGE_SEP = ":"
 _TERM_SEP = ";"
@@ -69,7 +69,7 @@ class Z2RowFilter:
 
     def in_bounds(self, buf: bytes, offset: int = 0) -> bool:
         z = struct.unpack_from(">q", buf, offset)[0]
-        x, y = Z2.decode(z)
+        x, y = deinterleave(z, 2)
         return any(b[0] <= x <= b[2] and b[1] <= y <= b[3] for b in self.xy)
 
     def to_bytes(self) -> bytes:
@@ -139,7 +139,7 @@ class Z3RowFilter:
         return self._point_in_bounds(z) and self._time_in_bounds(epoch, z)
 
     def _point_in_bounds(self, z: int) -> bool:
-        x, y, _ = Z3.decode(z)
+        x, y, _ = deinterleave(z, 3)
         return any(b[0] <= x <= b[2] and b[1] <= y <= b[3] for b in self.xy)
 
     def _time_in_bounds(self, epoch: int, z: int) -> bool:
@@ -148,7 +148,7 @@ class Z3RowFilter:
         bounds = self.t[epoch - self.min_epoch]
         if bounds is None:
             return True
-        time = Z3.decode(z)[2]
+        time = deinterleave(z, 3)[2]
         return any(lo <= time <= hi for lo, hi in bounds)
 
     # -- byte codec (Z3Filter.scala:112-153) ----------------------------------

@@ -22,7 +22,6 @@ the classpath):
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -36,6 +35,8 @@ from geomesa_spark.functions.cell_functions import (geohash_col, s2_col,
                                                     z2_col)
 
 MANIFEST = "_manifest.json"
+# time-column metadata key: the period time_bin counts that column in
+TIME_BIN_PERIOD = "time_bin_period"
 
 # cell-curve kind -> (the key column it writes, its expression)
 _CELL_KEYS = {"z2": ("z2", z2_col), "s2": ("s2", s2_col),
@@ -87,19 +88,23 @@ def ensure_indexed(df: DataFrame, path: str, *, period: str = "week",
     layout at ingest and queries only scan it — rebuilding a deterministic
     layout per query measures the writer, not the query plan.  The manifest
     check covers every parameter that shapes the table (cell curve, period,
-    salts and key, partitions, format, columns); same-shaped but different
-    DATA at the same path is the caller's contract, as for the IVF index.
+    salts and key, partitions, format, columns, the period recorded on the
+    time column); same-shaped but different DATA at the same path is the
+    caller's contract, as for the IVF index.
     """
     spark = df.sparkSession
     try:
         m = read_manifest(spark, path)
+        recorded = [f["metadata"].get(TIME_BIN_PERIOD)
+                    for f in m["schema"]["fields"] if f["name"] == ts_col]
         if (m.get("period"), m.get("cell"), m.get("n_salts"),
                 m.get("salt_key"), m.get("target_partitions"),
                 m.get("format"), m.get("columns"), m.get("lon_col"),
-                m.get("lat_col"), m.get("ts_col")) == \
+                m.get("lat_col"), m.get("ts_col"), recorded) == \
                 (period, cell, n_salts, _salt_key(id_col, lon_col, n_salts),
                  _partitions(spark, target_partitions), fmt, df.columns,
-                 lon_col, lat_col, ts_col):
+                 lon_col, lat_col, ts_col,
+                 [period] if ts_col in df.columns else []):
             return read_indexed(spark, path)
     except Exception:
         pass
@@ -218,10 +223,15 @@ def _index_columns(df: DataFrame, manifest: dict) -> DataFrame:
     name, key = _CELL_KEYS[cell]
     out = df.withColumn(name, key(F.col(manifest["lon_col"]),
                                   F.col(manifest["lat_col"])))
-    ts_col = manifest["ts_col"]
-    out = out.withColumn("time_bin",
-                         time_bin_col(F.col(ts_col), manifest["period"])
-                         if ts_col in df.columns else F.lit(0))
+    ts_col, period = manifest["ts_col"], manifest["period"]
+    if ts_col in df.columns:
+        # the time column records the period time_bin counts it in: a
+        # reader keeps the metadata of file columns (footers, the manifest
+        # schema), not of partition columns
+        out = out.withMetadata(ts_col, {**df.schema[ts_col].metadata, TIME_BIN_PERIOD: period}) \
+            .withColumn("time_bin", time_bin_col(F.col(ts_col), period))
+    else:
+        out = out.withColumn("time_bin", F.lit(0))
     if manifest.get("n_salts", 0) > 0:
         salt_key = manifest.get("salt_key") or manifest["lon_col"]
         out = out.withColumn("salt", salt_col(F.col(salt_key),

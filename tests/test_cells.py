@@ -16,8 +16,9 @@ from geomesa_spark.cells import zn
 from geomesa_spark.cells.grid import (cell_bounds, cell_id, cell_xy, cover_bbox,
                                       disk, from_xy, ring)
 from geomesa_spark.cells.xz import XZ2SFC
-from geomesa_spark.cells.z2 import Z2, Z2SFC, NormalizedLat, NormalizedLon
-from geomesa_spark.cells.z3 import Z3, Z3SFC, BinnedTime
+from geomesa_spark.cells.z3 import BinnedTime
+from geomesa_spark.cells.zn import (Z2, Z2SFC, Z3, Z3SFC, NormalizedLat,
+                                    NormalizedLon)
 
 
 class TestZ2:
@@ -115,6 +116,110 @@ class TestZ2SFC:
             self.sfc.index(-181, 0)
         assert self.sfc.index(-181, 0, lenient=True) == self.sfc.index(-180, 0)
 
+
+
+class TestZGoldens:
+    """The one Z curve against literal outputs of the separate Z2/Z3
+    implementations it replaced (tests/data/z_goldens.json): index, index_np
+    and invert of the reference fixtures, seeded random points and the
+    lon/lat edges, lenient clamping with its error texts, Z3 at every
+    period, and the range covers of the TestZ2SFC/TestZ3SFC windows at
+    max_ranges None and 64."""
+
+    @pytest.fixture(scope="class")
+    def gold(self):
+        import json
+        import pathlib
+        path = pathlib.Path(__file__).parent / "data" / "z_goldens.json"
+        return json.loads(path.read_text())
+
+    @staticmethod
+    def _ranges(rs):
+        return [[r.lower, r.upper, int(r.contained)] for r in rs]
+
+    def test_z2_index_invert(self, gold):
+        g, sfc = gold["z2"], Z2SFC()
+        pts = [tuple(p) for p in g["points"]]
+        assert [sfc.index(x, y) for x, y in pts] == g["index"]
+        assert [list(sfc.invert(z)) for z in g["index"]] == g["invert"]
+        assert [Z2SFC(16).index(x, y) for x, y in pts[:40]] == g["precision_16"]
+        out = [tuple(p) for p in g["out_of_bounds"]]
+        assert [sfc.index(x, y, lenient=True) for x, y in out] == g["lenient"]
+        for (x, y), msg in zip(out, g["errors"]):
+            with pytest.raises(ValueError) as e:
+                sfc.index(x, y)
+            assert str(e.value) == msg
+        xs, ys = np.array(pts + out).T
+        assert sfc.index_np(xs, ys).tolist() == g["index_np"]
+
+    def test_z2_ranges(self, gold):
+        g, sfc = gold["z2"], Z2SFC()
+        windows = [tuple(w) for w in g["windows"]]
+        assert [self._ranges(sfc.ranges([w])) for w in windows] == g["ranges_none"]
+        assert [self._ranges(sfc.ranges([w], max_ranges=64))
+                for w in windows] == g["ranges_64"]
+        assert self._ranges(sfc.ranges(windows[1:4], max_ranges=64)) == g["ranges_multi_64"]
+
+    @pytest.mark.parametrize("period", ["day", "week", "month", "year"])
+    def test_z3_index_invert(self, gold, period):
+        g, sfc = gold["z3"][period], Z3SFC(period)
+        pts = [tuple(p) + (t,) for p, t in zip(gold["z2"]["points"], g["t"])]
+        assert [sfc.index(*p) for p in pts] == g["index"]
+        assert [list(sfc.invert(z)) for z in g["index"]] == g["invert"]
+        out = [tuple(p) for p in g["out_of_bounds"]]
+        assert [sfc.index(*p, lenient=True) for p in out] == g["lenient"]
+        for p, msg in zip(out, g["errors"]):
+            with pytest.raises(ValueError) as e:
+                sfc.index(*p)
+            assert str(e.value) == msg
+        xs, ys, ts = np.array(pts + out).T
+        assert sfc.index_np(xs, ys, ts.astype(np.int64)).tolist() == g["index_np"]
+
+    @pytest.mark.parametrize("period", ["day", "week", "month", "year"])
+    def test_z3_ranges(self, gold, period):
+        g, sfc = gold["z3"][period], Z3SFC(period)
+        windows = [tuple(w) for w in gold["z3_windows"]]
+        times = [tuple(t) for t in g["times"]]
+        assert [[self._ranges(sfc.ranges([w], [t], max_ranges=64)) for t in times]
+                for w in windows] == g["ranges_64"]
+        want = [self._ranges(sfc.ranges([windows[1]], [t])) for t in times]
+        if period == "week":   # the TestZ3SFC window over the whole week
+            want.append(self._ranges(sfc.ranges([windows[0]], times[:1])))
+        assert want == g["ranges_none"]
+
+    def test_precision_errors(self, gold):
+        errors = []
+        for make in (lambda: Z2SFC(0), lambda: Z2SFC(32), lambda: Z3SFC("week", 22)):
+            with pytest.raises(ValueError) as e:
+                make()
+            errors.append(str(e.value))
+        assert errors == gold["precision_errors"]
+
+    def test_normalize_clamps_below_the_upper_bound(self):
+        """Just below the upper bound the floor can round up to 2^p: the
+        scalar and numpy paths clamp it to the last bin, as z2_col does,
+        instead of letting the spread mask wrap it to bin 0."""
+        x = np.nextafter(180.0, 0.0)
+        for p in (21, 31):
+            dim = NormalizedLon(p)
+            assert np.floor((x - dim.min) * dim.normalizer) == dim.bins
+            assert dim.normalize(x) == dim.max_index
+            assert dim.normalize_np(np.array([x])).tolist() == [dim.max_index]
+        assert Z2SFC().index(x, 0.0) == Z2SFC().index(180.0, 0.0)
+
+    def test_split_combine_match_table(self):
+        """split/combine on ints and uint64 arrays agree, for every value
+        width and with values wider than the table's bits masked off."""
+        from geomesa_spark.cells.zn import SPREAD, combine, split
+        rng = np.random.default_rng(5)
+        for d, (bits, _) in SPREAD.items():
+            v = rng.integers(0, 1 << 40, 500, dtype=np.uint64)
+            s = split(v, d)
+            assert s.dtype == np.uint64
+            assert s.tolist() == [split(int(x), d) for x in v]
+            assert combine(s, d).tolist() == (v & np.uint64((1 << bits) - 1)).tolist()
+            assert [combine(int(x), d) for x in s] == combine(s, d).tolist()
+            assert (s & ~np.uint64(SPREAD[d][1][-1][1])).max() == 0
 
 class TestZ3:
     def test_interlaces(self):

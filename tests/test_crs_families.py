@@ -18,6 +18,7 @@ polar stereographic) natively.
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -255,6 +256,22 @@ class TestTransverseMercator:
         for (lon, lat, e, n), g, xe, yn in zip(rows, got, ex, ny):
             assert abs(g.x2 - e) < 1e-9 and abs(g.y2 - n) < 1e-9, (lon, lat)
             assert abs(xe - e) < 1e-8 and abs(yn - n) < 1e-8, (lon, lat)
+
+    def test_utm_singular_point_is_null_not_a_failure(self, spark):
+        """(3, 0) lies 90 degrees from zone 16's meridian, where the
+        forward's atanh has its pole: the Column path gives null and the
+        numpy path NaN in both coordinates, and the other rows keep their
+        values."""
+        pts = [(3.0, 0.0), (-87.0, 0.0), (-89.9, 33.3)]
+        df = spark.createDataFrame(pts, "x double, y double")
+        got = [(r.x2, r.y2) for r in crs.reproject(df, 4326, 32616).collect()]
+        ex, ny = crs.transform_points_np(*zip(*pts), 4326, 32616)
+        assert got[0] == (None, None)
+        assert np.isnan(ex[0]) and np.isnan(ny[0])
+        golden = {r[:2]: r[2:] for r in self.UTM_GOLDENS[32616]}
+        want = [golden[p] for p in pts[1:]]
+        assert got[1:] == want
+        assert np.allclose(np.c_[ex[1:], ny[1:]], want, rtol=0, atol=1e-8)
 
     def test_bng_projection_os_worked_example(self, spark):
         """OS/EPSG worked example for the 27700 PROJECTION (datumless):

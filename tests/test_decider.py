@@ -170,7 +170,7 @@ def test_scan_with_strategy_on_layout(spark, sf_dir, tmp_path):
                      allow_full_scan=True)
     strat = q.plan(["z3", "z2"], None)
     assert strat.index == "z3"
-    got = scan_with_strategy(df, q, strat, period="week")
+    got = scan_with_strategy(df, q, strat)
     want = q.apply(df)
     assert got.count() == want.count() > 0
     assert {r.event_id for r in got.select("event_id").collect()} \
@@ -186,6 +186,37 @@ def test_scan_with_strategy_on_layout(spark, sf_dir, tmp_path):
     strat2 = q2.plan(["s2"], None)
     got2 = scan_with_strategy(df2, q2, strat2)
     assert got2.count() == q2.apply(df2).count() > 0
+
+
+@pytest.mark.parametrize("period", ["day", "week", "month", "year"])
+def test_scan_with_strategy_reads_the_layout_period(spark, sf_dir, tmp_path, period):
+    """The time_bin prefilter counts bins in the period the layout was
+    written with (recorded on its time column), so every period returns
+    the plain query's rows; a layout without that record skips it."""
+    from geomesa_spark.plans.decider import scan_with_strategy
+    from geomesa_spark.plans.query import SpatialQuery
+    from geomesa_spark.sources.layout import read_indexed, write_indexed
+    from geomesa_spark.sources.testdata import geo_events
+
+    path = str(tmp_path / period)
+    write_indexed(geo_events(spark, sf_dir), path, period=period)
+    df = read_indexed(spark, path)
+    assert df.schema["ts"].metadata == {"time_bin_period": period}
+    q = SpatialQuery(bbox=(40.0, 20.0, 50.0, 30.0),
+                     interval=("2024-01-05 00:00:00", "2024-01-20 00:00:00"),
+                     allow_full_scan=True)
+    strat = q.plan(["z3"], None)
+
+    def ids(d):
+        return sorted(r.event_id for r in d.select("event_id").collect())
+
+    want = ids(q.apply(df))
+    assert want and ids(scan_with_strategy(df, q, strat)) == want
+    filters = scan_with_strategy(df, q, strat)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(time_bin" in filters
+    bare = df.withMetadata("ts", {})   # period unknown: no bin prefilter
+    assert ids(scan_with_strategy(bare, q, strat)) == want
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells.grid import cell_id
-from geomesa_spark.cells.z2 import Z2SFC
-from geomesa_spark.cells.z3 import BinnedTime, Z3SFC
+from geomesa_spark.cells.z3 import BinnedTime
+from geomesa_spark.cells.zn import Z2SFC, Z3SFC
 from geomesa_spark.functions.cell_functions import (cell_col, pixel_cols,
                                                     tile_cols, time_bin_col,
                                                     z2_col, z3_col)
@@ -35,18 +35,48 @@ class TestNativeCellExprs:
         expected = np.array([sfc.index(x, y) for x, y in zip(pdf.lon, pdf.lat)], dtype=np.int64)
         np.testing.assert_array_equal(got, expected)
 
-    def test_z3_col_matches_library(self, points_df):
+    @pytest.mark.parametrize("period", ["day", "week", "month", "year"])
+    def test_z3_col_matches_library(self, points_df, period):
         df, pdf = points_df
         got = df.select(
-            time_bin_col(F.col("ts"), "week").alias("bin"),
-            z3_col(F.col("lon"), F.col("lat"), F.col("ts"), "week").alias("z"),
+            time_bin_col(F.col("ts"), period).alias("bin"),
+            z3_col(F.col("lon"), F.col("lat"), F.col("ts"), period).alias("z"),
         ).toPandas()
-        sfc = Z3SFC("week")
+        sfc = Z3SFC(period)
         millis = (pdf.ts.astype("int64") // 1_000_000).to_numpy()
         for i in range(0, len(pdf), 37):
-            bt = BinnedTime.to_binned_time(int(millis[i]), "week")
+            bt = BinnedTime.to_binned_time(int(millis[i]), period)
             assert got["bin"][i] == bt.bin
             assert got["z"][i] == sfc.index(pdf.lon[i], pdf.lat[i], bt.offset)
+
+    def test_curve_cols_match_numpy_twins(self, spark, points_df):
+        """z2_col, z3_col (every period) and cell_col equal the numpy
+        encoders on the same points, the lon/lat edges and the last double
+        below each upper bound included (one curve, one normalizer)."""
+        from geomesa_spark.cells.grid import cell_id_np
+        _, pdf = points_df
+        below = [np.nextafter(180.0, 0.0), np.nextafter(90.0, 0.0)]
+        edges = pd.DataFrame({
+            "lon": [-180.0, 180.0, below[0], 0.0, -180.0, below[0]],
+            "lat": [-90.0, 90.0, 0.0, below[1], 90.0, below[1]],
+            "ts": pd.to_datetime([0, 1, 86_399, 1_700_000_000, 1_609_459_199,
+                                  1_609_459_200], unit="s", utc=True)})
+        pdf = pd.concat([pdf, edges], ignore_index=True)
+        df = spark.createDataFrame(pdf)
+        lon, lat = pdf.lon.to_numpy(), pdf.lat.to_numpy()
+        millis = (pdf.ts.astype("int64") // 1_000_000).to_numpy()
+        periods = ("day", "week", "month", "year")
+        got = df.select(
+            z2_col(F.col("lon"), F.col("lat")).alias("z2"),
+            cell_col(F.col("lon"), F.col("lat"), 12).alias("cell"),
+            *[z3_col(F.col("lon"), F.col("lat"), F.col("ts"), p).alias(p)
+              for p in periods]).toPandas()
+        assert got.z2.tolist() == Z2SFC().index_np(lon, lat).tolist()
+        assert got.cell.tolist() == cell_id_np(lon, lat, 12).tolist()
+        for p in periods:
+            offsets = np.array([BinnedTime.to_binned_time(int(m), p).offset
+                                for m in millis])
+            assert got[p].tolist() == Z3SFC(p).index_np(lon, lat, offsets).tolist(), p
 
     def test_cell_col_matches_library(self, points_df):
         df, pdf = points_df
@@ -156,7 +186,7 @@ class TestSTFunctions:
         pts += [(x, y) for x in (-180.0, -0.0, 0.0, 180.0)
                 for y in (-90.0, -0.0, 0.0, 90.0)]
         df = spark.createDataFrame(pts, "lon double, lat double")
-        for chars in (1, 4, 7, 12):
+        for chars in range(1, 13):
             rows = df.select(
                 "lon", "lat",
                 geohash_col(F.col("lon"), F.col("lat"), chars).alias("gh")

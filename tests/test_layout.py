@@ -854,6 +854,21 @@ def test_ensure_indexed_writes_once(spark, tmp_path):
              for r, _, fs in os.walk(path) for f in fs)
     assert t3 > t1
 
+    # a manifest whose time column does not record the period (a layout
+    # written before it was recorded) -> rewrite, so the period is readable
+    import json
+
+    from geomesa_spark.sources.layout import MANIFEST, _write_text
+    m = read_manifest(spark, path)
+    for f in m["schema"]["fields"]:
+        f["metadata"] = {}
+    _write_text(spark, f"{path}/{MANIFEST}", json.dumps(m))
+    out4 = ensure_indexed(df, path, period="day")
+    t4 = max(os.path.getmtime(os.path.join(r, f))
+             for r, _, fs in os.walk(path) for f in fs)
+    assert t4 > t3
+    assert out4.schema["ts"].metadata == {"time_bin_period": "day"}
+
 
 def test_ensure_indexed_rewrites_on_salt_key_or_partition_change(spark, tmp_path):
     """The manifest match covers the salt key and the partition count: a

@@ -17,8 +17,8 @@ from datetime import datetime, timezone
 
 import pytest
 
-from geomesa_spark.cells.z2 import Z2, Z2SFC
-from geomesa_spark.cells.z3 import Z3, Z3SFC, BinnedTime
+from geomesa_spark.cells.z3 import BinnedTime
+from geomesa_spark.cells.zn import Z2, Z2SFC, Z3, Z3SFC
 from geomesa_spark.plans.zfilters import (
     Z2RowFilter, Z3RowFilter, z3_temporal_bounds,
 )

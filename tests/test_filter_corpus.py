@@ -4,6 +4,9 @@ each ECQL filter must return exactly the rows the naive local evaluator
 returns. The corpus is ported with attribute names folded onto the fixture's
 ``attr2`` column (the reference SFT has one indexed string attribute)."""
 
+import json
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -379,3 +382,37 @@ def test_str_functions_accept_column_arguments(spark):
     assert rows[0].sw is False
     assert rows[0].ew is True
     assert rows[0].sub3 == "ell"
+
+
+# ---------------------------------------------------------------------------
+# Goldens: the row sets the ECQL compiler returned before it was rewritten
+# over one AST (tests/data/ecql_goldens.json, recorded with the
+# Column-building compiler): every corpus string on the WKB and the lon/lat
+# path, and every AttributeIndexTest filter above.
+
+GOLDENS = json.loads((Path(__file__).parent / "data" / "ecql_goldens.json").read_text())
+
+
+def _selected(df, key: str, filters: list, ctx: EcqlContext) -> dict:
+    """filter -> sorted ``key`` values of the rows it selects, from one job."""
+    cols = [F.coalesce(ecql_to_column(f, ctx), F.lit(False)).alias(f"f{i}")
+            for i, f in enumerate(filters)]
+    rows = df.select(key, *cols).collect()
+    return {f: sorted(r[key] for r in rows if r[f"f{i}"]) for i, f in enumerate(filters)}
+
+
+@pytest.mark.parametrize("name,ctx", [("corpus", EcqlContext()),
+                                      ("corpus_lonlat", EcqlContext(prefer_lonlat=True))])
+def test_corpus_matches_goldens(spark, fixture, name, ctx):
+    want = GOLDENS[name]
+    assert _selected(fixture[0], "__fid__", list(want), ctx) == want
+
+
+def test_attribute_filters_match_goldens(spark, attr_fixture, attr_wildcard_fixture):
+    lonlat = set(GOLDENS["attr_lonlat"])
+    attr = GOLDENS["attr"]
+    got = _selected(attr_fixture, "name", [f for f in attr if f not in lonlat], EcqlContext())
+    got.update(_selected(attr_fixture, "name", sorted(lonlat), EcqlContext(prefer_lonlat=True)))
+    assert got == attr
+    wild = GOLDENS["wildcards"]
+    assert _selected(attr_wildcard_fixture, "name", list(wild), EcqlContext()) == wild

@@ -417,8 +417,13 @@ class TransverseMercator:
         for j, aj in enumerate(self.alpha, start=1):
             xi = xi + F.lit(aj) * F.sin(2.0 * j * xi_p) * F.cosh(2.0 * j * eta_p)
             eta = eta + F.lit(aj) * F.cos(2.0 * j * xi_p) * F.sinh(2.0 * j * eta_p)
-        east = F.lit(self.fe) + F.lit(self.k0 * self.abar) * eta
-        north = F.lit(self.fn) + F.lit(self.k0 * self.abar) * (xi - F.lit(self.xi0))
+        # at a pole atanh(sin phi) is infinite; the series' limit there is
+        # xi' = +-pi/2 (every sin(2j xi') vanishes) and eta' = 0
+        pole = (sphi >= 1.0) | (sphi <= -1.0)
+        east = F.when(pole, F.lit(self.fe)).otherwise(
+            F.lit(self.fe) + F.lit(self.k0 * self.abar) * eta)
+        north = F.lit(self.fn) + F.lit(self.k0 * self.abar) * (
+            F.when(pole, sphi * (_math.pi / 2)).otherwise(xi) - F.lit(self.xi0))
         return east, north
 
     def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:

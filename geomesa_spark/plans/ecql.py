@@ -1,9 +1,11 @@
-"""ECQL (OGC CQL) filter parser + Catalyst compiler.
+"""ECQL (OGC CQL) filters: one parser to a small tree, rendered as Spark SQL.
 
 The reference's query language surface (geomesa-filter: FastFilterFactory /
-ECQL.toFilter) re-expressed for Spark: an ECQL string compiles to a
-``pyspark.sql.Column`` predicate over a DataFrame with a WKB ``geom`` column
-(or plain lon/lat for point tables) plus attribute/timestamp columns.
+ECQL.toFilter). ``parse`` reads an ECQL string once into a tree of plain
+tuples; ``ecql_to_column`` renders the tree as a Catalyst predicate over a
+DataFrame with a WKB ``geom`` column (or plain lon/lat for point tables)
+plus attribute and timestamp columns, and ``plans/local.evaluate`` runs the
+same tree over pandas as the test oracle.
 
 Supported grammar (the subset exercised by the reference's FilterTest corpus,
 TestFilters.scala:16-220):
@@ -12,15 +14,34 @@ TestFilters.scala:16-220):
   or_expr     := and_expr (OR and_expr)*
   and_expr    := not_expr (AND not_expr)*
   not_expr    := NOT not_expr | '(' expr ')' | predicate
-  predicate   := spatial | temporal | comparison | in_list
-  spatial     := INTERSECTS|DISJOINT|CONTAINS|WITHIN|OVERLAPS|CROSSES|TOUCHES
-                 '(' prop ',' geometry ')'
+  predicate   := spatial | temporal | comparison | in_list | INCLUDE | EXCLUDE
+  spatial     := INTERSECTS|DISJOINT|CONTAINS|WITHIN|OVERLAPS|CROSSES|TOUCHES|EQUALS
+                 '(' prop ',' geometry ')'      (or '(' 'wkt' ',' prop ')')
                | BBOX '(' prop ',' n ',' n ',' n ',' n ')'
-               | DWITHIN '(' prop ',' geometry ',' n ',' units ')'
-  temporal    := prop DURING iso '/' iso | prop BEFORE iso | prop AFTER iso
-  comparison  := prop (=|<>|<|<=|>|>=) literal | prop [NOT] BETWEEN lit AND lit
-               | prop [I]LIKE pattern | prop IS [NOT] NULL
-  in_list     := [prop] IN '(' literal, ... ')'      (bare IN = feature IDs)
+               | (DWITHIN|BEYOND) '(' prop ',' geometry ',' n ',' units ')'
+  units       := meters | kilometers | feet | statute miles | nautical miles
+  temporal    := prop DURING iso '/' iso | prop (BEFORE|AFTER|TEQUALS) iso
+  comparison  := value (=|<>|<|<=|>|>=) value | prop [NOT] BETWEEN lit AND lit
+               | prop [NOT] [I]LIKE pattern | prop IS [NOT] NULL
+  in_list     := [prop] [NOT] IN '(' literal, ... ')'   (bare IN = feature IDs)
+  value       := literal | prop | function '(' value, ... ')'
+
+The tree, with ``v`` one of ``("prop", name)``, ``("lit", x)`` and
+``("fn", name, [v, ...])``:
+
+  ("and", a, b)  ("or", a, b)  ("not", a)  ("const", bool)
+  ("cmp", op, v, v)  ("between", prop, lo, hi)  ("like", prop, pattern, ci)
+  ("in", prop or None, [x, ...])  ("isnull", prop)  ("during", prop, lo, hi)
+  ("spatial", op, prop, wkt)  ("dwithin", prop, wkt, meters)
+
+The parser types every literal once: int, float, str, bool (``true``/
+``false`` as a function argument) or datetime (an ISO instant, quoted or
+not; a number with a fraction or an exponent is a float). BBOX is an
+INTERSECTS of its rectangle, BEFORE/AFTER/TEQUALS are comparisons, BEYOND
+is NOT DWITHIN, the NOT forms wrap their predicate in ``("not", ...)``, and
+geometries are canonical WKT. NOT is two-valued: a predicate on a missing
+(null) attribute is false and its NOT true, as in the reference's filter
+evaluation.
 
 DWITHIN meters are converted to planar degrees with the mean-latitude factor
 (the reference converts geodesic meters to degrees:
@@ -32,6 +53,7 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass
+from datetime import datetime
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -42,6 +64,10 @@ from geomesa_spark.plans import refine
 
 SPATIAL_OPS = {"INTERSECTS", "DISJOINT", "CONTAINS", "WITHIN", "OVERLAPS",
                "CROSSES", "TOUCHES", "EQUALS", "BBOX", "DWITHIN", "BEYOND"}
+UNITS = {"meters": 1.0, "kilometers": 1000.0, "feet": 0.3048,
+         "statute miles": 1609.344, "nautical miles": 1852.0}
+_TEMPORAL = {"BEFORE": "<", "AFTER": ">", "TEQUALS": "="}
+_ATTRIBUTE = ("BETWEEN", "LIKE", "ILIKE", "IN")
 
 _TOKEN = re.compile(r"""
     \s*(?:
@@ -53,6 +79,7 @@ _TOKEN = re.compile(r"""
       (?P<number>-?\d+\.?\d*(?:[eE][-+]?\d+)?) |
       (?P<word>[A-Za-z_][A-Za-z0-9_]*)
     )""", re.X)
+_ISO = re.compile(r"^\d{4}-\d{2}-\d{2}T")
 
 
 def _tokenize(s: str) -> list[tuple[str, str]]:
@@ -77,20 +104,10 @@ M_PER_DEG = 111_195.0  # spherical meters per degree of latitude
 
 
 def _java_regex_has_backref(pat: str) -> bool:
-    """True when a Java regex contains a group backreference ``\\n``.
-
-    Walked char-by-char so escaped backslashes are handled (``\\\\1`` is a
-    literal backslash then '1', not a backreference); ``\\0`` is an octal
-    escape, not a backreference."""
-    i = 0
-    while i < len(pat):
-        if pat[i] == "\\" and i + 1 < len(pat):
-            if pat[i + 1].isdigit() and pat[i + 1] != "0":
-                return True
-            i += 2
-            continue
-        i += 1
-    return False
+    """True when a Java regex contains a group backreference ``\\n``: a
+    backslash and a digit 1-9 after an even run of backslashes (``\\\\1``
+    is a literal backslash then '1'; ``\\0`` is an octal escape)."""
+    return re.search(r"(?<!\\)(?:\\\\)*\\[1-9]", pat) is not None
 
 
 def _shift_dollar_refs(repl: str) -> str:
@@ -99,33 +116,18 @@ def _shift_dollar_refs(repl: str) -> str:
     becomes group 1).  ``\\$``/``\\\\`` escapes pass through untouched; a
     bare ``$`` is an error in Java too; ``$0`` (the whole match) cannot be
     shifted because the rewritten match includes the injected prefix."""
-    out: list[str] = []
-    i = 0
-    while i < len(repl):
-        ch = repl[i]
-        if ch == "\\" and i + 1 < len(repl):
-            out.append(repl[i:i + 2])
-            i += 2
-            continue
-        if ch == "$":
-            j = i + 1
-            while j < len(repl) and repl[j].isdigit():
-                j += 1
-            if j == i + 1:
-                raise ValueError(
-                    f"strReplace replacement has a dangling '$': {repl!r}")
-            num = int(repl[i + 1:j])
-            if num == 0:
-                raise ValueError(
-                    "strReplace(..., false): $0 (whole-match reference) is "
-                    "unsupported — the rewritten match includes the "
-                    "injected anchor prefix")
-            out.append(f"${num + 1}")
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    def shift(m: re.Match) -> str:
+        if m.group(1) is None:
+            return m.group(0)
+        if not m.group(1):
+            raise ValueError(f"strReplace replacement has a dangling '$': {repl!r}")
+        if int(m.group(1)) == 0:
+            raise ValueError(
+                "strReplace(..., false): $0 (whole-match reference) is "
+                "unsupported — the rewritten match includes the "
+                "injected anchor prefix")
+        return f"${int(m.group(1)) + 1}"
+    return re.sub(r"\\.|\$(\d*)", shift, repl, flags=re.S)
 
 
 @dataclass
@@ -137,11 +139,16 @@ class EcqlContext:
     prefer_lonlat: bool = False   # point tables: use lon/lat kernels directly
 
 
+def _instant(text: str) -> datetime:
+    return datetime.fromisoformat(text.rstrip("Z"))
+
+
 class EcqlParser:
-    def __init__(self, text: str, ctx: EcqlContext | None = None):
+    """Recursive descent from ECQL text to the tree (module docstring)."""
+
+    def __init__(self, text: str):
         self.tokens = _tokenize(text)
         self.pos = 0
-        self.ctx = ctx or EcqlContext()
 
     # -- token helpers -------------------------------------------------------
 
@@ -151,9 +158,8 @@ class EcqlParser:
     def next(self) -> tuple[str, str]:
         if self.pos >= len(self.tokens):
             raise ValueError("unexpected end of ECQL filter")
-        t = self.tokens[self.pos]
         self.pos += 1
-        return t
+        return self.tokens[self.pos - 1]
 
     def expect(self, kind: str, value: str | None = None) -> str:
         k, v = self.next()
@@ -165,391 +171,353 @@ class EcqlParser:
         k, v = self.peek()
         return v.upper() if k == "word" else None
 
-    # -- grammar --------------------------------------------------------------
-
-    def parse(self) -> Column:
-        col = self.or_expr()
-        if self.peek()[0] != "eof":
-            raise ValueError(f"trailing tokens: {self.tokens[self.pos:]}")
-        return col
-
-    def or_expr(self) -> Column:
-        left = self.and_expr()
-        while self._peek_word() == "OR":
-            self.next()
-            left = left | self.and_expr()
-        return left
-
-    def and_expr(self) -> Column:
-        left = self.not_expr()
-        while self._peek_word() == "AND":
-            self.next()
-            left = left & self.not_expr()
-        return left
-
-    def not_expr(self) -> Column:
-        if self._peek_word() == "NOT":
-            self.next()
-            # NOT uses 2-valued semantics on nullable comparisons like the
-            # reference's filter evaluation: missing (null) => filter false,
-            # NOT(filter) true. coalesce(false) before negating.
-            inner = self.not_expr()
-            return ~F.coalesce(inner, F.lit(False))
-        if self.peek()[0] == "lparen":
-            self.next()
-            col = self.or_expr()
-            self.expect("rparen")
-            return col
-        return self.predicate()
-
-    # -- predicates ------------------------------------------------------------
-
-    def predicate(self) -> Column:
-        k, v = self.peek()
-        if k == "word" and v.upper() in SPATIAL_OPS:
-            return self.spatial()
-        if k == "word" and v.upper() == "IN":
-            return self.in_list(self.ctx.fid_col)
-        if k == "word" and v.upper() in ("INCLUDE", "EXCLUDE"):
-            # constant filters (geotools Filter.INCLUDE / Filter.EXCLUDE)
-            self.next()
-            return F.lit(v.upper() == "INCLUDE")
-        # expression-first predicates: a literal or an ECQL function call on
-        # the left of the comparison ('BILL' = strToUpperCase(name), ...)
-        if k in ("string", "number") or (k == "word" and self._is_fn_call()):
-            lhs = self.expr_value()
-            k2, op = self.next()
-            if k2 != "op":
-                raise ValueError(f"expected operator, got {op!r}")
-            return self._compare(lhs, op, self.expr_value())
-        # property-first predicates
-        prop = self.expect("word")
-        w = self._peek_word()
-        if w == "DURING":
-            self.next()
-            lo = self.expect("iso")
-            self.expect("slash")
-            hi = self.expect("iso")
-            c = F.col(prop).cast("timestamp")
-            return (c > F.lit(_ts(lo)).cast("timestamp")) & (c < F.lit(_ts(hi)).cast("timestamp"))
-        if w in ("BEFORE", "AFTER"):
-            self.next()
-            t = self.expect("iso")
-            c = F.col(prop).cast("timestamp")
-            return c < F.lit(_ts(t)).cast("timestamp") if w == "BEFORE" \
-                else c > F.lit(_ts(t)).cast("timestamp")
-        if w == "TEQUALS":
-            # strict temporal equality (ECQL TEquals, unquoted ISO operand)
-            self.next()
-            t = self.expect("iso")
-            return F.col(prop).cast("timestamp") == F.lit(_ts(t)).cast("timestamp")
-        if w == "NOT":
-            self.next()
-            w2 = self._peek_word()
-            if w2 == "BETWEEN":
-                return ~F.coalesce(self._between(prop), F.lit(False))
-            if w2 in ("LIKE", "ILIKE"):
-                return ~F.coalesce(self._like(prop), F.lit(False))
-            if w2 == "IN":
-                return ~F.coalesce(self.in_list(prop), F.lit(False))
-            raise ValueError(f"unexpected NOT {w2}")
-        if w == "BETWEEN":
-            return self._between(prop)
-        if w in ("LIKE", "ILIKE"):
-            return self._like(prop)
-        if w == "IN":
-            return self.in_list(prop)
-        if w == "IS":
-            self.next()
-            if self._peek_word() == "NOT":
-                self.next()
-                self.expect("word", "NULL")
-                return F.col(prop).isNotNull()
-            self.expect("word", "NULL")
-            return F.col(prop).isNull()
-        # comparison operator
-        k2, op = self.next()
-        if k2 != "op":
-            raise ValueError(f"expected operator after {prop}, got {op!r}")
-        if self._is_fn_call():
-            # function on the right: name = strToLowerCase('bill')
-            return self._compare(F.col(prop), op, self.expr_value())
-        lit = self.literal()
-        c = F.col(prop)
-        if isinstance(lit, str) and _ISO.match(lit):
-            c = c.cast("timestamp")
-            lit = _ts(lit)
-            return {"=": c == F.lit(lit).cast("timestamp"),
-                    "<>": c != F.lit(lit).cast("timestamp"),
-                    "<": c < F.lit(lit).cast("timestamp"), "<=": c <= F.lit(lit).cast("timestamp"),
-                    ">": c > F.lit(lit).cast("timestamp"), ">=": c >= F.lit(lit).cast("timestamp")}[op]
-        return {"=": c == lit, "<>": c != lit, "<": c < lit,
-                "<=": c <= lit, ">": c > lit, ">=": c >= lit}[op]
-
-    def _between(self, prop: str) -> Column:
-        self.expect("word", "BETWEEN")
-        lo = self.literal()
-        self.expect("word", "AND")
-        hi = self.literal()
-        c = F.col(prop)
-        if isinstance(lo, str) and _ISO.match(str(lo)):
-            return c.cast("timestamp").between(F.lit(_ts(lo)).cast("timestamp"),
-                                               F.lit(_ts(hi)).cast("timestamp"))
-        return c.between(lo, hi)
-
-    def _like(self, prop: str) -> Column:
-        ci = self.expect("word").upper() == "ILIKE"
-        pattern = self.literal()
-        if ci:
-            return F.upper(F.col(prop)).like(str(pattern).upper())
-        return F.col(prop).like(str(pattern))
-
-    def in_list(self, prop: str) -> Column:
-        self.expect("word", "IN")
-        self.expect("lparen")
-        vals = [self.literal()]
-        while self.peek()[0] == "comma":
-            self.next()
-            vals.append(self.literal())
-        self.expect("rparen")
-        return F.col(prop).isin(vals)
-
-    def literal(self):
-        k, v = self.next()
-        if k == "string":
-            return v[1:-1].replace("''", "'")
-        if k == "number":
-            f = float(v)
-            return int(f) if f.is_integer() and "." not in v and "e" not in v.lower() else f
-        if k == "iso":
-            return v
-        if k == "word":
-            return v  # bare word treated as string (reference: unquoted vals)
-        raise ValueError(f"expected literal, got {k} {v!r}")
-
-    # -- ECQL filter functions ---------------------------------------------------
-    # The geotools FilterFunction surface the reference evaluates inside
-    # filters (AttributeIndexTest.scala:151-180 exercises the string/math
-    # set) compiled to native Catalyst expressions.
-
     def _is_fn_call(self) -> bool:
         k, v = self.peek()
         return (k == "word" and v.upper() not in SPATIAL_OPS
                 and self.tokens[self.pos + 1][0] == "lparen")
 
-    def expr_value(self):
-        """A comparison operand: literal, property reference, or (possibly
-        nested) function call.  Returns a Column for properties/functions,
-        a python value for literals."""
-        k, v = self.peek()
-        if k == "word":
-            if self._is_fn_call():
-                name = self.next()[1]
-                self.expect("lparen")
-                args = []
-                if self.peek()[0] != "rparen":
-                    args.append(self.expr_value())
-                    while self.peek()[0] == "comma":
-                        self.next()
-                        args.append(self.expr_value())
-                self.expect("rparen")
-                return self._apply_fn(name, args)
+    # -- grammar --------------------------------------------------------------
+
+    def parse(self) -> tuple:
+        node = self.or_expr()
+        if self.peek()[0] != "eof":
+            raise ValueError(f"trailing tokens: {self.tokens[self.pos:]}")
+        return node
+
+    def or_expr(self) -> tuple:
+        return self._chain("OR", self.and_expr)
+
+    def and_expr(self) -> tuple:
+        return self._chain("AND", self.not_expr)
+
+    def _chain(self, word: str, operand) -> tuple:
+        left = operand()
+        while self._peek_word() == word:
             self.next()
-            return F.col(v)  # bare word in expression position = property
-        return self.literal()
+            left = (word.lower(), left, operand())
+        return left
 
-    @staticmethod
-    def _compare(lhs, op: str, rhs) -> Column:
-        if not isinstance(lhs, Column):
-            lhs = F.lit(lhs)
-        return {"=": lhs == rhs, "<>": lhs != rhs, "<": lhs < rhs,
-                "<=": lhs <= rhs, ">": lhs > rhs, ">=": lhs >= rhs}[op]
+    def not_expr(self) -> tuple:
+        if self._peek_word() == "NOT":
+            self.next()
+            return ("not", self.not_expr())
+        if self.peek()[0] == "lparen":
+            self.next()
+            node = self.or_expr()
+            self.expect("rparen")
+            return node
+        return self.predicate()
 
-    @staticmethod
-    def _apply_fn(name: str, args: list) -> Column:
-        def col(a):
-            return a if isinstance(a, Column) else F.lit(a)
+    # -- predicates ------------------------------------------------------------
 
-        n = name
-        if n == "strToUpperCase":
-            return F.upper(col(args[0]))
-        if n == "strToLowerCase":
-            return F.lower(col(args[0]))
-        if n == "strCapitalize":
-            return F.initcap(col(args[0]))
-        if n == "strTrim":
-            return F.trim(col(args[0]))
-        if n == "strConcat":
-            return F.concat(col(args[0]), col(args[1]))
-        if n == "strLength":
-            return F.length(col(args[0]))
-        if n == "strIndexOf":
-            # geotools returns the 0-based index, -1 when absent; geotools
-            # allows any expression as the needle, so route Column needles
-            # through the SQL locate function (F.locate only takes str)
-            sub = args[1]
-            if isinstance(sub, Column):
-                return F.call_function("locate", sub, col(args[0])) - 1
-            return F.locate(str(sub), col(args[0])) - 1
-        if n == "strStartsWith":
-            return col(args[0]).startswith(
-                args[1] if isinstance(args[1], Column) else str(args[1]))
-        if n == "strEndsWith":
-            return col(args[0]).endswith(
-                args[1] if isinstance(args[1], Column) else str(args[1]))
-        if n == "strEqualsIgnoreCase":
-            return F.upper(col(args[0])) == F.upper(col(args[1]))
-        if n == "strSubstring":
-            # geotools: [begin, end) 0-based -> substring is 1-based + length
-            b, e = args[1], args[2]
-            if isinstance(b, Column) or isinstance(e, Column):
-                bc, ec = col(b).cast("int"), col(e).cast("int")
-                return F.substring(col(args[0]), bc + F.lit(1), ec - bc)
-            begin, end = int(b), int(e)
-            return F.substring(col(args[0]), begin + 1, end - begin)
-        if n == "strReplace":
-            # geotools strReplace delegates to Java String.replaceAll /
-            # replaceFirst (FilterFunction_strReplace): the pattern is a
-            # Java regex and the REPLACEMENT follows java.util.regex.Matcher
-            # semantics ($n group references, backslash escapes).  Spark's
-            # regexp_replace shares those semantics exactly, so the
-            # replace-all form passes both through verbatim.
-            c, pat, repl = col(args[0]), str(args[1]), str(args[2])
-            replace_all = str(args[3]).lower() in ("true", "1")
-            if replace_all:
-                return F.regexp_replace(c, pat, repl)
-            # First-occurrence-only: anchor the pattern behind a non-greedy
-            # DOTALL prefix capture.  The injected group shifts every
-            # capture-group number by one, so $n in the replacement is
-            # renumbered to $(n+1); a pattern carrying its own backreference
-            # (\1) would silently re-bind to the prefix group -> loud error.
-            if _java_regex_has_backref(pat):
-                raise ValueError(
-                    "strReplace(..., false): pattern backreferences (\\n) "
-                    "are unsupported — the first-occurrence rewrite injects "
-                    f"a prefix capture group that shifts their binding: {pat!r}")
-            return F.regexp_replace(c, f"(?s)^((?:.)*?)(?:{pat})",
-                                    "$1" + _shift_dollar_refs(repl))
-        if n == "abs":
-            return F.abs(col(args[0]))
-        if n == "ceil":
-            return F.ceil(col(args[0]))
-        if n == "floor":
-            return F.floor(col(args[0]))
-        if n == "min":
-            return F.least(col(args[0]), col(args[1]))
-        if n == "max":
-            return F.greatest(col(args[0]), col(args[1]))
-        raise ValueError(f"unsupported ECQL function: {name!r}")
+    def predicate(self) -> tuple:
+        w = self._peek_word()
+        if w in SPATIAL_OPS:
+            return self.spatial()
+        if w == "IN":
+            return self.attribute(None)
+        if w in ("INCLUDE", "EXCLUDE"):
+            # constant filters (geotools Filter.INCLUDE / Filter.EXCLUDE)
+            self.next()
+            return ("const", w == "INCLUDE")
+        # expression-first predicates: a literal or an ECQL function call on
+        # the left of the comparison ('BILL' = strToUpperCase(name), ...)
+        if self.peek()[0] in ("string", "number") or self._is_fn_call():
+            lhs = self.value()
+            return ("cmp", self.expect("op"), lhs, self.value())
+        prop = self.expect("word")
+        w = self._peek_word()
+        if w == "DURING":
+            self.next()
+            lo = _instant(self.expect("iso"))
+            self.expect("slash")
+            return ("during", prop, lo, _instant(self.expect("iso")))
+        if w in _TEMPORAL:
+            self.next()
+            return ("cmp", _TEMPORAL[w], ("prop", prop), ("lit", _instant(self.expect("iso"))))
+        if w == "IS":
+            self.next()
+            negated = self._peek_word() == "NOT"
+            if negated:
+                self.next()
+            self.expect("word", "NULL")
+            return ("not", ("isnull", prop)) if negated else ("isnull", prop)
+        if w == "NOT":
+            self.next()
+            if self._peek_word() not in _ATTRIBUTE:
+                raise ValueError(f"unexpected NOT {self._peek_word()}")
+            return ("not", self.attribute(prop))
+        if w in _ATTRIBUTE:
+            return self.attribute(prop)
+        k, op = self.next()
+        if k != "op":
+            raise ValueError(f"expected operator after {prop}, got {op!r}")
+        # a function on the right (name = strToLowerCase('bill')), else a
+        # literal, where a bare word is a string (reference: unquoted vals)
+        rhs = self.value() if self._is_fn_call() else ("lit", self.literal())
+        return ("cmp", op, ("prop", prop), rhs)
+
+    def attribute(self, prop: str | None) -> tuple:
+        w = self.expect("word").upper()
+        if w == "BETWEEN":
+            lo = self.literal()
+            self.expect("word", "AND")
+            return ("between", prop, lo, self.literal())
+        if w in ("LIKE", "ILIKE"):
+            k, v = self.next()
+            return ("like", prop, v[1:-1].replace("''", "'") if k == "string" else v,
+                    w == "ILIKE")
+        return ("in", prop, self._items(self.literal))
+
+    def _items(self, item) -> list:
+        """A parenthesized, comma-separated list of ``item()``."""
+        self.expect("lparen")
+        out = [] if self.peek()[0] == "rparen" else [item()]
+        while self.peek()[0] == "comma":
+            self.next()
+            out.append(item())
+        self.expect("rparen")
+        return out
+
+    def literal(self):
+        k, v = self.next()
+        if k == "string":
+            s = v[1:-1].replace("''", "'")
+            return _instant(s) if _ISO.match(s) else s
+        if k == "number":
+            return float(v) if "." in v or "e" in v.lower() else int(v)
+        if k == "iso":
+            return _instant(v)
+        if k == "word":
+            return v  # bare word treated as string (reference: unquoted vals)
+        raise ValueError(f"expected literal, got {k} {v!r}")
+
+    def value(self) -> tuple:
+        """A comparison operand: literal, property reference, or (possibly
+        nested) function call."""
+        k, v = self.peek()
+        if self._is_fn_call():
+            self.next()
+            return ("fn", v, self._items(self.value))
+        if k == "word":
+            self.next()
+            if v.upper() in ("TRUE", "FALSE"):
+                return ("lit", v.upper() == "TRUE")
+            return ("prop", v)  # bare word in expression position = property
+        return ("lit", self.literal())
 
     # -- spatial ----------------------------------------------------------------
 
-    def spatial(self) -> Column:
+    def spatial(self) -> tuple:
         op = self.expect("word").upper()
         self.expect("lparen")
         if self.peek()[0] == "string":
             # geometry-first form — contains('POLYGON (...)', geom) — maps
             # to the converse property-first operator (geotools accepts
             # either argument order; AttributeIndexTest.scala:223 uses it)
-            g = wkt.wkt_loads(self.next()[1][1:-1])
+            g = wkt.wkt_dumps(wkt.wkt_loads(self.literal()))
             self.expect("comma")
             prop = self.expect("word")
             self.expect("rparen")
-            op = {"CONTAINS": "WITHIN", "WITHIN": "CONTAINS"}.get(op, op)
-            return self._spatial_predicate(op, prop, g)
+            return ("spatial", {"CONTAINS": "WITHIN", "WITHIN": "CONTAINS"}.get(op, op), prop, g)
         prop = self.expect("word")
         self.expect("comma")
         if op == "BBOX":
-            nums = [self.literal()]
+            nums = [float(self.literal())]
             for _ in range(3):
                 self.expect("comma")
-                nums.append(self.literal())
+                nums.append(float(self.literal()))
             self.expect("rparen")
-            xmin, ymin, xmax, ymax = [float(n) for n in nums]
-            geom = model.box(xmin, ymin, xmax, ymax)
-            return self._spatial_predicate("INTERSECTS", prop, geom)
-        geom = self.geometry()
+            return ("spatial", "INTERSECTS", prop, wkt.wkt_dumps(model.box(*nums)))
+        g = self.geometry()
         if op in ("DWITHIN", "BEYOND"):
             self.expect("comma")
             dist = float(self.literal())
             self.expect("comma")
             units = self.expect("word").lower()
+            if self._peek_word() == "MILES":  # statute / nautical miles
+                units += " " + self.next()[1].lower()
+            if units not in UNITS:
+                raise ValueError(f"unknown DWITHIN units {units!r}: "
+                                 f"expected one of {', '.join(UNITS)}")
             self.expect("rparen")
-            deg = _to_degrees(dist, units, geom)
-            col = self._dwithin(prop, geom, deg)
-            return col if op == "DWITHIN" else ~F.coalesce(col, F.lit(False))
+            node = ("dwithin", prop, g, UNITS[units] * dist)
+            return node if op == "DWITHIN" else ("not", node)
         self.expect("rparen")
-        return self._spatial_predicate(op, prop, geom)
+        return ("spatial", op, prop, g)
 
-    def geometry(self) -> model.Geometry:
-        # consume a WKT literal: WORD ( ... ) with balanced parens
-        typ = self.expect("word").upper()
-        depth = 0
-        parts = [typ]
-        while True:
+    def geometry(self) -> str:
+        """A WKT literal: a word and its balanced parens, as canonical WKT."""
+        parts, depth = [self.expect("word")], 0
+        while depth or len(parts) == 1:
             k, v = self.next()
-            if k == "lparen":
-                depth += 1
-                parts.append("(")
-            elif k == "rparen":
-                depth -= 1
-                parts.append(")")
-                if depth == 0:
-                    break
-            elif k == "comma":
-                parts.append(",")
-            else:
-                parts.append(" " + v)
-        return wkt.wkt_loads("".join(parts))
-
-    def _spatial_predicate(self, op: str, prop: str, geom: model.Geometry) -> Column:
-        ctx = self.ctx
-        if ctx.prefer_lonlat:
-            # point tables: bbox primary filter + native refine over lon/lat
-            # (plans/refine.py); BBOX arrives here as a rectangle INTERSECTS
-            if op in ("INTERSECTS", "DISJOINT", "WITHIN", "TOUCHES"):
-                return refine.point_predicate(geom, op, ctx.lon_col, ctx.lat_col)
-            if op in ("CONTAINS", "EQUALS") and isinstance(geom, model.Point):
-                # points can only CONTAIN/EQUAL coincident points; never
-                # overlap/cross anything
-                return (F.col(ctx.lon_col) == geom.x) & (F.col(ctx.lat_col) == geom.y)
-            if op in ("CONTAINS", "OVERLAPS", "CROSSES", "EQUALS"):
-                return F.lit(False)
-            raise ValueError(op)
-        # WKB geometry column path: dispatch to the ST_* function surface
-        fn = {"INTERSECTS": "st_intersects", "DISJOINT": "st_disjoint",
-              "CONTAINS": "st_contains", "WITHIN": "st_within",
-              "OVERLAPS": "st_overlaps", "CROSSES": "st_crosses",
-              "TOUCHES": "st_touches", "EQUALS": "st_equals"}[op]
-        lit = F.lit(bytearray(wkb_dumps(geom)))
-        return F.call_udf(fn, F.col(prop), lit)
-
-    def _dwithin(self, prop: str, geom: model.Geometry, deg: float) -> Column:
-        ctx = self.ctx
-        if ctx.prefer_lonlat:
-            from geomesa_spark.plans.query import points_dwithin_udf
-            return points_dwithin_udf(geom, deg)(F.col(ctx.lon_col), F.col(ctx.lat_col))
-        return F.call_udf("st_dwithin", F.col(prop),
-                          F.lit(bytearray(wkb_dumps(geom))), F.lit(float(deg)))
+            depth += (k == "lparen") - (k == "rparen")
+            parts.append(v)
+        return wkt.wkt_dumps(wkt.wkt_loads(" ".join(parts)))
 
 
-_ISO = re.compile(r"^\d{4}-\d{2}-\d{2}T")
+def parse(text: str) -> tuple:
+    """The tree of an ECQL filter string (module docstring)."""
+    return EcqlParser(text).parse()
 
 
-def _ts(iso: str) -> str:
-    return iso.replace("T", " ").rstrip("Z")
-
-
-def _to_degrees(dist: float, units: str, geom: model.Geometry) -> float:
-    """meters/km/feet -> planar degrees at the query geometry's mean latitude
+def to_degrees(meters: float, geom: model.Geometry) -> float:
+    """Meters -> planar degrees at the query geometry's mean latitude
     (GeometryProcessing.scala:38-71 conversion role)."""
-    meters = {"meters": 1.0, "kilometers": 1000.0, "feet": 0.3048,
-              "statute miles": 1609.344, "nautical miles": 1852.0}.get(units, 1.0) * dist
     _, ymin, _, ymax = geom.bounds
     lat = (ymin + ymax) / 2.0
     return meters / (M_PER_DEG * max(math.cos(math.radians(lat)), 0.01))
 
 
+# -- SQL ----------------------------------------------------------------------
+
+def _sql_literal(x) -> str:
+    """``x`` as a Spark SQL literal of the type ``F.lit`` gives it."""
+    if isinstance(x, bool):
+        return "true" if x else "false"
+    if isinstance(x, int):
+        return str(x)
+    if isinstance(x, float):
+        return refine.sql_double(x)
+    if isinstance(x, datetime):
+        return f"CAST('{x.isoformat(sep=' ')}' AS TIMESTAMP)"
+    # Spark SQL string literals treat backslash as an escape
+    return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def is_instant(v: tuple) -> bool:
+    """True for an instant literal node."""
+    return v[0] == "lit" and isinstance(v[1], datetime)
+
+
+def _value_sql(v: tuple, instant: bool = False) -> str:
+    """A value node as SQL; a property compared with an instant is cast to
+    a timestamp."""
+    if v[0] == "prop":
+        return f"CAST(`{v[1]}` AS TIMESTAMP)" if instant else f"`{v[1]}`"
+    if v[0] == "lit":
+        return _sql_literal(v[1])
+    return _fn_sql(v[1], v[2])
+
+
+_SQL_FUNCTIONS = {"strToUpperCase": "upper", "strToLowerCase": "lower",
+                  "strCapitalize": "initcap", "strTrim": "trim", "strConcat": "concat",
+                  "strLength": "length", "abs": "abs", "ceil": "ceil",
+                  "floor": "floor", "min": "least", "max": "greatest"}
+
+
+def _fn_sql(name: str, args: list) -> str:
+    """An ECQL filter function as native SQL: the geotools FilterFunction
+    surface the reference evaluates inside filters
+    (AttributeIndexTest.scala:151-180 exercises the string/math set)."""
+    sql = [_value_sql(a) for a in args]
+    if name in _SQL_FUNCTIONS:
+        return f"{_SQL_FUNCTIONS[name]}({', '.join(sql)})"
+    if name in ("strIndexOf", "strStartsWith", "strEndsWith"):
+        # a literal needle is matched as text, whatever its type
+        s, needle = sql[0], _value_sql(("lit", str(args[1][1])) if args[1][0] == "lit"
+                                       else args[1])
+        if name == "strIndexOf":
+            # geotools returns the 0-based index, -1 when absent
+            return f"locate({needle}, {s}) - 1"
+        return f"{'startswith' if name == 'strStartsWith' else 'endswith'}({s}, {needle})"
+    if name == "strEqualsIgnoreCase":
+        return f"upper({sql[0]}) = upper({sql[1]})"
+    if name == "strSubstring":
+        # geotools: [begin, end) 0-based -> substring is 1-based + length
+        b, e = (f"CAST({x} AS INT)" for x in sql[1:3])
+        return f"substring({sql[0]}, {b} + 1, {e} - {b})"
+    if name == "strReplace":
+        # geotools strReplace delegates to Java String.replaceAll /
+        # replaceFirst (FilterFunction_strReplace): the pattern is a
+        # Java regex and the REPLACEMENT follows java.util.regex.Matcher
+        # semantics ($n group references, backslash escapes).  Spark's
+        # regexp_replace shares those semantics exactly, so the
+        # replace-all form passes both through verbatim.
+        pat, repl, every = (str(a[1]) for a in args[1:4])
+        if every.lower() in ("true", "1"):
+            return f"regexp_replace({sql[0]}, {_sql_literal(pat)}, {_sql_literal(repl)})"
+        # First-occurrence-only: anchor the pattern behind a non-greedy
+        # DOTALL prefix capture.  The injected group shifts every
+        # capture-group number by one, so $n in the replacement is
+        # renumbered to $(n+1); a pattern carrying its own backreference
+        # (\1) would silently re-bind to the prefix group -> loud error.
+        if _java_regex_has_backref(pat):
+            raise ValueError(
+                "strReplace(..., false): pattern backreferences (\\n) "
+                "are unsupported — the first-occurrence rewrite injects "
+                f"a prefix capture group that shifts their binding: {pat!r}")
+        return (f"regexp_replace({sql[0]}, {_sql_literal(f'(?s)^((?:.)*?)(?:{pat})')}, "
+                f"{_sql_literal('$1' + _shift_dollar_refs(repl))})")
+    raise ValueError(f"unsupported ECQL function: {name!r}")
+
+
+def _spatial_sql(op: str, prop: str, g: model.Geometry, ctx: EcqlContext) -> str:
+    if ctx.prefer_lonlat:
+        # point tables: bbox primary filter + native refine over lon/lat
+        # (plans/refine.py); BBOX arrives here as a rectangle INTERSECTS
+        if op in ("INTERSECTS", "DISJOINT", "WITHIN", "TOUCHES"):
+            return refine.point_predicate(g, op, ctx.lon_col, ctx.lat_col)
+        if op in ("CONTAINS", "EQUALS") and isinstance(g, model.Point):
+            return (f"`{ctx.lon_col}` = {refine.sql_double(g.x)}"
+                    f" AND `{ctx.lat_col}` = {refine.sql_double(g.y)}")
+        # points can only CONTAIN/EQUAL coincident points; never
+        # overlap/cross anything
+        return "false"
+    # WKB geometry column path: the ST_* function surface
+    return f"st_{op.lower()}(`{prop}`, X'{wkb_dumps(g).hex()}')"
+
+
+def _leaf_sql(node: tuple, ctx: EcqlContext) -> str:
+    kind = node[0]
+    if kind == "const":
+        return _sql_literal(node[1])
+    if kind == "cmp":
+        _, op, lhs, rhs = node
+        instant = is_instant(lhs) or is_instant(rhs)
+        return f"{_value_sql(lhs, instant)} {op} {_value_sql(rhs, instant)}"
+    if kind == "spatial":
+        return _spatial_sql(node[1], node[2], wkt.wkt_loads(node[3]), ctx)
+    if kind == "dwithin":
+        g = wkt.wkt_loads(node[2])
+        return (f"st_dwithin(`{node[1]}`, X'{wkb_dumps(g).hex()}',"
+                f" {refine.sql_double(to_degrees(node[3], g))})")
+    prop = f"`{node[1] or ctx.fid_col}`"
+    if kind == "isnull":
+        return f"{prop} IS NULL"
+    if kind == "like":
+        _, _, pattern, ci = node
+        if ci:
+            return f"upper({prop}) LIKE {_sql_literal(pattern.upper())}"
+        return f"{prop} LIKE {_sql_literal(pattern)}"
+    values = node[2] if kind == "in" else node[2:]
+    if any(isinstance(x, datetime) for x in values):
+        prop = f"CAST({prop} AS TIMESTAMP)"
+    lits = [_sql_literal(x) for x in values]
+    if kind == "in":
+        return f"{prop} IN ({', '.join(lits)})"
+    if kind == "between":
+        return f"{prop} BETWEEN {lits[0]} AND {lits[1]}"
+    return f"{prop} > {lits[0]} AND {prop} < {lits[1]}"  # during: exclusive
+
+
+def _column(node: tuple, ctx: EcqlContext) -> Column:
+    kind = node[0]
+    if kind in ("and", "or"):
+        a, b = _column(node[1], ctx), _column(node[2], ctx)
+        return a & b if kind == "and" else a | b
+    if kind == "not":
+        return ~F.coalesce(_column(node[1], ctx), F.lit(False))
+    if kind == "dwithin" and ctx.prefer_lonlat:
+        # the one Column leaf: the point DWITHIN refine is a pandas UDF
+        from geomesa_spark.plans.query import points_dwithin_udf
+        g = wkt.wkt_loads(node[2])
+        return points_dwithin_udf(g, to_degrees(node[3], g))(
+            F.col(ctx.lon_col), F.col(ctx.lat_col))
+    return F.expr(_leaf_sql(node, ctx))
+
+
 def ecql_to_column(text: str, ctx: EcqlContext | None = None) -> Column:
-    """Compile an ECQL filter string to a Catalyst predicate Column."""
-    return EcqlParser(text, ctx).parse()
+    """Compile an ECQL filter string to a Catalyst predicate Column: one SQL
+    expression per leaf of its tree."""
+    return _column(parse(text), ctx or EcqlContext())

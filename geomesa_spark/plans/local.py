@@ -1,253 +1,151 @@
-"""Local (in-memory, pandas) ECQL evaluation — the LocalQueryRunner analog.
+"""The naive ECQL evaluator: the test oracle of the Catalyst compiler.
 
 The reference runs filters two ways: pushed down through index scans, and
 naively on the client (planning/LocalQueryRunner.scala:70-103); its FilterTest
-asserts both agree (filter/FilterTest.scala:92-103). This module is our naive
-side: evaluate an ECQL string row-by-row over a pandas frame with parsed
-geometry objects. Used as the oracle for the corpus parity tests and as a
-driver-side fallback for small in-memory layers (e.g. the streaming cache).
+asserts both agree (filter/FilterTest.scala:92-103). This module is the naive
+side: it evaluates the tree ``plans.ecql.parse`` returns over a pandas frame
+with numpy and the geometry kernels of ``geom/algos.py``, driven by the same
+``EcqlContext``, so a parity test compares two evaluators of one parse.
+
+It keeps the compiler's SQL semantics: a null attribute satisfies no
+comparison, BETWEEN, LIKE, IN or DURING, and NOT is two-valued (true where
+its operand is false or null). A NaN in a pandas float column is that
+column's missing value (Arrow carries it to Spark as null), so NaN reads as
+null here, not as Spark's largest double. LIKE follows Spark's: ``%`` and
+``_`` are wildcards, ``\\`` escapes the next character. Filter functions
+are not evaluated.
 """
 
 from __future__ import annotations
 
+import operator
 import re
+from datetime import datetime
 
 import numpy as np
 import pandas as pd
 
-from geomesa_spark.geom import algos, model
+from geomesa_spark.geom import algos, model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
-from geomesa_spark.plans.ecql import _ISO, _to_degrees, _tokenize, SPATIAL_OPS
+from geomesa_spark.plans.ecql import EcqlContext, is_instant, parse, to_degrees
+
+_CMP = {"=": operator.eq, "<>": operator.ne, "<": operator.lt,
+        "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+_GEOMETRY_TESTS = {
+    "INTERSECTS": algos.intersects,
+    "DISJOINT": lambda g, q: not algos.intersects(g, q),
+    "CONTAINS": algos.contains,
+    "WITHIN": lambda g, q: algos.contains(q, g),
+    "OVERLAPS": algos.overlaps,
+    "CROSSES": algos.crosses,
+    "TOUCHES": algos.touches,
+    "EQUALS": algos.geom_equals,
+}
 
 
-class LocalEcql:
-    """Evaluate ECQL over a pandas frame -> boolean numpy mask."""
-
-    def __init__(self, text: str, pdf: pd.DataFrame, geom_col: str = "geom",
-                 fid_col: str = "__fid__"):
-        self.tokens = _tokenize(text)
-        self.pos = 0
-        self.pdf = pdf
-        self.n = len(pdf)
-        self.fid_col = fid_col
-        self.geoms = [wkb_loads(bytes(b)) if b is not None else None
-                      for b in pdf[geom_col]] if geom_col in pdf.columns else None
-
-    # token plumbing (same shapes as the Catalyst compiler)
-    def peek(self):
-        return self.tokens[self.pos]
-
-    def next(self):
-        t = self.tokens[self.pos]
-        self.pos += 1
-        return t
-
-    def expect(self, kind, value=None):
-        k, v = self.next()
-        assert k == kind and (value is None or v.upper() == value), (k, v)
-        return v
-
-    def _peek_word(self):
-        k, v = self.peek()
-        return v.upper() if k == "word" else None
-
-    def eval(self) -> np.ndarray:
-        m = self.or_expr()
-        assert self.peek()[0] == "eof"
-        return m
-
-    def or_expr(self):
-        left = self.and_expr()
-        while self._peek_word() == "OR":
-            self.next()
-            left = left | self.and_expr()
-        return left
-
-    def and_expr(self):
-        left = self.not_expr()
-        while self._peek_word() == "AND":
-            self.next()
-            left = left & self.not_expr()
-        return left
-
-    def not_expr(self):
-        if self._peek_word() == "NOT":
-            self.next()
-            return ~self.not_expr()
-        if self.peek()[0] == "lparen":
-            self.next()
-            m = self.or_expr()
-            self.expect("rparen")
-            return m
-        return self.predicate()
-
-    def predicate(self):
-        k, v = self.peek()
-        if k == "word" and v.upper() in SPATIAL_OPS:
-            return self.spatial()
-        if k == "word" and v.upper() == "IN":
-            return self.in_list(self.fid_col)
-        if k == "word" and v.upper() in ("INCLUDE", "EXCLUDE"):
-            self.next()
-            return np.full(self.n, v.upper() == "INCLUDE")
-        prop = self.expect("word")
-        w = self._peek_word()
-        col = self.pdf[prop] if prop in self.pdf.columns else pd.Series([None] * self.n)
-        if w == "DURING":
-            self.next()
-            lo = pd.Timestamp(self.expect("iso").rstrip("Z"))
-            self.expect("slash")
-            hi = pd.Timestamp(self.expect("iso").rstrip("Z"))
-            c = pd.to_datetime(col)
-            return ((c > lo) & (c < hi)).to_numpy()
-        if w in ("BEFORE", "AFTER"):
-            self.next()
-            t = pd.Timestamp(self.expect("iso").rstrip("Z"))
-            c = pd.to_datetime(col)
-            return ((c < t) if w == "BEFORE" else (c > t)).to_numpy()
-        if w == "TEQUALS":
-            self.next()
-            t = pd.Timestamp(self.expect("iso").rstrip("Z"))
-            return (pd.to_datetime(col) == t).to_numpy()
-        if w == "NOT":
-            self.next()
-            w2 = self._peek_word()
-            if w2 == "BETWEEN":
-                return ~self._between(col)
-            if w2 in ("LIKE", "ILIKE"):
-                return ~self._like(col)
-            if w2 == "IN":
-                return ~self.in_list(prop)
-            raise ValueError(w2)
-        if w == "BETWEEN":
-            return self._between(col)
-        if w in ("LIKE", "ILIKE"):
-            return self._like(col)
-        if w == "IN":
-            return self.in_list(prop)
-        if w == "IS":
-            self.next()
-            neg = self._peek_word() == "NOT"
-            if neg:
-                self.next()
-            self.expect("word", "NULL")
-            isnull = col.isna().to_numpy()
-            return ~isnull if neg else isnull
-        k2, op = self.next()
-        assert k2 == "op", op
-        lit = self.literal()
-        if isinstance(lit, str) and _ISO.match(lit):
-            c = pd.to_datetime(col)
-            lit = pd.Timestamp(lit.rstrip("Z"))
-        else:
-            c = col
-        m = {"=": c == lit, "<>": c != lit, "<": c < lit,
-             "<=": c <= lit, ">": c > lit, ">=": c >= lit}[op]
-        return m.fillna(False).to_numpy()
-
-    def _between(self, col):
-        self.expect("word", "BETWEEN")
-        lo = self.literal()
-        self.expect("word", "AND")
-        hi = self.literal()
-        if isinstance(lo, str) and _ISO.match(str(lo)):
-            c = pd.to_datetime(col)
-            lo, hi = pd.Timestamp(lo.rstrip("Z")), pd.Timestamp(str(hi).rstrip("Z"))
-        else:
-            c = col
-        return ((c >= lo) & (c <= hi)).fillna(False).to_numpy()
-
-    def _like(self, col):
-        ci = self.expect("word").upper() == "ILIKE"
-        pat = str(self.literal())
-        rx = "^" + re.escape(pat).replace("%", ".*").replace("_", ".") + "$"
-        # re.escape escapes % and _ as \% \_ in some versions; normalize
-        rx = rx.replace(r"\%", ".*").replace(r"\_", ".")
-        flags = re.I if ci else 0
-        return col.astype(str).str.match(rx, flags).fillna(False).to_numpy()
-
-    def in_list(self, prop):
-        self.expect("word", "IN")
-        self.expect("lparen")
-        vals = [self.literal()]
-        while self.peek()[0] == "comma":
-            self.next()
-            vals.append(self.literal())
-        self.expect("rparen")
-        col = self.pdf[prop] if prop in self.pdf.columns else pd.Series([None] * self.n)
-        return col.isin(vals).to_numpy()
-
-    def literal(self):
-        k, v = self.next()
-        if k == "string":
-            return v[1:-1].replace("''", "'")
-        if k == "number":
-            f = float(v)
-            return int(f) if f.is_integer() and "." not in v else f
-        if k in ("iso", "word"):
-            return v
-        raise ValueError((k, v))
-
-    # spatial
-    def spatial(self):
-        op = self.expect("word").upper()
-        self.expect("lparen")
-        self.expect("word")  # property (single geometry column assumed)
-        self.expect("comma")
-        if op == "BBOX":
-            nums = [self.literal()]
-            for _ in range(3):
-                self.expect("comma")
-                nums.append(self.literal())
-            self.expect("rparen")
-            q = model.box(*[float(x) for x in nums])
-            return self._apply(lambda g: algos.intersects(g, q))
-        q = self._geometry()
-        if op in ("DWITHIN", "BEYOND"):
-            self.expect("comma")
-            dist = float(self.literal())
-            self.expect("comma")
-            units = self.expect("word").lower()
-            self.expect("rparen")
-            deg = _to_degrees(dist, units, q)
-            m = self._apply(lambda g: algos.distance(g, q) <= deg)
-            return m if op == "DWITHIN" else ~m
-        self.expect("rparen")
-        fns = {"INTERSECTS": lambda g: algos.intersects(g, q),
-               "DISJOINT": lambda g: not algos.intersects(g, q),
-               "CONTAINS": lambda g: algos.contains(g, q),
-               "WITHIN": lambda g: algos.contains(q, g),
-               "OVERLAPS": lambda g: algos.overlaps(g, q),
-               "CROSSES": lambda g: algos.crosses(g, q),
-               "TOUCHES": lambda g: algos.touches(g, q),
-               "EQUALS": lambda g: algos.geom_equals(g, q)}
-        return self._apply(fns[op])
-
-    def _geometry(self):
-        from geomesa_spark.geom import wkt as wktmod
-        typ = self.expect("word").upper()
-        depth = 0
-        parts = [typ]
-        while True:
-            k, v = self.next()
-            if k == "lparen":
-                depth += 1
-                parts.append("(")
-            elif k == "rparen":
-                depth -= 1
-                parts.append(")")
-                if depth == 0:
-                    break
-            elif k == "comma":
-                parts.append(",")
-            else:
-                parts.append(" " + v)
-        return wktmod.wkt_loads("".join(parts))
-
-    def _apply(self, fn):
-        return np.array([bool(fn(g)) if g is not None else False for g in self.geoms])
+def _defined(n: int, test, *args) -> np.ndarray:
+    """``test(*args)`` on the rows where no Series argument is null, false
+    on the others."""
+    ok = np.ones(n, dtype=bool)
+    for a in args:
+        if isinstance(a, pd.Series):
+            ok &= a.notna().to_numpy()
+    out = np.zeros(n, dtype=bool)
+    out[ok] = np.asarray(test(*(a[ok] if isinstance(a, pd.Series) else a for a in args)),
+                         dtype=bool)
+    return out
 
 
-def local_filter(text: str, pdf: pd.DataFrame, **kw) -> pd.DataFrame:
+def _operand(v: tuple, pdf: pd.DataFrame, instant: bool):
+    if v[0] == "lit":
+        return v[1]
+    if v[0] == "prop":
+        return pd.to_datetime(pdf[v[1]]) if instant else pdf[v[1]]
+    raise ValueError(f"ECQL function {v[1]}() is not supported by the local evaluator")
+
+
+def _like(pattern: str) -> re.Pattern:
+    rx, chars = [], iter(pattern)
+    for ch in chars:
+        rx.append(re.escape(next(chars, ch)) if ch == "\\" else
+                  ".*" if ch == "%" else "." if ch == "_" else re.escape(ch))
+    return re.compile("".join(rx), re.S)
+
+
+def _points(op: str, g: model.Geometry, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """The compiler's lon/lat answers (``refine.point_predicate``): a point
+    WITHIN/TOUCHES a line or a point reads as INTERSECTS, and CONTAINS/
+    EQUALS only a coincident point."""
+    polygonal = isinstance(g, (model.Polygon, model.MultiPolygon))
+    if op in ("INTERSECTS", "DISJOINT") or (op in ("WITHIN", "TOUCHES") and not polygonal):
+        hit = algos.points_intersect(x, y, g)
+        return ~hit if op == "DISJOINT" else hit
+    if op in ("WITHIN", "TOUCHES"):
+        locs = [algos.points_in_polygon(x, y, p) for p in g._components()]
+        boundary = np.any([loc == algos.BOUNDARY for loc in locs], axis=0)
+        if op == "TOUCHES":
+            return boundary
+        return np.any([loc == algos.IN for loc in locs], axis=0) & ~boundary
+    if op in ("CONTAINS", "EQUALS") and isinstance(g, model.Point):
+        return (x == g.x) & (y == g.y)
+    return np.zeros(len(x), dtype=bool)
+
+
+def _spatial(node: tuple, pdf: pd.DataFrame, ctx: EcqlContext) -> np.ndarray:
+    if node[0] == "dwithin":
+        _, prop, text, meters = node
+        q = wkt.wkt_loads(text)
+        deg = to_degrees(meters, q)
+    else:
+        _, op, prop, text = node
+        q = wkt.wkt_loads(text)
+    if ctx.prefer_lonlat:
+        x, y = (pdf[c].astype(np.float64).to_numpy() for c in (ctx.lon_col, ctx.lat_col))
+        if node[0] == "dwithin":
+            return algos.points_dwithin(x, y, q, deg)
+        return _points(op, q, x, y)
+    test = ((lambda g, q: algos.distance(g, q) <= deg) if node[0] == "dwithin"
+            else _GEOMETRY_TESTS[op])
+    return np.array([b is not None and bool(test(wkb_loads(bytes(b)), q))
+                     for b in pdf[prop]], dtype=bool)
+
+
+def evaluate(node: tuple, pdf: pd.DataFrame, ctx: EcqlContext | None = None) -> np.ndarray:
+    """Boolean mask of the rows of ``pdf`` where the ECQL tree is true."""
+    ctx = ctx or EcqlContext()
+    kind, n = node[0], len(pdf)
+    if kind in ("and", "or"):
+        a, b = evaluate(node[1], pdf, ctx), evaluate(node[2], pdf, ctx)
+        return a & b if kind == "and" else a | b
+    if kind == "not":
+        return ~evaluate(node[1], pdf, ctx)
+    if kind == "const":
+        return np.full(n, node[1])
+    if kind in ("spatial", "dwithin"):
+        return _spatial(node, pdf, ctx)
+    if kind == "cmp":
+        _, op, lhs, rhs = node
+        instant = is_instant(lhs) or is_instant(rhs)
+        return _defined(n, _CMP[op], _operand(lhs, pdf, instant), _operand(rhs, pdf, instant))
+    col = pdf[node[1] or ctx.fid_col]
+    if kind == "isnull":
+        return col.isna().to_numpy()
+    if kind == "like":
+        _, _, pattern, ci = node
+        rx = _like(pattern.upper() if ci else pattern)
+        return _defined(n, lambda s: [rx.fullmatch(str(v).upper() if ci else str(v)) is not None
+                                      for v in s], col)
+    values = node[2] if kind == "in" else node[2:]
+    if any(isinstance(v, datetime) for v in values):
+        col = pd.to_datetime(col)
+    if kind == "in":
+        return _defined(n, lambda s: s.isin(values), col)
+    lo, hi = values
+    if kind == "between":
+        return _defined(n, lambda s: (s >= lo) & (s <= hi), col)
+    return _defined(n, lambda s: (s > lo) & (s < hi), col)  # during: exclusive
+
+
+def local_filter(text: str, pdf: pd.DataFrame, ctx: EcqlContext | None = None) -> pd.DataFrame:
     """Rows of ``pdf`` matching the ECQL filter (brute force)."""
-    return pdf[LocalEcql(text, pdf, **kw).eval()]
+    return pdf[evaluate(parse(text), pdf, ctx)]

@@ -26,8 +26,6 @@ import json
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from geomesa_spark.geom import model
 
@@ -103,9 +101,11 @@ def edge_columns(g: model.Geometry) -> tuple[bool, list, list]:
     return False, edges, segs
 
 
-def _lit(x: float) -> str:
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal (``repr`` and a ``D`` suffix);
+    non-finite values are refused."""
     if not math.isfinite(x):
-        raise ValueError(f"geometry coordinate {x} is not finite")
+        raise ValueError(f"{x} is not finite: no SQL double literal")
     return repr(float(x)).upper() + "D"
 
 
@@ -220,15 +220,15 @@ def grid_sql(edges: list, segs: list, bounds: tuple, op: str,
     lon, lat = (f"`{c}`" for c in (lon_col, lat_col))
     # clamped before FLOOR so that no input (NaN, inf, null, off-grid) can
     # fail the casts; off-grid points are false by the bbox conjunct
-    col, row = (f"CAST(FLOOR(least(greatest(({v} - {_lit(v0)}) / {_lit(step)}, 0.0D),"
-                f" {_lit(n - 1)})) AS INT)" for v, v0, step in ((lon, x0, w), (lat, y0, h)))
+    col, row = (f"CAST(FLOOR(least(greatest(({v} - {sql_double(v0)}) / {sql_double(step)}, 0.0D),"
+                f" {sql_double(n - 1)})) AS INT)" for v, v0, step in ((lon, x0, w), (lat, y0, h)))
     test = refine_sql(lon_col, lat_col, op, convex=False, edges="c.edges" if edges else None,
                       segs="c.segs" if segs else None,
                       parity=f"aggregate(c.ys, c.parity, (p, y) -> p != (y <= {lat}))")
     xmin, ymin, xmax, ymax = bounds
     # exists() over the one-cell array binds the cell once
-    return (f"{lon} BETWEEN {_lit(xmin)} AND {_lit(xmax)}"
-            f" AND {lat} BETWEEN {_lit(ymin)} AND {_lit(ymax)}"
+    return (f"{lon} BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
+            f" AND {lat} BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}"
             f" AND exists(array(element_at({grid}, {row} * {n} + {col} + 1)), c -> {test})")
 
 
@@ -252,8 +252,8 @@ def geometry_sql(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> "str
     return grid_sql(edges, segs, g.bounds, op, lon_col, lat_col)
 
 
-def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> Column:
-    """Primary bbox filter AND the native refine; DISJOINT is the
+def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> str:
+    """SQL of the primary bbox filter AND the native refine; DISJOINT is the
     complement of INTERSECTS.
 
     The bbox conjunct pushes down to the scan and keeps NaN coordinates
@@ -261,12 +261,9 @@ def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> C
     half-plane tests. Null or NaN coordinates never INTERSECT/WITHIN/TOUCH
     and are always DISJOINT, as in the numpy kernels."""
     if op == "DISJOINT":
-        return ~F.coalesce(point_predicate(g, "INTERSECTS", lon_col, lat_col),
-                           F.lit(False))
+        return f"NOT coalesce(({point_predicate(g, 'INTERSECTS', lon_col, lat_col)}), false)"
     xmin, ymin, xmax, ymax = g.bounds
-    out = (F.col(lon_col).between(xmin, xmax)
-           & F.col(lat_col).between(ymin, ymax))
+    out = (f"`{lon_col}` BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
+           f" AND `{lat_col}` BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}")
     sql = geometry_sql(g, op, lon_col, lat_col)
-    if sql is not None:
-        out = out & F.coalesce(F.expr(sql), F.lit(False))
-    return out
+    return out if sql is None else f"{out} AND coalesce(({sql}), false)"

@@ -40,3 +40,27 @@ def count_jobs(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
     return run
+
+
+@pytest.fixture
+def count_round_trips(spark):
+    """``count_round_trips(fn)``: the number of commands ``fn()`` sent to
+    the JVM over py4j, counted by wrapping
+    ``ClientServerConnection.send_command`` for the call."""
+    from py4j.clientserver import ClientServerConnection
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    def run(fn):
+        calls.clear()
+        ClientServerConnection.send_command = counting
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return len(calls)
+    return run

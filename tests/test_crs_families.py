@@ -273,6 +273,31 @@ class TestTransverseMercator:
         assert got[1:] == want
         assert np.allclose(np.c_[ex[1:], ny[1:]], want, rtol=0, atol=1e-8)
 
+    # (lon, lat) at the poles -> (E, N): the series' limit xi' = +-pi/2,
+    # eta' = 0 is E = the false easting, N = the false northing plus k0 times
+    # the meridian arc from the origin's latitude to the pole
+    POLES = {
+        32631: [(3.0, 90.0, 500_000.0, 9_997_964.94), (3.0, -90.0, 500_000.0, -9_997_964.94)],
+        32731: [(3.0, 90.0, 500_000.0, 19_997_964.94), (-40.0, -90.0, 500_000.0, 2_035.06)],
+        2193: [(173.0, -90.0, 1_600_000.0, 2_035.06)],
+        27700: [(-2.0, 90.0, None, None), (0.5, -90.0, None, None)],
+    }
+
+    @pytest.mark.parametrize("code", sorted(POLES))
+    def test_poles_are_the_series_limit(self, spark, code):
+        """The forward is finite at lat +-90 on both paths (it was null /
+        NaN there). 27700's datum shift moves the pole off 90 degrees, so
+        its rows only have to be finite and agree."""
+        rows = self.POLES[code]
+        df = spark.createDataFrame([r[:2] for r in rows], "x double, y double")
+        got = [(r.x2, r.y2) for r in crs.reproject(df, 4326, code).collect()]
+        ex, ny = crs.transform_points_np([r[0] for r in rows], [r[1] for r in rows], 4326, code)
+        assert np.isfinite(np.array(got, dtype=float)).all(), got
+        assert np.allclose(np.c_[ex, ny], got, rtol=1e-12, atol=1e-8), (got, ex, ny)
+        for (_lon, _lat, e, n), (ge, gn) in zip(rows, got):
+            if e is not None:
+                assert abs(ge - e) < 0.01 and abs(gn - n) < 0.01, (ge, gn)
+
     def test_bng_projection_os_worked_example(self, spark):
         """OS/EPSG worked example for the 27700 PROJECTION (datumless):
         OSGB36 lat 50d30'N lon 0d30'E -> E 577274.98 N 69740.49 (cm)."""

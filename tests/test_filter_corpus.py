@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geomesa_spark.plans.ecql import EcqlContext, ecql_to_column
+from geomesa_spark.plans.ecql import EcqlContext, _fn_sql, ecql_to_column
 from geomesa_spark.plans.local import local_filter
 from geomesa_spark.sources.features import features_df, features_pdf
 
@@ -309,19 +309,28 @@ def test_local_evaluator_supports_new_operators(spark, fixture):
         assert got == want, ecql
 
 
+def _col(name: str) -> tuple:
+    return ("prop", name)
+
+
+def _fn(name: str, args: list):
+    """The filter function ``name`` over ``args`` as a Column: ``_col``
+    nodes are properties, every other argument a literal."""
+    return F.expr(_fn_sql(name, [a if isinstance(a, tuple) else ("lit", a) for a in args]))
+
+
 def test_str_replace_regex_semantics(spark):
     """geotools strReplace is regex-based (String.replaceAll/replaceFirst):
     patterns are Java regexes, and the all=false form replaces only the
     FIRST occurrence."""
     df = spark.createDataFrame([("abcabc",), ("a1b2c3",)], "s string")
-    from geomesa_spark.plans.ecql import EcqlParser
     def apply_fn(args):
-        return EcqlParser._apply_fn("strReplace", args)
+        return _fn("strReplace", args)
     rows = df.select(
-        apply_fn([F.col("s"), "b", "X", "true"]).alias("all_lit"),
-        apply_fn([F.col("s"), "b", "X", "false"]).alias("first_lit"),
-        apply_fn([F.col("s"), "[0-9]", "#", "true"]).alias("all_re"),
-        apply_fn([F.col("s"), "[0-9]", "#", "false"]).alias("first_re"),
+        apply_fn([_col("s"), "b", "X", "true"]).alias("all_lit"),
+        apply_fn([_col("s"), "b", "X", "false"]).alias("first_lit"),
+        apply_fn([_col("s"), "[0-9]", "#", "true"]).alias("all_re"),
+        apply_fn([_col("s"), "[0-9]", "#", "false"]).alias("first_re"),
     ).collect()
     assert [r.all_lit for r in rows] == ["aXcaXc", "a1X2c3"]
     assert [r.first_lit for r in rows] == ["aXcabc", "a1X2c3"]
@@ -335,15 +344,11 @@ def test_str_replace_group_references(spark):
     anchor group) in the replace-first form; unsupported shapes fail loud
     instead of silently mis-binding (ADVICE r4)."""
     import pytest
-    from geomesa_spark.plans.ecql import EcqlParser
     df = spark.createDataFrame([("abcabc",)], "s string")
     rows = df.select(
-        EcqlParser._apply_fn(
-            "strReplace", [F.col("s"), "(b)(c)", "$2$1", "true"]).alias("swap_all"),
-        EcqlParser._apply_fn(
-            "strReplace", [F.col("s"), "(b)(c)", "[$1]", "false"]).alias("grp_first"),
-        EcqlParser._apply_fn(
-            "strReplace", [F.col("s"), "b", r"\$x", "true"]).alias("esc_dollar"),
+        _fn("strReplace", [_col("s"), "(b)(c)", "$2$1", "true"]).alias("swap_all"),
+        _fn("strReplace", [_col("s"), "(b)(c)", "[$1]", "false"]).alias("grp_first"),
+        _fn("strReplace", [_col("s"), "b", r"\$x", "true"]).alias("esc_dollar"),
     ).collect()
     assert rows[0].swap_all == "acbacb"
     assert rows[0].grp_first == "a[b]abc"
@@ -351,13 +356,13 @@ def test_str_replace_group_references(spark):
     # pattern backreference in replace-first: would re-bind \1 to the
     # injected prefix group -> must refuse
     with pytest.raises(ValueError, match="backreferences"):
-        EcqlParser._apply_fn("strReplace", [F.col("s"), r"(a)\1", "x", "false"])
+        _fn("strReplace", [_col("s"), r"(a)\1", "x", "false"])
     # $0 cannot be shifted in replace-first
     with pytest.raises(ValueError, match=r"\$0"):
-        EcqlParser._apply_fn("strReplace", [F.col("s"), "b", "<$0>", "false"])
+        _fn("strReplace", [_col("s"), "b", "<$0>", "false"])
     # dangling $ is an error in Java Matcher too
     with pytest.raises(ValueError, match="dangling"):
-        EcqlParser._apply_fn("strReplace", [F.col("s"), "b", "x$", "false"])
+        _fn("strReplace", [_col("s"), "b", "x$", "false"])
 
 
 def test_str_functions_accept_column_arguments(spark):
@@ -365,18 +370,13 @@ def test_str_functions_accept_column_arguments(spark):
     strStartsWith / strEndsWith / strSubstring with Column needles or
     bounds must compile to real expressions, not str(Column) garbage
     (ADVICE r4)."""
-    from geomesa_spark.plans.ecql import EcqlParser
     df = spark.createDataFrame([("hello", "ell", 1, 4)],
                                "s string, sub string, b int, e int")
     rows = df.select(
-        EcqlParser._apply_fn(
-            "strIndexOf", [F.col("s"), F.col("sub")]).alias("idx"),
-        EcqlParser._apply_fn(
-            "strStartsWith", [F.col("s"), F.col("sub")]).alias("sw"),
-        EcqlParser._apply_fn(
-            "strEndsWith", [F.col("s"), F.lit("llo")]).alias("ew"),
-        EcqlParser._apply_fn(
-            "strSubstring", [F.col("s"), F.col("b"), F.col("e")]).alias("sub3"),
+        _fn("strIndexOf", [_col("s"), _col("sub")]).alias("idx"),
+        _fn("strStartsWith", [_col("s"), _col("sub")]).alias("sw"),
+        _fn("strEndsWith", [_col("s"), "llo"]).alias("ew"),
+        _fn("strSubstring", [_col("s"), _col("b"), _col("e")]).alias("sub3"),
     ).collect()
     assert rows[0].idx == 1
     assert rows[0].sw is False

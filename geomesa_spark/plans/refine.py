@@ -109,6 +109,12 @@ def sql_double(x: float) -> str:
     return repr(float(x)).upper() + "D"
 
 
+def _bbox_sql(bounds: tuple, lon: str, lat: str) -> str:
+    xmin, ymin, xmax, ymax = bounds
+    return (f"{lon} BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
+            f" AND {lat} BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}")
+
+
 def _structs(edges: list) -> list:
     return [dict(zip(("ax", "ay", "bx", "by"), e)) for e in edges]
 
@@ -225,10 +231,8 @@ def grid_sql(edges: list, segs: list, bounds: tuple, op: str,
     test = refine_sql(lon_col, lat_col, op, convex=False, edges="c.edges" if edges else None,
                       segs="c.segs" if segs else None,
                       parity=f"aggregate(c.ys, c.parity, (p, y) -> p != (y <= {lat}))")
-    xmin, ymin, xmax, ymax = bounds
     # exists() over the one-cell array binds the cell once
-    return (f"{lon} BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
-            f" AND {lat} BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}"
+    return (f"{_bbox_sql(bounds, lon, lat)}"
             f" AND exists(array(element_at({grid}, {row} * {n} + {col} + 1)), c -> {test})")
 
 
@@ -262,8 +266,6 @@ def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> s
     and are always DISJOINT, as in the numpy kernels."""
     if op == "DISJOINT":
         return f"NOT coalesce(({point_predicate(g, 'INTERSECTS', lon_col, lat_col)}), false)"
-    xmin, ymin, xmax, ymax = g.bounds
-    out = (f"`{lon_col}` BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
-           f" AND `{lat_col}` BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}")
+    out = _bbox_sql(g.bounds, f"`{lon_col}`", f"`{lat_col}`")
     sql = geometry_sql(g, op, lon_col, lat_col)
     return out if sql is None else f"{out} AND coalesce(({sql}), false)"

@@ -17,10 +17,11 @@ buffer :315-396):
 4. exact haversine refine + per-query top-k (row_number over dist — the
    reference's replace-farthest k-buffer).
 
-Each round is one scan whose query-side inputs are literals.  A round with
-one query point filters to its window and attaches ``lit(qid)``,
-``lit(qlon)`` and ``lit(qlat)``: with a literal partition key Catalyst plans
-the top-k as TakeOrderedAndProject (one job, no exchange).  A round with
+Each round is one scan whose query-side inputs are SQL literals, and one
+``selectExpr`` ranks its rows.  A round with one query point filters to its
+window and ranks by the haversine to the literal point, partitioned by the
+literal qid: with a literal partition key Catalyst plans the top-k as
+TakeOrderedAndProject (one job, no exchange).  A round with
 several attaches them with ``inline(filter(<literal array of query structs>,
 q -> the row's cell lies in q's window))`` and ranks them in a window
 partitioned by qid.  Every scan carries a driver-built bbox predicate on the
@@ -38,7 +39,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
-from geomesa_spark.operators.processes import haversine_col
+from geomesa_spark.operators.processes import haversine_col, haversine_sql
+from geomesa_spark.plans.refine import sql_double, sql_literal
 from geomesa_spark.sources.arrow_io import local_table
 
 M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
@@ -109,18 +111,13 @@ def _bbox_sql(ixs, iys, n: int, lon_col: str, lat_col: str) -> str:
     the window filter stays exact.
     """
     x0, nx, y0, y1 = _window(ixs, iys, n)
-    sql = (f"{lat_col} BETWEEN {-90.0 + y0 * 180.0 / n!r}D"
-           f" AND {-90.0 + (y1 + 1) * 180.0 / n!r}D")
+    sql = (f"`{lat_col}` BETWEEN {sql_double(-90.0 + y0 * 180.0 / n)}"
+           f" AND {sql_double(-90.0 + (y1 + 1) * 180.0 / n)}")
     if len(set(ixs)) <= n // 2:
         lo, hi = -180.0 + x0 * 360.0 / n, -180.0 + ((x0 + nx - 1) % n + 1) * 360.0 / n
         op = "AND" if x0 + nx <= n else "OR"  # OR: the arc wraps the antimeridian
-        sql += f" AND ({lon_col} >= {lo!r}D {op} {lon_col} <= {hi!r}D)"
+        sql += f" AND (`{lon_col}` >= {sql_double(lo)} {op} `{lon_col}` <= {sql_double(hi)})"
     return sql
-
-
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _pick_res(total_rows: int, k: int) -> int:
@@ -178,21 +175,22 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
         if len(wins) == 1:
             (qid, w), = wins.items()
             scan = points.where(f"{bbox} AND {inside(ix, iy, *w)}")
-            q, (qlon, qlat) = F.lit(qid), q_pos[qid]
+            q, (qlon, qlat) = sql_literal(qid), q_pos[qid]
         else:
             qs = ", ".join(
-                f"named_struct('qid', {_sql_str(qid)}, 'qlon', {q_pos[qid][0]!r}D,"
-                f" 'qlat', {q_pos[qid][1]!r}D, '__x0', {x0}, '__nx', {nx},"
+                f"named_struct('qid', {sql_literal(qid)}, 'qlon', {sql_literal(q_pos[qid][0])},"
+                f" 'qlat', {sql_literal(q_pos[qid][1])}, '__x0', {x0}, '__nx', {nx},"
                 f" '__y0', {y0}, '__y1', {y1})" for qid, (x0, nx, y0, y1) in wins.items())
             in_q = inside("__ix", "__iy", "q.__x0", "q.__nx", "q.__y0", "q.__y1")
             scan = (points.where(bbox)
-                    .select("*", F.expr(ix).alias("__ix"), F.expr(iy).alias("__iy"))
-                    .select("*", F.expr(f"inline(filter(array({qs}), q -> {in_q}))")))
-            q, qlon, qlat = F.col("qid"), "qlon", "qlat"
-        dist = haversine_col(lon_col, lat_col, qlon, qlat)
-        rank = F.row_number().over(Window.partitionBy(q).orderBy(dist))
-        return (scan.select(q.alias("qid"), *points.columns, dist.alias("dist_m"),
-                            rank.alias("knn_rank"))
+                    .selectExpr("*", f"{ix} AS __ix", f"{iy} AS __iy")
+                    .selectExpr("*", f"inline(filter(array({qs}), q -> {in_q}))"))
+            q, qlon, qlat = "`qid`", "qlon", "qlat"
+        dist = haversine_sql(lon_col, lat_col, qlon, qlat)
+        return (scan.selectExpr(f"{q} AS qid", *(f"`{c}`" for c in points.columns),
+                                f"{dist} AS dist_m",
+                                f"row_number() OVER (PARTITION BY {q} ORDER BY {dist})"
+                                " AS knn_rank")
                 .where(f"knn_rank <= {k}"))
 
     # --- expansion: ONE job per round returns the provisional top-k rows

@@ -55,12 +55,16 @@ import re
 from dataclasses import dataclass
 from datetime import datetime
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
 
-from geomesa_spark.geom import model, wkt
+from geomesa_spark.geom import algos, model, wkt
 from geomesa_spark.geom.wkb import wkb_dumps
 from geomesa_spark.plans import refine
+from geomesa_spark.plans.refine import sql_literal
 
 SPATIAL_OPS = {"INTERSECTS", "DISJOINT", "CONTAINS", "WITHIN", "OVERLAPS",
                "CROSSES", "TOUCHES", "EQUALS", "BBOX", "DWITHIN", "BEYOND"}
@@ -132,7 +136,6 @@ def _shift_dollar_refs(repl: str) -> str:
 
 @dataclass
 class EcqlContext:
-    geom_col: str = "geom"        # WKB geometry column
     lon_col: str = "lon"          # used when geometry is point lon/lat
     lat_col: str = "lat"
     fid_col: str = "__fid__"
@@ -369,21 +372,17 @@ def to_degrees(meters: float, geom: model.Geometry) -> float:
     return meters / (M_PER_DEG * max(math.cos(math.radians(lat)), 0.01))
 
 
+def points_dwithin_udf(geom: model.Geometry, distance_deg: float):
+    """The point DWITHIN refine as a pandas UDF of (lon, lat):
+    ``algos.points_dwithin`` per Arrow batch."""
+    def within(lon, lat):
+        return pd.Series(algos.points_dwithin(
+            lon.to_numpy(np.float64), lat.to_numpy(np.float64), geom, distance_deg))
+
+    return F.pandas_udf(within, BooleanType())
+
+
 # -- SQL ----------------------------------------------------------------------
-
-def _sql_literal(x) -> str:
-    """``x`` as a Spark SQL literal of the type ``F.lit`` gives it."""
-    if isinstance(x, bool):
-        return "true" if x else "false"
-    if isinstance(x, int):
-        return str(x)
-    if isinstance(x, float):
-        return refine.sql_double(x)
-    if isinstance(x, datetime):
-        return f"CAST('{x.isoformat(sep=' ')}' AS TIMESTAMP)"
-    # Spark SQL string literals treat backslash as an escape
-    return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
 
 def is_instant(v: tuple) -> bool:
     """True for an instant literal node."""
@@ -396,7 +395,7 @@ def _value_sql(v: tuple, instant: bool = False) -> str:
     if v[0] == "prop":
         return f"CAST(`{v[1]}` AS TIMESTAMP)" if instant else f"`{v[1]}`"
     if v[0] == "lit":
-        return _sql_literal(v[1])
+        return sql_literal(v[1])
     return _fn_sql(v[1], v[2])
 
 
@@ -436,7 +435,7 @@ def _fn_sql(name: str, args: list) -> str:
         # replace-all form passes both through verbatim.
         pat, repl, every = (str(a[1]) for a in args[1:4])
         if every.lower() in ("true", "1"):
-            return f"regexp_replace({sql[0]}, {_sql_literal(pat)}, {_sql_literal(repl)})"
+            return f"regexp_replace({sql[0]}, {sql_literal(pat)}, {sql_literal(repl)})"
         # First-occurrence-only: anchor the pattern behind a non-greedy
         # DOTALL prefix capture.  The injected group shifts every
         # capture-group number by one, so $n in the replacement is
@@ -447,8 +446,8 @@ def _fn_sql(name: str, args: list) -> str:
                 "strReplace(..., false): pattern backreferences (\\n) "
                 "are unsupported — the first-occurrence rewrite injects "
                 f"a prefix capture group that shifts their binding: {pat!r}")
-        return (f"regexp_replace({sql[0]}, {_sql_literal(f'(?s)^((?:.)*?)(?:{pat})')}, "
-                f"{_sql_literal('$1' + _shift_dollar_refs(repl))})")
+        return (f"regexp_replace({sql[0]}, {sql_literal(f'(?s)^((?:.)*?)(?:{pat})')}, "
+                f"{sql_literal('$1' + _shift_dollar_refs(repl))})")
     raise ValueError(f"unsupported ECQL function: {name!r}")
 
 
@@ -471,7 +470,7 @@ def _spatial_sql(op: str, prop: str, g: model.Geometry, ctx: EcqlContext) -> str
 def _leaf_sql(node: tuple, ctx: EcqlContext) -> str:
     kind = node[0]
     if kind == "const":
-        return _sql_literal(node[1])
+        return sql_literal(node[1])
     if kind == "cmp":
         _, op, lhs, rhs = node
         instant = is_instant(lhs) or is_instant(rhs)
@@ -488,12 +487,12 @@ def _leaf_sql(node: tuple, ctx: EcqlContext) -> str:
     if kind == "like":
         _, _, pattern, ci = node
         if ci:
-            return f"upper({prop}) LIKE {_sql_literal(pattern.upper())}"
-        return f"{prop} LIKE {_sql_literal(pattern)}"
+            return f"upper({prop}) LIKE {sql_literal(pattern.upper())}"
+        return f"{prop} LIKE {sql_literal(pattern)}"
     values = node[2] if kind == "in" else node[2:]
     if any(isinstance(x, datetime) for x in values):
         prop = f"CAST({prop} AS TIMESTAMP)"
-    lits = [_sql_literal(x) for x in values]
+    lits = [sql_literal(x) for x in values]
     if kind == "in":
         return f"{prop} IN ({', '.join(lits)})"
     if kind == "between":
@@ -509,11 +508,15 @@ def _column(node: tuple, ctx: EcqlContext) -> Column:
     if kind == "not":
         return ~F.coalesce(_column(node[1], ctx), F.lit(False))
     if kind == "dwithin" and ctx.prefer_lonlat:
-        # the one Column leaf: the point DWITHIN refine is a pandas UDF
-        from geomesa_spark.plans.query import points_dwithin_udf
+        # the one Column leaf: the point DWITHIN refine is a pandas UDF,
+        # behind a bbox primary filter that pushes down to the scan: the
+        # bounds grown by d and a margin far above the kernel's rounding
         g = wkt.wkt_loads(node[2])
-        return points_dwithin_udf(g, to_degrees(node[3], g))(
-            F.col(ctx.lon_col), F.col(ctx.lat_col))
+        d = to_degrees(node[3], g)
+        pad = d + 1e-9 * (1.0 + d + max(abs(v) for v in g.bounds))
+        x0, y0, x1, y1 = g.bounds
+        box = refine.bbox_sql((x0 - pad, y0 - pad, x1 + pad, y1 + pad), ctx.lon_col, ctx.lat_col)
+        return F.expr(box) & points_dwithin_udf(g, d)(ctx.lon_col, ctx.lat_col)
     return F.expr(_leaf_sql(node, ctx))
 
 

@@ -1,30 +1,30 @@
 """SpatialQuery: the engine's query API (ECQL-equivalent surface).
 
-Compiles bbox / geometry / interval / attribute predicates into Catalyst
-expressions the same way the reference's QueryPlanner splits filters into
-index primary + residual (planning/FilterSplitter.scala:61-147):
+Compiles bbox / geometry / interval / attribute predicates into one SQL
+conjunction, rendered by the ECQL compiler's own leaves, the same way the
+reference's QueryPlanner splits filters into index primary + residual
+(planning/FilterSplitter.scala:61-147):
 
 * bbox and interval -> native range predicates (pushed to parquet/Iceberg
   scans by Catalyst: PushedFilters + partition pruning),
 * optional z2/cell column -> coarse SFC range predicate (file skipping),
-* polygon refine -> ONE native Catalyst expression over (lon, lat)
-  (plans/refine.py) — the 'residual filter' — skipped entirely when the
-  query geometry is its own bbox (the reference's exact-ranges shortcut,
+* geometry -> ``refine.point_predicate``, ECQL's lon/lat INTERSECTS: its
+  bbox primary AND the exact refine as ONE native expression — the
+  'residual filter' — skipped entirely when the query geometry is its own
+  bbox (the reference's exact-ranges shortcut,
   Z3IndexKeySpace.useFullFilter:240-254).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 from typing import Optional, Union
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
-from geomesa_spark.geom import algos, model, wkt
+from geomesa_spark.geom import model, wkt
 from geomesa_spark.plans import cover, guards, refine
 
 
@@ -36,30 +36,21 @@ def _as_geometry(g) -> model.Geometry:
     raise TypeError(f"geometry must be WKT or Geometry, got {type(g)}")
 
 
-def points_dwithin_udf(geom: model.Geometry, distance_deg: float):
-    def within(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(algos.points_dwithin(
-            lon.to_numpy(np.float64), lat.to_numpy(np.float64), geom, distance_deg))
-
-    return F.pandas_udf(within, BooleanType())
-
-
 @dataclass
 class SpatialQuery:
     """Declarative spatio-temporal query over a point table.
 
     Attributes mirror the reference's Query(typeName, filter, properties):
     ``geometry`` is INTERSECTS, ``bbox`` is BBOX, ``interval`` is an
-    INCLUSIVE ``ts BETWEEN lo AND hi`` (the ECQL compiler's DURING stays
-    exclusive per the spec — use it when strict bounds matter),
-    ``where`` is any residual attribute predicate (SQL), ``select`` is the
-    projection (transform), ``limit`` is maxFeatures.
+    INCLUSIVE ``lo <= ts <= hi`` where a None end is unbounded (the ECQL
+    compiler's DURING stays exclusive per the spec — use it when strict
+    bounds matter), ``where`` is any residual attribute predicate (SQL),
+    ``select`` is the projection (transform), ``limit`` is maxFeatures.
     """
 
     bbox: Optional[tuple] = None
     geometry: Optional[Union[str, model.Geometry]] = None
-    dwithin: Optional[tuple] = None            # (geometry, distance_degrees)
-    interval: Optional[tuple] = None           # (lo, hi) timestamps/strings
+    interval: Optional[tuple] = None           # (lo, hi); a None end is unbounded
     where: Optional[str] = None
     select: Optional[list] = None
     limit: Optional[int] = None
@@ -81,52 +72,29 @@ class SpatialQuery:
         return geom, (geom.bounds if geom is not None else None)
 
     def predicate(self, df: DataFrame) -> Optional[Column]:
-        lon, lat = F.col(self.lon_col), F.col(self.lat_col)
-        preds: list[Column] = []
-        boxes: list[tuple] = []
-
         geom, bbox = self._shape()
-
         guards.check_guards(bbox=bbox, interval=self.interval,
                             allow_full_scan=self.allow_full_scan or self.where is not None)
 
-        if bbox is not None:
-            xmin, ymin, xmax, ymax = bbox
-            preds.append(lon.between(xmin, xmax) & lat.between(ymin, ymax))
-            boxes.append(bbox)
-            if self.z2_col is not None and self.z2_col in df.columns:
-                preds.append(cover.z2_range_predicate(self.z2_col, boxes))
-            # S3Index analog (index/s3/S3IndexKeySpace.scala): S2 cell-id
-            # ranges prune an s2-sorted layout; the exact lon/lat between
-            # above stays as the row-level recheck
-            if self.s2_col is not None and self.s2_col in df.columns:
-                preds.append(cover.s2_range_predicate(self.s2_col, boxes))
-            # residual exact refine, skipped for rectangles (exact ranges)
-            sql = (refine.geometry_sql(geom, "INTERSECTS", self.lon_col, self.lat_col)
-                   if geom is not None else None)
-            if sql is not None:
-                preds.append(F.expr(sql))
-
-        if self.dwithin is not None:
-            g, d = self.dwithin
-            g = _as_geometry(g)
-            gx0, gy0, gx1, gy1 = g.bounds
-            preds.append(lon.between(gx0 - d, gx1 + d) & lat.between(gy0 - d, gy1 + d))
-            preds.append(points_dwithin_udf(g, d)(lon, lat))
-
+        sql = []
+        if self.bbox is not None:
+            sql.append(refine.bbox_sql(bbox, self.lon_col, self.lat_col))
+        if geom is not None:
+            sql.append(refine.point_predicate(geom, "INTERSECTS", self.lon_col, self.lat_col))
         if self.interval is not None:
-            lo, hi = self.interval
-            preds.append(F.col(self.ts_col).between(F.lit(lo), F.lit(hi)))
-
+            sql += [f"`{self.ts_col}` {op} {refine.sql_literal(v)}"
+                    for op, v in zip((">=", "<="), self.interval) if v is not None]
         if self.where is not None:
-            preds.append(F.expr(self.where))
-
-        if not preds:
-            return None
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+            sql.append(self.where)
+        preds = [F.expr(" AND ".join(f"({c})" for c in sql))] if sql else []
+        # S3Index analog (index/s3/S3IndexKeySpace.scala): z2 / S2 cell-id
+        # ranges prune a sorted layout; the exact lon/lat test above stays
+        # as the row-level recheck
+        for col, ranges in ((self.z2_col, cover.z2_range_predicate),
+                            (self.s2_col, cover.s2_range_predicate)):
+            if bbox is not None and col is not None and col in df.columns:
+                preds.append(ranges(col, [bbox]))
+        return reduce(Column.__and__, preds) if preds else None
 
     def apply(self, df: DataFrame) -> DataFrame:
         out = df

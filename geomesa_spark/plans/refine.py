@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import math
+from datetime import datetime
 
 import numpy as np
 
@@ -109,10 +110,28 @@ def sql_double(x: float) -> str:
     return repr(float(x)).upper() + "D"
 
 
-def _bbox_sql(bounds: tuple, lon: str, lat: str) -> str:
+def sql_literal(x) -> str:
+    """``x`` as a Spark SQL literal of the type ``F.lit`` gives it: a bool,
+    an int, a double (``sql_double``), an instant as a TIMESTAMP cast, or
+    else a string with ``\\`` and ``'`` escaped (Spark SQL string literals
+    treat backslash as an escape)."""
+    if isinstance(x, bool):
+        return "true" if x else "false"
+    if isinstance(x, int):
+        return str(x)
+    if isinstance(x, float):
+        return sql_double(x)
+    if isinstance(x, datetime):
+        return f"CAST('{x.isoformat(sep=' ')}' AS TIMESTAMP)"
+    return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def bbox_sql(bounds: tuple, lon_col: str, lat_col: str) -> str:
+    """SQL of a point inside ``bounds`` (``xmin, ymin, xmax, ymax``), edges
+    included: the primary filter that pushes down to the scan."""
     xmin, ymin, xmax, ymax = bounds
-    return (f"{lon} BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
-            f" AND {lat} BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}")
+    return (f"`{lon_col}` BETWEEN {sql_double(xmin)} AND {sql_double(xmax)}"
+            f" AND `{lat_col}` BETWEEN {sql_double(ymin)} AND {sql_double(ymax)}")
 
 
 def _structs(edges: list) -> list:
@@ -232,7 +251,7 @@ def grid_sql(edges: list, segs: list, bounds: tuple, op: str,
                       segs="c.segs" if segs else None,
                       parity=f"aggregate(c.ys, c.parity, (p, y) -> p != (y <= {lat}))")
     # exists() over the one-cell array binds the cell once
-    return (f"{_bbox_sql(bounds, lon, lat)}"
+    return (f"{bbox_sql(bounds, lon_col, lat_col)}"
             f" AND exists(array(element_at({grid}, {row} * {n} + {col} + 1)), c -> {test})")
 
 
@@ -266,6 +285,6 @@ def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> s
     and are always DISJOINT, as in the numpy kernels."""
     if op == "DISJOINT":
         return f"NOT coalesce(({point_predicate(g, 'INTERSECTS', lon_col, lat_col)}), false)"
-    out = _bbox_sql(g.bounds, f"`{lon_col}`", f"`{lat_col}`")
+    out = bbox_sql(g.bounds, lon_col, lat_col)
     sql = geometry_sql(g, op, lon_col, lat_col)
     return out if sql is None else f"{out} AND coalesce(({sql}), false)"

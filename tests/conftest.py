@@ -46,14 +46,19 @@ def count_jobs(spark):
 def count_round_trips(spark):
     """``count_round_trips(fn)``: the number of commands ``fn()`` sent to
     the JVM over py4j, counted by wrapping
-    ``ClientServerConnection.send_command`` for the call."""
+    ``ClientServerConnection.send_command`` for the call.
+
+    Memory deletes (``m\\nd\\n``) are not counted: Python's cycle collector
+    frees JavaObjects of earlier calls at random points, so they would make
+    the count of one call vary from run to run."""
     from py4j.clientserver import ClientServerConnection
     send = ClientServerConnection.send_command
     calls = []
 
-    def counting(self, *args, **kwargs):
-        calls.append(1)
-        return send(self, *args, **kwargs)
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.append(1)
+        return send(self, command, *args, **kwargs)
 
     def run(fn):
         calls.clear()

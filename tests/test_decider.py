@@ -306,3 +306,37 @@ def test_z3_beats_declared_low_cardinality_attr():
                      attrs=(AttrPredicate("event_type", "eq", ("a",)),))
     s = select_strategy(spec, INDICES, STATS, cardinality={"event_type": LOW})
     assert s.index == "z3"
+
+
+@pytest.mark.parametrize("interval, days", [
+    (("2024-01-05 00:00:00", None), list(range(5, 11))),
+    ((None, "2024-01-03 00:00:00"), [1, 2, 3]),
+], ids=["from", "until"])
+def test_one_sided_interval_leaves_its_open_end_unbounded(spark, tmp_path, interval, days):
+    """A None end of ``SpatialQuery.interval`` is unbounded, as the guard
+    and the estimator read it: ten daily rows inside the bbox return the
+    days on the interval's side, directly and through a z3 strategy over
+    an indexed layout (whose time_bin prefilter is one-sided too)."""
+    from geomesa_spark.plans.decider import scan_with_strategy
+    from geomesa_spark.plans.query import SpatialQuery
+    from geomesa_spark.sources.arrow_io import local_table
+    from geomesa_spark.sources.layout import read_indexed, write_indexed
+
+    rows = local_table(spark, {"id": list(range(1, 11)),
+                               "lon": [40.0 + d for d in range(10)],
+                               "lat": [20.0 + d for d in range(10)],
+                               "ts": [f"2024-01-{d:02d} 00:00:00" for d in range(1, 11)]},
+                       "id int, lon double, lat double, ts string")
+    df = rows.selectExpr("id", "lon", "lat", "CAST(ts AS TIMESTAMP) AS ts")
+    path = str(tmp_path / "daily")
+    write_indexed(df, path, period="day", id_col="id")
+    lay = read_indexed(spark, path)
+    q = SpatialQuery(bbox=(39.0, 19.0, 51.0, 31.0), interval=interval)
+
+    def ids(d):
+        return sorted(r.id for r in d.select("id").collect())
+
+    assert ids(q.apply(df)) == days
+    strat = q.plan(["z3"], None)
+    assert strat.index == "z3"
+    assert ids(scan_with_strategy(lay, q, strat)) == days

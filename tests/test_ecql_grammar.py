@@ -22,6 +22,7 @@ from hypothesis import strategies as st
 from geomesa_spark.geom import algos, wkt
 from geomesa_spark.plans.ecql import EcqlContext, ecql_to_column, parse
 from geomesa_spark.plans.local import evaluate, local_filter
+from geomesa_spark.plans.query import SpatialQuery
 from geomesa_spark.sources.arrow_io import local_table
 from test_filter_corpus import CORPUS, POLY_A, POLY_B, POLY_C
 
@@ -295,8 +296,50 @@ def test_lonlat_dwithin_and_beyond_match_kernels(spark, grid_points, geom, dist,
         assert got == want, (op, geom, units, sorted(got ^ want)[:5])
 
 
+def test_lonlat_dwithin_filters_by_bounds_below_the_udf(spark, tmp_path):
+    """DWITHIN on lon/lat puts a bbox primary (the geometry's bounds
+    widened by the distance) in front of its pandas UDF: Spark evaluates
+    that lon/lat range Filter below ArrowEvalPython and pushes it into the
+    parquet scan's DataFilters, so rows far from the geometry never reach
+    the Python worker."""
+    path = str(tmp_path / "pts")
+    local_table(spark, {"lon": [20.0, 21.0, 60.0], "lat": [40.0, 40.5, 10.0]},
+                "lon double, lat double").write.parquet(path)
+    df = spark.read.parquet(path).where(
+        ecql_to_column("DWITHIN(geom, POINT (20 40), 90, kilometers)", LONLAT))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    below = plan[plan.index("ArrowEvalPython"):].splitlines()
+    bounds = [line for line in below if "Filter " in line and "lon#" in line
+              and "lat#" in line and "pythonUDF" not in line]
+    assert bounds, plan
+    scan = next(line for line in below if "FileScan" in line)
+    data_filters = scan[scan.index("DataFilters:"):scan.index("]", scan.index("DataFilters:"))]
+    assert "lon" in data_filters and "lat" in data_filters, scan
+    assert sorted(r.lon for r in df.collect()) == [20.0]
+
+
+def test_lonlat_dwithin_keeps_points_the_kernel_rounds_within(spark):
+    """The DWITHIN bbox primary reaches a margin past the bounds grown by
+    the distance: a point one ulp beyond that edge, which the kernel's
+    rounding puts within the distance, still matches."""
+    g = wkt.wkt_loads("POINT (-0.7 0)")
+    d = _degrees(100000.0, g)
+    lon = float(np.nextafter(g.bounds[2] + d, np.inf))
+    assert algos.points_dwithin(np.array([lon]), np.array([0.0]), g, d)[0]
+    df = local_table(spark, {"lon": [lon], "lat": [0.0]}, "lon double, lat double")
+    assert df.where(ecql_to_column("DWITHIN(geom, POINT (-0.7 0), 100, kilometers)",
+                                   LONLAT)).count() == 1
+
+
 # ---------------------------------------------------------------------------
-# the round-trip gate
+# the round-trip gates
+
+def _benchmark_ring() -> str:
+    """The benchmark's query polygon shape: a 12-vertex circle."""
+    t = 2.0 * np.pi * np.arange(13) / 12
+    ring = ", ".join(f"{x!r} {y!r}" for x, y in zip(5.0 * np.cos(t) + 10.0, 5.0 * np.sin(t)))
+    return f"POLYGON (({ring}))"
+
 
 def test_benchmark_shaped_filter_round_trips(spark, count_round_trips):
     """Building the benchmark's ECQL query (a 12-vertex polygon, an int
@@ -305,9 +348,7 @@ def test_benchmark_shaped_filter_round_trips(spark, count_round_trips):
     df = local_table(spark, {"lon": [0.5], "lat": [0.5], "w": [32],
                              "ts": [datetime(2020, 1, 1)]},
                      "lon double, lat double, w int, ts timestamp")
-    t = 2.0 * np.pi * np.arange(13) / 12
-    ring = ", ".join(f"{x!r} {y!r}" for x, y in zip(5.0 * np.cos(t) + 10.0, 5.0 * np.sin(t)))
-    text = (f"INTERSECTS(geom, POLYGON (({ring}))) AND w >= 32"
+    text = (f"INTERSECTS(geom, {_benchmark_ring()}) AND w >= 32"
             " AND ts DURING 2019-03-01T00:00:00Z/2021-01-15T00:00:00Z")
     ctx = EcqlContext(lon_col="lon", lat_col="lat", prefer_lonlat=True)
 
@@ -316,6 +357,26 @@ def test_benchmark_shaped_filter_round_trips(spark, count_round_trips):
     for _ in range(3):
         build()
     assert count_round_trips(build) <= 40
+
+
+@pytest.mark.parametrize("kind", ["polygon", "bbox"])
+def test_benchmark_shaped_spatial_query_round_trips(spark, count_round_trips, kind):
+    """Planning and applying the benchmark's polygon and bbox queries over
+    a z2 table talks to the JVM a bounded number of times: SpatialQuery
+    renders its predicate with the ECQL compiler's SQL leaves, one
+    expression, and ANDs on the z2 range prefilter."""
+    df = local_table(spark, {"lon": [0.5], "lat": [0.5], "ts": [datetime(2020, 1, 1)],
+                             "z2": [0]}, "lon double, lat double, ts timestamp, z2 long")
+
+    def build():
+        q = (SpatialQuery(geometry=_benchmark_ring(), z2_col="z2") if kind == "polygon"
+             else SpatialQuery(bbox=(5.0, -3.0, 14.0, 6.0), z2_col="z2",
+                               interval=("2019-03-01 00:00:00", "2021-01-15 00:00:00")))
+        q.plan(["z2", "z3"])
+        return q.apply(df)
+    for _ in range(3):
+        build()
+    assert count_round_trips(build) <= 25
 
 
 # ---------------------------------------------------------------------------

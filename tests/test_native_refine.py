@@ -265,9 +265,12 @@ def test_ecql_and_spatial_query_match_numpy_kernels(spark, g, box):
     want = {op: oracle(op, g, nx, ny) for op in OPS}
     want["NOT_INTERSECTS"] = want["DISJOINT"]
     want["BBOX"] = algos.points_intersect(nx, ny, model.box(*bbox))
-    if isinstance(g, (model.Polygon, model.MultiPolygon)):
-        cols["SQ"] = SpatialQuery(geometry=g).predicate(df)
-        want["SQ"] = want["INTERSECTS"]
+    cols["SQ"] = SpatialQuery(geometry=g).predicate(df)
+    want["SQ"] = want["INTERSECTS"]
+    # bbox and geometry together: INTERSECTS and lon/lat BETWEEN the bbox
+    cols["SQ_BBOX"] = SpatialQuery(bbox=bbox, geometry=g).predicate(df)
+    want["SQ_BBOX"] = (want["INTERSECTS"] & (nx >= bbox[0]) & (nx <= bbox[2])
+                       & (ny >= bbox[1]) & (ny <= bbox[3]))
     _assert_same(evaluate(df, cols), want, nx, ny, g)
 
 

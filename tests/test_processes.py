@@ -350,6 +350,22 @@ def test_knn_of_one_point_runs_one_job_without_exchange(
     assert len(plans[0]) < 10_000, len(plans[0])
 
 
+def test_knn_of_one_point_round_trips(spark, knn_layout, count_round_trips):
+    """Building and collecting kNN of one point talks to the JVM a pinned
+    number of times: each round's top-k is one ``selectExpr`` of SQL
+    text."""
+    from geomesa_spark.operators.knn import knn_join
+    from geomesa_spark.sources.layout import read_indexed
+    pts = read_indexed(spark, knn_layout)
+
+    def run():
+        return knn_join(pts, [("q", 12.5, 40.0)], 10, n_rows=6000).select(
+            "event_id", "knn_rank").collect()
+    for _ in range(3):
+        run()
+    assert count_round_trips(run) <= 73
+
+
 @pytest.mark.parametrize("lon, lat, k, res, path", [
     (179.99, 0.0, 8, None, ""),
     (-179.99, 10.0, 8, None, ""),

@@ -19,6 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 from geomesa_spark.cells import zn
+from geomesa_spark.plans.refine import sql_double
 
 MAX_RES = 29
 
@@ -58,11 +59,18 @@ def rowmajor(cid: int) -> int:
     return (iy << res) | ix
 
 
+def snap_sql(col: str, lo: float, hi: float, n: int) -> str:
+    """SQL of the bigint cell of ``col`` on ``n`` cells over [lo, hi]: the
+    floor snap (GridSnap.scala:23) clamped into [0, n - 1], so the upper
+    edge lands in the last cell and NaN in cell 0."""
+    return (f"least(greatest(cast(floor(({col} - {sql_double(lo)}) / {sql_double(hi - lo)}"
+            f" * {n}) as bigint), 0), {n - 1})")
+
+
 def xy_sql(lon_col: str, lat_col: str, n: int) -> tuple[str, str]:
     """SQL of a point's clamped (ix, iy) on the n x n lon/lat grid — the
     native form of :func:`cell_id_np`'s indices (NaN and null land in 0)."""
-    return tuple(f"least(greatest(cast(floor(({c} + {o}) / {w} * {n}) as bigint), 0), {n - 1})"
-                 for c, o, w in ((lon_col, "180.0", "360.0"), (lat_col, "90.0", "180.0")))
+    return snap_sql(lon_col, -180.0, 180.0, n), snap_sql(lat_col, -90.0, 90.0, n)
 
 
 def rowmajor_sql(lon_col: str, lat_col: str, n: int) -> str:

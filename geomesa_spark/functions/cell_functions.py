@@ -125,23 +125,22 @@ def z3_col(lon: Column, lat: Column, ts: Column, period: str = "week",
                       time_offset_col(ts, period).cast("double"))
 
 
-def _grid_xy(lon: Column, lat: Column, n: int, kind: str = "long") -> tuple[Column, Column]:
-    """A point's clamped (ix, iy) on the n x n lon/lat grid (``grid.xy_sql``)."""
-    return tuple(F.least(F.greatest(F.floor((c + F.lit(o)) / F.lit(w) * F.lit(n)).cast(kind),
-                                    F.lit(0)), F.lit(n - 1))
-                 for c, o, w in ((lon, 180.0, 360.0), (lat, 90.0, 180.0)))
+def _grid_xy(lon: Column, lat: Column, res: int) -> list[Column]:
+    """A point's bigint :func:`tile_cols` at ``res`` (``grid.xy_sql``)."""
+    return [c.cast("long") for c in tile_cols(lon, lat, res)]
 
 
 def cell_col(lon: Column, lat: Column, res: int) -> Column:
     """Hierarchical grid cell id ((res<<58) | morton) — cells/grid.py parity."""
-    return F.lit(res << 58).bitwiseOR(interleave_col(_grid_xy(lon, lat, 1 << res)))
+    return F.lit(res << 58).bitwiseOR(interleave_col(_grid_xy(lon, lat, res)))
 
 
 def tile_cols(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
     """(tx, ty) tile coordinates at a zoom level (2^zoom x 2^zoom plate carrée
     grid; ty increases northward). Floor semantics match GridSnap
     (reference: utils/geotools/GridSnap.scala:23)."""
-    return _grid_xy(lon, lat, 1 << zoom, "int")
+    n = 1 << zoom
+    return pixel_cols(lon, lat, -180.0, -90.0, 180.0, 90.0, n, n)
 
 
 def pixel_cols(lon: Column, lat: Column, xmin: float, ymin: float, xmax: float,
@@ -149,12 +148,12 @@ def pixel_cols(lon: Column, lat: Column, xmin: float, ymin: float, xmax: float,
     """(px, py) pixel assignment on a width x height grid snapped to an
     envelope — DensityScan/GridSnap semantics (reference:
     iterators/DensityScan.scala:95-136, GridSnap.scala:23): floor snap,
-    upper edge clamped to the last pixel."""
-    px = F.floor((lon - F.lit(xmin)) / F.lit(xmax - xmin) * F.lit(width)).cast("int")
-    py = F.floor((lat - F.lit(ymin)) / F.lit(ymax - ymin) * F.lit(height)).cast("int")
-    px = F.least(F.greatest(px, F.lit(0)), F.lit(width - 1))
-    py = F.least(F.greatest(py, F.lit(0)), F.lit(height - 1))
-    return px, py
+    upper edge clamped to the last pixel. The clamp runs on the bigint
+    floor, so a point far outside the envelope cannot overflow the int.
+    ``grid.snap_sql`` is the same snap as SQL text."""
+    return tuple(F.least(F.greatest(F.floor((c - F.lit(lo)) / F.lit(hi - lo) * F.lit(n)),
+                                    F.lit(0)), F.lit(n - 1)).cast("int")
+                 for c, lo, hi, n in ((lon, xmin, xmax, width), (lat, ymin, ymax, height)))
 
 
 def salt_col(key: Column, n_shards: int = 4) -> Column:
@@ -189,7 +188,7 @@ def cell_disk_col(lon: Column, lat: Column, res: int, k: int = 1) -> Column:
     pure Catalyst (longitude wraps, latitude clamps, duplicates removed).
     This is the write-side companion of the kNN ring expansion."""
     n = 1 << res
-    ix, iy = _grid_xy(lon, lat, n)
+    ix, iy = _grid_xy(lon, lat, res)
 
     def shift(d, col, wrap):
         v = col + F.lit(d)

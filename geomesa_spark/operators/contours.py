@@ -25,7 +25,10 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from geomesa_spark.plans.refine import sql_double
+from geomesa_spark.session import frame_sql
 
 # marching-squares case table.  Corner bits: 1=p00 (bottom-left),
 # 2=p10 (bottom-right), 4=p11 (top-right), 8=p01 (top-left).
@@ -161,22 +164,16 @@ def contour_segments(df: DataFrame, envelope: tuple, width: int, height: int,
     coordinates (grid units mapped linearly back to lon/lat).
     """
     xmin, ymin, xmax, ymax = envelope
-    spark = df.sparkSession
-    view = f"__contour_src_{abs(hash((id(df), width, height))) % 10 ** 8}"
-    df.createOrReplaceTempView(view)
-    body = marching_squares_sql(view, level, width, height,
+    body = marching_squares_sql("{src}", level, width, height,
                                 xmin, xmax, ymin, ymax, "spark",
                                 lon=lon_col, lat=lat_col)
-    out = spark.sql("WITH " + body)
-    sx, sy = (xmax - xmin) / width, (ymax - ymin) / height
-    from pyspark.sql import functions as F
-    return out.select(
-        "ci", "cj", "k",
-        (F.lit(xmin) + out.x1s / 1e6 * sx).alias("x1"),
-        (F.lit(ymin) + out.y1s / 1e6 * sy).alias("y1"),
-        (F.lit(xmin) + out.x2s / 1e6 * sx).alias("x2"),
-        (F.lit(ymin) + out.y2s / 1e6 * sy).alias("y2"),
-    )
+    x0, y0, sx, sy = (sql_double(v) for v in (xmin, ymin, (xmax - xmin) / width,
+                                              (ymax - ymin) / height))
+    return frame_sql(f"""
+SELECT ci, cj, k,
+       {x0} + x1s / 1000000.0D * {sx} AS x1, {y0} + y1s / 1000000.0D * {sy} AS y1,
+       {x0} + x2s / 1000000.0D * {sx} AS x2, {y0} + y2s / 1000000.0D * {sy} AS y2
+FROM (WITH {body})""", src=df)
 
 
 def assemble_contour_lines(segments: DataFrame, *,

@@ -33,6 +33,7 @@ from geomesa_spark.geom import wkt
 from geomesa_spark.geom.wkb import wkb_loads
 from geomesa_spark.plans import refine
 from geomesa_spark.plans.cover import batch_cover_spans, pick_span_resolution
+from geomesa_spark.session import frame_sql
 from geomesa_spark.sources.arrow_io import local_table
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
@@ -107,10 +108,7 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     pidx, iy, x0, x1, interior = batch_cover_spans(geoms, res)
     table = _polygon_table(spark, polys, prepared, poly_id_col, keep_geom, _struct_lists(
         pidx, len(polys), siy=iy, x0=x0, x1=x1, interior=interior))
-    ix_sql, iy_sql = xy_sql(lon_col, lat_col, 1 << res)
-    pts = points.withColumns({"__ix": F.expr(ix_sql), "__iy": F.expr(iy_sql)})
-    joined = pts.join(F.broadcast(table.selectExpr("__pidx", _SPAN_COLS)), F.expr(
-        "__iy = __siy AND __ix >= __x0 AND __ix <= __x1"))
+    ix_sql, iy_sql = xy_sql(f"`{lon_col}`", f"`{lat_col}`", 1 << res)
     # Predicate compilation (the analog of GeoMesa compiling filters into
     # server-side iterators): the exact refine is one native expression
     # over each geometry's edge list (plans/refine.py), attached by a small
@@ -120,10 +118,15 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
         lon_col, lat_col, op,
         edges="__edges" if any(p[1] for p in prepared) else None,
         segs="__segs" if any(p[2] for p in prepared) else None)
-    return (joined.join(F.broadcast(table.drop("__spans")), "__pidx")
-            .where(F.col("__interior") | F.expr(cond))
-            .drop("__ix", "__iy", "__siy", "__x0", "__x1", "__pidx", "__interior",
-                  "__convex", "__edges", "__segs"))
+    cols = ", ".join(f"p.`{c}`" for c in points.columns)
+    geom = ", t.__geom" if keep_geom else ""
+    return frame_sql(f"""
+SELECT /*+ BROADCAST(s, t) */ {cols}, t.`{poly_id_col}`{geom}
+FROM (SELECT *, {ix_sql} AS __ix, {iy_sql} AS __iy FROM {{points}}) p
+JOIN (SELECT __pidx, {_SPAN_COLS} FROM {{table}}) s
+  ON p.__iy = s.__siy AND p.__ix >= s.__x0 AND p.__ix <= s.__x1
+JOIN {{table}} t ON s.__pidx = t.__pidx
+WHERE s.__interior OR {cond}""", points=points, table=table)
 
 
 def _struct_lists(owner: np.ndarray, n: int, **fields) -> pa.ListArray:

@@ -10,24 +10,59 @@ gx = floor((lon+180)/360 * 2^zoom * tile_px), tile = gx div tile_px, pixel =
 gx mod tile_px. Everything is native Catalyst (one shuffle per aggregation,
 map-side partial aggregation for free); every zoom level comes out of ONE
 explode + aggregation over the finest level.
+
+Each operator is one SQL text over its input (``session.frame_sql``), so
+building it costs a handful of py4j round trips; the floor snap is
+``grid.snap_sql`` and ``weight`` is a SQL expression (a column name is one).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from geomesa_spark.cells.grid import snap_sql, xy_sql
+from geomesa_spark.plans.refine import bbox_sql, sql_double, sql_literal
+from geomesa_spark.session import frame_sql
 
 
-def _weight(weight: Column | str | None) -> Column:
-    """A row's weight: 1.0 by default, else the named column or the Column."""
+def _weight(weight: str | None) -> str:
+    """A row's weight as SQL: 1.0 by default, else the SQL expression
+    ``weight`` (a column name is one), its braces doubled for
+    :func:`frame_sql`."""
     if weight is None:
-        return F.lit(1.0)
-    return F.col(weight) if isinstance(weight, str) else weight
+        return "1.0D"
+    return "(" + weight.replace("{", "{{").replace("}", "}}") + ")"
+
+
+def _inside_sql(envelope: tuple, *points: tuple) -> str:
+    """SQL of every (x, y) column pair of ``points`` inside ``envelope``,
+    edges included."""
+    return " AND ".join(f"({bbox_sql(envelope, x, y)})" for x, y in points)
+
+
+def _ends_sql(envelope: tuple, width: int, height: int, render, **ends) -> str:
+    """``render(column, lo, hi, n) AS name`` for each ``name=(column, axis)``:
+    axis 0 spans the envelope's x range in ``width`` pixels, 1 its y range
+    in ``height``."""
+    xmin, ymin, xmax, ymax = envelope
+    axes = ((xmin, xmax, width), (ymin, ymax, height))
+    return ", ".join(f"{render(f'`{c}`', *axes[axis])} AS {name}"
+                     for name, (c, axis) in ends.items())
+
+
+def _pixel_sums_sql(pixels: str, height: int) -> str:
+    """SQL of the (px, py, weight) sums over ``pixels``, a relation of
+    ``__pix`` (an array of pixel ids ``px * height + py``) and ``__w``."""
+    return f"""
+SELECT cast(pix / {height} as int) AS px, cast(pmod(pix, {height}) as int) AS py, weight
+FROM (SELECT pix, sum(__w) AS weight
+      FROM (SELECT explode(__pix) AS pix, __w FROM {pixels})
+      GROUP BY pix)"""
 
 
 def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
             lon_col: str = "lon", lat_col: str = "lat",
-            weight: Column | str | None = None) -> DataFrame:
+            weight: str | None = None) -> DataFrame:
     """Sparse (px, py) -> weight grid over an envelope.
 
     Rows outside the envelope are dropped (DensityScan renders only features
@@ -35,21 +70,18 @@ def density(df: DataFrame, envelope: tuple, width: int, height: int, *,
     (GridSnap floor + clamp semantics).
     """
     xmin, ymin, xmax, ymax = envelope
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    px = F.least(F.floor((lon - F.lit(xmin)) / F.lit(xmax - xmin) * F.lit(width)),
-                 F.lit(width - 1)).cast("int")
-    py = F.least(F.floor((lat - F.lit(ymin)) / F.lit(ymax - ymin) * F.lit(height)),
-                 F.lit(height - 1)).cast("int")
-    return (df
-            .where(lon.between(xmin, xmax) & lat.between(ymin, ymax))
-            .withColumn("px", px).withColumn("py", py)
-            .groupBy("px", "py")
-            .agg(F.sum(_weight(weight)).alias("weight")))
+    px = snap_sql(f"`{lon_col}`", xmin, xmax, width)
+    py = snap_sql(f"`{lat_col}`", ymin, ymax, height)
+    return frame_sql(f"""
+SELECT px, py, sum(__w) AS weight
+FROM (SELECT cast({px} as int) AS px, cast({py} as int) AS py, {_weight(weight)} AS __w
+      FROM {{src}} WHERE {bbox_sql(envelope, lon_col, lat_col)})
+GROUP BY px, py""", src=df)
 
 
 def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
                  lon_col: str = "lon", lat_col: str = "lat",
-                 weight: Column | str | None = None) -> DataFrame:
+                 weight: str | None = None) -> DataFrame:
     """(zoom, tx, ty, px, py, weight, cnt) for all zoom levels.
 
     Deterministic tile assignment: plate carrée, ty increases northward,
@@ -71,49 +103,40 @@ def tile_pyramid(df: DataFrame, zooms: list[int], *, tile_px: int = 256,
     nothing is cached.  Weight sums re-associate (floating point) but are
     exact as rollups of the finest level.
     """
-    lon, lat = F.col(lon_col), F.col(lat_col)
     zs = sorted(set(zooms), reverse=True)
     finest = zs[0]
-    n_px_f = (1 << finest) * tile_px
-    gx = F.least(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n_px_f)),
-                 F.lit(n_px_f - 1)).cast("long")
-    gy = F.least(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n_px_f)),
-                 F.lit(n_px_f - 1)).cast("long")
-
-    # one shuffle of the raw rows: 8-byte packed key + (weight, cnt)
-    lvl = (df
-           .where(lon.between(-180.0, 180.0) & lat.between(-90.0, 90.0))
-           .select((gx * F.lit(n_px_f) + gy).alias("__k"), _weight(weight).alias("__w"))
-           .groupBy("__k")
-           .agg(F.sum("__w").alias("weight"), F.count("*").alias("cnt")))
-
+    n = (1 << finest) * tile_px
+    gx, gy = xy_sql(f"`{lon_col}`", f"`{lat_col}`", n)
     # each finest pixel to its (zoom, key) at every zoom, coarsened by
     # 2^shift per axis; `div` = exact integer division (double `/` rounds
     # past 2^53)
-    keys = [F.struct(F.lit(z).alias("zoom"), F.expr(
-        f"(__k div {n_px_f}) div {1 << (finest - z)} * {(1 << z) * tile_px}"
-        f" + (__k % {n_px_f}) div {1 << (finest - z)}").alias("__k"))
-        for z in zs]
+    keys = ", ".join(
+        f"named_struct('zoom', {z}, '__k', (__k div {n}) div {1 << (finest - z)}"
+        f" * {(1 << z) * tile_px} + (__k % {n}) div {1 << (finest - z)})" for z in zs)
     # decode a (zoom, packed-key) pair; npx is a per-row expression of zoom
     npx = f"(shiftleft(cast(1 as bigint), zoom) * {tile_px})"
-    return (lvl
-            .select(F.explode(F.array(*keys)).alias("zk"), "weight", "cnt")
-            .select("zk.zoom", "zk.__k", "weight", "cnt")
-            .groupBy("zoom", "__k")
-            .agg(F.sum("weight").alias("weight"), F.sum("cnt").alias("cnt"))
-            .select(
-                "zoom",
-                F.expr(f"cast((__k div {npx}) div {tile_px} as int)").alias("tx"),
-                F.expr(f"cast((__k % {npx}) div {tile_px} as int)").alias("ty"),
-                F.expr(f"cast((__k div {npx}) % {tile_px} as int)").alias("px"),
-                F.expr(f"cast((__k % {npx}) % {tile_px} as int)").alias("py"),
-                "weight", "cnt"))
+    world = (-180.0, -90.0, 180.0, 90.0)
+    return frame_sql(f"""
+SELECT zoom,
+       cast((__k div {npx}) div {tile_px} as int) AS tx,
+       cast((__k % {npx}) div {tile_px} as int) AS ty,
+       cast((__k div {npx}) % {tile_px} as int) AS px,
+       cast((__k % {npx}) % {tile_px} as int) AS py,
+       weight, cnt
+FROM (SELECT zoom, __k, sum(weight) AS weight, sum(cnt) AS cnt
+      FROM (SELECT zk.zoom AS zoom, zk.__k AS __k, weight, cnt
+            FROM (SELECT explode(array({keys})) AS zk, weight, cnt
+                  FROM (SELECT __k, sum(__w) AS weight, count(*) AS cnt
+                        FROM (SELECT {gx} * {n} + {gy} AS __k, {_weight(weight)} AS __w
+                              FROM {{src}} WHERE {bbox_sql(world, lon_col, lat_col)})
+                        GROUP BY __k)))
+      GROUP BY zoom, __k)""", src=df)
 
 
 def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
                   xmin_col: str = "xmin", ymin_col: str = "ymin",
                   xmax_col: str = "xmax", ymax_col: str = "ymax",
-                  weight: Column | str | None = None) -> DataFrame:
+                  weight: str | None = None) -> DataFrame:
     """Density grid for EXTENT rows: every pixel a bbox footprint touches
     gets the row's weight (DensityScan's polygon renderer restricted to
     rectangles — RenderingGrid.render(Polygon) pixel fill, RenderingGrid
@@ -124,31 +147,24 @@ def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
     the envelope clip to it, fully-disjoint rows drop.
     """
     exmin, eymin, exmax, eymax = envelope
-
-    def snap(col, lo, hi, n_px):
-        frac = (col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px)
-        return F.least(F.greatest(F.floor(frac), F.lit(0)), F.lit(n_px - 1)).cast("int")
-
-    overlap = ((F.col(xmax_col) >= exmin) & (F.col(xmin_col) <= exmax)
-               & (F.col(ymax_col) >= eymin) & (F.col(ymin_col) <= eymax))
-    return (df.where(overlap)
-            .withColumn("__px0", snap(F.col(xmin_col), exmin, exmax, width))
-            .withColumn("__px1", snap(F.col(xmax_col), exmin, exmax, width))
-            .withColumn("__py0", snap(F.col(ymin_col), eymin, eymax, height))
-            .withColumn("__py1", snap(F.col(ymax_col), eymin, eymax, height))
-            .withColumn("__w", _weight(weight))
-            .select(F.explode(F.expr("sequence(__px0, __px1)")).alias("px"),
-                    F.col("__py0"), F.col("__py1"), F.col("__w"))
-            .select("px", F.explode(F.expr("sequence(__py0, __py1)")).alias("py"),
-                    F.col("__w"))
-            .groupBy("px", "py")
-            .agg(F.sum("__w").alias("weight")))
+    ends = _ends_sql(envelope, width, height,
+                     lambda c, lo, hi, n: f"cast({snap_sql(c, lo, hi, n)} as int)",
+                     __px0=(xmin_col, 0), __px1=(xmax_col, 0),
+                     __py0=(ymin_col, 1), __py1=(ymax_col, 1))
+    overlap = (f"`{xmax_col}` >= {sql_double(exmin)} AND `{xmin_col}` <= {sql_double(exmax)}"
+               f" AND `{ymax_col}` >= {sql_double(eymin)} AND `{ymin_col}` <= {sql_double(eymax)}")
+    return frame_sql(f"""
+SELECT px, py, sum(__w) AS weight
+FROM (SELECT px, explode(sequence(__py0, __py1)) AS py, __w
+      FROM (SELECT explode(sequence(__px0, __px1)) AS px, __py0, __py1, __w
+            FROM (SELECT {ends}, {_weight(weight)} AS __w FROM {{src}} WHERE {overlap})))
+GROUP BY px, py""", src=df)
 
 
 def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
                   x1_col: str = "x1", y1_col: str = "y1",
                   x2_col: str = "x2", y2_col: str = "y2",
-                  weight: Column | str | None = None) -> DataFrame:
+                  weight: str | None = None) -> DataFrame:
     """Density grid for LINE-SEGMENT rows: every pixel a segment passes
     through gets the row's weight once (DensityScan's line renderer,
     RenderingGrid.render(LineString) — Bresenham-style walk).
@@ -161,36 +177,21 @@ def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
     are required to lie inside the envelope (clipping composes upstream
     with st_intersection against the envelope box).
     """
-    exmin, eymin, exmax, eymax = envelope
-
-    def fpix(col, lo, hi, n_px):
-        # continuous pixel coordinate, clamped inside the grid
-        frac = (col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px)
-        return F.least(F.greatest(frac, F.lit(0.0)), F.lit(n_px - 1e-9))
-
-    inside = (F.col(x1_col).between(exmin, exmax) & F.col(x2_col).between(exmin, exmax)
-              & F.col(y1_col).between(eymin, eymax) & F.col(y2_col).between(eymin, eymax))
-    out = (df.where(inside)
-           .withColumn("__ax", fpix(F.col(x1_col), exmin, exmax, width))
-           .withColumn("__ay", fpix(F.col(y1_col), eymin, eymax, height))
-           .withColumn("__bx", fpix(F.col(x2_col), exmin, exmax, width))
-           .withColumn("__by", fpix(F.col(y2_col), eymin, eymax, height))
-           .withColumn("__n", F.greatest(
-               F.abs(F.floor("__bx") - F.floor("__ax")),
-               F.abs(F.floor("__by") - F.floor("__ay")),
-               F.lit(0)).cast("int"))
-           .withColumn("__w", _weight(weight))
-           .withColumn("__pix", F.expr(f"""
-               array_distinct(transform(sequence(0, __n), i ->
-                 cast(floor(__ax + (__bx - __ax) * i / greatest(__n, 1)) AS bigint) * {height}
-                 + cast(floor(__ay + (__by - __ay) * i / greatest(__n, 1)) AS bigint)))"""))
-           .select(F.explode("__pix").alias("pix"), "__w")
-           .groupBy("pix")
-           .agg(F.sum("__w").alias("weight"))
-           .select((F.col("pix") / height).cast("int").alias("px"),
-                   F.pmod(F.col("pix"), F.lit(height)).cast("int").alias("py"),
-                   "weight"))
-    return out
+    # continuous pixel coordinates, clamped inside the grid
+    ends = _ends_sql(envelope, width, height, lambda c, lo, hi, n: (
+        f"least(greatest(({c} - {sql_double(lo)}) / {sql_double(hi - lo)} * {n}, 0.0D),"
+        f" {sql_double(n - 1e-9)})"),
+        __ax=(x1_col, 0), __ay=(y1_col, 1), __bx=(x2_col, 0), __by=(y2_col, 1))
+    inside = _inside_sql(envelope, (x1_col, y1_col), (x2_col, y2_col))
+    return frame_sql(_pixel_sums_sql(f"""(
+  SELECT array_distinct(transform(sequence(0, __n), i ->
+           cast(floor(__ax + (__bx - __ax) * i / greatest(__n, 1)) AS bigint) * {height}
+           + cast(floor(__ay + (__by - __ay) * i / greatest(__n, 1)) AS bigint))) AS __pix, __w
+  FROM (SELECT __ax, __ay, __bx, __by, __w,
+               cast(greatest(abs(floor(__bx) - floor(__ax)),
+                             abs(floor(__by) - floor(__ay)), 0) as int) AS __n
+        FROM (SELECT {ends}, {_weight(weight)} AS __w FROM {{src}} WHERE {inside})))""",
+        height), src=df)
 
 
 def bresenham_pixels(x0, y0, x1, y1):
@@ -261,7 +262,7 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
                             height: int, *,
                             x1_col: str = "x1", y1_col: str = "y1",
                             x2_col: str = "x2", y2_col: str = "y2",
-                            weight: Column | str | None = None) -> DataFrame:
+                            weight: str | None = None) -> DataFrame:
     """Line-segment density with the reference's EXACT pixel walk
     (RenderingGrid.scala:72-140 render(LineString)): endpoints snap to
     integer cells first (GridSnap.i/j floor + clamp), then the float-error
@@ -279,13 +280,11 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    exmin, eymin, exmax, eymax = envelope
-
-    def cell(col, lo, hi, n_px):
-        # GridSnap.i/j: floor((v - min) / d) with d = (max - min) / n, in
-        # that division order; upper edge into the last cell
-        frac = F.floor((col - F.lit(lo)) / F.lit((hi - lo) / n_px))
-        return F.least(frac, F.lit(n_px - 1)).cast("long")
+    # GridSnap.i/j: floor((v - min) / d) with d = (max - min) / n, in that
+    # division order; upper edge into the last cell
+    cells = _ends_sql(envelope, width, height, lambda c, lo, hi, n: (
+        f"least(floor(({c} - {sql_double(lo)}) / {sql_double((hi - lo) / n)}), {n - 1})"),
+        __ix0=(x1_col, 0), __iy0=(y1_col, 1), __ix1=(x2_col, 0), __iy1=(y2_col, 1))
 
     # NO parameter annotations: `from __future__ import annotations`
     # stringifies hints and pandas is imported locally, which breaks
@@ -306,21 +305,11 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
 
     walk = pandas_udf(walk, "array<long>")
 
-    inside = (F.col(x1_col).between(exmin, exmax) & F.col(x2_col).between(exmin, exmax)
-              & F.col(y1_col).between(eymin, eymax) & F.col(y2_col).between(eymin, eymax))
-    return (df.where(inside)
-            .withColumn("__w", _weight(weight))
-            .withColumn("__pix", walk(
-                cell(F.col(x1_col), exmin, exmax, width),
-                cell(F.col(y1_col), eymin, eymax, height),
-                cell(F.col(x2_col), exmin, exmax, width),
-                cell(F.col(y2_col), eymin, eymax, height)))
-            .select(F.explode("__pix").alias("pix"), "__w")
-            .groupBy("pix")
-            .agg(F.sum("__w").alias("weight"))
-            .select((F.col("pix") / height).cast("int").alias("px"),
-                    F.pmod(F.col("pix"), F.lit(height)).cast("int").alias("py"),
-                    "weight"))
+    inside = _inside_sql(envelope, (x1_col, y1_col), (x2_col, y2_col))
+    snapped = frame_sql(f"SELECT {cells}, {_weight(weight)} AS __w FROM {{src}} WHERE {inside}",
+                        src=df)
+    walked = snapped.select(walk("__ix0", "__iy0", "__ix1", "__iy1").alias("__pix"), "__w")
+    return frame_sql(_pixel_sums_sql("{src}", height), src=walked)
 
 
 def density_polygons(spark, polygons: list[tuple], envelope: tuple,
@@ -339,21 +328,18 @@ def density_polygons(spark, polygons: list[tuple], envelope: tuple,
     """
     from geomesa_spark.operators.pip_join import pip_join_broadcast
     exmin, eymin, exmax, eymax = envelope
-    grid = (spark.range(width * height)
-            .selectExpr(f"CAST(id div {height} AS int) AS px",
-                        f"CAST(id % {height} AS int) AS py")
-            .withColumn("lon", F.lit(exmin) + (F.col("px") + 0.5)
-                        * F.lit((exmax - exmin) / width))
-            .withColumn("lat", F.lit(eymin) + (F.col("py") + 0.5)
-                        * F.lit((eymax - eymin) / height)))
+    grid = spark.sql(f"""
+SELECT px, py,
+       {sql_double(exmin)} + (px + 0.5D) * {sql_double((exmax - exmin) / width)} AS lon,
+       {sql_double(eymin)} + (py + 0.5D) * {sql_double((eymax - eymin) / height)} AS lat
+FROM (SELECT CAST(id div {height} AS int) AS px, CAST(id % {height} AS int) AS py
+      FROM range({width * height}))""")
     hit = pip_join_broadcast(grid, polygons)
+    w = None
     if weights:
-        wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
-        hit = hit.withColumn("__w", wmap[F.col("poly_id")])
-    else:
-        hit = hit.withColumn("__w", F.lit(1.0))
-    return (hit.groupBy("px", "py")
-            .agg(F.sum("__w").alias("weight")))
+        w = "map(" + ", ".join(sql_literal(x) for kv in weights.items() for x in kv) + ")[poly_id]"
+    return frame_sql(f"SELECT px, py, sum({_weight(w)}) AS weight FROM {{hit}} GROUP BY px, py",
+                     hit=hit)
 
 
 def write_tile_pyramid(df: DataFrame, path: str, zooms: list[int], **kwargs) -> None:

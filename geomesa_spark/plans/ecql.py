@@ -512,6 +512,8 @@ def _column(node: tuple, ctx: EcqlContext) -> Column:
         # behind a bbox primary filter that pushes down to the scan: the
         # bounds grown by d and a margin far above the kernel's rounding
         g = wkt.wkt_loads(node[2])
+        if g.is_empty:
+            return F.expr("false")
         d = to_degrees(node[3], g)
         pad = d + 1e-9 * (1.0 + d + max(abs(v) for v in g.bounds))
         x0, y0, x1, y1 = g.bounds

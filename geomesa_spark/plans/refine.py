@@ -282,9 +282,12 @@ def point_predicate(g: model.Geometry, op: str, lon_col: str, lat_col: str) -> s
     The bbox conjunct pushes down to the scan and keeps NaN coordinates
     (which Spark orders above every double, unlike numpy) away from the
     half-plane tests. Null or NaN coordinates never INTERSECT/WITHIN/TOUCH
-    and are always DISJOINT, as in the numpy kernels."""
+    and are always DISJOINT, as in the numpy kernels; so is every point to
+    an empty geometry (whose bounds are NaN)."""
     if op == "DISJOINT":
         return f"NOT coalesce(({point_predicate(g, 'INTERSECTS', lon_col, lat_col)}), false)"
+    if g.is_empty:
+        return "false"
     out = bbox_sql(g.bounds, lon_col, lat_col)
     sql = geometry_sql(g, op, lon_col, lat_col)
     return out if sql is None else f"{out} AND coalesce(({sql}), false)"

@@ -14,8 +14,9 @@ The engine is designed for 1000-executor clusters over ~100 TB; locally we run
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -94,3 +95,24 @@ def get_spark(app_name: str = "geomesa-spark", master: str | None = None,
     from geomesa_spark.functions import register_all
     register_all(spark)
     return spark
+
+
+def frame_sql(text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` of ``text`` with each ``{name}`` read as the DataFrame
+    ``frames[name]`` (``str.format``: a literal brace is doubled), through a
+    uuid-named temp view that is dropped once the query is analysed.
+
+    PySpark's own ``spark.sql(text, name=df)`` drops its views with
+    ``Catalog.dropTempView``, which also uncaches every cached plan equal to
+    the view's, so a cached input would lose its cache; the session
+    catalog's drop used here only removes the name."""
+    spark = next(iter(frames.values())).sparkSession
+    names = {k: f"__frame_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(names[k])
+    try:
+        return spark.sql(text.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)

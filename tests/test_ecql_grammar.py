@@ -331,6 +331,22 @@ def test_lonlat_dwithin_keeps_points_the_kernel_rounds_within(spark):
                                    LONLAT)).count() == 1
 
 
+@pytest.mark.parametrize("empty", ["POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY"])
+def test_lonlat_empty_geometry_matches_oracle(spark, grid_points, empty):
+    """An empty query geometry holds no point: on lon/lat, INTERSECTS and
+    DWITHIN keep no row and DISJOINT keeps every row (null and NaN
+    coordinates too), in the Catalyst compiler as in the numpy evaluator;
+    ``SpatialQuery(geometry=…)`` keeps no row."""
+    df, _x, _y, n = grid_points
+    pdf = df.toPandas()
+    for text, want in ((f"INTERSECTS(geom, {empty})", set()),
+                       (f"DISJOINT(geom, {empty})", set(range(n + 2))),
+                       (f"DWITHIN(geom, {empty}, 10, meters)", set())):
+        got = {r.id for r in df.where(ecql_to_column(text, LONLAT)).select("id").collect()}
+        assert got == set(local_filter(text, pdf, LONLAT)["id"]) == want, text
+    assert SpatialQuery(geometry=empty).apply(df).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # the round-trip gates
 

@@ -95,6 +95,14 @@ class TestNativeCellExprs:
         assert (r[1].px, r[1].py) == (0, 0)
         assert (r[2].px, r[2].py) == (255, 255)
 
+    def test_pixel_cols_clamps_far_points_under_ansi(self, spark):
+        """Points far outside a tiny envelope land in its edge pixels: the
+        bigint floor is clamped before the int cast, which would overflow
+        (CAST_OVERFLOW under ANSI mode) the other way round."""
+        df = spark.createDataFrame(pd.DataFrame({"lon": [170.0, -170.0], "lat": [80.0, -80.0]}))
+        px, py = pixel_cols(F.col("lon"), F.col("lat"), 0.0, 0.0, 1e-6, 1e-6, 256, 256)
+        assert [tuple(r) for r in df.select(px, py).collect()] == [(255, 255), (0, 0)]
+
     def test_whole_stage_codegen(self, spark, sf_dir):
         # over a real parquet scan (not a folded local relation) the cell
         # assignment must stay inside whole-stage codegen — no Python eval

@@ -17,7 +17,6 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from geomesa_spark.operators.tiling import density
 
@@ -29,7 +28,7 @@ def _snap_px(spark, pts, envelope, w, h):
         [(float(x), float(y), i) for i, (x, y) in enumerate(pts)],
         "lon double, lat double, pid int")
     # one point per pid -> sum(pid) groups to the point itself
-    out = (density(df, envelope, w, h, weight=F.col("pid").cast("double"))
+    out = (density(df, envelope, w, h, weight="CAST(pid AS DOUBLE)")
            .collect())
     by_pid = {}
     for r in out:
@@ -104,7 +103,7 @@ def test_no_floating_point_errors(spark):
     df = spark.createDataFrame(
         [(x, y, i) for i, (x, y) in enumerate(centers)],
         "lon double, lat double, pid int")
-    got = (density(df, env, w, h, weight=F.col("pid").cast("double"))
+    got = (density(df, env, w, h, weight="CAST(pid AS DOUBLE)")
            .collect())
     assert len(got) == w  # no two centers merged
     for r in got:

@@ -590,8 +590,9 @@ def test_tile_pyramid_single_zoom_and_dupes(spark):
 def test_tile_pyramid_is_one_lineage_without_cache(spark):
     """The headline pipeline's pyramid reads its upstream once: no cache
     registered by building or running it, no InMemoryTableScan and no
-    Union in the executed plan, and the PIP join's two broadcast hash
-    joins appear once each."""
+    Union in the executed plan, the PIP join's two broadcast hash joins
+    appear once each, and the pyramid's two aggregations shuffle once
+    each."""
     from geomesa_spark.entry_queries import PIP_POLYGONS
     from geomesa_spark.operators.pip_join import pip_join_broadcast
     from geomesa_spark.operators.tiling import tile_pyramid
@@ -607,6 +608,7 @@ def test_tile_pyramid_is_one_lineage_without_cache(spark):
     plan = tiles._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in plan and "Union" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
 def test_render_tile_images_roundtrip(spark):

@@ -114,7 +114,9 @@ def sql_literal(x) -> str:
     """``x`` as a Spark SQL literal of the type ``F.lit`` gives it: a bool,
     an int, a double (``sql_double``), an instant as a TIMESTAMP cast, or
     else a string with ``\\`` and ``'`` escaped (Spark SQL string literals
-    treat backslash as an escape)."""
+    treat backslash as an escape). A numpy scalar reads as its Python value."""
+    if isinstance(x, np.generic):
+        x = x.item()
     if isinstance(x, bool):
         return "true" if x else "false"
     if isinstance(x, int):

@@ -89,3 +89,16 @@ def test_operator_keeps_catalog_and_cache(spark, frames, name):
     finally:
         for f in cached:
             f.unpersist()
+
+
+
+def test_sql_literal_reads_numpy_scalars_as_python_values():
+    """``density_polygons`` renders its weight map with ``refine.sql_literal``
+    where it had ``F.lit``: numpy ids and weights (say, read from a pandas
+    column) must keep their types, not turn into string literals."""
+    import numpy as np
+
+    from geomesa_spark.plans.refine import sql_literal
+
+    for v in (3, 2.5, True):
+        assert sql_literal(np.array([v])[0]) == sql_literal(v), v

@@ -463,9 +463,9 @@ FROM pixels GROUP BY px, py
 def q_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CRS reprojection (QueryPlanner reproject analog): EPSG:4326 ->
     EPSG:3857 web mercator, integer-meter outputs (libm last-ulp safe)."""
-    from geomesa_spark.functions.crs import reproject_4326_to_3857
+    from geomesa_spark.functions.crs import reproject
     df = geo_events(spark, sf_dir)
-    out = reproject_4326_to_3857(df)
+    out = reproject(df, 4326, 3857, "lon", "lat", "x", "y")
     return out.select("event_id",
                       F.floor("x").cast("long").alias("merc_x_m"),
                       F.floor("y").cast("long").alias("merc_y_m"))

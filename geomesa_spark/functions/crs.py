@@ -14,6 +14,12 @@ Column path (:func:`reproject`) it builds pure Catalyst arithmetic
 (whole-stage codegen, no UDFs); under :func:`_numpy_funcs` the same code
 runs on numpy arrays (:func:`transform_points_np`, st_transform's
 per-vertex engine), so the two paths cannot drift.
+
+Every ``forward(lon, lat, stage)``, ``inverse(x, y, stage)`` and datum
+``_shift`` names each non-trivial intermediate it reads more than once
+through one callback, ``stage(name, expr)``: :class:`_Staged` on the
+Column path (a temp column, so the plan stays linear in the number of
+steps), :func:`_unstaged` on numpy (the value itself).
 """
 
 from __future__ import annotations
@@ -53,36 +59,40 @@ R_MAJOR = 6378137.0
 MAX_LAT = 85.05112877980659   # atan(sinh(pi)) — mercator validity bound
 
 
-def to_mercator_x(lon: Column) -> Column:
-    return F.lit(R_MAJOR) * F.radians(lon)
+class _Staged:
+    """The Column path's staging callback: ``stage(name, expr)`` adds
+    ``expr`` to ``self.df`` as a temp column and returns its ``F.col``.
+
+    Iterative formulas read each step's result several times; as one
+    Column tree they grow exponentially with the steps (a chained
+    reprojection then hangs the optimizer).  Named intermediate columns
+    keep the tree linear — CollapseProject does not inline a non-trivial
+    expression consumed more than once.  Every call makes a new name
+    (``__rp_<n>_<name>``), so no temp column is overwritten while a later
+    expression still reads it; :meth:`finish` drops them all."""
+
+    prefix = "__rp_"
+
+    def __init__(self, df: DataFrame):
+        clash = [c for c in df.columns if c.startswith(self.prefix)]
+        if clash:
+            raise ValueError(f"reserved temp columns present: {clash}")
+        self.df, self.names = df, []
+
+    def __call__(self, name: str, expr: Column) -> Column:
+        name = f"{self.prefix}{len(self.names)}_{name}"
+        self.names.append(name)
+        self.df = self.df.withColumn(name, expr)
+        return F.col(name)
+
+    def finish(self, outs: dict) -> DataFrame:
+        """``self.df`` with the ``outs`` columns added, temps dropped."""
+        return self.df.withColumns(outs).drop(*self.names)
 
 
-def to_mercator_y(lat: Column) -> Column:
-    clamped = F.when(lat > MAX_LAT, F.lit(MAX_LAT)) \
-               .when(lat < -MAX_LAT, F.lit(-MAX_LAT)).otherwise(lat)
-    rad = F.radians(clamped)
-    return F.lit(R_MAJOR) * F.log(F.tan(F.lit(3.141592653589793 / 4.0) + rad / 2.0))
-
-
-def from_mercator_lon(x: Column) -> Column:
-    return F.degrees(x / F.lit(R_MAJOR))
-
-
-def from_mercator_lat(y: Column) -> Column:
-    return F.degrees(2.0 * F.atan(F.exp(y / F.lit(R_MAJOR))) - F.lit(3.141592653589793 / 2.0))
-
-
-def reproject_4326_to_3857(df: DataFrame, lon_col: str = "lon",
-                           lat_col: str = "lat", x_col: str = "x",
-                           y_col: str = "y") -> DataFrame:
-    return (df.withColumn(x_col, to_mercator_x(F.col(lon_col)))
-            .withColumn(y_col, to_mercator_y(F.col(lat_col))))
-
-
-def reproject_3857_to_4326(df: DataFrame, x_col: str = "x", y_col: str = "y",
-                           lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    return (df.withColumn(lon_col, from_mercator_lon(F.col(x_col)))
-            .withColumn(lat_col, from_mercator_lat(F.col(y_col))))
+def _unstaged(name: str, value):
+    """The numpy path's staging callback: arrays are already values."""
+    return value
 
 
 def mercator_sql(lon: str, lat: str) -> tuple[str, str]:
@@ -166,29 +176,30 @@ class LambertConformal2SP:
         self.F = m1 / (self.n * t1 ** self.n)
         self.r0 = a * self.F * t0 ** self.n
 
-    def forward(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+    def forward(self, lon, lat, stage=_unstaged):
         phi, lam = F.radians(lat), F.radians(lon)
-        r = F.lit(self.a * self.F) * F.pow(_t_col(phi, self.e), F.lit(self.n))
-        theta = F.lit(self.n) * (lam - self.lam0)
+        r = stage("r", F.lit(self.a * self.F)
+                  * F.pow(_t_col(phi, self.e), F.lit(self.n)))
+        theta = stage("theta", F.lit(self.n) * (lam - self.lam0))
         return (F.lit(self.fe) + r * F.sin(theta),
                 F.lit(self.fn + self.r0) - r * F.cos(theta))
 
-    def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:
-        dx = x - F.lit(self.fe)
-        dy = F.lit(self.r0) - (y - F.lit(self.fn))
+    def inverse(self, x, y, stage=_unstaged):
+        dx = stage("dx", x - F.lit(self.fe))
+        dy = stage("dy", F.lit(self.r0) - (y - F.lit(self.fn)))
         sgn = 1.0 if self.n >= 0 else -1.0
         rp = F.lit(sgn) * F.sqrt(dx * dx + dy * dy)
-        tp = F.pow(rp / F.lit(self.a * self.F), F.lit(1.0 / self.n))
+        tp = stage("tp", F.pow(rp / F.lit(self.a * self.F), F.lit(1.0 / self.n)))
         theta = F.atan2(F.lit(sgn) * dx, F.lit(sgn) * dy)
         lam = theta / F.lit(self.n) + F.lit(self.lam0)
         # fixed-point latitude recovery: 6 unrolled iterations converge to
         # double precision for |phi| < 89.9
-        phi = F.lit(_math.pi / 2) - 2.0 * F.atan(tp)
+        phi = stage("phi", F.lit(_math.pi / 2) - 2.0 * F.atan(tp))
         for _ in range(6):
             s = F.sin(phi)
-            phi = F.lit(_math.pi / 2) - 2.0 * F.atan(
+            phi = stage("phi", F.lit(_math.pi / 2) - 2.0 * F.atan(
                 tp * F.pow((1.0 - self.e * s) / (1.0 + self.e * s),
-                           F.lit(self.e / 2)))
+                           F.lit(self.e / 2))))
         return F.degrees(lam), F.degrees(phi)
 
 
@@ -208,39 +219,24 @@ class AlbersEqualArea:
         self.rho0 = a * _math.sqrt(self.C - self.n * q0) / self.n
         self.qp = 1 - ((1 - e * e) / (2 * e)) * _math.log((1 - e) / (1 + e))
 
-    def forward(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+    def forward(self, lon, lat, stage=_unstaged):
         phi, lam = F.radians(lat), F.radians(lon)
         q = _q_col(phi, self.e)
-        rho = F.lit(self.a) * F.sqrt(F.lit(self.C) - F.lit(self.n) * q) \
-            / F.lit(self.n)
-        theta = F.lit(self.n) * (lam - self.lam0)
+        rho = stage("rho", F.lit(self.a) * F.sqrt(F.lit(self.C) - F.lit(self.n) * q)
+                    / F.lit(self.n))
+        theta = stage("theta", F.lit(self.n) * (lam - self.lam0))
         return (F.lit(self.fe) + rho * F.sin(theta),
                 F.lit(self.fn + self.rho0) - rho * F.cos(theta))
 
-    def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:
-        e, e2 = self.e, self.e * self.e
-        dx = x - F.lit(self.fe)
-        dy = F.lit(self.rho0) - (y - F.lit(self.fn))
+    def inverse(self, x, y, stage=_unstaged):
+        dx = stage("dx", x - F.lit(self.fe))
+        dy = stage("dy", F.lit(self.rho0) - (y - F.lit(self.fn)))
         rho = F.sqrt(dx * dx + dy * dy)
-        qp_col = (F.lit(self.C)
-                  - rho * rho * F.lit(self.n * self.n / (self.a * self.a))) \
-            / F.lit(self.n)
-        beta = F.asin(qp_col / F.lit(self.qp))
-        # authalic -> geodetic latitude: Snyder 3-18 series seed (error
-        # O(e^8) ~ 1e-7 deg) + two unrolled Newton steps on q(phi) = q'
-        # (dq/dphi = 2(1-e^2)cos(phi)/(1-e^2 sin^2 phi)^2) -> double
-        # precision
-        phi = (beta
-               + F.lit(e2 / 3 + 31 * e2 ** 2 / 180 + 517 * e2 ** 3 / 5040)
-               * F.sin(2.0 * beta)
-               + F.lit(23 * e2 ** 2 / 360 + 251 * e2 ** 3 / 3780)
-               * F.sin(4.0 * beta)
-               + F.lit(761 * e2 ** 3 / 45360) * F.sin(6.0 * beta))
-        for _ in range(2):
-            s = F.sin(phi)
-            denom = 1.0 - e2 * s * s
-            phi = phi + (qp_col - _q_col(phi, e)) * denom * denom \
-                / (F.lit(2 * (1 - e2)) * F.cos(phi))
+        q = stage("q", (F.lit(self.C)
+                        - rho * rho * F.lit(self.n * self.n / (self.a * self.a)))
+                  / F.lit(self.n))
+        beta = stage("beta", F.asin(q / F.lit(self.qp)))
+        phi = _authalic_to_geodetic(beta, q, self.e, stage)
         theta = F.atan2(dx, dy)
         lam = theta / F.lit(self.n) + F.lit(self.lam0)
         return F.degrees(lam), F.degrees(phi)
@@ -262,15 +258,15 @@ class PolarStereographicB:
         self.big = _math.sqrt((1 + e) ** (1 + e) * (1 - e) ** (1 - e))
         self.k0 = mf * self.big / (2 * tf)
 
-    def forward(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+    def forward(self, lon, lat, stage=_unstaged):
         lam = F.radians(lon)
         # fold the south case onto the north formulas by mirroring lat
         phi = F.radians(lat)
         if self.south:
             phi = -phi
         t = _t_col(phi, self.e)
-        rho = F.lit(2 * self.a * self.k0 / self.big) * t
-        theta = lam - F.lit(self.lam0)
+        rho = stage("rho", F.lit(2 * self.a * self.k0 / self.big) * t)
+        theta = stage("theta", lam - F.lit(self.lam0))
         if self.south:
             # south: theta measured from the 0-meridian with N increasing
             # toward lam0 (E = rho sin, N = +rho cos)
@@ -279,13 +275,13 @@ class PolarStereographicB:
         return (F.lit(self.fe) + rho * F.sin(theta),
                 F.lit(self.fn) - rho * F.cos(theta))
 
-    def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:
-        e, e2 = self.e, self.e * self.e
-        dx = x - F.lit(self.fe)
-        dy = y - F.lit(self.fn)
+    def inverse(self, x, y, stage=_unstaged):
+        e2 = self.e * self.e
+        dx = stage("dx", x - F.lit(self.fe))
+        dy = stage("dy", y - F.lit(self.fn))
         rho = F.sqrt(dx * dx + dy * dy)
         tp = rho * F.lit(self.big / (2 * self.a * self.k0))
-        chi = F.lit(_math.pi / 2) - 2.0 * F.atan(tp)
+        chi = stage("chi", F.lit(_math.pi / 2) - 2.0 * F.atan(tp))
         # conformal -> geodetic latitude series (Snyder 3-5)
         phi = (chi
                + F.lit(e2 / 2 + 5 * e2 ** 2 / 24 + e2 ** 3 / 12
@@ -318,47 +314,56 @@ class LambertAzimuthalEqualArea:
         m0 = _m_const(p0, e)
         self.D = a * m0 / (self.rq * _math.cos(self.beta0))
 
-    def forward(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+    def forward(self, lon, lat, stage=_unstaged):
         phi, lam = F.radians(lat), F.radians(lon)
-        beta = F.asin(_q_col(phi, self.e) / F.lit(self.qp))
-        dlam = lam - F.lit(self.lam0)
+        beta = stage("beta", F.asin(_q_col(phi, self.e) / F.lit(self.qp)))
+        dlam = stage("dlam", lam - F.lit(self.lam0))
         sb0, cb0 = _math.sin(self.beta0), _math.cos(self.beta0)
-        B = F.lit(self.rq) * F.sqrt(
+        B = stage("B", F.lit(self.rq) * F.sqrt(
             2.0 / (1.0 + F.lit(sb0) * F.sin(beta)
-                   + F.lit(cb0) * F.cos(beta) * F.cos(dlam)))
+                   + F.lit(cb0) * F.cos(beta) * F.cos(dlam))))
         x = F.lit(self.fe) + B * F.lit(self.D) * F.cos(beta) * F.sin(dlam)
         y = F.lit(self.fn) + (B / F.lit(self.D)) * (
             F.lit(cb0) * F.sin(beta)
             - F.lit(sb0) * F.cos(beta) * F.cos(dlam))
         return x, y
 
-    def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:
-        e, e2 = self.e, self.e * self.e
+    def inverse(self, x, y, stage=_unstaged):
         sb0, cb0 = _math.sin(self.beta0), _math.cos(self.beta0)
-        dx = (x - F.lit(self.fe)) / F.lit(self.D)
-        dy = (y - F.lit(self.fn)) * F.lit(self.D)
-        rho = F.sqrt(dx * dx + dy * dy)
-        C = 2.0 * F.asin(rho / F.lit(2 * self.rq))
+        dx = stage("dx", (x - F.lit(self.fe)) / F.lit(self.D))
+        dy = stage("dy", (y - F.lit(self.fn)) * F.lit(self.D))
+        rho = stage("rho", F.sqrt(dx * dx + dy * dy))
+        C = stage("C", 2.0 * F.asin(rho / F.lit(2 * self.rq)))
         # guard the origin (rho = 0): the dy/rho term tends to 0 there
-        frac = F.when(rho > 0, dy * F.sin(C) * F.lit(cb0) / rho)             .otherwise(F.lit(0.0))
-        beta = F.asin(F.cos(C) * F.lit(sb0) + frac)
+        frac = F.when(rho > 0, dy * F.sin(C) * F.lit(cb0) / rho) \
+            .otherwise(F.lit(0.0))
+        beta = stage("beta", F.asin(F.cos(C) * F.lit(sb0) + frac))
         lam = F.lit(self.lam0) + F.atan2(
             dx * F.sin(C),
             rho * F.lit(cb0) * F.cos(C) - dy * F.lit(sb0) * F.sin(C))
-        # authalic -> geodetic: series seed + two Newton steps on q(phi)
-        qc = F.sin(beta) * F.lit(self.qp)
-        phi = (beta
-               + F.lit(e2 / 3 + 31 * e2 ** 2 / 180 + 517 * e2 ** 3 / 5040)
-               * F.sin(2.0 * beta)
-               + F.lit(23 * e2 ** 2 / 360 + 251 * e2 ** 3 / 3780)
-               * F.sin(4.0 * beta)
-               + F.lit(761 * e2 ** 3 / 45360) * F.sin(6.0 * beta))
-        for _ in range(2):
-            sph = F.sin(phi)
-            denom = 1.0 - e2 * sph * sph
-            phi = phi + (qc - _q_col(phi, e)) * denom * denom \
-                / (F.lit(2 * (1 - e2)) * F.cos(phi))
+        phi = _authalic_to_geodetic(beta, F.sin(beta) * F.lit(self.qp),
+                                    self.e, stage)
         return F.degrees(lam), F.degrees(phi)
+
+
+def _authalic_to_geodetic(beta, q, e: float, stage):
+    """Geodetic latitude of the authalic latitude ``beta``, whose q(phi)
+    is ``q``: the Snyder 3-18 series seed (error O(e^8) ~ 1e-7 deg) and
+    two Newton steps on q(phi) = q (dq/dphi = 2(1-e^2)cos(phi)/(1-e^2
+    sin^2 phi)^2) -> double precision."""
+    e2 = e * e
+    phi = stage("phi", beta
+                + F.lit(e2 / 3 + 31 * e2 ** 2 / 180 + 517 * e2 ** 3 / 5040)
+                * F.sin(2.0 * beta)
+                + F.lit(23 * e2 ** 2 / 360 + 251 * e2 ** 3 / 3780)
+                * F.sin(4.0 * beta)
+                + F.lit(761 * e2 ** 3 / 45360) * F.sin(6.0 * beta))
+    for _ in range(2):
+        s = F.sin(phi)
+        denom = 1.0 - e2 * s * s
+        phi = stage("phi", phi + (q - _q_col(phi, e)) * denom * denom
+                    / (F.lit(2 * (1 - e2)) * F.cos(phi)))
+    return phi
 
 
 def _krueger(a: float, f: float) -> tuple[float, float, tuple, tuple, tuple]:
@@ -406,13 +411,14 @@ class TransverseMercator:
                 aj * _math.sin(2 * j * xi_p0)
                 for j, aj in enumerate(self.alpha, start=1))
 
-    def forward(self, lon: Column, lat: Column) -> tuple[Column, Column]:
+    def forward(self, lon, lat, stage=_unstaged):
         phi = F.radians(lat)
         dlam = F.radians(lon) - F.lit(self.lam0)
-        sphi = F.sin(phi)
-        t = F.sinh(_atanh(sphi) - F.lit(self.e) * _atanh(F.lit(self.e) * sphi))
-        xi_p = F.atan2(t, F.cos(dlam))
-        eta_p = _atanh(F.sin(dlam) / F.sqrt(1.0 + t * t))
+        sphi = stage("sphi", F.sin(phi))
+        t = stage("t", F.sinh(_atanh(sphi)
+                              - F.lit(self.e) * _atanh(F.lit(self.e) * sphi)))
+        xi_p = stage("xi_p", F.atan2(t, F.cos(dlam)))
+        eta_p = stage("eta_p", _atanh(F.sin(dlam) / F.sqrt(1.0 + t * t)))
         xi, eta = xi_p, eta_p
         for j, aj in enumerate(self.alpha, start=1):
             xi = xi + F.lit(aj) * F.sin(2.0 * j * xi_p) * F.cosh(2.0 * j * eta_p)
@@ -426,14 +432,16 @@ class TransverseMercator:
             F.when(pole, sphi * (_math.pi / 2)).otherwise(xi) - F.lit(self.xi0))
         return east, north
 
-    def inverse(self, x: Column, y: Column) -> tuple[Column, Column]:
-        xi = (y - F.lit(self.fn)) / F.lit(self.k0 * self.abar) + F.lit(self.xi0)
-        eta = (x - F.lit(self.fe)) / F.lit(self.k0 * self.abar)
+    def inverse(self, x, y, stage=_unstaged):
+        xi = stage("xi", (y - F.lit(self.fn)) / F.lit(self.k0 * self.abar)
+                   + F.lit(self.xi0))
+        eta = stage("eta", (x - F.lit(self.fe)) / F.lit(self.k0 * self.abar))
         xi_p, eta_p = xi, eta
         for j, bj in enumerate(self.beta, start=1):
             xi_p = xi_p - F.lit(bj) * F.sin(2.0 * j * xi) * F.cosh(2.0 * j * eta)
             eta_p = eta_p - F.lit(bj) * F.cos(2.0 * j * xi) * F.sinh(2.0 * j * eta)
-        chi = F.asin(F.sin(xi_p) / F.cosh(eta_p))
+        xi_p, eta_p = stage("xi_p", xi_p), stage("eta_p", eta_p)
+        chi = stage("chi", F.asin(F.sin(xi_p) / F.cosh(eta_p)))
         phi = chi
         for j, dj in enumerate(self.delta, start=1):
             phi = phi + F.lit(dj) * F.sin(2.0 * j * chi)
@@ -441,59 +449,34 @@ class TransverseMercator:
         return F.degrees(lam + F.lit(self.lam0)), F.degrees(phi)
 
 
-class _Staged:
-    """The Column path's staging callback: ``stage(name, expr)`` adds
-    ``expr`` to ``self.df`` as column ``name`` and returns ``F.col(name)``.
-
-    Datum math references its intermediates several times each; a
-    composed Column tree would square per refinement step (a chained
-    reprojection then hangs the optimizer).  Named intermediate columns
-    keep the tree linear — CollapseProject does not duplicate
-    non-trivial expressions consumed more than once."""
-
-    def __init__(self, df: DataFrame):
-        self.df = df
-
-    def __call__(self, name: str, expr: Column) -> Column:
-        self.df = self.df.withColumn(name, expr)
-        return F.col(name)
-
-
-def _unstaged(name: str, value):
-    """The numpy path's staging callback: arrays are already values."""
-    return value
-
-
 class _Datum:
     """A datum shift between THIS datum and WGS84, written once as
     ``_shift(lon, lat, h, stage, to_wgs84) -> (lon, lat, h)`` over ``F``
     and a staging callback: :meth:`apply` runs it as staged Catalyst
-    projections (temp columns prefixed ``_tmp``), :meth:`shift_np` on
-    numpy arrays."""
-
-    _tmp = ""
+    projections, :meth:`shift_np` on numpy arrays."""
 
     def apply(self, df: DataFrame, lon_col: str, lat_col: str,
-              out_lon: str, out_lat: str, *, to_wgs84: bool) -> DataFrame:
+              out_lon: str, out_lat: str, *, to_wgs84: bool,
+              h_col: str | None = None,
+              out_h: str | None = None) -> DataFrame:
         """Shift ``(lon_col, lat_col)`` degrees between this datum and
         WGS84 (direction per ``to_wgs84``), writing ``out_lon/out_lat``.
-        Temporary columns are dropped before returning."""
-        return self._apply(df, lon_col, lat_col, out_lon, out_lat, to_wgs84)
+        Temporary columns are dropped before returning.
 
-    def _apply(self, df, lon_col, lat_col, out_lon, out_lat, to_wgs84,
-               h_col=None, out_h=None) -> DataFrame:
-        clash = [c for c in df.columns if c.startswith(self._tmp)]
-        if clash:
-            raise ValueError(f"{type(self).__name__}.apply: reserved temp "
-                             f"columns present: {clash}")
+        ``h_col``/``out_h`` optionally carry ellipsoidal height through
+        the transform.  Without them (the 2D GIS convention, same as
+        PROJ/GeoTools 2D pipelines) each direction assumes h=0 on ITS
+        source ellipsoid, so a 2D Helmert round trip closes only to
+        ~|h| * e^2 lateral error (a few cm where the ellipsoids differ by
+        ~1 km); with heights carried it closes to ~1e-9 deg."""
         stage = _Staged(df)
         h = F.col(h_col) if h_col is not None else F.lit(0.0)
         lon, lat, h = self._shift(F.col(lon_col), F.col(lat_col), h, stage,
                                   to_wgs84)
-        out = stage.df.withColumn(out_lon, lon).withColumn(out_lat, lat)
+        outs = {out_lon: lon, out_lat: lat}
         if out_h is not None:
-            out = out.withColumn(out_h, h)
-        return out.drop(*[c for c in out.columns if c.startswith(self._tmp)])
+            outs[out_h] = h
+        return stage.finish(outs)
 
     def shift_np(self, lon, lat, *, to_wgs84: bool):
         """:meth:`apply`'s formula on numpy arrays (h=0, 2D convention)."""
@@ -520,8 +503,6 @@ class HelmertDatum(_Datum):
     :class:`_Staged`); all per-row math is native Catalyst arithmetic.
     """
 
-    _tmp = "__hd_"
-
     def __init__(self, a: float, f: float, tx: float, ty: float, tz: float,
                  rx_as: float, ry_as: float, rz_as: float, s_ppm: float):
         self.a, self.f = a, f
@@ -529,23 +510,6 @@ class HelmertDatum(_Datum):
         as_rad = _math.pi / (180.0 * 3600.0)
         self.r = (rx_as * as_rad, ry_as * as_rad, rz_as * as_rad)
         self.s = s_ppm * 1e-6
-
-    def apply(self, df: DataFrame, lon_col: str, lat_col: str,
-              out_lon: str, out_lat: str, *, to_wgs84: bool,
-              h_col: str | None = None,
-              out_h: str | None = None) -> DataFrame:
-        """Shift ``(lon_col, lat_col)`` degrees between this datum and
-        WGS84 (direction per ``to_wgs84``), writing ``out_lon/out_lat``.
-        Temporary ``__hd_*`` columns are dropped before returning.
-
-        ``h_col``/``out_h`` optionally carry ellipsoidal height through
-        the transform.  Without them (the 2D GIS convention, same as
-        PROJ/GeoTools 2D pipelines) each direction assumes h=0 on ITS
-        source ellipsoid, so a 2D round trip closes only to ~|h| * e^2
-        lateral error (a few cm where the ellipsoids differ by ~1 km);
-        with heights carried the round trip closes to ~1e-9 deg."""
-        return self._apply(df, lon_col, lat_col, out_lon, out_lat, to_wgs84,
-                           h_col, out_h)
 
     def _shift(self, lon, lat, h, stage, to_wgs84: bool):
         if to_wgs84:
@@ -561,9 +525,9 @@ class HelmertDatum(_Datum):
         sphi = F.sin(phi)
         nu = F.lit(a1) / F.sqrt(1.0 - F.lit(e2s) * sphi * sphi)
         # geodetic -> geocentric on the source ellipsoid
-        gx = stage("__hd_gx", (nu + h) * F.cos(phi) * F.cos(lam))
-        gy = stage("__hd_gy", (nu + h) * F.cos(phi) * F.sin(lam))
-        gz = stage("__hd_gz", (nu * F.lit(1.0 - e2s) + h) * sphi)
+        gx = stage("gx", (nu + h) * F.cos(phi) * F.cos(lam))
+        gy = stage("gy", (nu + h) * F.cos(phi) * F.sin(lam))
+        gz = stage("gz", (nu * F.lit(1.0 - e2s) + h) * sphi)
         # small-angle Helmert, position-vector convention.  The inverse
         # direction is the EXACT algebraic inverse X = (I-R)(X'-t)/m (to
         # O(r^2) ~ 1e-11 rad on the rotation only) — NOT the
@@ -572,38 +536,37 @@ class HelmertDatum(_Datum):
         tx, ty, tz = self.t
         m = 1.0 + self.s
         if to_wgs84:
-            x = stage("__hd_x",
+            x = stage("x",
                       F.lit(m) * (gx - F.lit(rz) * gy + F.lit(ry) * gz)
                       + F.lit(tx))
-            y = stage("__hd_y",
+            y = stage("y",
                       F.lit(m) * (F.lit(rz) * gx + gy - F.lit(rx) * gz)
                       + F.lit(ty))
-            z = stage("__hd_z",
+            z = stage("z",
                       F.lit(m) * (-F.lit(ry) * gx + F.lit(rx) * gy + gz)
                       + F.lit(tz))
         else:
-            ux = stage("__hd_ux", (gx - F.lit(tx)) / F.lit(m))
-            uy = stage("__hd_uy", (gy - F.lit(ty)) / F.lit(m))
-            uz = stage("__hd_uz", (gz - F.lit(tz)) / F.lit(m))
-            x = stage("__hd_x", ux + F.lit(rz) * uy - F.lit(ry) * uz)
-            y = stage("__hd_y", -F.lit(rz) * ux + uy + F.lit(rx) * uz)
-            z = stage("__hd_z", F.lit(ry) * ux - F.lit(rx) * uy + uz)
+            ux = stage("ux", (gx - F.lit(tx)) / F.lit(m))
+            uy = stage("uy", (gy - F.lit(ty)) / F.lit(m))
+            uz = stage("uz", (gz - F.lit(tz)) / F.lit(m))
+            x = stage("x", ux + F.lit(rz) * uy - F.lit(ry) * uz)
+            y = stage("y", -F.lit(rz) * ux + uy + F.lit(rx) * uz)
+            z = stage("z", F.lit(ry) * ux - F.lit(rx) * uy + uz)
         # geocentric -> geodetic on the target ellipsoid: Bowring seed...
-        p = stage("__hd_p", F.sqrt(x * x + y * y))
+        p = stage("p", F.sqrt(x * x + y * y))
         th = F.atan2(z * F.lit(a2), p * F.lit(b2))
         s3 = F.pow(F.sin(th), F.lit(3.0))
         c3 = F.pow(F.cos(th), F.lit(3.0))
-        phi = stage("__hd_phi", F.atan2(z + F.lit(ep2 * b2) * s3,
-                                        p - F.lit(e2d * a2) * c3))
+        phi = stage("phi", F.atan2(z + F.lit(ep2 * b2) * s3,
+                                   p - F.lit(e2d * a2) * c3))
         # ...+ two fixed-point refinements (each contracts the seed error
         # by ~e^2; the seed alone is only good to ~1e-7 rad at the
         # several-hundred-meter pseudo-heights an ellipsoid change makes)
         for _ in range(2):
             s = F.sin(phi)
-            nu2 = stage("__hd_nu",
-                        F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s))
+            nu2 = stage("nu", F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s))
             h2 = p / F.cos(phi) - nu2
-            phi = stage("__hd_phi", F.atan2(
+            phi = stage("phi", F.atan2(
                 z, p * (1.0 - F.lit(e2d) * nu2 / (nu2 + h2))))
         s = F.sin(phi)
         h_out = p / F.cos(phi) - F.lit(a2) / F.sqrt(1.0 - F.lit(e2d) * s * s)
@@ -656,8 +619,6 @@ class GridShiftDatum(_Datum):
     reordering the file's SE-corner-first scan into row-major-from-south.
     """
 
-    _tmp = "__gs_"
-
     def __init__(self, lat0: float, lon0: float, dlat: float, dlon: float,
                  nlat: int, nlon: int,
                  lat_shift_sec, lon_shift_sec_west):
@@ -670,17 +631,15 @@ class GridShiftDatum(_Datum):
         self.lat_sec = [float(v) for v in lat_shift_sec]
         self.lon_sec_west = [float(v) for v in lon_shift_sec_west]
 
-    def _blend(self, lon, lat, stage, tag: str):
+    def _blend(self, lon, lat, stage):
         """(dlon, dlat) DEGREES, positive east/north: the bilinear blend
         of the four nodes around (lon, lat), zero outside the grid."""
         nlat, nlon = self.nlat, self.nlon
-        gx = stage(f"__gs_{tag}_gx",
-                   (lon - F.lit(self.lon0)) / F.lit(self.dlon))
-        gy = stage(f"__gs_{tag}_gy",
-                   (lat - F.lit(self.lat0)) / F.lit(self.dlat))
-        ix = stage(f"__gs_{tag}_ix", F.int_cast(
+        gx = stage("gx", (lon - F.lit(self.lon0)) / F.lit(self.dlon))
+        gy = stage("gy", (lat - F.lit(self.lat0)) / F.lit(self.dlat))
+        ix = stage("ix", F.int_cast(
             F.least(F.greatest(F.floor(gx), F.lit(0)), F.lit(nlon - 2))))
-        iy = stage(f"__gs_{tag}_iy", F.int_cast(
+        iy = stage("iy", F.int_cast(
             F.least(F.greatest(F.floor(gy), F.lit(0)), F.lit(nlat - 2))))
         fx, fy = gx - ix, gy - iy
         inside = ((gx >= 0) & (gx <= F.lit(float(nlon - 1)))
@@ -694,20 +653,19 @@ class GridShiftDatum(_Datum):
                  + F.element_at(arr, base + nlon + 1) * fx * fy)
             return F.when(inside, v * F.lit(sign / 3600.0)).otherwise(0.0)
 
-        dlat = stage(f"__gs_{tag}_dlat", blend(F.lit(self.lat_sec), 1.0))
-        dlon = stage(f"__gs_{tag}_dlon",
-                     blend(F.lit(self.lon_sec_west), -1.0))
+        dlat = stage("dlat", blend(F.lit(self.lat_sec), 1.0))
+        dlon = stage("dlon", blend(F.lit(self.lon_sec_west), -1.0))
         return dlon, dlat
 
     def _shift(self, lon, lat, h, stage, to_wgs84: bool):
         if to_wgs84:
-            dlon, dlat = self._blend(lon, lat, stage, "f")
+            dlon, dlat = self._blend(lon, lat, stage)
             return lon + dlon, lat + dlat, h
         # fixed point: est_{k+1} = wgs84 - shift(est_k), est_0 = wgs84
-        dlon, dlat = self._blend(lon, lat, stage, "i0")
-        e_lon = stage("__gs_e_lon", lon - dlon)
-        e_lat = stage("__gs_e_lat", lat - dlat)
-        dlon, dlat = self._blend(e_lon, e_lat, stage, "i1")
+        dlon, dlat = self._blend(lon, lat, stage)
+        e_lon = stage("e_lon", lon - dlon)
+        e_lat = stage("e_lat", lat - dlat)
+        dlon, dlat = self._blend(e_lon, e_lat, stage)
         return lon - dlon, lat - dlat, h
 
 
@@ -741,28 +699,36 @@ CRS_REGISTRY: dict[int, object] = {
 
 
 def register_crs(epsg: int, projection) -> None:
-    """Register a parameterized projection (forward/inverse column pairs)
-    for an EPSG code — the extension point for state-plane zones."""
+    """Register a parameterized projection (``forward(lon, lat, stage)``
+    and ``inverse(x, y, stage)``, each returning a pair) for an EPSG code
+    — the extension point for state-plane zones."""
     CRS_REGISTRY[int(epsg)] = projection
 
 
 class _LonLat:
     """EPSG:4326: lon/lat degrees are the coordinates."""
 
-    def forward(self, lon, lat):
+    def forward(self, lon, lat, stage=_unstaged):
         return lon, lat
 
     inverse = forward
 
 
 class _WebMercator:
-    """EPSG:3857: spherical mercator on the WGS84 semi-major axis."""
+    """EPSG:3857: spherical mercator on the WGS84 semi-major axis
+    (:func:`mercator_sql` is the forward in portable SQL)."""
 
-    def forward(self, lon, lat):
-        return to_mercator_x(lon), to_mercator_y(lat)
+    def forward(self, lon, lat, stage=_unstaged):
+        clamped = F.when(lat > MAX_LAT, F.lit(MAX_LAT)) \
+                   .when(lat < -MAX_LAT, F.lit(-MAX_LAT)).otherwise(lat)
+        return (F.lit(R_MAJOR) * F.radians(lon),
+                F.lit(R_MAJOR) * F.log(F.tan(F.lit(3.141592653589793 / 4.0)
+                                             + F.radians(clamped) / 2.0)))
 
-    def inverse(self, x, y):
-        return from_mercator_lon(x), from_mercator_lat(y)
+    def inverse(self, x, y, stage=_unstaged):
+        return (F.degrees(x / F.lit(R_MAJOR)),
+                F.degrees(2.0 * F.atan(F.exp(y / F.lit(R_MAJOR)))
+                          - F.lit(3.141592653589793 / 2.0)))
 
 
 def _parse_epsg(crs: str | int) -> int:
@@ -792,16 +758,17 @@ def _projection(crs: str | int):
     raise ValueError(f"unsupported CRS: {crs}")
 
 
-def _transform(src, dst, x, y, stage, shift):
-    """``src`` -> ``dst`` through lon/lat on WGS84: ``src.inverse`` (its
-    result passed through ``stage(lon, lat)``), each side's datum shift
-    (``shift(datum, lon, lat, to_wgs84)``), then ``dst.forward``."""
-    lon, lat = stage(*src.inverse(x, y))
+def _transform(src, dst, x, y, stage):
+    """``src`` -> ``dst`` through lon/lat on WGS84: ``src.inverse``, each
+    side's datum shift, then ``dst.forward``, all through ``stage``, which
+    also names the lon/lat each step hands to the next."""
+    lon, lat = src.inverse(x, y, stage)
     for proj, to_wgs84 in ((src, True), (dst, False)):
         datum = getattr(proj, "datum", None)
         if datum is not None:
-            lon, lat = shift(datum, lon, lat, to_wgs84)
-    return dst.forward(lon, lat)
+            lon, lat, _ = datum._shift(stage("lon", lon), stage("lat", lat),
+                                       F.lit(0.0), stage, to_wgs84)
+    return dst.forward(stage("lon", lon), stage("lat", lat), stage)
 
 
 def reproject(df: DataFrame, src: str | int, dst: str | int,
@@ -810,29 +777,9 @@ def reproject(df: DataFrame, src: str | int, dst: str | int,
     """Reproject ``(x_col, y_col)`` from ``src`` to ``dst`` (any two
     CRSs :func:`_projection` supports) into ``(out_x, out_y)``."""
     s, d = _projection(src), _projection(dst)
-    clash = [c for c in df.columns if c.startswith(("__rp_", "__hd_", "__gs_"))]
-    if clash:
-        raise ValueError(
-            f"reproject: reserved temp columns present: {clash}")
-
-    def stage(lon, lat):
-        # name the inverse's lon/lat before the datum shift and the
-        # forward: an iterative inverse (Lambert, Albers, LAEA) inlined
-        # into each of their many references grows the plan
-        # exponentially (_Staged)
-        nonlocal df
-        df = df.withColumn("__rp_lon", lon).withColumn("__rp_lat", lat)
-        return F.col("__rp_lon"), F.col("__rp_lat")
-
-    def shift(datum, lon, lat, to_wgs84):
-        nonlocal df
-        df = datum.apply(df, "__rp_lon", "__rp_lat", "__rp_lon", "__rp_lat",
-                         to_wgs84=to_wgs84)
-        return lon, lat
-
-    ox, oy = _transform(s, d, F.col(x_col), F.col(y_col), stage, shift)
-    return (df.withColumn(out_x, ox).withColumn(out_y, oy)
-            .drop("__rp_lon", "__rp_lat"))
+    stage = _Staged(df)
+    ox, oy = _transform(s, d, F.col(x_col), F.col(y_col), stage)
+    return stage.finish({out_x: ox, out_y: oy})
 
 
 def transform_points_np(x, y, src: str | int, dst: str | int):
@@ -846,9 +793,7 @@ def transform_points_np(x, y, src: str | int, dst: str | int):
     # guarded divides (e.g. LAEA's rho=0 origin) emit spurious warnings
     # before np.where masks them
     with _numpy_funcs(), np.errstate(divide="ignore", invalid="ignore"):
-        ox, oy = _transform(s, d, x, y, lambda lon, lat: (lon, lat),
-                            lambda datum, lon, lat, to_wgs84:
-                            datum.shift_np(lon, lat, to_wgs84=to_wgs84))
+        ox, oy = _transform(s, d, x, y, _unstaged)
     return np.asarray(ox, np.float64), np.asarray(oy, np.float64)
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.functions import portable as pt
+from geomesa_spark.sources.arrow_io import local_table
 
 DIM = 64
 DEFAULT_BANDS = 4
@@ -454,9 +455,10 @@ def ivf_topk(corpus: DataFrame, queries_pd, k: int = 5, nlist: int = 16,
         sims = cunit @ qu
         for lid in np.argsort(-sims)[:nprobe]:
             probe_rows.append((row["qid"], int(lid)))
-    probes = spark.createDataFrame(probe_rows, "qid long, list_id int")
+    probes = local_table(spark, probe_rows, "qid long, list_id int")
 
-    qdf = spark.createDataFrame(
+    qdf = local_table(
+        spark,
         [(row["qid"], list(map(float, row["qvec"])))
          for _, row in queries_pd.iterrows()],
         "qid long, qvec array<double>")

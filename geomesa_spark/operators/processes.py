@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.geom.algos import (EARTH_RADIUS_M, IN, convex_hull_points,
                                       points_in_ring)
+from geomesa_spark.sources.arrow_io import local_table
 
 
 def _sql(v) -> str:
@@ -105,8 +106,8 @@ def proximity_join(points: DataFrame, anchors: list[tuple],
     anchors: [(qid, lon, lat), ...] — broadcast; bbox prefilter keeps the
     refine predicate off most rows.
     """
-    spark = points.sparkSession
-    a = spark.createDataFrame(anchors, "qid string, alon double, alat double")
+    a = local_table(points.sparkSession, anchors,
+                    "qid string, alon double, alat double")
     cond = _prefilter_cond(F.col(lon_col), F.col(lat_col),
                            F.col("alon"), F.col("alat"), radius_m)
     d = haversine_col(lon_col, lat_col, "alon", "alat")
@@ -126,8 +127,8 @@ def tube_select(points: DataFrame, waypoints: list[tuple],
     (TubeBuilder's none-gap-fill semantics).  Returns distinct matches with
     the number of matched waypoints.
     """
-    spark = points.sparkSession
-    w = spark.createDataFrame(waypoints, "wts string, wlon double, wlat double") \
+    w = local_table(points.sparkSession, waypoints,
+                    "wts string, wlon double, wlat double") \
         .withColumn("wts", F.to_timestamp("wts"))
     time_ok = (F.abs(F.unix_timestamp(ts_col) - F.unix_timestamp("wts"))
                <= dt_seconds)
@@ -154,9 +155,8 @@ def route_search(points: DataFrame, route: list[tuple], radius_m: float,
     Points with no predecessor have no heading and never match (reference
     skips them too).
     """
-    spark = points.sparkSession
-    r = spark.createDataFrame(
-        route, "rid string, rlon double, rlat double, rbearing double")
+    r = local_table(points.sparkSession, route,
+                    "rid string, rlon double, rlat double, rbearing double")
     trk = Window.partitionBy(track_col).orderBy(ts_col, id_col)
     pts = (points
            .withColumn("_plon", F.lag(lon_col).over(trk))

@@ -17,6 +17,7 @@ reference's QueryPlanner splits filters into index primary + residual
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from functools import reduce
 from typing import Optional, Union
@@ -89,11 +90,13 @@ class SpatialQuery:
         preds = [F.expr(" AND ".join(f"({c})" for c in sql))] if sql else []
         # S3Index analog (index/s3/S3IndexKeySpace.scala): z2 / S2 cell-id
         # ranges prune a sorted layout; the exact lon/lat test above stays
-        # as the row-level recheck
-        for col, ranges in ((self.z2_col, cover.z2_range_predicate),
-                            (self.s2_col, cover.s2_range_predicate)):
-            if bbox is not None and col is not None and col in df.columns:
-                preds.append(ranges(col, [bbox]))
+        # as the row-level recheck.  An empty geometry's bounds are NaN:
+        # its refine already renders false, so it takes no range
+        if bbox is not None and not any(map(math.isnan, bbox)):
+            for col, ranges in ((self.z2_col, cover.z2_range_predicate),
+                                (self.s2_col, cover.s2_range_predicate)):
+                if col is not None and col in df.columns:
+                    preds.append(ranges(col, [bbox]))
         return reduce(Column.__and__, preds) if preds else None
 
     def apply(self, df: DataFrame) -> DataFrame:

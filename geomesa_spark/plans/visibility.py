@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geomesa_spark.sources.arrow_io import local_table
+
 _VALID = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_-:./")
 
 
@@ -112,9 +114,8 @@ def visibility_filter(df: DataFrame, authorizations: set[str],
     labels = [r[0] for r in df.select(vis_col).distinct().collect()]
     allowed = [l for l in labels
                if l not in (None, "") and can_see(l, authorizations)]
-    spark = df.sparkSession
-    allowed_df = spark.createDataFrame([(l,) for l in allowed] or [],
-                                       f"{vis_col} string")
+    allowed_df = local_table(df.sparkSession, [(l,) for l in allowed],
+                             f"{vis_col} string")
     visible_null = df.where(F.col(vis_col).isNull() | (F.col(vis_col) == ""))
     visible_tag = df.join(F.broadcast(allowed_df), vis_col, "left_semi")
     return visible_null.unionByName(visible_tag)

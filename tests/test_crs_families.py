@@ -562,13 +562,17 @@ class TestGridShiftDatum:
 
 
 @pytest.mark.parametrize("src,dst", [(2154, 32631), (5070, 32631),
-                                     (3035, 32631), (3035, 3035)])
+                                     (3035, 32631), (3035, 3035),
+                                     (3035, 4326), (3035, 27700),
+                                     (5070, 4326)])
 def test_iterative_inverse_into_forward_plans_quickly(spark, src, dst):
     """An iterative inverse (Lambert, Albers, LAEA) feeding a Krüger-series
-    or LAEA forward: reproject names the inverse's lon/lat as columns, so
-    the plan stays linear (inlined, it grew exponentially and ran a 2g
-    driver out of heap). Each pair finishes quickly and matches the numpy
-    path."""
+    or LAEA forward: every projection and datum names the intermediates it
+    reads more than once as columns, so the plan stays linear in the steps
+    (inlined, it grew exponentially: the optimized plan of 3035 -> 4326
+    printed about 495,000 characters, and a chained pair ran a 2g driver
+    out of heap). Each pair's optimized plan stays under a pinned size,
+    and each finishes quickly and matches the numpy path."""
     import time
 
     import numpy as np
@@ -580,8 +584,12 @@ def test_iterative_inverse_into_forward_plans_quickly(spark, src, dst):
         [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(x, y))],
         "id int, x double, y double")
     start = time.perf_counter()
-    rows = sorted(crs.reproject(df, src, dst).select("id", "x2", "y2").collect())
+    out = crs.reproject(df, src, dst)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    rows = sorted(out.select("id", "x2", "y2").collect())
     assert time.perf_counter() - start < 30.0
+    # the largest of these pairs, 3035 -> 27700, prints about 7,950
+    assert len(plan) < 10_000, len(plan)
     ex, ey = crs.transform_points_np(x, y, src, dst)
     np.testing.assert_allclose([r.x2 for r in rows], ex, rtol=1e-12, atol=1e-8)
     np.testing.assert_allclose([r.y2 for r in rows], ey, rtol=1e-12, atol=1e-8)

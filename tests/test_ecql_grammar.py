@@ -18,7 +18,9 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, Phase, given, seed, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from geomesa_spark.functions.cell_functions import s2_col, z2_col
 from geomesa_spark.geom import algos, wkt
 from geomesa_spark.plans.ecql import EcqlContext, ecql_to_column, parse
 from geomesa_spark.plans.local import evaluate, local_filter
@@ -336,7 +338,8 @@ def test_lonlat_empty_geometry_matches_oracle(spark, grid_points, empty):
     """An empty query geometry holds no point: on lon/lat, INTERSECTS and
     DWITHIN keep no row and DISJOINT keeps every row (null and NaN
     coordinates too), in the Catalyst compiler as in the numpy evaluator;
-    ``SpatialQuery(geometry=…)`` keeps no row."""
+    ``SpatialQuery(geometry=…)`` keeps no row, with a z2 or s2 index
+    column as without one."""
     df, _x, _y, n = grid_points
     pdf = df.toPandas()
     for text, want in ((f"INTERSECTS(geom, {empty})", set()),
@@ -344,7 +347,11 @@ def test_lonlat_empty_geometry_matches_oracle(spark, grid_points, empty):
                        (f"DWITHIN(geom, {empty}, 10, meters)", set())):
         got = {r.id for r in df.where(ecql_to_column(text, LONLAT)).select("id").collect()}
         assert got == set(local_filter(text, pdf, LONLAT)["id"]) == want, text
-    assert SpatialQuery(geometry=empty).apply(df).count() == 0
+    lon, lat = F.col("lon"), F.col("lat")
+    for frame in (df, df.withColumn("z2", z2_col(lon, lat)),
+                  df.withColumn("s2", s2_col(lon, lat))):
+        query = SpatialQuery(geometry=empty, z2_col="z2", s2_col="s2")
+        assert query.apply(frame).count() == 0, frame.columns
 
 
 # ---------------------------------------------------------------------------

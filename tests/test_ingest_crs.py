@@ -54,10 +54,11 @@ def test_routed_view(spark, sf_dir):
 def test_mercator_round_trip(spark, sf_dir):
     from geomesa_spark.sources.testdata import geo_events
     df = geo_events(spark, sf_dir).limit(500)
-    merc = crs.reproject_4326_to_3857(df)
-    back = crs.reproject_3857_to_4326(
+    merc = crs.reproject(df, 4326, 3857, "lon", "lat", "x", "y")
+    back = crs.reproject(
         merc.select("event_id", "x", "y",
-                    F.col("lon").alias("lon0"), F.col("lat").alias("lat0")))
+                    F.col("lon").alias("lon0"), F.col("lat").alias("lat0")),
+        3857, 4326, "x", "y", "lon", "lat")
     bad = back.where(
         (F.abs(F.col("lon") - F.col("lon0")) > 1e-9)
         | ((F.abs(F.col("lat") - F.col("lat0")) > 1e-9)

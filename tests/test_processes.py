@@ -441,3 +441,44 @@ def test_knn_many_query_points_match_brute_force(spark, knn_layout):
     got = {tuple(r) for r in knn_join(pts, qs, 8, n_rows=6000).select(*key).collect()}
     want = {tuple(r) for r in knn_brute_force(pts, qs, 8).select(*key).collect()}
     assert got == want and len(got) == 8 * len(qs)
+
+
+def test_driver_side_tables_plan_as_local_scans(spark):
+    """Every small driver-side table (anchors, waypoints, route, IVF probes
+    and queries, visible labels) plans as a LocalTableScan, never as the
+    PythonRDD scan (``Scan ExistingRDD``) that starts Python workers on
+    every run."""
+    from datetime import datetime
+
+    import pandas as pd
+
+    from geomesa_spark.operators import ann
+    from geomesa_spark.plans.visibility import visibility_filter
+    from geomesa_spark.sources.arrow_io import local_table
+
+    pts = local_table(spark, {
+        "event_id": [1, 2, 3], "user_id": [7, 7, 7],
+        "lon": [46.0, 46.1, 46.2], "lat": [25.0, 25.1, 25.2],
+        "ts": [datetime(2024, 1, 1, h) for h in (1, 2, 3)],
+        "visibility": ["user", "admin", None]},
+        "event_id long, user_id long, lon double, lat double, ts timestamp,"
+        " visibility string")
+    vecs = [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]]
+    assigned = local_table(spark, {"vec_id": [0, 1, 2], "embedding": vecs,
+                                   "list_id": [0, 1, 0]},
+                           "vec_id long, embedding array<double>, list_id int")
+    frames = {
+        "proximity_join": proc.proximity_join(pts, [("a", 46.0, 25.0)], 50_000.0),
+        "tube_select": proc.tube_select(
+            pts, [("2024-01-01 02:00:00", 46.1, 25.1)], 50_000.0, 3600),
+        "route_search": proc.route_search(pts, [("r", 46.1, 25.1, 45.0)],
+                                          50_000.0, 90.0),
+        "ivf_topk": ann.ivf_topk(
+            assigned, pd.DataFrame({"qid": [0], "qvec": [vecs[0]]}), k=2,
+            nlist=2, nprobe=1, assigned=assigned,
+            centroids=[np.array(vecs[0]), np.array(vecs[1])]),
+        "visibility_filter": visibility_filter(pts, {"user"}),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)

@@ -8,7 +8,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geomesa_spark.functions.crs import CRS_REGISTRY, reproject
+from geomesa_spark.functions.crs import (CRS_REGISTRY, reproject,
+                                         transform_points_np)
 from geomesa_spark.geom import wkb_loads, wkt_loads
 from geomesa_spark.geom.algos import (convex_hull_points, distance_spheroid,
                                       length_spheroid_m, vincenty_m)
@@ -119,21 +120,26 @@ class TestSparkSurface(object):
         assert len(got.shell) == 5  # 4 corners + closing repeat
         assert wkt_loads(rows["b"]).geom_type == "Point"
 
-    @pytest.mark.parametrize("code", ["EPSG:3857", "EPSG:32631", "EPSG:32731"]
-                             + [f"EPSG:{c}" for c in CRS_REGISTRY])
-    def test_st_transform_matches_native_reproject(self, spark, code):
+    CODES = (["EPSG:3857", "EPSG:32631", "EPSG:32731"]
+             + [f"EPSG:{c}" for c in CRS_REGISTRY])
+
+    @pytest.mark.parametrize(
+        "src,dst", [("EPSG:4326", c) for c in CODES]
+        + [(c, "EPSG:4326") for c in CODES],
+        ids=CODES + [f"{c}->4326" for c in CODES])
+    def test_st_transform_matches_native_reproject(self, spark, src, dst):
         """The Column path (reproject) and the numpy path (st_transform)
         evaluate the same formula code — assert they agree per vertex,
-        for every supported code."""
+        for every supported code, forward and inverse."""
         rng = np.random.RandomState(3)
-        pdf = pd.DataFrame({"lon": rng.uniform(-5, 5, 50),
-                            "lat": rng.uniform(45, 55, 50)})
+        x, y = transform_points_np(rng.uniform(-5, 5, 50),
+                                   rng.uniform(45, 55, 50), "EPSG:4326", src)
+        pdf = pd.DataFrame({"lon": x, "lat": y})
         df = spark.createDataFrame(pdf)
-        native = reproject(df, 4326, code.split(":")[1],
-                           x_col="lon", y_col="lat").toPandas()
+        native = reproject(df, src, dst, x_col="lon", y_col="lat").toPandas()
         viaudf = df.select(
-            F.expr("st_transform(st_point(lon, lat), 'EPSG:4326',"
-                   f" '{code}')").alias("g")).collect()
+            F.expr(f"st_transform(st_point(lon, lat), '{src}',"
+                   f" '{dst}')").alias("g")).collect()
         got = np.array([[wkb_loads(bytes(r.g)).x,
                          wkb_loads(bytes(r.g)).y] for r in viaudf])
         np.testing.assert_allclose(got[:, 0], native["x2"], rtol=1e-12)
